@@ -7,7 +7,7 @@ import org.apache.spark.sql.functions._
 import graft.core.Tables
 import graft.functions.{CountAndTotalAggregator, GraftFunctions, TextFunctions}
 import graft.model.Lineitem
-import graft.operators.{Dedup, Multimodal, Similarity, TextAnalysis}
+import graft.operators.{Dedup, Multimodal, Postings, Similarity, TextAnalysis}
 import graft.streaming.Topologies
 
 /** Driver contract: the t2 query battery. Every query name maps SURVEY §2's
@@ -30,10 +30,8 @@ object SparkEntry {
   /** Exact decimal-backed sum of a double column, returned as double. */
   private def dsum(c: Column): Column = sum(c.cast("decimal(38,9)")).cast("double")
 
-  private def t(s: SparkSession, dir: String, name: String): DataFrame = {
-    GraftFunctions.register(s)
+  private def t(s: SparkSession, dir: String, name: String): DataFrame =
     Tables.load(s, dir, name)
-  }
 
   /** Deterministically PUNCTUATED `text` for the sentence rows
     * (q171/q180): the raw fixture is punctuation-free word soup, so
@@ -111,41 +109,20 @@ object SparkEntry {
         col("t._1").as("score"))
   }
 
-  /** The q153/q154 judgment frame: distinct-term-overlap grades between
-    * each probe query's term set and every document sharing at least
-    * one term (grade = |shared distinct terms|, 1..8) — a
-    * deterministic, oracle-replayable stand-in for human relevance
-    * labels with a realistic graded distribution.
+  /** The q153/q154/q162 judgment frame: distinct-term-overlap grades
+    * between each probe query's (query_id, term) set and every document
+    * sharing at least one term (grade = |shared distinct terms|, 1..8) —
+    * a deterministic, oracle-replayable stand-in for human relevance
+    * labels with a realistic graded distribution. Read off the rankers'
+    * shared [[graft.operators.Corpus]] (its term rows ARE the distinct
+    * (doc, term) pairs) instead of tokenizing the corpus again.
     */
-  private def overlapJudgments(docs: DataFrame,
-      queries: DataFrame): DataFrame = {
-    val qt = queries.select(col("query_id"),
-      explode(array_distinct(col("qterms"))).as("term"))
-    docs
-      .select(col("doc_id"),
-        explode(array_distinct(
-          graft.functions.TextFunctions.words(col("text")))).as("term"))
-      .join(broadcast(qt), Seq("term"))
+  private def overlapGrades(corpus: graft.operators.Corpus,
+      qterms: DataFrame): DataFrame =
+    corpus.scan(qterms).select(col("doc_id"), col("term"))
+      .join(broadcast(qterms), Seq("term"))
       .groupBy(col("query_id"), col("doc_id"))
       .agg(count(lit(1)).as("grade"))
-  }
-
-  /** [[overlapJudgments]] read off a spilled
-    * [[graft.operators.TextAnalysis.tfProjectionWithLens]] frame instead
-    * of tokenizing the corpus again: the projection's term rows ARE the
-    * distinct (doc, term) pairs (TokenCounts emits each token once per
-    * doc), so the grade aggregate is identical by construction.
-    */
-  private def overlapJudgmentsFromProjection(proj: DataFrame,
-      queries: DataFrame): DataFrame = {
-    val qt = queries.select(col("query_id"),
-      explode(array_distinct(col("qterms"))).as("term"))
-    proj.where(col("term").isNotNull)
-      .select(col("doc_id"), col("term"))
-      .join(broadcast(qt), Seq("term"))
-      .groupBy(col("query_id"), col("doc_id"))
-      .agg(count(lit(1)).as("grade"))
-  }
 
   private def q14JoinMultiway(s: SparkSession, dir: String): DataFrame = {
     val customer = t(s, dir, "customer")
@@ -1653,25 +1630,18 @@ object SparkEntry {
         .select(col("doc_id").as("query_id"),
           slice(graft.functions.TextFunctions.words(col("text")), 1, 8)
             .as("qterms"))
-      // ONE corpus tokenize: the shared sentinel tf projection (the
-      // q162 discipline) feeds the BM25 ranker AND the judgment frame.
-      // Restricted at spill time — the judgments only read query-term
-      // matches too, so the spill stays as small as the ranker's own
-      val proj = graft.io.Spill(TextAnalysis.restrictWithSentinels(
-        graft.operators.TextAnalysis
-          .tfProjectionWithLens(docs, "doc_id", "text"),
-        queries.select(explode(array_distinct(col("qterms"))).as("term"))),
-        "graft-ndcgp-")
-      val ranked = TextAnalysis.bm25TopKFromProjection(proj,
-        queries, "query_id", "qterms", k = 10, restricted = true)
-      // the judgment frame feeds ndcgAtK's TWO subtrees (DCG join +
-      // IDCG window) — spilled eagerly so the grade aggregate runs
-      // once, not once per consumer (the q162 leaderboard's discipline
-      // applied to the single-metric row)
+      // ONE corpus tokenize: the shared corpus (the q162 discipline)
+      // feeds the BM25 ranker AND the judgment frame. Restricted at spill
+      // time — the judgments only read query-term matches too, so the
+      // spill stays as small as the ranker's own
+      val qt = Postings.bm25QueryTerms(queries, "query_id", "qterms")
+      val corpus = graft.operators.Corpus.spilledFor(docs, "doc_id", "text",
+        qt)
+      val ranked = Postings.bm25TopK(corpus, qt, k = 10, Postings.K1,
+        Postings.B)
       graft.operators.RankFusion
         .ndcgAtK(ranked,
-          graft.io.Spill(overlapJudgmentsFromProjection(proj, queries),
-            "graft-ndcgj-"),
+          graft.io.Spill(overlapGrades(corpus, qt), "graft-ndcgj-"),
           "doc_id", k = 10)
         .orderBy(col("query_id"))
     }),
@@ -1686,20 +1656,18 @@ object SparkEntry {
         .select(col("doc_id").as("query_id"),
           slice(graft.functions.TextFunctions.words(col("text")), 1, 8)
             .as("qterms"))
-      // the q153 shared-projection discipline: one corpus tokenize,
+      // the q153 shared-corpus discipline: one corpus tokenize,
       // restricted at spill time (judgments read query-term matches too)
-      val proj = graft.io.Spill(TextAnalysis.restrictWithSentinels(
-        graft.operators.TextAnalysis
-          .tfProjectionWithLens(docs, "doc_id", "text"),
-        queries.select(explode(array_distinct(col("qterms"))).as("term"))),
-        "graft-mrrp-")
-      val ranked = TextAnalysis.bm25TopKFromProjection(proj,
-        queries, "query_id", "qterms", k = 10, restricted = true)
+      val qt = Postings.bm25QueryTerms(queries, "query_id", "qterms")
+      val corpus = graft.operators.Corpus.spilledFor(docs, "doc_id", "text",
+        qt)
+      val ranked = Postings.bm25TopK(corpus, qt, k = 10, Postings.K1,
+        Postings.B)
       // the q153 judgment-spill discipline: mrrAtK's rel frame feeds
       // the first-hit join AND the query universe
       graft.operators.RankFusion
         .mrrAtK(ranked,
-          graft.io.Spill(overlapJudgmentsFromProjection(proj, queries)
+          graft.io.Spill(overlapGrades(corpus, qt)
             .where(col("grade") >= 3), "graft-mrrj-"),
           "doc_id", k = 10)
         .orderBy(col("query_id"))
@@ -1795,17 +1763,15 @@ object SparkEntry {
           array().cast("array<string>").as("mustNot"))
       def sp(df: DataFrame) = graft.io.Spill(df, "graft-rankeval-")
       // ONE corpus tokenize for the four lexical rankers AND the
-      // judgment frame: the shared sentinel tf projection spills once
-      // and every consumer reads its own restriction of it (identical
-      // rows to the per-ranker spills it replaces — the previous form
-      // tokenized the corpus ~10x across vocab/tf/stats/judgment
-      // passes). The four ranker pipelines stay independent Spark jobs
-      // run CONCURRENTLY on the bounded [[graft.core.Jobs]] pool (guide
+      // judgment frame: the shared corpus spills once and every consumer
+      // reads its own restriction of it. The ranker pipelines stay
+      // independent Spark jobs run
+      // CONCURRENTLY on the bounded [[graft.core.Jobs]] pool (guide
       // §2.6 — each stage of one ranker leaves most slots idle at any
       // moment; Spill registers child-thread directories in its global
       // exit registry by contract).
-      val proj = sp(graft.operators.TextAnalysis.tfProjectionWithLens(
-        docs, "doc_id", "text"))
+      val corpus = graft.operators.Corpus.spilled(docs, "doc_id", "text")
+      val qt = Postings.bm25QueryTerms(queries, "query_id", "qterms")
       // every ranker spills its RESULT: lex/dense feed two consumers
       // (leaderboard + RRF), and although bool/fuzzy/mlt feed only the
       // leaderboard's labeled union, leaving their scoring tails lazy
@@ -1814,15 +1780,18 @@ object SparkEntry {
       // jobs overlap.
       val Seq(lex, fuzzy, bool, mlt, dense) = graft.core.Jobs.parallel(
         s.sparkContext, Seq[() => DataFrame](
-          () => TextAnalysis.bm25TopKFromProjection(proj,
-            queries, "query_id", "qterms", k = 10),
-          () => TextAnalysis.bm25TopKFuzzyFromProjection(proj,
-            queries, "query_id", "qterms", k = 10, maxDist = 1),
-          () => TextAnalysis.bm25TopKBoolFromProjection(proj,
-            boolQ, "query_id", "must", "should", "mustNot", k = 10),
-          () => TextAnalysis.moreLikeThisFromProjection(proj,
-            probeDocs.select(col("doc_id")), "doc_id", mTerms = 3,
-            k = 10),
+          () => Postings.bm25TopK(corpus.restrict(qt), qt, k = 10,
+            Postings.K1, Postings.B),
+          () => Postings.bm25TopKFuzzy(corpus, qt, k = 10, maxDist = 1,
+            Postings.K1, Postings.B),
+          () => {
+            val roles = Postings.boolQueryRoles(boolQ, "query_id", "must",
+              "should", "mustNot")
+            Postings.bm25TopKBool(corpus.restrict(roles), roles, k = 10,
+              Postings.K1, Postings.B)
+          },
+          () => Postings.moreLikeThis(corpus, corpus.tfOf(probeDocs,
+            "doc_id"), mTerms = 3, k = 10, Postings.K1, Postings.B),
           () => graft.operators.Similarity.batchExactTopK(
             embs.select(col("vec_id").as("doc_id"), col("embedding")),
             embs.where(col("vec_id") % 50 === 0)
@@ -1834,7 +1803,7 @@ object SparkEntry {
       graft.operators.RankFusion.ndcgLeaderboard(
           Seq("boolean" -> bool, "dense" -> dense, "fuzzy" -> fuzzy,
             "hybrid" -> hybrid, "lexical" -> lex, "mlt" -> mlt),
-          overlapJudgmentsFromProjection(proj, queries), "doc_id", k = 10)
+          overlapGrades(corpus, qt), "doc_id", k = 10)
         .orderBy(col("ranker"))
     }),
 

@@ -1,6 +1,7 @@
 package graft.core
 
-import java.util.concurrent.{Executors, TimeUnit}
+import java.util.concurrent.Executors
+import java.util.concurrent.atomic.AtomicReference
 
 import scala.concurrent.{Await, ExecutionContext, Future}
 import scala.concurrent.duration.Duration
@@ -19,9 +20,11 @@ import org.apache.spark.SparkContext
   * `parallel` snapshots the caller thread's Spark local properties
   * (job group, description, scheduler pool) and installs them in each
   * worker thread before running `f`. The pool is per-call and torn down
-  * at the join; a failed item rethrows at the join (first failure wins)
-  * after the in-flight siblings finish — FIFO scheduling keeps the
-  * back-fill behaviour the guide describes.
+  * at the join. A failed item rethrows at the join (the first failure
+  * wins) only after every in-flight sibling has finished, so no job it
+  * started outlives the call; items not yet started when a failure lands
+  * are skipped. FIFO scheduling keeps the back-fill behaviour the guide
+  * describes.
   */
 object Jobs {
 
@@ -43,14 +46,20 @@ object Jobs {
       .collect { case (k, v) if v != null => (k, v) }
     val pool = Executors.newFixedThreadPool(math.min(items.size, maxInFlight))
     implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
-    try
-      Await.result(Future.sequence(items.map(a => Future {
-        snap.foreach { case (k, v) => sc.setLocalProperty(k, v) }
-        f(a)
-      })), Duration.Inf)
-    finally {
-      pool.shutdown()
-      pool.awaitTermination(1, TimeUnit.MINUTES): Unit
-    }
+    val failure = new AtomicReference[Throwable]()
+    try {
+      // every body catches its own failure, so each future completes and
+      // the join below waits for all of them (fatal errors included)
+      val done = items.toVector.map(a => Future {
+        if (failure.get != null) None
+        else {
+          snap.foreach { case (k, v) => sc.setLocalProperty(k, v) }
+          try Some(f(a))
+          catch { case e: Throwable => failure.compareAndSet(null, e); None }
+        }
+      }).map(Await.result(_, Duration.Inf))
+      Option(failure.get).foreach(e => throw e)
+      done.map(_.get)
+    } finally pool.shutdown()
   }
 }

@@ -635,8 +635,7 @@ case class WinnowFingerprints(child: Expression, k: Int, win: Int)
   * controls directly), so an `ascii_clean` row is a PROVEN fixed point
   * of the repair cascade. One branch-light byte scan with real codegen
   * — this guard runs on EVERY row of a cleaning pipeline, where the
-  * equivalent `translate`/`rlike` tests measured 4–5 scan-passes
-  * (`tools/EncodingThroughputProbe`).
+  * equivalent `translate`/`rlike` tests measured 4–5 scan-passes.
   */
 case class AsciiClean(child: Expression) extends UnaryExpression {
 

@@ -495,7 +495,7 @@ object Dedup {
     // exchange below carries xxhash64(shingle) instead of the n-word
     // string (~3-5x narrower at n = 3). Identical results whenever the
     // hash is injective over the corpus's distinct shingles — verified
-    // exhaustively on all three fixture SFs (tools/ShingleHashCheck);
+    // exhaustively on all three fixture SFs (ShingleHashSpec);
     // at production scale a 64-bit birthday collision (~p = m^2/2^65)
     // perturbs one pair's jaccard by one intersection count, the same
     // epsilon class as the MinHash path. The DuckDB oracle keeps string

@@ -132,7 +132,7 @@ object Encoding {
     * the single-char confusable `from`s, and the control block. A row
     * matching NOTHING in this class is a PROVEN fixed point of the
     * whole [[fixText]] cascade — the basis of the suspect-guard
-    * fast path (measured 15× by `tools/EncodingThroughputProbe`:
+    * fast path (measured 15× on a clean-row throughput probe:
     * the ~200-replace cascade costs 15 scan-passes, so clean rows —
     * the overwhelming majority of a real corpus — must not pay it).
     */
@@ -163,7 +163,7 @@ object Encoding {
     * imperative [[graft.functions.MojibakeFix]] expression (the SAME
     * ordered tables — its first act is a precise suspect-char scan, so
     * legitimately-accented clean text also passes through untouched).
-    * Measured by `tools/EncodingThroughputProbe`: the declarative
+    * Measured on a clean-row throughput probe: the declarative
     * ~200-replace chain cost ~15 scan-passes per value unguarded and
     * still ~4 guarded (400 codegen nodes of cold code); the imperative
     * form costs ~the md5-baseline pass on clean corpora. The DuckDB

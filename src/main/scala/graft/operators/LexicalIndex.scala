@@ -3,13 +3,15 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.functions.TextFunctions.words
-
 /** Persisted inverted (lexical) index — the BM25 member of the persisted
   * index family ([[Similarity]]'s LSH/IVF/IVF-PQ for embeddings): build a
   * term-bucket-partitioned posting table once, append new document
-  * batches as they arrive, and serve [[TextAnalysis.bm25TopK]]-identical
-  * batched retrieval against it without re-tokenizing the corpus.
+  * batches as they arrive, and serve retrieval against it without
+  * re-tokenizing the corpus. Retrieval is ONE ranker set over two
+  * interchangeable posting sources ([[Postings]]): the `*Indexed` entry
+  * points below run each ranker over the [[Index]] source, the
+  * `TextAnalysis` twins over the [[Corpus]] source, so indexed ≡
+  * one-shot by construction (and spec-pinned).
   *
   * Reference scope: the scaffold's closest analog is the continuously
   * maintained interactive-query store
@@ -36,10 +38,10 @@ import graft.functions.TextFunctions.words
   *     summed-compaction fold), so an append never rewrites history, the
   *     fold is exact integer arithmetic, and a replayed epoch overwrites
   *     its own delta rather than double-counting it.
-  *   - `meta/`: one (n_buckets) row. Append and query derive the bucket
-  *     count from the table instead of trusting a caller argument (the
-  *     round-11 DSIR lesson: a caller-supplied count that disagrees with
-  *     the fitted layout corrupts silently).
+  *   - `meta/`: one (n_buckets, positional) row. Append and query derive
+  *     the bucket count from the table instead of trusting a caller
+  *     argument (the round-11 DSIR lesson: a caller-supplied count that
+  *     disagrees with the fitted layout corrupts silently).
   *
   * The per-doc tf projection is the exchange-free TokenCounts bag, so
   * build and append plans are the tokenize scan plus ONE bucket-cluster
@@ -53,37 +55,20 @@ object LexicalIndex {
   /** Deterministic term -> partition bucket: md5-prefix integer modulo
     * `nBuckets` (the [[Sampling.unitHash]] fold family).
     */
-  private def termBucket(term: Column, nBuckets: Int): Column =
+  private[operators] def termBucket(term: Column, nBuckets: Int): Column =
     (conv(substring(md5(term), 1, 8), 16, 10).cast("long") % nBuckets)
       .cast("int")
 
-  /** Map-only (doc_id, doc_len, term, tf[, pos], tb) posting projection.
-    * Non-positional: the tokenize/tf semantics are
-    * [[TextAnalysis.tfProjection]], single-homed so the indexed and
-    * one-shot paths cannot drift. Positional: the
-    * [[graft.functions.TokenPositions]] bag adds each term's ascending
-    * word positions (tf = size(pos), so the positional projection
-    * subsumes the count one and BM25 reads of a positional index prune
-    * the `pos` column away at the parquet scan) — the standard
-    * store-positions trade (a larger index buys quoted-phrase retrieval
-    * without re-tokenizing the corpus).
+  /** [[Postings.project]] (the one tokenize/tf semantics the corpus
+    * sources read too) plus the term bucket. A positional index stores
+    * each term's word positions — the standard store-positions trade (a
+    * larger index buys phrase/proximity retrieval without re-tokenizing);
+    * BM25 reads of it prune the `pos` column away at the parquet scan.
     */
   private def postings(docs: DataFrame, idCol: String, textCol: String,
-      nBuckets: Int, positional: Boolean): DataFrame = {
-    val base =
-      if (!positional) TextAnalysis.tfProjection(docs, idCol, textCol)
-      else docs
-        .select(col(idCol).cast("long").as("doc_id"),
-          words(col(textCol)).as("__w"))
-        .select(col("doc_id"), size(col("__w")).cast("long").as("doc_len"),
-          explode(graft.functions.TextFunctions.tokenPositions(col("__w")))
-            .as("__tp"))
-        .select(col("doc_id"), col("doc_len"),
-          col("__tp.token").as("term"),
-          size(col("__tp.pos")).cast("long").as("tf"),
-          col("__tp.pos").as("pos"))
-    base.withColumn("tb", termBucket(col("term"), nBuckets))
-  }
+      nBuckets: Int, positional: Boolean): DataFrame =
+    Postings.project(docs, idCol, textCol, positional)
+      .withColumn("tb", termBucket(col("term"), nBuckets))
 
   /** One (n_docs, n_len, total_len) delta row for a batch (exact longs).
     * `n_docs` counts every row (the one-shot scorer's N counts null-text
@@ -215,7 +200,8 @@ object LexicalIndex {
     * glob keeps a stray streaming `_spark_metadata` log from shadowing
     * batch-written files).
     */
-  private def readPostings(spark: SparkSession, path: String): DataFrame = {
+  private[operators] def readPostings(spark: SparkSession,
+      path: String): DataFrame = {
     requireBatchLayout(spark, path, "postings")
     spark.read.option("basePath", s"$path/postings")
       .parquet(s"$path/postings/batch=*")
@@ -229,7 +215,8 @@ object LexicalIndex {
     * n_docs) and a mixed-generation stats directory folds correctly
     * instead of failing resolution or silently inflating avgdl.
     */
-  private def readStats(spark: SparkSession, path: String): DataFrame = {
+  private[operators] def readStats(spark: SparkSession,
+      path: String): DataFrame = {
     requireBatchLayout(spark, path, "stats")
     spark.read.schema("n_docs BIGINT, n_len BIGINT, total_len BIGINT")
       .option("basePath", s"$path/stats").parquet(s"$path/stats/batch=*")
@@ -240,7 +227,8 @@ object LexicalIndex {
     * existed surface it as NULL → non-positional (they stored no
     * positions).
     */
-  private def readMeta(spark: SparkSession, path: String): (Int, Boolean) =
+  private[operators] def readMeta(spark: SparkSession,
+      path: String): (Int, Boolean) =
     try {
       val rows = spark.read.schema("n_buckets INT, positional BOOLEAN")
         .parquet(s"$path/meta").collect()
@@ -256,9 +244,6 @@ object LexicalIndex {
         s"$path is not a lexical index (no meta table) - build it with " +
           "LexicalIndex.write first", e)
     }
-
-  private def readNBuckets(spark: SparkSession, path: String): Int =
-    readMeta(spark, path)._1
 
   /** Batch ids whose data [[compact]] has folded into the
     * `batch=compacted` generation — the union of every manifest file
@@ -423,7 +408,7 @@ object LexicalIndex {
     */
   def compact(spark: SparkSession, path: String): Int =
     graft.io.Maintenance.withLease(spark, path, "lexical-compact") {
-      readNBuckets(spark, path) // fail loud on a non-index path
+      readMeta(spark, path) // fail loud on a non-index path
       val root = new org.apache.hadoop.fs.Path(path)
       val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
       val pIds = generationIds(spark, path, "postings")
@@ -486,261 +471,6 @@ object LexicalIndex {
       n
     }
 
-  /** [[TextAnalysis.tfidfKeywords]] served FROM the index — per-doc
-    * characteristic terms without touching corpus text: the posting
-    * table IS the tf bag (keyword extraction is corpus-wide, so the
-    * scan reads every bucket — no pruning to claim, but also no
-    * tokenize pass), corpus N folds from the stats deltas, and the
-    * scoring tail is the single-homed
-    * [[TextAnalysis.tfidfRankTail]] — indexed ≡ one-shot exactly
-    * (spec-pinned), which makes the index the corpus-analytics
-    * substrate, not just the retrieval one.
-    */
-  def tfidfKeywordsIndexed(spark: SparkSession, path: String,
-      k: Int): DataFrame = {
-    require(k > 0, "k must be positive")
-    readNBuckets(spark, path) // fail loud on a non-index path
-    val tf = readPostings(spark, path)
-      .select(col("doc_id"), col("term"), col("tf"))
-    val stats = readStats(spark, path)
-      .agg(sum(col("n_docs")).cast("double").as("n"))
-    TextAnalysis.tfidfRankTail(tf, stats, k)
-  }
-
-  /** Batched BM25 top-k against the index —
-    * [[TextAnalysis.bm25TopK]]-identical results (same integer tf/df/len
-    * inputs, same shared scoring tail; exact equality spec-pinned)
-    * without touching corpus text: the scan reads only the query terms'
-    * bucket directories (a pure partition filter — the bucket list is
-    * computed driver-side from the query terms, the
-    * [[Similarity.queryBuckets]] discipline, bounded by `nBuckets`), the
-    * exact term semi-join prunes bucket-mates, and corpus stats fold from
-    * the delta rows. At 100 TB the difference is reading |query-term
-    * buckets| directories of integer postings vs tokenizing the corpus.
-    */
-  def bm25TopKIndexed(spark: SparkSession, path: String, queries: DataFrame,
-      queryIdCol: String, queryTermsCol: String, k: Int, k1: Double = 1.2,
-      b: Double = 0.75): DataFrame = {
-    require(k > 0, "k must be positive")
-    val nBuckets = readNBuckets(spark, path)
-    val qterms = TextAnalysis.bm25QueryTerms(queries, queryIdCol, queryTermsCol)
-    // bounded driver action: |distinct buckets| <= min(|query terms|, nBuckets)
-    val buckets = qterms
-      .select(termBucket(col("term"), nBuckets).as("tb")).distinct()
-      .collect().map(_.getInt(0)).toSeq
-    val tf = readPostings(spark, path)
-      .where(col("tb").isin(buckets: _*))
-      .join(broadcast(qterms.select(col("term")).distinct()), Seq("term"),
-        "left_semi")
-      .select(col("doc_id"), col("doc_len"), col("term"), col("tf"))
-    val stats = readStats(spark, path)
-      .agg(sum(col("n_docs")).cast("double").as("n"),
-        (sum(col("total_len")).cast("double")
-          / sum(coalesce(col("n_len"), col("n_docs"))).cast("double"))
-          .as("avgdl"))
-    TextAnalysis.bm25RankTail(tf, stats, qterms, k, k1, b)
-  }
-
-  /** Batched quoted-phrase top-k against a POSITIONAL index —
-    * [[TextAnalysis.phraseTopK]]-identical results (same normalization,
-    * same exact-count ranking tail; equality spec-pinned) without
-    * touching corpus text: the scan prunes to the phrase terms' bucket
-    * directories, the broadcast (query, offset, term) join keeps only
-    * candidate postings, one (query, doc) aggregate collects each
-    * phrase offset's position list, the all-terms-present filter pins
-    * the entry count to the phrase length, and
-    * [[graft.functions.PhraseStartCount]] verifies adjacency per
-    * candidate — at 100 TB the exchange carries integer position lists
-    * of candidate docs only, never text or non-matching postings. Fails
-    * loud on an index built without `positional = true` (it stored no
-    * positions to verify against).
-    */
-  def phraseTopKIndexed(spark: SparkSession, path: String,
-      queries: DataFrame, queryIdCol: String, phraseCol: String,
-      k: Int): DataFrame = {
-    require(k > 0, "k must be positive")
-    val (nBuckets, positional) = readMeta(spark, path)
-    if (!positional)
-      throw new IllegalStateException(
-        s"$path is not a positional index - phrase retrieval needs word " +
-          "positions; rebuild it with LexicalIndex.write(..., " +
-          "positional = true)")
-    val qp = TextAnalysis.phraseQueries(queries, queryIdCol, phraseCol)
-    val qterms = qp.select(col("query_id"), col("__n"),
-      posexplode(col("__pt")).as(Seq("off", "term")))
-    // bounded driver action: |distinct buckets| <= min(|phrase terms|, nBuckets)
-    val buckets = qterms
-      .select(termBucket(col("term"), nBuckets).as("tb")).distinct()
-      .collect().map(_.getInt(0)).toSeq
-    val counts = readPostings(spark, path)
-      .where(col("tb").isin(buckets: _*))
-      .select(col("doc_id"), col("term"), col("pos"))
-      .join(broadcast(qterms), Seq("term"))
-      .groupBy(col("query_id"), col("doc_id"), col("__n"))
-      .agg(collect_list(struct(col("off"), col("pos"))).as("__e"))
-      // candidate docs hold ALL n offsets (a repeated term joins once
-      // per offset, so the row count is the offset count exactly)
-      .where(size(col("__e")) === col("__n"))
-      .select(col("query_id"), col("doc_id"),
-        graft.functions.TextFunctions.phraseStartCount(col("__e"))
-          .as("n_hits"))
-      // all terms present but never adjacent: not a phrase match
-      .where(col("n_hits") > 0)
-    TextAnalysis.phraseRankTail(counts, k)
-  }
-
-  /** Batched proximity top-k against a POSITIONAL index —
-    * [[TextAnalysis.proximityTopK]]-identical results (same
-    * normalization/dedup, same candidate aggregate and span-ascending
-    * ranking tail; equality spec-pinned) without touching corpus text:
-    * the scan prunes to the query terms' bucket directories, the
-    * broadcast (query, off, term) join keeps candidate postings, and
-    * [[graft.functions.MinWindowSpan]] sweeps each candidate's position
-    * lists — at 100 TB the exchange carries integer position lists of
-    * candidate docs only. Fails loud on a non-positional index (the
-    * [[phraseTopKIndexed]] contract).
-    */
-  def proximityTopKIndexed(spark: SparkSession, path: String,
-      queries: DataFrame, queryIdCol: String, termsCol: String,
-      slop: Int, k: Int): DataFrame = {
-    require(k > 0, "k must be positive")
-    require(slop >= 0, "slop must be >= 0")
-    val (nBuckets, positional) = readMeta(spark, path)
-    if (!positional)
-      throw new IllegalStateException(
-        s"$path is not a positional index - proximity retrieval needs " +
-          "word positions; rebuild it with LexicalIndex.write(..., " +
-          "positional = true)")
-    val qterms = TextAnalysis.proximityQueryTerms(queries, queryIdCol,
-      termsCol)
-    // bounded driver action: |distinct buckets| <= min(|query terms|, nBuckets)
-    val buckets = qterms
-      .select(termBucket(col("term"), nBuckets).as("tb")).distinct()
-      .collect().map(_.getInt(0)).toSeq
-    val entries = readPostings(spark, path)
-      .where(col("tb").isin(buckets: _*))
-      .select(col("doc_id"), col("term"), col("pos"))
-      .join(broadcast(qterms), Seq("term"))
-    TextAnalysis.proximityRankTail(
-      TextAnalysis.candidateSpans(entries), slop, k)
-  }
-
-  /** Batched windowed-passage top-k against a POSITIONAL index —
-    * [[TextAnalysis.passageTopK]]-identical results (single-homed
-    * candidate aggregate and rank tail; equality spec-pinned) without
-    * touching corpus text: the bucket-pruned posting scan, the
-    * broadcast query-term join, and the [[graft.functions.BestWindow]]
-    * sweep per candidate. Fails loud on a non-positional index.
-    */
-  def passageTopKIndexed(spark: SparkSession, path: String,
-      queries: DataFrame, queryIdCol: String, termsCol: String,
-      window: Int, k: Int): DataFrame = {
-    require(k > 0, "k must be positive")
-    require(window >= 1, "window must be >= 1")
-    val (nBuckets, positional) = readMeta(spark, path)
-    if (!positional)
-      throw new IllegalStateException(
-        s"$path is not a positional index - passage retrieval needs " +
-          "word positions; rebuild it with LexicalIndex.write(..., " +
-          "positional = true)")
-    val qterms = TextAnalysis.proximityQueryTerms(queries, queryIdCol,
-      termsCol)
-    // bounded driver action: |distinct buckets| <= min(|query terms|, nBuckets)
-    val buckets = qterms
-      .select(termBucket(col("term"), nBuckets).as("tb")).distinct()
-      .collect().map(_.getInt(0)).toSeq
-    val entries = readPostings(spark, path)
-      .where(col("tb").isin(buckets: _*))
-      .select(col("doc_id"), col("term"), col("pos"))
-      .join(broadcast(qterms), Seq("term"))
-    TextAnalysis.passageRankTail(
-      TextAnalysis.passageCandidates(entries, window), k)
-  }
-
-  /** Typo-tolerant batched BM25 against the index —
-    * [[TextAnalysis.bm25TopKFuzzy]]-identical results (same
-    * deletion-variant expansion against the same vocabulary, the
-    * single-homed [[bm25TopKIndexed]] scoring; equality spec-pinned):
-    * the vocabulary reads ONLY the `term` column of the posting table
-    * (parquet column pruning — no text, positions, or counts move) and
-    * the expanded query then scans bucket-pruned as usual. At 100 TB
-    * maintain the distinct-term frame as a side table beside the index
-    * rather than folding it per query — the expansion join itself never
-    * touches posting rows.
-    */
-  def bm25TopKFuzzyIndexed(spark: SparkSession, path: String,
-      queries: DataFrame, queryIdCol: String, queryTermsCol: String,
-      k: Int, maxDist: Int = 1): DataFrame = {
-    val vocab = readPostings(spark, path).select(col("term")).distinct()
-    // spilled eagerly: bm25TopKIndexed consumes the query frame twice
-    // (the bounded bucket-list collect AND the scoring join) — left
-    // in-plan each consumer would re-run the whole vocabulary
-    // expansion (the one-shot twin's measured depth-2 dominant cost)
-    val expanded = graft.io.Spill(TextAnalysis.fuzzyExpandTerms(vocab,
-        TextAnalysis.bm25QueryTerms(queries, queryIdCol, queryTermsCol),
-        maxDist)
-      .groupBy(col("query_id")).agg(collect_list(col("term")).as("__qt")),
-      "graft-fuzzy-exp-")
-    bm25TopKIndexed(spark, path, expanded, "query_id", "__qt", k)
-  }
-
-  /** [[TextAnalysis.bm25TopKBool]] served FROM the index — the
-    * +must/-mustNot boolean query surface over the bucket-pruned
-    * posting scan (the scan covers ALL role terms' buckets: mustNot
-    * matches are needed to disqualify candidates). Shares
-    * [[TextAnalysis.bm25BoolRankTail]], so indexed ≡ one-shot exactly
-    * (spec-pinned).
-    */
-  def bm25TopKBoolIndexed(spark: SparkSession, path: String,
-      queries: DataFrame, queryIdCol: String, mustCol: String,
-      shouldCol: String, mustNotCol: String, k: Int, k1: Double = 1.2,
-      b: Double = 0.75): DataFrame = {
-    require(k > 0, "k must be positive")
-    val nBuckets = readNBuckets(spark, path)
-    val roles = TextAnalysis.boolQueryRoles(queries, queryIdCol, mustCol,
-      shouldCol, mustNotCol)
-    // bounded driver action: |distinct buckets| <= min(|role terms|, nBuckets)
-    val buckets = roles
-      .select(termBucket(col("term"), nBuckets).as("tb")).distinct()
-      .collect().map(_.getInt(0)).toSeq
-    val tf = readPostings(spark, path)
-      .where(col("tb").isin(buckets: _*))
-      .join(broadcast(roles.select(col("term")).distinct()), Seq("term"),
-        "left_semi")
-      .select(col("doc_id"), col("doc_len"), col("term"), col("tf"))
-    val stats = readStats(spark, path)
-      .agg(sum(col("n_docs")).cast("double").as("n"),
-        (sum(col("total_len")).cast("double")
-          / sum(coalesce(col("n_len"), col("n_docs"))).cast("double"))
-          .as("avgdl"))
-    TextAnalysis.bm25BoolRankTail(tf, stats, roles, k, k1, b)
-  }
-
-  /** [[TextAnalysis.significantTerms]] served FROM the index — the
-    * match set's over-represented vocabulary without a corpus tokenize
-    * pass: the posting table IS the distinct (doc, term) projection
-    * (one row per pair by construction). Like
-    * [[tfidfKeywordsIndexed]], the foreground needs every matched
-    * doc's full term list, so the scan reads all buckets — no pruning
-    * to claim, but no tokenize pass either; the shared
-    * [[TextAnalysis.significantTermsTail]] keeps indexed ≡ one-shot
-    * exact (spec-pinned).
-    */
-  def significantTermsIndexed(spark: SparkSession, path: String,
-      queries: DataFrame, queryIdCol: String, termsCol: String,
-      k: Int, minFgCount: Int = 1): DataFrame = {
-    require(k > 0, "k must be positive")
-    readNBuckets(spark, path) // fail loud on a non-index path
-    val qterms = TextAnalysis.proximityQueryTerms(queries, queryIdCol,
-        termsCol)
-      .select(col("query_id"), col("term"))
-    val dterms = readPostings(spark, path)
-      .select(col("doc_id"), col("term"))
-    TextAnalysis.significantTermsTail(dterms, qterms,
-      readStats(spark, path)
-        .agg(sum(col("n_docs")).cast("double").as("__n")), k, minFgCount)
-  }
-
   /** Operational snapshot of a persisted index — the introspection a
     * maintainer reads before deciding to [[compact]] or rebuild.
     */
@@ -774,106 +504,122 @@ object LexicalIndex {
       totals.getLong(0), totals.getLong(1), files)
   }
 
-  /** [[TextAnalysis.moreLikeThis]] served FROM the index — find-similar
-    * for a handful of seed ids without a corpus tokenize pass: the
-    * SEEDS' text comes from the id-keyed corpus frame (a pushed-down
-    * `id IN (seeds)` scan — the posting layout is term-bucketed, so
-    * reading one document's terms from it would be the full-index scan
-    * the index exists to avoid), their term df comes from the
-    * bucket-pruned posting scan, corpus N from the stats fold, and the
-    * ranking runs through [[bm25TopKIndexed]]'s pruned scan. The
-    * keyword fold, ranked frame and self-exclusion are single-homed
-    * with the one-shot path (indexed ≡ one-shot spec-pinned). Every
-    * intermediate frame is seed-sized and spilled once.
+  // ---- retrieval: the [[Postings]] rankers over the [[Index]] source ---
+  // Each entry point reads the index's meta once, prunes its posting scan
+  // to the query terms' bucket directories where the ranker allows, and
+  // folds corpus stats from the deltas — results equal the one-shot
+  // `TextAnalysis` twin exactly (spec-pinned). The phrase, proximity and
+  // passage rankers fail loud on an index built without positions.
+
+  /** [[TextAnalysis.tfidfKeywords]] from the index: keyword extraction is
+    * corpus-wide, so every bucket is read — but no tokenize pass.
+    */
+  def tfidfKeywordsIndexed(spark: SparkSession, path: String,
+      k: Int): DataFrame =
+    Postings.tfidfKeywords(Index(spark, path), k)
+
+  /** [[TextAnalysis.bm25TopK]] from the index: at 100 TB, reading
+    * |query-term buckets| directories of integer postings instead of
+    * tokenizing the corpus.
+    */
+  def bm25TopKIndexed(spark: SparkSession, path: String, queries: DataFrame,
+      queryIdCol: String, queryTermsCol: String, k: Int, k1: Double = 1.2,
+      b: Double = 0.75): DataFrame =
+    Postings.bm25TopK(Index(spark, path),
+      Postings.bm25QueryTerms(queries, queryIdCol, queryTermsCol), k, k1, b)
+
+  /** [[TextAnalysis.phraseTopK]] from a positional index. */
+  def phraseTopKIndexed(spark: SparkSession, path: String,
+      queries: DataFrame, queryIdCol: String, phraseCol: String,
+      k: Int): DataFrame =
+    Postings.phraseTopK(Index(spark, path),
+      Postings.phraseQueries(queries, queryIdCol, phraseCol), k)
+
+  /** [[TextAnalysis.proximityTopK]] from a positional index. */
+  def proximityTopKIndexed(spark: SparkSession, path: String,
+      queries: DataFrame, queryIdCol: String, termsCol: String,
+      slop: Int, k: Int): DataFrame =
+    Postings.proximityTopK(Index(spark, path),
+      Postings.proximityQueryTerms(queries, queryIdCol, termsCol), slop, k)
+
+  /** [[TextAnalysis.passageTopK]] from a positional index. */
+  def passageTopKIndexed(spark: SparkSession, path: String,
+      queries: DataFrame, queryIdCol: String, termsCol: String,
+      window: Int, k: Int): DataFrame =
+    Postings.passageTopK(Index(spark, path),
+      Postings.proximityQueryTerms(queries, queryIdCol, termsCol), window, k)
+
+  /** [[TextAnalysis.bm25TopKFuzzy]] from the index: the vocabulary reads
+    * only the posting table's `term` column.
+    */
+  def bm25TopKFuzzyIndexed(spark: SparkSession, path: String,
+      queries: DataFrame, queryIdCol: String, queryTermsCol: String,
+      k: Int, maxDist: Int = 1): DataFrame =
+    Postings.bm25TopKFuzzy(Index(spark, path),
+      Postings.bm25QueryTerms(queries, queryIdCol, queryTermsCol), k,
+      maxDist, Postings.K1, Postings.B)
+
+  /** [[TextAnalysis.bm25TopKBool]] from the index (the scan covers ALL
+    * role terms' buckets: mustNot matches disqualify).
+    */
+  def bm25TopKBoolIndexed(spark: SparkSession, path: String,
+      queries: DataFrame, queryIdCol: String, mustCol: String,
+      shouldCol: String, mustNotCol: String, k: Int, k1: Double = 1.2,
+      b: Double = 0.75): DataFrame =
+    Postings.bm25TopKBool(Index(spark, path), Postings.boolQueryRoles(
+      queries, queryIdCol, mustCol, shouldCol, mustNotCol), k, k1, b)
+
+  /** [[TextAnalysis.significantTerms]] from the index: the posting table
+    * IS the distinct (doc, term) projection.
+    */
+  def significantTermsIndexed(spark: SparkSession, path: String,
+      queries: DataFrame, queryIdCol: String, termsCol: String,
+      k: Int, minFgCount: Int = 1): DataFrame =
+    Postings.significantTerms(Index(spark, path),
+      Postings.proximityQueryTerms(queries, queryIdCol, termsCol)
+        .select(col("query_id"), col("term")), k, minFgCount)
+
+  /** [[TextAnalysis.moreLikeThis]] from the index. The seeds' own terms
+    * come from the id-keyed corpus frame (a pushed-down `id IN (seeds)`
+    * scan, tokenized and spilled once — reading one document's terms
+    * from the term-bucketed postings would be the full-index scan the
+    * index exists to avoid); df, N and the ranking come from the index.
     */
   def moreLikeThisIndexed(spark: SparkSession, path: String,
       docs: DataFrame, idCol: String, textCol: String, seeds: DataFrame,
       seedIdCol: String, mTerms: Int, k: Int, k1: Double = 1.2,
       b: Double = 0.75): DataFrame = {
-    require(mTerms > 0, "mTerms must be positive")
-    require(k > 0, "k must be positive")
-    val nBuckets = readNBuckets(spark, path)
     val seedIds = seeds.select(col(seedIdCol).cast("long").as("doc_id"))
-    val seedDocs = docs.join(broadcast(seedIds),
-      docs(idCol).cast("long") === seedIds("doc_id"), "left_semi")
-    val seedTf = graft.io.Spill(
-      TextAnalysis.tfProjection(seedDocs, idCol, textCol), "graft-mlti-")
-    // bounded driver action: |buckets| <= min(|seed vocabulary|, nBuckets)
-    val buckets = seedTf
-      .select(termBucket(col("term"), nBuckets).as("tb")).distinct()
-      .collect().map(_.getInt(0)).toSeq
-    val df = readPostings(spark, path)
-      .where(col("tb").isin(buckets: _*))
-      .join(broadcast(seedTf.select(col("term")).distinct()), Seq("term"),
-        "left_semi")
-      .groupBy(col("term")).agg(count(lit(1)).as("df"))
-    val n = readStats(spark, path)
-      .agg(sum(col("n_docs")).cast("double").as("n"))
-    val keywords = graft.io.Spill(
-      TextAnalysis.tfidfRankTailWithDf(seedTf, df, n, mTerms),
-      "graft-mlti-kw-")
-    val queries = keywords.groupBy(col("doc_id"))
-      .agg(collect_list(col("term")).as("__qt"))
-      .select(col("doc_id").as("query_id"), col("__qt"))
-    val res = graft.io.Spill(
-      bm25TopKIndexed(spark, path, queries, "query_id", "__qt", k + 1,
-        k1, b), "graft-mlti-res-")
-    TextAnalysis.mltExcludeSeed(res, k)
+    Postings.moreLikeThis(Index(spark, path), graft.io.Spill(
+      Postings.project(docs.join(broadcast(seedIds),
+        docs(idCol).cast("long") === seedIds("doc_id"), "left_semi"),
+        idCol, textCol, positional = false), "graft-mlti-"),
+      mTerms, k, k1, b)
   }
 
-  /** [[TextAnalysis.facetCounts]] served FROM the index — the
-    * search-facet panel without a corpus tokenize pass: the match set
-    * (docs containing ANY query term) comes from the bucket-pruned
-    * posting scan, the facet attribute joins on from `docFacets` (a
-    * (doc id, facet) frame — e.g. the corpus table's id and language
-    * columns, column-pruned at its own scan; facets are per-DOC
-    * attributes, so they live beside the corpus, not inside the
-    * term-keyed posting layout), and the counting is the single-homed
-    * [[TextAnalysis.facetAggTail]] — indexed ≡ one-shot exactly
-    * (spec-pinned). The facet join is a plain equi-join on doc id:
-    * both sides carry (id, facet/query) integers-and-attribute rows
-    * only, never text.
+  /** [[TextAnalysis.facetCounts]] from the index: the match set comes
+    * from the pruned posting scan, the facet from `docFacets` (a
+    * (doc id, facet) frame, column-pruned at its own scan) by one doc-id
+    * equi-join.
     */
   def facetCountsIndexed(spark: SparkSession, path: String,
       queries: DataFrame, queryIdCol: String, termsCol: String,
       docFacets: DataFrame, docIdCol: String, facetCol: String)
-      : DataFrame = {
-    val nBuckets = readNBuckets(spark, path)
-    val qterms = TextAnalysis.proximityQueryTerms(queries, queryIdCol,
-        termsCol)
-      .select(col("query_id"), col("term"))
-    // bounded driver action: |distinct buckets| <= min(|terms|, nBuckets)
-    val buckets = qterms
-      .select(termBucket(col("term"), nBuckets).as("tb")).distinct()
-      .collect().map(_.getInt(0)).toSeq
-    val matched = readPostings(spark, path)
-      .where(col("tb").isin(buckets: _*))
-      .select(col("doc_id"), col("term"))
-      .join(broadcast(qterms), Seq("term"))
-      .select(col("query_id"), col("doc_id"))
-    TextAnalysis.facetAggTail(matched.join(
-      docFacets.select(col(docIdCol).cast("long").as("doc_id"),
-        col(facetCol).as("facet")),
-      Seq("doc_id")))
-  }
+      : DataFrame =
+    Postings.facetCounts(Index(spark, path),
+      Postings.proximityQueryTerms(queries, queryIdCol, termsCol)
+        .select(col("query_id"), col("term")),
+      _.join(docFacets.select(col(docIdCol).cast("long").as("doc_id"),
+        col(facetCol).as("facet")), Seq("doc_id")))
 
-  /** [[TextAnalysis.passageSnippets]] with the RANKING served from the
-    * positional index: [[passageTopKIndexed]] picks the winning
-    * windows from the bucket-pruned posting scan, then the shared
-    * [[TextAnalysis.snippetTail]] slices the text — the corpus frame
-    * is touched exactly once, by the final broadcast join (the ranked
-    * frame is queries x k rows), with its scan pruned to (id, text).
-    * The corpus still must be supplied: an inverted index cannot
-    * reconstruct a document's word window without scanning every
-    * term bucket, which is the full-table read the index exists to
-    * avoid — the id-keyed corpus parquet slices it with one pushed
-    * `doc_id IN (k ids)` filter instead.
+  /** [[TextAnalysis.passageSnippets]] with the ranking served from a
+    * positional index; the corpus frame is touched once, by the final
+    * broadcast join (a pushed `doc_id IN (k ids)` slice).
     */
   def passageSnippetsIndexed(spark: SparkSession, path: String,
       docs: DataFrame, idCol: String, textCol: String,
       queries: DataFrame, queryIdCol: String, termsCol: String,
       window: Int, k: Int): DataFrame =
-    TextAnalysis.snippetTail(docs, idCol, textCol,
-      passageTopKIndexed(spark, path, queries, queryIdCol, termsCol,
-        window, k), window)
+    Postings.passageSnippets(Index(spark, path), docs, idCol, textCol,
+      Postings.proximityQueryTerms(queries, queryIdCol, termsCol), window, k)
 }

@@ -226,989 +226,179 @@ object TextAnalysis {
           - col("__slc9").cast("double") /
             (col("n_tokens").cast("double") * 1e9), 4).as("entropy_bits"))
 
-  /** BM25 relevance of each document to the query `terms` (k1/b standard
-    * defaults; Robertson-Spärck Jones idf with the +1 floor so common
-    * terms never score negative). Built on [[termStats]]; the only doubles
-    * are the final scoring arithmetic, so keep exact comparisons to the
-    * integer stats and treat scores as ranking keys.
+  /** BM25 relevance of each document to the query `terms` (the one
+    * [[Postings.bm25Term]] score, k1/b standard defaults). Built on
+    * [[termStats]]; the only doubles are the final scoring arithmetic,
+    * so keep exact comparisons to the integer stats and treat scores as
+    * ranking keys.
     */
   def bm25(docs: DataFrame, idCol: String, textCol: String,
       terms: Seq[String], k1: Double = 1.2, b: Double = 0.75): DataFrame = {
     // Corpus stats (N, avgdl) as a ONE-ROW aggregate broadcast into the
     // plan — no driver-side count()/collect() round-trips, so the whole
-    // scorer stays one lazy plan (the 100 TB posture: corpus stats are a
-    // map-reduce over doc lengths, not two eager jobs per call). The
-    // conditionless join against the single stats row plans as a
-    // BroadcastNestedLoopJoin over one row, the same shape as the
-    // query-vector joins in Similarity.
+    // scorer stays one lazy plan. The conditionless join against the
+    // single stats row plans as a BroadcastNestedLoopJoin over one row.
     val stats = docs
       .select(sizeOrNull(words(col(textCol))).cast("double").as("l"))
       .agg(count(lit(1)).cast("double").as("n"), avg(col("l")).as("avgdl"))
     termStats(docs, idCol, textCol, terms)
       .join(broadcast(stats))
-      .withColumn("idf",
-        log((col("n") - col("df") + 0.5) / (col("df") + 0.5) + 1.0))
-      .withColumn("score",
-        col("idf") * (col("tf") * lit(k1 + 1)) /
-          (col("tf") + lit(k1) * (lit(1 - b) + lit(b) * col("doc_len") / col("avgdl"))))
+      .withColumn("score", Postings.bm25Term(k1, b))
       .groupBy(col("doc_id"))
       .agg(sum(col("score")).as("bm25"), count(lit(1)).as("terms_hit"))
   }
 
-  /** Batched BM25 top-k retrieval — the lexical twin of
-    * [[Similarity.hardNegatives]]/batchLshTopK: for EVERY query in
-    * `queries` (an id column + a term-array column), the k
-    * highest-BM25-scoring corpus documents in one plan. This is the
-    * retrieval shape an LLM data pipeline runs constantly: dedup- and
-    * decontamination-by-retrieval (benchmark items as queries), kNN-LM /
-    * RAG training-pair construction, and counterfactual-document mining
-    * all reduce to "top-k BM25 per query over the corpus".
-    *
-    * Plan at 100 TB: queries are training-batch-sized by nature, so the
-    * query-term table BROADCASTS three ways — a semi-join that prunes the
-    * corpus token stream down to query-matching terms before ANYTHING
-    * shuffles, the per-term df table, and the term→query fan-out onto
-    * scored rows. The only exchanges carry (doc, matching-term) integer
-    * stats, never corpus text; corpus stats (N, avgdl) are a one-row
-    * aggregate joined in as the sanctioned single-row BNLJ. The ranking
-    * tail is the bounded [[graft.functions.TopKAggregator]] — at most k
-    * (score, id) pairs per query per map task cross the final exchange,
-    * where the `row_number` window idiom would shuffle and sort every
-    * scored pair. Like the other spilling operators (q125/q128/q130),
-    * this one is EAGER: the (doc, term) tf stats materialize once at
-    * call time and both their consumers (df rollup, scoring) scan the
-    * spill.
-    *
-    * Determinism is the NaiveBayes integer-micros discipline, not the
-    * 4-decimal cosine one: each per-(doc, term) score rounds to 6
-    * decimals (the one `ln` sits there, where a last-ulp engine
-    * difference moves at most one rounding boundary), scales to exact
-    * integer micros, and the per-(query, doc) total is then an
-    * order-invariant integer sum — a double sum of per-term scores would
-    * land on ranking boundaries differently per partitioning. Ranks
-    * break ties by ascending doc id (the q95 contract). Query terms are
-    * de-duplicated (standard query-side BM25 with no k3 query-tf
-    * saturation); docs sharing no term with a query are absent, so a
-    * query can return fewer than k rows.
+  // ---- batched lexical retrieval ----------------------------------------
+  // One ranker set over two posting sources: each entry point below runs
+  // a [[Postings]] ranker over the [[Corpus]] source (the posting
+  // projection of `docs`, tokenized in this plan), and its
+  // `LexicalIndex.*Indexed` twin runs the same ranker over the persisted
+  // [[Index]] source — identical results (spec-pinned). An entry point
+  // only builds the corpus its ranker needs: a spill restricted to the
+  // query terms (one consumer set), a full spill shared by the ranker's
+  // vocabulary/df folds, or the in-plan positional projection. Plans,
+  // scoring and determinism contracts are documented on the rankers.
+
+  /** Batched BM25 top-k: for EVERY query (an id column + a term-array
+    * column) the k highest-BM25 documents in one plan — the shape of
+    * dedup- and decontamination-by-retrieval, kNN-LM/RAG training-pair
+    * construction and counterfactual-document mining. Eager: the query
+    * terms' tf rows plus one stats sentinel per doc spill once at call
+    * time. Output (query_id, rank, doc_id).
     */
   def bm25TopK(docs: DataFrame, idCol: String, textCol: String,
       queries: DataFrame, queryIdCol: String, queryTermsCol: String,
       k: Int, k1: Double = 1.2, b: Double = 0.75): DataFrame = {
-    require(k > 0, "k must be positive")
-    val qterms = bm25QueryTerms(queries, queryIdCol, queryTermsCol)
-    // The tf frame feeds BOTH the df rollup and the scoring projection;
-    // spill it once (the q130 raw-feature discipline) so the second
-    // consumer scans integer (doc, doc_len, term, tf) parquet instead of
-    // re-running the tokenize corpus pass. Per-doc tf comes from the
-    // shared map-only [[tfProjectionWithLens]] (the exchange-free
-    // TokenCounts bag), whose per-doc term=NULL sentinel row carries the
-    // doc length, so the corpus stats (n, avgdl) read from the SAME
-    // spill — the previous separate stats aggregate re-tokenized the
-    // whole corpus once per retrieval call (guide §2.3/§1.2; round-20
-    // "not yet optimized" item). The spill holds query-matching term
-    // stats + one sentinel per doc — never text.
-    val proj = graft.io.Spill(
-      restrictWithSentinels(tfProjectionWithLens(docs, idCol, textCol),
-        qterms.select(col("term"))), "graft-bm25tf-")
-    bm25FromProjection(proj, qterms, k, k1, b, restricted = true)
+    val qterms = Postings.bm25QueryTerms(queries, queryIdCol, queryTermsCol)
+    Postings.bm25TopK(Corpus.spilledFor(docs, idCol, textCol, qterms),
+      qterms, k, k1, b)
   }
 
-  /** [[bm25TopK]] over a PRE-SPILLED [[tfProjectionWithLens]] frame —
-    * the multi-ranker rows (q162 leaderboard, q153/q154 metrics) build
-    * the corpus projection once and every lexical ranker consumes its
-    * own restriction, instead of each ranker re-tokenizing the corpus.
-    * Identical results by construction: the tail restricts `proj` with
-    * the same semi-join the one-shot path applies at spill time.
-    */
-  private[graft] def bm25TopKFromProjection(proj: DataFrame,
-      queries: DataFrame, queryIdCol: String, queryTermsCol: String,
-      k: Int, k1: Double = 1.2, b: Double = 0.75,
-      restricted: Boolean = false): DataFrame = {
-    require(k > 0, "k must be positive")
-    bm25FromProjection(proj,
-      bm25QueryTerms(queries, queryIdCol, queryTermsCol), k, k1, b,
-      restricted)
-  }
-
-  /** Single home for the projection → rank-tail wiring of [[bm25TopK]]
-    * and [[bm25TopKFromProjection]] (the bm25RankTail no-drift
-    * argument). `restricted = true` means the projection was already
-    * semi-joined to the query terms at spill time, so the tail skips
-    * the (plan-audited) re-restriction join.
-    */
-  private def bm25FromProjection(proj: DataFrame, qterms: DataFrame,
-      k: Int, k1: Double, b: Double, restricted: Boolean): DataFrame = {
-    val base = proj.where(col("term").isNotNull)
-    val tf = if (restricted) base
-      else base.join(broadcast(qterms.select(col("term")).distinct()),
-        Seq("term"), "left_semi")
-    bm25RankTail(tf, statsFromProjection(proj), qterms, k, k1, b)
-  }
-
-  /** The one-row (n, avgdl) corpus stats read off a
-    * [[tfProjectionWithLens]] frame's term=NULL sentinel rows: n counts
-    * every document (null-text docs emit a sentinel with NULL doc_len),
-    * avgdl averages the non-null lengths — exactly the semantics of the
-    * former standalone `agg(count, avg(sizeOrNull(words(text))))` pass
-    * (doc lengths are integers, so the double sum is exact and
-    * order-invariant; the oracle replay is unaffected).
-    */
-  private[graft] def statsFromProjection(proj: DataFrame): DataFrame =
-    proj.where(col("term").isNull)
-      .agg(count(lit(1)).cast("double").as("n"),
-        avg(col("doc_len").cast("double")).as("avgdl"))
-
-  /** Restrict a [[tfProjectionWithLens]] frame to `terms` while keeping
-    * the term=NULL stats sentinels (null-safe semi-join: a plain
-    * `left_semi` on `term` would drop them).
-    */
-  private[graft] def restrictWithSentinels(proj: DataFrame,
-      terms: DataFrame): DataFrame = {
-    val keep = terms.select(col("term").as("__kt")).distinct()
-      .unionByName(terms.sparkSession.range(1)
-        .select(lit(null).cast("string").as("__kt")))
-    proj.join(broadcast(keep), col("term") <=> col("__kt"), "left_semi")
-  }
-
-  /** Scoring + ranking tail shared by [[bm25TopK]] (spilled in-plan tf)
-    * and [[LexicalIndex.bm25TopKIndexed]] (partition-pruned index scan):
-    * per-term df rollup, the 6-decimal-rounded Robertson-idf x k1/b
-    * saturation score scaled to exact integer micros, the
-    * order-invariant per-(query, doc) micro sum, and the bounded shared
-    * [[Similarity.rankTopKPerQuery]] tail. `tf` must be
-    * (doc_id, doc_len, term, tf) rows already restricted to
-    * query-matching terms; `stats` one (n, avgdl) row; `qterms`
-    * (query_id, term) rows (broadcast onto the scored frame). Keeping
-    * this tail single-homed means the one-shot and indexed paths cannot
-    * drift — their exact-equality is spec-pinned.
-    */
-  private[operators] def bm25RankTail(tf: DataFrame, stats: DataFrame,
-      qterms: DataFrame, k: Int, k1: Double, b: Double): DataFrame = {
-    val df = tf.groupBy(col("term")).agg(count(lit(1)).as("df"))
-    val scored = tf
-      .join(broadcast(df), Seq("term"))
-      .join(broadcast(stats))
-      .select(col("term"), col("doc_id"),
-        round(round(
-          log((col("n") - col("df") + 0.5) / (col("df") + 0.5) + 1.0)
-            * (col("tf") * lit(k1 + 1)) /
-            (col("tf") + lit(k1)
-              * (lit(1 - b) + lit(b) * col("doc_len") / col("avgdl"))),
-          6) * 1e6).cast("long").as("__sm"))
-    Similarity.rankTopKPerQuery(
-      scored.join(broadcast(qterms), Seq("term"))
-        .groupBy(col("query_id"), col("doc_id"))
-        .agg(sum(col("__sm")).as("__m"))
-        .select(col("query_id"), col("doc_id"),
-          col("__m").cast("double").as("sim")),
-      "doc_id", k)
-  }
-
-  /** "More like this": for every SEED document, the k corpus documents
-    * ranked by BM25 over the seed's own top-`mTerms` tf-idf
-    * characteristic terms — query-by-example retrieval, the
-    * find-similar-docs tool of corpus curation (grow a mixture from
-    * exemplars, find near-topic docs for an eval holdout) that needs
-    * no embedding model. The seed itself is excluded from its results
-    * (it would trivially rank first) with the later ranks shifted up,
-    * so callers still see a dense 1..k.
-    *
-    * Plan: ONE spilled corpus tf bag (a single tokenize pass) feeds
-    * the corpus-wide df rollup (idf must see every document), the
-    * SEED-restricted keyword fold (seeds are a broadcast id list, so
-    * the fold is seed-sized, not corpus-sized), and the
-    * [[bm25RankTail]] scorer over the derived (seed, term) query
-    * frame; self-exclusion is a broadcast join against the
-    * queries x 1 self-rank frame. Everything between the tokenize
-    * scan and the final rank handles integer rows only.
+  /** "More like this": for every SEED document, the k documents ranked
+    * by BM25 over the seed's own top-`mTerms` tf-idf terms —
+    * query-by-example retrieval with no embedding model (grow a mixture
+    * from exemplars, find near-topic docs for an eval holdout). One
+    * spilled corpus feeds the corpus-wide df, the seed keyword fold and
+    * the ranking.
     */
   def moreLikeThis(docs: DataFrame, idCol: String, textCol: String,
       seeds: DataFrame, seedIdCol: String, mTerms: Int, k: Int,
       k1: Double = 1.2, b: Double = 0.75): DataFrame = {
-    require(mTerms > 0, "mTerms must be positive")
-    require(k > 0, "k must be positive")
-    val proj = graft.io.Spill(tfProjectionWithLens(docs, idCol, textCol),
-      "graft-mlt-")
-    moreLikeThisFromProjection(proj, seeds, seedIdCol, mTerms, k, k1, b)
+    val corpus = Corpus.spilled(docs, idCol, textCol)
+    Postings.moreLikeThis(corpus, corpus.tfOf(seeds, seedIdCol), mTerms, k,
+      k1, b)
   }
 
-  /** [[moreLikeThis]] over a pre-spilled [[tfProjectionWithLens]] frame
-    * (the q162 shared-projection discipline). The corpus stats (n for
-    * tf-idf, (n, avgdl) for BM25) read from the sentinel rows — the
-    * previous form paid one full corpus tokenize for avgdl plus a doc
-    * count scan on top of the tf spill pass.
-    */
-  private[graft] def moreLikeThisFromProjection(proj: DataFrame,
-      seeds: DataFrame, seedIdCol: String, mTerms: Int, k: Int,
-      k1: Double = 1.2, b: Double = 0.75): DataFrame = {
-    require(mTerms > 0, "mTerms must be positive")
-    require(k > 0, "k must be positive")
-    val tf = proj.where(col("term").isNotNull)
-    val seedIds = seeds.select(col(seedIdCol).cast("long").as("doc_id"))
-    // the keyword frame (seeds x m rows) and the ranked frame
-    // (seeds x k+1 rows) each feed MULTIPLE broadcast consumers — left
-    // in-plan, every consumer would re-plan the whole fold/scoring
-    // subtree (measured 74 exchanges); spilled eagerly (the *_incr
-    // discipline — tiny integer frames), the audited tail is scans +
-    // one broadcast join
-    val keywords = graft.io.Spill(tfidfRankTailWithDf(
-      tf.join(broadcast(seedIds), Seq("doc_id"), "left_semi"),
-      tf.groupBy(col("term")).agg(count(lit(1)).as("df")),
-      proj.where(col("term").isNull)
-        .agg(count(lit(1)).cast("double").as("n")), mTerms),
-      "graft-mlt-kw-")
-    val qterms = keywords.select(col("doc_id").as("query_id"), col("term"))
-    val res = graft.io.Spill(bm25RankTail(
-      tf.join(broadcast(qterms.select(col("term")).distinct()),
-        Seq("term"), "left_semi"),
-      statsFromProjection(proj), qterms, k + 1, k1, b), "graft-mlt-res-")
-    mltExcludeSeed(res, k)
-  }
-
-  /** Self-exclusion tail shared by [[moreLikeThis]] and
-    * [[LexicalIndex.moreLikeThisIndexed]] — single-homed so the paths
-    * cannot drift: `res` is the seeds x (k+1) ranking with
-    * query_id = seed id; the seed (containing all its own keywords)
-    * typically occupies a top rank — drop it and close the gap so the
-    * returned ranks stay dense 1..k.
-    */
-  private[operators] def mltExcludeSeed(res: DataFrame, k: Int): DataFrame = {
-    val selfRank = res.where(col("query_id") === col("doc_id"))
-      .select(col("query_id"), col("rank").as("__sr"))
-    res.where(col("query_id") =!= col("doc_id"))
-      .join(broadcast(selfRank), Seq("query_id"), "left")
-      .select(col("query_id"),
-        when(col("__sr").isNotNull && col("rank") > col("__sr"),
-          col("rank") - 1).otherwise(col("rank")).as("rank"),
-        col("doc_id"))
-      .where(col("rank") <= k)
-  }
-
-  /** Boolean-filtered batched BM25: every query carries three term
-    * arrays — `must` (every one required in a candidate), `should`
-    * (score-only), `mustNot` (any one disqualifies) — the +term/-term
-    * query surface of a real search engine, folded onto the one BM25
-    * scorer: candidates satisfying the gates rank by the standard
-    * saturation score over their matched must∪should terms. A query
-    * whose scoring set (must∪should) is empty fails loud (nothing
-    * ranks an all-negative query); a term listed both must and
-    * mustNot yields the empty set (logically consistent, not an
-    * error).
-    *
-    * Plan: the corpus tf spill restricts to ALL role terms once, the
-    * must gate is a counter inside the existing per-(query, doc)
-    * score aggregate (matched-must count == the query's must count —
-    * no extra corpus pass), and the mustNot gate is one anti-join of
-    * (query, doc) id pairs. Everything after the spill handles
-    * integer (query, doc, micros, counts) rows only.
-    * [[LexicalIndex.bm25TopKBoolIndexed]] serves IDENTICAL results
-    * from the index (shared [[bm25BoolRankTail]], spec-pinned).
+  /** Boolean-filtered batched BM25: every query carries `must` (all
+    * required), `should` (score-only) and `mustNot` (any disqualifies)
+    * term arrays — the +term/-term surface of a search engine folded
+    * onto the one BM25 scorer. The spill restricts to ALL role terms.
     */
   def bm25TopKBool(docs: DataFrame, idCol: String, textCol: String,
       queries: DataFrame, queryIdCol: String, mustCol: String,
       shouldCol: String, mustNotCol: String, k: Int,
       k1: Double = 1.2, b: Double = 0.75): DataFrame = {
-    require(k > 0, "k must be positive")
-    val roles = boolQueryRoles(queries, queryIdCol, mustCol, shouldCol,
-      mustNotCol)
-    // one tokenize pass for tf AND stats (the bm25TopK sentinel spill)
-    val proj = graft.io.Spill(
-      restrictWithSentinels(tfProjectionWithLens(docs, idCol, textCol),
-        roles.select(col("term"))), "graft-bm25tf-")
-    bm25BoolFromProjection(proj, roles, k, k1, b, restricted = true)
+    val roles = Postings.boolQueryRoles(queries, queryIdCol, mustCol,
+      shouldCol, mustNotCol)
+    Postings.bm25TopKBool(Corpus.spilledFor(docs, idCol, textCol, roles),
+      roles, k, k1, b)
   }
 
-  /** [[bm25TopKBool]] over a pre-spilled [[tfProjectionWithLens]] frame
-    * (the q162 shared-projection discipline).
-    */
-  private[graft] def bm25TopKBoolFromProjection(proj: DataFrame,
-      queries: DataFrame, queryIdCol: String, mustCol: String,
-      shouldCol: String, mustNotCol: String, k: Int,
-      k1: Double = 1.2, b: Double = 0.75): DataFrame = {
-    require(k > 0, "k must be positive")
-    bm25BoolFromProjection(proj, boolQueryRoles(queries, queryIdCol,
-      mustCol, shouldCol, mustNotCol), k, k1, b, restricted = false)
-  }
-
-  private def bm25BoolFromProjection(proj: DataFrame, roles: DataFrame,
-      k: Int, k1: Double, b: Double, restricted: Boolean): DataFrame = {
-    val base = proj.where(col("term").isNotNull)
-    val tf = if (restricted) base
-      else base.join(broadcast(roles.select(col("term")).distinct()),
-        Seq("term"), "left_semi")
-    bm25BoolRankTail(tf, statsFromProjection(proj), roles, k, k1, b)
-  }
-
-  /** The (query_id, term, role) frame of a boolean query batch
-    * (role ∈ must/should/not, deduped per (query, term, role)),
-    * validated: a query with an empty must∪should scoring set fails
-    * loud (the [[proximityQueryTerms]] posture).
-    */
-  private[operators] def boolQueryRoles(queries: DataFrame,
-      queryIdCol: String, mustCol: String, shouldCol: String,
-      mustNotCol: String): DataFrame = {
-    def role(c: String, r: String) = queries
-      .select(col(queryIdCol).cast("long").as("query_id"),
-        explode(array_distinct(col(c))).as("term"))
-      .withColumn("role", lit(r))
-    val roles = role(mustCol, "must")
-      .unionByName(role(shouldCol, "should"))
-      .unionByName(role(mustNotCol, "not"))
-    // coalesce each size: size(NULL) is NULL, and NULL + n < 1 is
-    // NULL, so a query with null must AND should arrays would bypass
-    // the fail-loud check below and silently rank nothing
-    val unscored = queries
-      .select(col(queryIdCol).cast("long").as("query_id"),
-        (coalesce(size(array_distinct(col(mustCol))), lit(0))
-          + coalesce(size(array_distinct(col(shouldCol))), lit(0)))
-          .as("__n"))
-      .where(col("__n") < 1).select(col("query_id")).limit(1).collect()
-    require(unscored.isEmpty,
-      s"query ${unscored.headOption.map(_.getLong(0)).getOrElse(-1L)} " +
-        "has no must or should terms - an all-negative query ranks nothing")
-    roles
-  }
-
-  /** Scoring + ranking tail shared by [[bm25TopKBool]] (spilled tf)
-    * and [[LexicalIndex.bm25TopKBoolIndexed]] (pruned posting scan) —
-    * single-homed like [[bm25RankTail]] so the paths cannot drift:
-    * the standard per-term micro scores, one per-(query, doc)
-    * aggregate summing micros AND counting matched must terms, the
-    * must-count gate against the query's broadcast must total, the
-    * mustNot anti-join of id pairs, the bounded top-k.
-    */
-  private[operators] def bm25BoolRankTail(tf: DataFrame, stats: DataFrame,
-      roles: DataFrame, k: Int, k1: Double, b: Double): DataFrame = {
-    val df = tf.groupBy(col("term")).agg(count(lit(1)).as("df"))
-    val scored = tf
-      .join(broadcast(df), Seq("term"))
-      .join(broadcast(stats))
-      .select(col("term"), col("doc_id"),
-        round(round(
-          log((col("n") - col("df") + 0.5) / (col("df") + 0.5) + 1.0)
-            * (col("tf") * lit(k1 + 1)) /
-            (col("tf") + lit(k1)
-              * (lit(1 - b) + lit(b) * col("doc_len") / col("avgdl"))),
-          6) * 1e6).cast("long").as("__sm"))
-    // scoring terms with their must flag (a term listed must AND
-    // should counts once, as must)
-    val sroles = roles.where(col("role") =!= "not")
-      .groupBy(col("query_id"), col("term"))
-      .agg(max(when(col("role") === "must", 1L).otherwise(0L))
-        .as("__is_must"))
-    val nMust = sroles.where(col("__is_must") === 1)
-      .groupBy(col("query_id")).agg(count(lit(1)).as("__n_must"))
-    val pairs = scored.join(broadcast(sroles), Seq("term"))
-      .groupBy(col("query_id"), col("doc_id"))
-      .agg(sum(col("__sm")).as("__m"),
-        sum(col("__is_must")).as("__must_hit"))
-      .join(broadcast(nMust), Seq("query_id"), "left")
-      .where(col("__must_hit") === coalesce(col("__n_must"), lit(0L)))
-    val excluded = tf.select(col("doc_id"), col("term"))
-      .join(broadcast(roles.where(col("role") === "not")
-        .select(col("query_id"), col("term"))), Seq("term"))
-      .select(col("query_id"), col("doc_id")).distinct()
-    Similarity.rankTopKPerQuery(
-      pairs.join(excluded, Seq("query_id", "doc_id"), "left_anti")
-        .select(col("query_id"), col("doc_id"),
-          col("__m").cast("double").as("sim")),
-      "doc_id", k)
-  }
-
-  /** Batched quoted-phrase top-k retrieval: for every query (an id
-    * column + a STRING phrase column), the k corpus documents with the
-    * most exact word-sequence occurrences of that phrase — the
-    * "find documents containing this exact quote" shape of
-    * decontamination and attribution audits, where bag-of-words BM25
-    * ([[bm25TopK]]) would also return adjacency-less matches. Phrases
-    * and text normalize through the one [[words]] convention (the
-    * blocklist contract), and a phrase empty after tokenization fails
-    * loud.
-    *
-    * Plan: one [[graft.functions.PositionalShingles]] explode per
-    * DISTINCT phrase length (driver-bounded by |queries|), each joined
-    * against the broadcast phrase table of that length, then one
-    * (query, doc) count aggregate into the shared ranking tail
-    * ([[phraseRankTail]]: counts are exact integers, ties break by
-    * ascending doc id — the q95 contract). The only exchange carries
-    * (query, matching-doc) integer counts; the shingle stream is pruned
-    * by the broadcast hash join at scan speed.
-    * [[LexicalIndex.phraseTopKIndexed]] serves IDENTICAL results from a
-    * positional index without touching corpus text (spec-pinned).
+  /** Batched quoted-phrase top-k (a STRING phrase column): documents
+    * with the most exact word-sequence occurrences — the "find documents
+    * containing this exact quote" shape of decontamination and
+    * attribution audits, where bag-of-words BM25 also returns
+    * adjacency-less matches. Output (query_id, rank, doc_id, n_hits).
     */
   def phraseTopK(docs: DataFrame, idCol: String, textCol: String,
       queries: DataFrame, queryIdCol: String, phraseCol: String,
-      k: Int): DataFrame = {
-    require(k > 0, "k must be positive")
-    val qp = phraseQueries(queries, queryIdCol, phraseCol)
-    // bounded driver action (the queryBuckets discipline): the distinct
-    // phrase lengths drive how many shingle widths explode
-    val lengths = qp.select(col("__n")).distinct()
-      .collect().map(_.getInt(0)).toSeq.sorted
-    // zero queries degrade to zero rows like every other retrieval
-    // entry point (the per-length reduce below would otherwise throw
-    // on an empty seq)
-    if (lengths.isEmpty)
-      return qp.select(col("query_id"), lit(0L).as("rank"),
-        col("query_id").as("doc_id"), lit(0L).as("n_hits")).limit(0)
-    val toks = docs.select(col(idCol).cast("long").as("doc_id"),
-      words(col(textCol)).as("__w"))
-    val counts = lengths.map { n =>
-      toks
-        .select(col("doc_id"),
-          explode(graft.functions.TextFunctions
-            .positionalShingles(col("__w"), n)).as("__sh"))
-        .join(broadcast(qp.where(col("__n") === n)
-          .select(col("query_id"), col("__ps"))),
-          col("__sh") === col("__ps"))
-        .groupBy(col("query_id"), col("doc_id"))
-        .agg(count(lit(1)).as("n_hits"))
-    }.reduce(_.unionByName(_))
-    phraseRankTail(counts, k)
-  }
+      k: Int): DataFrame =
+    Postings.phraseTopK(Corpus.positional(docs, idCol, textCol),
+      Postings.phraseQueries(queries, queryIdCol, phraseCol), k)
 
-  /** The (query_id, __pt terms, __n length, __ps space-joined) phrase
-    * frame, length-validated: an empty-after-tokenization phrase is a
-    * caller bug ([[graft.functions.TextFunctions.normalizedPhrases]]
-    * posture), surfaced loud via one bounded driver check instead of
-    * silent zero results.
-    */
-  private[operators] def phraseQueries(queries: DataFrame,
-      queryIdCol: String, phraseCol: String): DataFrame = {
-    val qp = queries.select(col(queryIdCol).cast("long").as("query_id"),
-        words(col(phraseCol)).as("__pt"))
-      .select(col("query_id"), col("__pt"), size(col("__pt")).as("__n"),
-        concat_ws(" ", col("__pt")).as("__ps"))
-    val empties = qp.where(col("__n") < 1).select(col("query_id"))
-      .limit(1).collect()
-    require(empties.isEmpty,
-      s"query ${empties.headOption.map(_.getLong(0)).getOrElse(-1L)} has " +
-        "a phrase that is empty after tokenization")
-    qp
-  }
-
-  /** Ranking tail shared by [[phraseTopK]] and
-    * [[LexicalIndex.phraseTopKIndexed]] — single-homed like
-    * [[bm25RankTail]] so indexed ≡ one-shot exactly: exact integer
-    * occurrence counts through the bounded
-    * [[Similarity.rankTopKPerQuery]] top-k (ascending-doc-id tiebreak),
-    * with `n_hits` rejoined onto the k-bounded rank frame (the counts
-    * spill once — they are (query, matching-doc) integers, probe-sized).
-    */
-  private[operators] def phraseRankTail(countsIn: DataFrame,
-      k: Int): DataFrame = {
-    val counts = graft.io.Spill(countsIn, "graft-phrase-")
-    Similarity.rankTopKPerQuery(
-        counts.select(col("query_id"), col("doc_id"),
-          col("n_hits").cast("double").as("sim")),
-        "doc_id", k)
-      .join(counts, Seq("query_id", "doc_id"))
-      .select(col("query_id"), col("rank"), col("doc_id"), col("n_hits"))
-  }
-
-  /** Batched proximity ("terms near each other") top-k retrieval: for
-    * every query (an id column + a STRING terms column), the k corpus
-    * documents whose minimal word-window span covering one occurrence of
-    * EVERY distinct query term is <= `slop`, ranked tightest-first —
-    * the middle ground between bag-of-words BM25 (no position
-    * constraint) and exact quoted phrases ([[phraseTopK]]): "these
-    * terms, near each other, any order". Terms normalize through the one
-    * [[words]] convention and de-duplicate (a repeated term adds no
-    * constraint); a query empty after tokenization fails loud.
-    *
-    * Plan: the corpus tokenizes once into the map-only
-    * [[graft.functions.TokenPositions]] bag, the broadcast
-    * (query, off, term) join keeps only query-term entries, one
-    * (query, doc) aggregate collects per-term position lists, the
-    * all-terms-present filter bounds candidates, and
-    * [[graft.functions.MinWindowSpan]] sweeps each candidate's lists —
-    * the only exchange carries integer position lists of candidate docs.
-    * [[LexicalIndex.proximityTopKIndexed]] serves IDENTICAL results from
-    * a positional index without touching corpus text (spec-pinned).
+  /** Batched proximity top-k (a STRING terms column): documents holding
+    * every distinct query term within a `slop`-word window, tightest
+    * first — between bag-of-words BM25 and exact phrases. Output
+    * (query_id, rank, doc_id, span).
     */
   def proximityTopK(docs: DataFrame, idCol: String, textCol: String,
       queries: DataFrame, queryIdCol: String, termsCol: String,
-      slop: Int, k: Int): DataFrame = {
-    require(k > 0, "k must be positive")
-    require(slop >= 0, "slop must be >= 0")
-    val qterms = proximityQueryTerms(queries, queryIdCol, termsCol)
-    val entries = docs
-      .select(col(idCol).cast("long").as("doc_id"),
-        words(col(textCol)).as("__w"))
-      .select(col("doc_id"),
-        explode(graft.functions.TextFunctions.tokenPositions(col("__w")))
-          .as("__tp"))
-      .select(col("doc_id"), col("__tp.token").as("term"),
-        col("__tp.pos").as("pos"))
-      .join(broadcast(qterms), Seq("term"))
-    proximityRankTail(candidateSpans(entries), slop, k)
-  }
+      slop: Int, k: Int): DataFrame =
+    Postings.proximityTopK(Corpus.positional(docs, idCol, textCol),
+      Postings.proximityQueryTerms(queries, queryIdCol, termsCol), slop, k)
 
-  /** The per-(query, doc) minimal-span frame shared by [[proximityTopK]]
-    * and [[LexicalIndex.proximityTopKIndexed]]: collect each term
-    * offset's position list, keep docs holding ALL `__n` distinct terms
-    * (a distinct term joins exactly once, so the entry count pins it),
-    * sweep with [[graft.functions.MinWindowSpan]].
-    */
-  private[operators] def candidateSpans(entries: DataFrame): DataFrame =
-    entries
-      .groupBy(col("query_id"), col("doc_id"), col("__n"))
-      .agg(collect_list(struct(col("off"), col("pos"))).as("__e"))
-      .where(size(col("__e")) === col("__n"))
-      .select(col("query_id"), col("doc_id"),
-        graft.functions.TextFunctions.minWindowSpan(col("__e")).as("span"))
-
-  /** The (query_id, __n, off, term) frame of a batched proximity search:
-    * terms normalized via [[words]], de-duplicated per query in
-    * first-occurrence order, offsets 0..n-1; empty-after-tokenization
-    * queries fail loud (the [[phraseQueries]] posture).
-    */
-  private[operators] def proximityQueryTerms(queries: DataFrame,
-      queryIdCol: String, termsCol: String): DataFrame = {
-    val qp = queries.select(col(queryIdCol).cast("long").as("query_id"),
-        array_distinct(words(col(termsCol))).as("__t"))
-      .select(col("query_id"), col("__t"), size(col("__t")).as("__n"))
-    val empties = qp.where(col("__n") < 1).select(col("query_id"))
-      .limit(1).collect()
-    require(empties.isEmpty,
-      s"query ${empties.headOption.map(_.getLong(0)).getOrElse(-1L)} has " +
-        "a terms string that is empty after tokenization")
-    qp.select(col("query_id"), col("__n"),
-      posexplode(col("__t")).as(Seq("off", "term")))
-  }
-
-  /** Ranking tail shared by [[proximityTopK]] and
-    * [[LexicalIndex.proximityTopKIndexed]] — single-homed so indexed ≡
-    * one-shot exactly: drop candidates looser than `slop`, rank by span
-    * ascending (negated through the bounded
-    * [[Similarity.rankTopKPerQuery]] top-k, ascending-doc-id tiebreak),
-    * rejoin `span` onto the k-bounded rank frame (the [[phraseRankTail]]
-    * spill discipline — spans are (query, candidate-doc) integers,
-    * probe-sized).
-    */
-  private[operators] def proximityRankTail(spansIn: DataFrame, slop: Int,
-      k: Int): DataFrame = {
-    val spans = graft.io.Spill(
-      spansIn.where(col("span") <= slop), "graft-prox-")
-    Similarity.rankTopKPerQuery(
-        spans.select(col("query_id"), col("doc_id"),
-          (-col("span").cast("double")).as("sim")),
-        "doc_id", k)
-      .join(spans, Seq("query_id", "doc_id"))
-      .select(col("query_id"), col("rank"), col("doc_id"), col("span"))
-  }
-
-  /** Batched windowed-passage top-k retrieval: for every query, the k
-    * corpus documents ranked by the query-term-densest `window`-word
-    * passage they contain — most query-term OCCURRENCES in any
-    * `window`-wide word span, earliest such span on ties — with the
-    * winning passage's start position returned, the "which documents
-    * hold a quotable passage, and where" shape of RAG context selection
-    * (BM25 ranks whole documents; a long document with one dense
-    * paragraph should rank by the paragraph). Terms normalize and
-    * de-duplicate through the [[proximityTopK]] convention; any single
-    * occurrence makes a candidate (no all-terms gate — density is the
-    * score).
-    *
-    * Plan: the same tokenize-once positional bag + broadcast query-term
-    * join as [[proximityTopK]], one (query, doc) aggregate flattening
-    * matched position lists, and the imperative
-    * [[graft.functions.BestWindow]] two-pointer sweep per candidate —
-    * the only exchange carries integer positions of matching docs.
-    * [[LexicalIndex.passageTopKIndexed]] serves IDENTICAL results from a
-    * positional index (spec-pinned).
+  /** Batched windowed-passage top-k: documents ranked by their
+    * query-term-densest `window`-word passage, winning start returned —
+    * RAG context selection (a long document with one dense paragraph
+    * ranks by the paragraph). Output (query_id, rank, doc_id, n_hits,
+    * start).
     */
   def passageTopK(docs: DataFrame, idCol: String, textCol: String,
       queries: DataFrame, queryIdCol: String, termsCol: String,
-      window: Int, k: Int): DataFrame = {
-    require(k > 0, "k must be positive")
-    require(window >= 1, "window must be >= 1")
-    val qterms = proximityQueryTerms(queries, queryIdCol, termsCol)
-    val entries = docs
-      .select(col(idCol).cast("long").as("doc_id"),
-        words(col(textCol)).as("__w"))
-      .select(col("doc_id"),
-        explode(graft.functions.TextFunctions.tokenPositions(col("__w")))
-          .as("__tp"))
-      .select(col("doc_id"), col("__tp.token").as("term"),
-        col("__tp.pos").as("pos"))
-      .join(broadcast(qterms), Seq("term"))
-    passageRankTail(passageCandidates(entries, window), k)
-  }
-
-  /** The per-(query, doc) best-window frame shared by [[passageTopK]]
-    * and [[LexicalIndex.passageTopKIndexed]]: flatten every matched
-    * term's positions into one multiset, sweep with
-    * [[graft.functions.BestWindow]].
-    */
-  private[operators] def passageCandidates(entries: DataFrame,
-      window: Int): DataFrame =
-    entries
-      .groupBy(col("query_id"), col("doc_id"))
-      .agg(flatten(collect_list(col("pos"))).as("__ps"))
-      .select(col("query_id"), col("doc_id"),
-        graft.functions.TextFunctions.bestWindow(col("__ps"), window)
-          .as("__bw"))
-      .select(col("query_id"), col("doc_id"),
-        col("__bw.n_hits").as("n_hits"), col("__bw.start").as("start"))
-
-  /** Ranking tail shared by [[passageTopK]] and
-    * [[LexicalIndex.passageTopKIndexed]] — single-homed so indexed ≡
-    * one-shot exactly: exact integer window counts through the bounded
-    * [[Similarity.rankTopKPerQuery]] top-k (descending n_hits,
-    * ascending-doc-id tiebreak), with the winning passage's
-    * (n_hits, start) rejoined onto the k-bounded rank frame (the
-    * [[phraseRankTail]] spill discipline).
-    */
-  private[operators] def passageRankTail(candsIn: DataFrame,
-      k: Int): DataFrame = {
-    val cands = graft.io.Spill(candsIn, "graft-passage-")
-    Similarity.rankTopKPerQuery(
-        cands.select(col("query_id"), col("doc_id"),
-          col("n_hits").cast("double").as("sim")),
-        "doc_id", k)
-      .join(cands, Seq("query_id", "doc_id"))
-      .select(col("query_id"), col("rank"), col("doc_id"),
-        col("n_hits"), col("start").cast("long").as("start"))
-  }
+      window: Int, k: Int): DataFrame =
+    Postings.passageTopK(Corpus.positional(docs, idCol, textCol),
+      Postings.proximityQueryTerms(queries, queryIdCol, termsCol), window, k)
 
   /** Typo-tolerant batched BM25: each query term expands to every
-    * corpus-vocabulary term within Levenshtein distance `maxDist`
-    * (itself included), then the expanded term sets score through the
-    * one [[bm25TopK]] path — "tabl" finds table-bearing documents.
-    * Same output contract as [[bm25TopK]]; a query whose terms expand
-    * to nothing returns no rows.
-    *
-    * Expansion is the SymSpell deletion-variant discipline
-    * ([[fuzzyExpandTerms]]): candidates come from an EQUI-join on
-    * single-deletion variants, then the exact `levenshtein` filter
-    * verifies — never a vocabulary x query-term distance cross-sweep.
+    * corpus-vocabulary term within Levenshtein `maxDist` (itself
+    * included) — "tabl" finds table-bearing documents. Same output as
+    * [[bm25TopK]]; ONE spilled corpus serves the vocabulary, the tf
+    * rows and the stats.
     */
   def bm25TopKFuzzy(docs: DataFrame, idCol: String, textCol: String,
       queries: DataFrame, queryIdCol: String, queryTermsCol: String,
       k: Int, maxDist: Int = 1, k1: Double = 1.2,
-      b: Double = 0.75): DataFrame = {
-    // ONE corpus tokenize pass: the full sentinel projection spills
-    // once and serves the vocabulary (distinct terms), the tf
-    // restriction, AND the (n, avgdl) stats — the previous form
-    // tokenized the corpus three times (vocab scan + the inner
-    // bm25TopK's tf and stats passes)
-    val proj = graft.io.Spill(tfProjectionWithLens(docs, idCol, textCol),
-      "graft-bm25tf-")
-    bm25TopKFuzzyFromProjection(proj, queries, queryIdCol, queryTermsCol,
-      k, maxDist, k1, b)
-  }
+      b: Double = 0.75): DataFrame =
+    Postings.bm25TopKFuzzy(Corpus.spilled(docs, idCol, textCol),
+      Postings.bm25QueryTerms(queries, queryIdCol, queryTermsCol), k,
+      maxDist, k1, b)
 
-  /** [[bm25TopKFuzzy]] over a pre-spilled [[tfProjectionWithLens]]
-    * frame (the q162 shared-projection discipline): the vocabulary is
-    * the projection's distinct term set — identical to the corpus
-    * explode-distinct by the TokenCounts bag semantics.
-    */
-  private[graft] def bm25TopKFuzzyFromProjection(proj: DataFrame,
-      queries: DataFrame, queryIdCol: String, queryTermsCol: String,
-      k: Int, maxDist: Int = 1, k1: Double = 1.2,
-      b: Double = 0.75): DataFrame = {
-    val vocab = proj.where(col("term").isNotNull)
-      .select(col("term")).distinct()
-    // the expanded query frame feeds MULTIPLE bm25TopK subtrees (the
-    // tf semi-join's broadcast and the scoring join) — left in-plan,
-    // each consumer re-runs the whole vocabulary expansion (at depth 2
-    // that is the dominant cost, measured 5x the expansion itself);
-    // spilled eagerly, it is queries x expanded-terms tiny rows (the
-    // q159 multi-consumer discipline)
-    val expanded = graft.io.Spill(fuzzyExpandTerms(vocab,
-        bm25QueryTerms(queries, queryIdCol, queryTermsCol), maxDist)
-      .groupBy(col("query_id")).agg(collect_list(col("term")).as("__qt")),
-      "graft-fuzzy-exp-")
-    bm25TopKFromProjection(proj, expanded, "query_id", "__qt", k, k1, b)
-  }
-
-  /** Expand (query_id, term) rows to every `vocab` term within
-    * Levenshtein distance `maxDist` (0, 1 or 2) — the SymSpell
-    * candidate scheme: every dist<=d pair shares at least one variant
-    * reachable by <= d character deletes from each side (the term
-    * itself counts as a variant), so candidates come from one
-    * equi-join of the exploded variant sets — the tiny query side
-    * broadcasts, the vocabulary side stays map-only, and the exact
-    * `levenshtein` filter drops the shared-variant false positives
-    * (e.g. "ab"/"ba"). At 100 TB the vocabulary frame is the bounded
-    * side artifact every fuzzy engine maintains; nothing here touches
-    * corpus rows.
-    */
-  private[operators] def fuzzyExpandTerms(vocab: DataFrame,
-      qterms: DataFrame, maxDist: Int): DataFrame = {
-    require(maxDist >= 0 && maxDist <= 2,
-      "deletion-variant expansion covers Levenshtein distance <= 2 " +
-        "(depth-3 variant sets explode cubically for marginal recall)")
-    if (maxDist == 0)
-      return qterms.join(vocab, Seq("term")).select("query_id", "term")
-    // all single-character deletes of every string in `ts` (flattened);
-    // zero-length sources contribute nothing (sequence(1, 0) is
-    // invalid, and deleting from "" has no result)
-    def dels(ts: Column): Column =
-      flatten(transform(filter(ts, t => length(t) >= 1), t =>
-        transform(sequence(lit(1), length(t)),
-          i => concat(t.substr(lit(1), i - 1),
-            t.substr(i + 1, length(t) - i)))))
-    // the SymSpell completeness argument, depth d: two strings within
-    // Levenshtein d always share a variant reachable by <= d deletes
-    // from each side, so equal-variant candidacy + the exact verify
-    // below is lossless. Depth 1: L+1 variants per term; depth 2:
-    // O(L^2/2) — the standard index-size/recall trade, paid only when
-    // the caller asks for dist 2.
-    // `dedup` guards the final O(|variants|^2) array_distinct: worth it
-    // on the tiny broadcast side (smaller hash relation), a measured
-    // 5x slowdown on the V-sized vocabulary side (15G string compares
-    // at |V|=1e6, depth 2 — the VocabGrowthProbe finding), where
-    // duplicate variants merely add a few extra equi-join probes that
-    // the post-join distinct absorbs. d1 stays deduped before the
-    // second delete round in both cases — that distinct is 11x11 and
-    // BOUNDS the depth-2 set.
-    def variants(t: Column, dedup: Boolean): Column = {
-      val d1 = dels(array(t))
-      val all = if (maxDist >= 2)
-        concat(array(t), d1, dels(array_distinct(d1)))
-      else concat(array(t), d1)
-      if (dedup) array_distinct(all) else all
-    }
-    val qv = qterms
-      .select(col("query_id"), col("term").as("__qterm"),
-        explode(variants(col("term"), dedup = true)).as("__v"))
-    val vv = vocab.select(col("term"),
-      explode(variants(col("term"), dedup = false)).as("__v"))
-    vv.join(broadcast(qv), Seq("__v"))
-      .select(col("query_id"), col("__qterm"), col("term")).distinct()
-      .where(levenshtein(col("__qterm"), col("term")) <= maxDist)
-      .select(col("query_id"), col("term")).distinct()
-  }
-
-  /** Batched search-facet counts: for every query, how the documents
-    * matching ANY of its terms distribute over a facet attribute
-    * (language, source, ...) — the aggregation-over-retrieval panel
-    * beside every search result page, and the corpus-slicing view a
-    * mixture designer reads before pulling a subset. Terms normalize
-    * and de-duplicate through the [[proximityTopK]] convention.
-    *
-    * Plan: the facet column rides the tokenize projection, so matching
-    * needs no join back to the corpus — one distinct over
-    * (query, doc, facet) then one count aggregate; the exchanges carry
-    * matched (ids, facet) rows only, never text. Match = "contains any
-    * query term" (the BM25 candidate set, exact, not top-k-truncated).
+  /** Batched search-facet counts: how the documents matching ANY query
+    * term distribute over a facet attribute (language, source, ...) —
+    * the aggregation panel beside a search result page. The facet rides
+    * the tokenize projection, so matching needs no join back to the
+    * corpus. Output (query_id, facet, n_docs).
     */
   def facetCounts(docs: DataFrame, idCol: String, textCol: String,
       queries: DataFrame, queryIdCol: String, termsCol: String,
-      facetCol: String): DataFrame = {
-    val qterms = proximityQueryTerms(queries, queryIdCol, termsCol)
-      .select(col("query_id"), col("term"))
-    facetAggTail(docs
-      .select(col(idCol).cast("long").as("doc_id"),
+      facetCol: String): DataFrame =
+    Postings.facetCounts(
+      Corpus(docs.select(col(idCol).cast("long").as("doc_id"),
         col(facetCol).as("facet"),
-        explode(array_distinct(words(col(textCol)))).as("term"))
-      .join(broadcast(qterms), Seq("term")))
-  }
+        explode(array_distinct(words(col(textCol)))).as("term"))),
+      Postings.proximityQueryTerms(queries, queryIdCol, termsCol)
+        .select(col("query_id"), col("term")), identity)
 
-  /** Significant terms of each query's match set: the terms
-    * OVER-REPRESENTED among the documents matching ANY query term,
-    * relative to the whole corpus — "what characterizes these docs",
-    * the corpus-slicing view beside [[facetCounts]] (a facet panel
-    * needs a facet column; this mines one from the text). Score is
-    * the log document-frequency lift ln((fg/nMatched)/(df/N)) in
-    * exact integer micros (6-decimal rounded, term-ascending
-    * tiebreak); the query's OWN terms are excluded — they are
-    * definitionally significant, and dropping them surfaces the
-    * co-occurring vocabulary a mixture designer actually wants.
-    * Queries matching nothing yield no rows.
-    *
-    * Plan: the distinct (doc, term) projection spills once (it feeds
-    * the match set, the foreground count and the background df), the
-    * foreground join keys on doc id (integer rows), per-query totals
-    * and the one-row corpus N broadcast, and the per-query top-k is
-    * the bounded [[graft.functions.TopKTermsAggregator]] — the
-    * candidate set is the match set's co-occurring VOCABULARY, so the
-    * fold must stay O(k) per buffer, never O(distinct terms). Output
-    * (query_id, rank, term, score).
+  /** Significant terms of each query's match set: the vocabulary
+    * OVER-REPRESENTED among documents matching ANY query term — "what
+    * characterizes these docs", mined from the text where a facet panel
+    * needs a facet column. Output (query_id, rank, term, score).
     */
   def significantTerms(docs: DataFrame, idCol: String, textCol: String,
       queries: DataFrame, queryIdCol: String, termsCol: String,
-      k: Int, minFgCount: Int = 1): DataFrame = {
-    require(k > 0, "k must be positive")
-    val qterms = proximityQueryTerms(queries, queryIdCol, termsCol)
-      .select(col("query_id"), col("term"))
-    val dterms = graft.io.Spill(
-      docs.select(col(idCol).cast("long").as("doc_id"),
-        explode(array_distinct(words(col(textCol)))).as("term")),
-      "graft-sig-")
-    significantTermsTail(dterms, qterms,
-      docs.agg(count(lit(1)).cast("double").as("__n")), k, minFgCount)
-  }
+      k: Int, minFgCount: Int = 1): DataFrame =
+    Postings.significantTerms(Corpus.spilled(docs, idCol, textCol),
+      Postings.proximityQueryTerms(queries, queryIdCol, termsCol)
+        .select(col("query_id"), col("term")), k, minFgCount)
 
-  /** Scoring + ranking tail shared by [[significantTerms]] (spilled
-    * tokenize projection) and
-    * [[LexicalIndex.significantTermsIndexed]] (posting scan) —
-    * single-homed so the paths cannot drift. `dterms` is distinct
-    * (doc_id, term) rows; `nDocs` one (__n) row. `minFgCount` is the
-    * ES-style minimum foreground document count: at corpus scale the
-    * candidate vocabulary is dominated by hapax/typo terms whose
-    * single-doc lift can still be large — the cutoff drops them BEFORE
-    * the df join and the scoring, shrinking the fold input from "every
-    * co-occurring term" to "terms with real foreground support" (1 =
-    * keep everything, the default).
-    */
-  private[operators] def significantTermsTail(dterms: DataFrame,
-      qterms: DataFrame, nDocs: DataFrame, k: Int,
-      minFgCount: Int = 1): DataFrame = {
-    require(minFgCount >= 1, "minFgCount must be >= 1")
-    val matched = dterms.join(broadcast(qterms), Seq("term"))
-      .select(col("query_id"), col("doc_id")).distinct()
-    val nm = matched.groupBy(col("query_id"))
-      .agg(count(lit(1)).as("__nm"))
-    val df = dterms.groupBy(col("term")).agg(count(lit(1)).as("__df"))
-    val fg = matched.join(dterms, Seq("doc_id"))
-      .groupBy(col("query_id"), col("term")).agg(count(lit(1)).as("__fg"))
-      .where(col("__fg") >= minFgCount)
-    val scored = fg
-      .join(broadcast(qterms), Seq("query_id", "term"), "left_anti")
-      .join(broadcast(nm), Seq("query_id"))
-      .join(df, Seq("term"))
-      .join(broadcast(nDocs))
-      .select(col("query_id"), col("term"),
-        round(round(log((col("__fg").cast("double") * col("__n"))
-          / (col("__nm").cast("double") * col("__df").cast("double"))),
-          6) * 1e6).cast("long").as("__sm"))
-    // bounded per-query top-k: the candidate set here is every distinct
-    // term co-occurring in the query's match set — for a broad query
-    // over a web-scale corpus that is the corpus VOCABULARY, so a
-    // collect_list fold would materialize it all in one reducer row.
-    // TopKTermsAggregator keeps every buffer at k (micros, term) pairs
-    // and combines map-side, identical order (micros DESC, term ASC).
-    val topk = udaf(new graft.functions.TopKTermsAggregator(k))
-    scored.groupBy(col("query_id"))
-      .agg(topk(col("__sm"), col("term")).as("__top"))
-      .select(col("query_id"),
-        posexplode(col("__top")).as(Seq("__r", "__t")))
-      .select(col("query_id"), (col("__r") + 1).cast("long").as("rank"),
-        col("__t._2").as("term"),
-        (col("__t._1").cast("double") / lit(1e6)).as("score"))
-  }
-
-  /** Aggregation tail shared by [[facetCounts]] and
-    * [[LexicalIndex.facetCountsIndexed]] — single-homed like
-    * [[bm25RankTail]] so indexed ≡ one-shot exactly: one distinct over
-    * (query, doc, facet) — a doc counts once per query no matter how
-    * many terms it matched or how often a messy facet table repeats it
-    * — then one count aggregate. Input rows need (query_id, doc_id,
-    * facet).
-    */
-  private[operators] def facetAggTail(matched: DataFrame): DataFrame =
-    matched
-      .select(col("query_id"), col("doc_id"), col("facet")).distinct()
-      .groupBy(col("query_id"), col("facet"))
-      .agg(count(lit(1)).as("n_docs"))
-
-  /** [[passageTopK]] with the winning passage's TEXT attached: the
-    * ranked (query, doc, n_hits, start) rows join back to the corpus
-    * and slice `window` words from the winning start — the final
-    * retrieve-then-quote step of a RAG pipeline. The ranked frame is
-    * queries x k rows by construction, so it BROADCASTS onto the corpus
-    * scan: snippet extraction is one more map-only pass, never a
-    * corpus shuffle.
+  /** [[passageTopK]] with the winning passage's TEXT attached — the
+    * retrieve-then-quote step of a RAG pipeline. Output adds `snippet`.
     */
   def passageSnippets(docs: DataFrame, idCol: String, textCol: String,
       queries: DataFrame, queryIdCol: String, termsCol: String,
       window: Int, k: Int): DataFrame =
-    snippetTail(docs, idCol, textCol,
-      passageTopK(docs, idCol, textCol, queries, queryIdCol, termsCol,
-        window, k), window)
-
-  /** The slice-the-winning-window join shared by [[passageSnippets]]
-    * and [[LexicalIndex.passageSnippetsIndexed]]: `ranked` is a
-    * queries x k (query_id, rank, doc_id, n_hits, start) frame, so it
-    * BROADCASTS onto the corpus tokenize scan — snippet extraction is
-    * one map-only pass, never a corpus shuffle. The slice clamps at the
-    * document tail (fewer than `window` words when the winning start
-    * overruns it).
-    */
-  private[operators] def snippetTail(docs: DataFrame, idCol: String,
-      textCol: String, ranked: DataFrame, window: Int): DataFrame =
-    docs
-      .select(col(idCol).cast("long").as("doc_id"),
-        words(col(textCol)).as("__w"))
-      .join(broadcast(ranked), Seq("doc_id"))
-      .select(col("query_id"), col("rank"), col("doc_id"),
-        col("n_hits"), col("start"),
-        concat_ws(" ", slice(col("__w"),
-          (col("start") + 1).cast("int"), lit(window))).as("snippet"))
-
-  /** The (query_id, term) frame of a batched lexical search: ids cast to
-    * long, terms de-duplicated per query (no k3 query-tf saturation).
-    */
-  private[operators] def bm25QueryTerms(queries: DataFrame,
-      queryIdCol: String, queryTermsCol: String): DataFrame =
-    queries.select(col(queryIdCol).cast("long").as("query_id"),
-      explode(array_distinct(col(queryTermsCol))).as("term"))
+    Postings.passageSnippets(Corpus.positional(docs, idCol, textCol), docs,
+      idCol, textCol,
+      Postings.proximityQueryTerms(queries, queryIdCol, termsCol), window, k)
 
   /** Top-k characteristic terms per document by tf-idf — keyword/topic
-    * tagging for corpus profiling, mixture design, and search-facet
-    * construction. Score = tf x ln(N/df): ubiquitous terms idf toward 0
-    * and fall out of the top-k naturally, so no stopword list is needed.
-    *
-    * Shape at 100 TB: the per-doc tf bag is the map-only
-    * [[tfProjection]]; the df rollup and its join back onto tf key on
-    * `term` — vocabulary can exceed broadcast thresholds at web scale,
-    * so this is a plain shuffled equi-join (the classic tf-idf batch
-    * shape; the exchanges carry integer (doc, term, tf) stats, never
-    * text). Per-doc top-k folds inside ONE aggregate
-    * (sort_array∘collect_list, bounded by the doc's own distinct-term
-    * count) instead of a corpus-wide rank window.
-    *
-    * Determinism is the NB micros discipline: idf rounds to 6 decimals,
-    * scales by the integer tf into exact micros, ranks break ties on
-    * the ascending term. Output (doc_id, rank, term, score).
+    * tagging for corpus profiling, mixture design and search facets.
+    * Score = tf x ln(N/df): ubiquitous terms fall out of the top-k
+    * without a stopword list. Output (doc_id, rank, term, score).
     */
   def tfidfKeywords(docs: DataFrame, idCol: String, textCol: String,
-      k: Int): DataFrame = {
-    require(k > 0, "k must be positive")
-    // tf feeds BOTH the df rollup and the scoring join's left input —
-    // different subtrees, so ReuseExchange cannot collapse them and the
-    // tokenize corpus pass would run twice; spill once (the bm25TopK /
-    // q130 discipline — integer rows, never text)
-    val tf = graft.io.Spill(tfProjection(docs, idCol, textCol),
-      "graft-tfidf-")
-    tfidfRankTail(tf, docs.agg(count(lit(1)).cast("double").as("n")), k)
-  }
-
-  /** Scoring + ranking tail shared by [[tfidfKeywords]] (spilled
-    * in-plan tf) and [[LexicalIndex.tfidfKeywordsIndexed]] (posting
-    * scan): df rollup, the 6-decimal idf x integer tf micros, the
-    * bounded per-doc sort fold — single-homed like [[bm25RankTail]] so
-    * the two paths cannot drift. `tf` is (doc_id, term, tf) rows (full
-    * vocabulary); `stats` one (n) row.
-    */
-  private[operators] def tfidfRankTail(tf: DataFrame, stats: DataFrame,
       k: Int): DataFrame =
-    tfidfRankTailWithDf(tf,
-      tf.groupBy(col("term")).agg(count(lit(1)).as("df")), stats, k)
-
-  /** [[tfidfRankTail]] with the df rollup supplied by the caller —
-    * [[moreLikeThis]] folds top terms for the SEED docs only while idf
-    * must stay corpus-wide, so its scored frame and its df frame come
-    * from different restrictions of the same tf bag.
-    */
-  private[operators] def tfidfRankTailWithDf(tf: DataFrame,
-      df: DataFrame, stats: DataFrame, k: Int): DataFrame = {
-    tf.join(df, Seq("term"))
-      .join(broadcast(stats))
-      .select(col("doc_id"), col("term"),
-        round(round(log(col("n") / col("df")), 6) * col("tf") * 1e6)
-          .cast("long").as("__sm"))
-      .groupBy(col("doc_id"))
-      .agg(slice(sort_array(collect_list(
-        struct((-col("__sm")).as("m"), col("term")))), 1, k).as("__top"))
-      .select(col("doc_id"), posexplode(col("__top")).as(Seq("__r", "__t")))
-      .select(col("doc_id"), (col("__r") + 1).cast("long").as("rank"),
-        col("__t.term").as("term"),
-        ((-col("__t.m")).cast("double") / lit(1e6)).as("score"))
-  }
+    Postings.tfidfKeywords(Corpus.spilled(docs, idCol, textCol), k)
 
   // ---- blocklist phrase filtering --------------------------------------
 
@@ -1249,48 +439,6 @@ object TextAnalysis {
       .groupBy(col("doc_id"), col("phrase"))
       .agg(count(lit(1)).as("n_hits"))
   }
-
-  /** The (doc_id, doc_len, term, tf) projection shared by [[bm25TopK]]
-    * and [[LexicalIndex]] — ONE home for the tokenize + TokenCounts-bag
-    * semantics (the bm25RankTail argument: a fork here would let the
-    * one-shot and indexed paths drift). Map-only: per-doc tf needs no
-    * exchange.
-    */
-  private[operators] def tfProjection(docs: DataFrame, idCol: String,
-      textCol: String): DataFrame =
-    docs
-      .select(col(idCol).cast("long").as("doc_id"),
-        words(col(textCol)).as("__w"))
-      .select(col("doc_id"), size(col("__w")).cast("long").as("doc_len"),
-        explode(call_function("token_counts", col("__w"))).as("__tc"))
-      .select(col("doc_id"), col("doc_len"),
-        col("__tc.token").as("term"), col("__tc.n").as("tf"))
-
-  /** [[tfProjection]] plus ONE `term = NULL` sentinel row per document
-    * carrying the doc length under the stats-pass semantics (`sizeOrNull`:
-    * NULL for null text — null-text and zero-token docs emit a sentinel
-    * and nothing else). The corpus stats (n = sentinel count, avgdl =
-    * avg sentinel doc_len) ride the same single tokenize pass as the tf
-    * rows (guide §2.3 — the separate stats aggregate was one extra full
-    * corpus scan per retrieval call), read back via
-    * [[statsFromProjection]]. Still map-only. Term rows are identical to
-    * [[tfProjection]]'s (`sizeOrNull` ≡ `size` whenever a doc has any
-    * token to emit).
-    */
-  private[graft] def tfProjectionWithLens(docs: DataFrame, idCol: String,
-      textCol: String): DataFrame =
-    docs
-      .select(col(idCol).cast("long").as("doc_id"),
-        words(col(textCol)).as("__w"))
-      .select(col("doc_id"),
-        sizeOrNull(col("__w")).cast("long").as("doc_len"),
-        explode(concat(
-          coalesce(call_function("token_counts", col("__w")),
-            array().cast("array<struct<token:string,n:bigint>>")),
-          array(struct(lit(null).cast("string").as("token"),
-            lit(0L).as("n"))))).as("__tc"))
-      .select(col("doc_id"), col("doc_len"),
-        col("__tc.token").as("term"), col("__tc.n").as("tf"))
 
   /** Survivors of the blocklist gate: documents whose TOTAL phrase
     * occurrence count is at most `maxHits` (0 = any hit drops). Map-only

@@ -5,6 +5,11 @@ import java.net.http.{HttpClient, HttpRequest, HttpResponse}
 import java.nio.charset.StandardCharsets.UTF_8
 
 import com.sun.net.httpserver.{HttpExchange, HttpServer}
+import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.functions.{array_join, col, concat, lit, split,
+  transform, typedlit, when}
+
+import graft.operators.LexicalIndex
 
 /** HTTP query surface over the serving tables — the reference's
   * interactive-query layer re-expressed (SURVEY §2.4):
@@ -262,58 +267,75 @@ final class HttpApi(serving: Serving, port: Int = 0) {
     }
 
   /** The one-row (query_id = 0) query frame of a single HTTP search. */
-  private def oneQuery(conf: HttpApi.Retrieval,
-      cols: (String, org.apache.spark.sql.Column)*)
-      : org.apache.spark.sql.DataFrame =
+  private def oneQuery(conf: HttpApi.Retrieval, cols: (String, Column)*)
+      : DataFrame =
     conf.spark.range(1).select(cols.map { case (n, c) => c.as(n) }: _*)
+
+  private def indexPath(conf: HttpApi.Retrieval): String =
+    conf.lexicalIndexPath.getOrElse(
+      throw new IllegalStateException("no lexical index configured"))
+
+  /** The route's path parameter; 400 when absent. */
+  private def keyOf(ex: HttpExchange, route: String, what: String): String =
+    pathKey(ex, s"/search/$route/").getOrElse(
+      throw new IllegalArgumentException(s"no $what"))
+
+  /** The route's whitespace-separated path terms; 400 when none. */
+  private def termsOf(ex: HttpExchange, route: String): Seq[String] =
+    pathKey(ex, s"/search/$route/")
+      .map(_.split("\\s+").filter(_.nonEmpty).toSeq)
+      .filter(_.nonEmpty)
+      .getOrElse(throw new IllegalArgumentException("no query terms"))
+
+  /** One result row as a JSON object of its columns, in column order
+    * (strings quoted, numbers as their `toString`).
+    */
+  private def rowJson(r: Row): String =
+    r.schema.fieldNames.zipWithIndex.map { case (n, i) =>
+      jsonStr(n) + ":" + (r.get(i) match {
+        case null => "null"
+        case s: String => jsonStr(s)
+        case v => v.toString
+      })
+    }.mkString("{", ",", "}")
+
+  /** Register `/search/{route}/`: `answer` gets the configuration, the
+    * configured lexical index path and the request, and returns the
+    * ordered result frame holding exactly the columns to render; the
+    * response is its rows as a JSON array of [[rowJson]] objects.
+    */
+  private def searchContext(route: String)(
+      answer: (HttpApi.Retrieval, String, HttpExchange) => DataFrame): Unit =
+    server.createContext(s"/search/$route/", { ex =>
+      searchRoute(ex) { conf =>
+        answer(conf, indexPath(conf), ex).collect().map(rowJson)
+          .mkString("[", ",", "]")
+      }
+    })
 
   /** `/search/bm25/{terms}`: whitespace-separated terms → top-k doc ids
     * from the maintained lexical index, `[{"rank":1,"doc_id":42},...]`.
     */
-  server.createContext("/search/bm25/", { ex =>
-    searchRoute(ex) { conf =>
-      val path = conf.lexicalIndexPath.getOrElse(
-        throw new IllegalStateException("no lexical index configured"))
-      val terms = pathKey(ex, "/search/bm25/")
-        .map(_.split("\\s+").filter(_.nonEmpty).toSeq)
-        .filter(_.nonEmpty)
-        .getOrElse(throw new IllegalArgumentException("no query terms"))
-      val q = oneQuery(conf,
-        "query_id" -> org.apache.spark.sql.functions.lit(0L),
-        "qterms" -> org.apache.spark.sql.functions.typedlit(terms))
-      graft.operators.LexicalIndex
-        .bm25TopKIndexed(conf.spark, path, q, "query_id", "qterms",
-          kOf(ex, conf))
-        .orderBy("rank").collect()
-        .map(r => s"""{"rank":${r.getAs[Long]("rank")},"doc_id":${
-          r.getAs[Long]("doc_id")}}""")
-        .mkString("[", ",", "]")
-    }
-  })
+  searchContext("bm25") { (conf, path, ex) =>
+    LexicalIndex.bm25TopKIndexed(conf.spark, path,
+        oneQuery(conf, "query_id" -> lit(0L),
+          "qterms" -> typedlit(termsOf(ex, "bm25"))),
+        "query_id", "qterms", kOf(ex, conf))
+      .orderBy("rank").select("rank", "doc_id")
+  }
 
   /** `/search/phrase/{phrase}`: quoted-phrase retrieval from a
     * POSITIONAL lexical index,
     * `[{"rank":1,"doc_id":4,"n_hits":3},...]`; 400 on a
     * non-positional index (the library's fail-loud contract).
     */
-  server.createContext("/search/phrase/", { ex =>
-    searchRoute(ex) { conf =>
-      val path = conf.lexicalIndexPath.getOrElse(
-        throw new IllegalStateException("no lexical index configured"))
-      val phrase = pathKey(ex, "/search/phrase/").getOrElse(
-        throw new IllegalArgumentException("no phrase"))
-      val q = oneQuery(conf,
-        "query_id" -> org.apache.spark.sql.functions.lit(0L),
-        "phrase" -> org.apache.spark.sql.functions.lit(phrase))
-      graft.operators.LexicalIndex
-        .phraseTopKIndexed(conf.spark, path, q, "query_id", "phrase",
-          kOf(ex, conf))
-        .orderBy("rank").collect()
-        .map(r => s"""{"rank":${r.getAs[Long]("rank")},"doc_id":${
-          r.getAs[Long]("doc_id")},"n_hits":${r.getAs[Long]("n_hits")}}""")
-        .mkString("[", ",", "]")
-    }
-  })
+  searchContext("phrase") { (conf, path, ex) =>
+    LexicalIndex.phraseTopKIndexed(conf.spark, path,
+        oneQuery(conf, "query_id" -> lit(0L),
+          "phrase" -> lit(keyOf(ex, "phrase", "phrase"))),
+        "query_id", "phrase", kOf(ex, conf))
+      .orderBy("rank").select("rank", "doc_id", "n_hits")
+  }
 
   /** `/search/near/{terms}?slop=N`: proximity retrieval from a
     * POSITIONAL lexical index — docs holding every term within a word
@@ -321,25 +343,14 @@ final class HttpApi(serving: Serving, port: Int = 0) {
     * `[{"rank":1,"doc_id":4,"span":2},...]`; 400 on a non-positional
     * index or a malformed slop (the library's fail-loud contract).
     */
-  server.createContext("/search/near/", { ex =>
-    searchRoute(ex) { conf =>
-      val path = conf.lexicalIndexPath.getOrElse(
-        throw new IllegalStateException("no lexical index configured"))
-      val terms = pathKey(ex, "/search/near/").getOrElse(
-        throw new IllegalArgumentException("no query terms"))
-      val slop = queryParam(ex, "slop").map(_.toInt).getOrElse(8)
-      val q = oneQuery(conf,
-        "query_id" -> org.apache.spark.sql.functions.lit(0L),
-        "qterms" -> org.apache.spark.sql.functions.lit(terms))
-      graft.operators.LexicalIndex
-        .proximityTopKIndexed(conf.spark, path, q, "query_id", "qterms",
-          slop, kOf(ex, conf))
-        .orderBy("rank").collect()
-        .map(r => s"""{"rank":${r.getAs[Long]("rank")},"doc_id":${
-          r.getAs[Long]("doc_id")},"span":${r.getAs[Long]("span")}}""")
-        .mkString("[", ",", "]")
-    }
-  })
+  searchContext("near") { (conf, path, ex) =>
+    val terms = keyOf(ex, "near", "query terms")
+    val slop = queryParam(ex, "slop").map(_.toInt).getOrElse(8)
+    LexicalIndex.proximityTopKIndexed(conf.spark, path,
+        oneQuery(conf, "query_id" -> lit(0L), "qterms" -> lit(terms)),
+        "query_id", "qterms", slop, kOf(ex, conf))
+      .orderBy("rank").select("rank", "doc_id", "span")
+  }
 
   /** `/search/passage/{terms}?window=N`: windowed-passage retrieval
     * from a POSITIONAL lexical index — docs ranked by their
@@ -350,54 +361,37 @@ final class HttpApi(serving: Serving, port: Int = 0) {
     * payload), served by [[graft.operators.LexicalIndex
     * .passageSnippetsIndexed]] with the corpus scan bounded to the k
     * winning ids; `?highlight=1` wraps matched terms in `[...]` —
-    * pure presentation on the k collected rows, so it runs
-    * driver-side, not in the plan. 400 on a non-positional index or
-    * malformed window.
+    * pure presentation over the k ranked rows. 400 on a non-positional
+    * index or malformed window.
     */
-  server.createContext("/search/passage/", { ex =>
-    searchRoute(ex) { conf =>
-      val path = conf.lexicalIndexPath.getOrElse(
-        throw new IllegalStateException("no lexical index configured"))
-      val terms = pathKey(ex, "/search/passage/").getOrElse(
-        throw new IllegalArgumentException("no query terms"))
-      val window = queryParam(ex, "window").map(_.toInt).getOrElse(8)
-      val q = oneQuery(conf,
-        "query_id" -> org.apache.spark.sql.functions.lit(0L),
-        "qterms" -> org.apache.spark.sql.functions.lit(terms))
-      val k = kOf(ex, conf)
-      val highlight = queryParam(ex, "highlight").exists(v =>
-        v == "1" || v == "true")
-      // snippets hold NORMALIZED tokens, so matching is exact
-      // whole-token equality against the normalized query terms
-      val qset = terms.toLowerCase.split("\\W+").filter(_.nonEmpty).toSet
-      def mark(s: String): String =
-        if (!highlight) s
-        else s.split(" ").map(w =>
-          if (qset.contains(w)) s"[$w]" else w).mkString(" ")
-      conf.docsPath match {
-        case Some(docs) =>
-          graft.operators.LexicalIndex
-            .passageSnippetsIndexed(conf.spark, path,
-              conf.spark.read.parquet(docs), conf.docIdCol,
-              conf.docTextCol, q, "query_id", "qterms", window, k)
-            .orderBy("rank").collect()
-            .map(r => s"""{"rank":${r.getAs[Long]("rank")},"doc_id":${
-              r.getAs[Long]("doc_id")},"n_hits":${r.getAs[Long]("n_hits")
-              },"start":${r.getAs[Long]("start")},"snippet":${
-              jsonStr(mark(r.getAs[String]("snippet")))}}""")
-            .mkString("[", ",", "]")
-        case None =>
-          graft.operators.LexicalIndex
-            .passageTopKIndexed(conf.spark, path, q, "query_id", "qterms",
-              window, k)
-            .orderBy("rank").collect()
-            .map(r => s"""{"rank":${r.getAs[Long]("rank")},"doc_id":${
-              r.getAs[Long]("doc_id")},"n_hits":${r.getAs[Long]("n_hits")
-              },"start":${r.getAs[Long]("start")}}""")
-            .mkString("[", ",", "]")
-      }
+  searchContext("passage") { (conf, path, ex) =>
+    val terms = keyOf(ex, "passage", "query terms")
+    val window = queryParam(ex, "window").map(_.toInt).getOrElse(8)
+    val q = oneQuery(conf, "query_id" -> lit(0L), "qterms" -> lit(terms))
+    val k = kOf(ex, conf)
+    val cols = Seq("rank", "doc_id", "n_hits", "start").map(col)
+    conf.docsPath match {
+      case Some(docs) =>
+        // snippets hold NORMALIZED tokens, so matching is exact
+        // whole-token equality against the normalized query terms
+        val qset = terms.toLowerCase.split("\\W+").filter(_.nonEmpty)
+        val highlight = queryParam(ex, "highlight")
+          .exists(v => v == "1" || v == "true")
+        val snippet =
+          if (!highlight) col("snippet")
+          else array_join(transform(split(col("snippet"), " "), w =>
+            when(w.isin(qset: _*), concat(lit("["), w, lit("]")))
+              .otherwise(w)), " ")
+        LexicalIndex.passageSnippetsIndexed(conf.spark, path,
+            conf.spark.read.parquet(docs), conf.docIdCol, conf.docTextCol,
+            q, "query_id", "qterms", window, k)
+          .orderBy("rank").select(cols :+ snippet.as("snippet"): _*)
+      case None =>
+        LexicalIndex.passageTopKIndexed(conf.spark, path, q, "query_id",
+            "qterms", window, k)
+          .orderBy("rank").select(cols: _*)
     }
-  })
+  }
 
   /** `/search/index`: operational snapshot of the configured lexical
     * index ([[graft.operators.LexicalIndex.describe]]) — layout knobs,
@@ -407,9 +401,7 @@ final class HttpApi(serving: Serving, port: Int = 0) {
     */
   server.createContext("/search/index", { ex =>
     searchRoute(ex) { conf =>
-      val path = conf.lexicalIndexPath.getOrElse(
-        throw new IllegalStateException("no lexical index configured"))
-      val i = graft.operators.LexicalIndex.describe(conf.spark, path)
+      val i = LexicalIndex.describe(conf.spark, indexPath(conf))
       s"""{"n_buckets":${i.nBuckets},"positional":${i.positional},""" +
         s""""posting_generations":${i.postingGenerations
           .map(jsonStr).mkString("[", ",", "]")},""" +
@@ -427,33 +419,18 @@ final class HttpApi(serving: Serving, port: Int = 0) {
     * `[{"rank":1,"doc_id":42},...]`; an all-negative expression
     * answers 400 (nothing to rank).
     */
-  server.createContext("/search/bool/", { ex =>
-    searchRoute(ex) { conf =>
-      import org.apache.spark.sql.functions.{lit, typedlit}
-      val path = conf.lexicalIndexPath.getOrElse(
-        throw new IllegalStateException("no lexical index configured"))
-      val raw = pathKey(ex, "/search/bool/")
-        .map(_.split("\\s+").filter(_.nonEmpty).toSeq)
-        .filter(_.nonEmpty)
-        .getOrElse(throw new IllegalArgumentException("no query terms"))
-      val must = raw.filter(_.startsWith("+")).map(_.drop(1))
-        .filter(_.nonEmpty)
-      val mustNot = raw.filter(_.startsWith("-")).map(_.drop(1))
-        .filter(_.nonEmpty)
-      val should = raw.filterNot(t =>
-        t.startsWith("+") || t.startsWith("-"))
-      val q = oneQuery(conf, "query_id" -> lit(0L),
-        "must" -> typedlit(must), "should" -> typedlit(should),
-        "mustNot" -> typedlit(mustNot))
-      graft.operators.LexicalIndex
-        .bm25TopKBoolIndexed(conf.spark, path, q, "query_id", "must",
-          "should", "mustNot", kOf(ex, conf))
-        .orderBy("rank").collect()
-        .map(r => s"""{"rank":${r.getAs[Long]("rank")},"doc_id":${
-          r.getAs[Long]("doc_id")}}""")
-        .mkString("[", ",", "]")
-    }
-  })
+  searchContext("bool") { (conf, path, ex) =>
+    val raw = termsOf(ex, "bool")
+    def signed(op: String) =
+      typedlit(raw.filter(_.startsWith(op)).map(_.drop(1)).filter(_.nonEmpty))
+    LexicalIndex.bm25TopKBoolIndexed(conf.spark, path,
+        oneQuery(conf, "query_id" -> lit(0L), "must" -> signed("+"),
+          "should" -> typedlit(raw.filterNot(t =>
+            t.startsWith("+") || t.startsWith("-"))),
+          "mustNot" -> signed("-")),
+        "query_id", "must", "should", "mustNot", kOf(ex, conf))
+      .orderBy("rank").select("rank", "doc_id")
+  }
 
   /** `/search/fuzzy/{terms}?dist=N`: typo-tolerant BM25 from the
     * lexical index — each term expands to the vocabulary terms within
@@ -462,27 +439,14 @@ final class HttpApi(serving: Serving, port: Int = 0) {
     * `[{"rank":1,"doc_id":42},...]`; a query whose terms expand to
     * nothing answers `[]`.
     */
-  server.createContext("/search/fuzzy/", { ex =>
-    searchRoute(ex) { conf =>
-      import org.apache.spark.sql.functions.{lit, typedlit}
-      val path = conf.lexicalIndexPath.getOrElse(
-        throw new IllegalStateException("no lexical index configured"))
-      val terms = pathKey(ex, "/search/fuzzy/")
-        .map(_.split("\\s+").filter(_.nonEmpty).toSeq)
-        .filter(_.nonEmpty)
-        .getOrElse(throw new IllegalArgumentException("no query terms"))
-      val dist = queryParam(ex, "dist").map(_.toInt).getOrElse(1)
-      val q = oneQuery(conf, "query_id" -> lit(0L),
-        "qterms" -> typedlit(terms))
-      graft.operators.LexicalIndex
-        .bm25TopKFuzzyIndexed(conf.spark, path, q, "query_id", "qterms",
-          kOf(ex, conf), maxDist = dist)
-        .orderBy("rank").collect()
-        .map(r => s"""{"rank":${r.getAs[Long]("rank")},"doc_id":${
-          r.getAs[Long]("doc_id")}}""")
-        .mkString("[", ",", "]")
-    }
-  })
+  searchContext("fuzzy") { (conf, path, ex) =>
+    val terms = termsOf(ex, "fuzzy")
+    val dist = queryParam(ex, "dist").map(_.toInt).getOrElse(1)
+    LexicalIndex.bm25TopKFuzzyIndexed(conf.spark, path,
+        oneQuery(conf, "query_id" -> lit(0L), "qterms" -> typedlit(terms)),
+        "query_id", "qterms", kOf(ex, conf), maxDist = dist)
+      .orderBy("rank").select("rank", "doc_id")
+  }
 
   /** `/search/mlt/{docId}?m=N`: more-like-this — the k docs most
     * similar to the given corpus document, ranked by BM25 over its own
@@ -491,30 +455,22 @@ final class HttpApi(serving: Serving, port: Int = 0) {
     * absent), keyword idf and the ranking from the maintained index.
     * `[{"rank":1,"doc_id":42},...]`; an unknown docId answers `[]`.
     */
-  server.createContext("/search/mlt/", { ex =>
-    searchRoute(ex) { conf =>
-      import org.apache.spark.sql.functions.lit
-      val path = conf.lexicalIndexPath.getOrElse(
-        throw new IllegalStateException("no lexical index configured"))
-      val docs = conf.docsPath.getOrElse(
-        throw new IllegalStateException(
-          "no corpus table configured (Retrieval.docsPath) - " +
-            "more-like-this reads the seed's text from the corpus"))
-      val seedId = pathKey(ex, "/search/mlt/")
-        .flatMap(s => scala.util.Try(s.toLong).toOption)
-        .getOrElse(throw new IllegalArgumentException(
-          "more-like-this needs a numeric doc id"))
-      val m = queryParam(ex, "m").map(_.toInt).getOrElse(3)
-      graft.operators.LexicalIndex.moreLikeThisIndexed(conf.spark, path,
-          conf.spark.read.parquet(docs), conf.docIdCol, conf.docTextCol,
-          oneQuery(conf, "doc_id" -> lit(seedId)), "doc_id",
-          mTerms = m, k = kOf(ex, conf))
-        .orderBy("rank").collect()
-        .map(r => s"""{"rank":${r.getAs[Long]("rank")},"doc_id":${
-          r.getAs[Long]("doc_id")}}""")
-        .mkString("[", ",", "]")
-    }
-  })
+  searchContext("mlt") { (conf, path, ex) =>
+    val docs = conf.docsPath.getOrElse(
+      throw new IllegalStateException(
+        "no corpus table configured (Retrieval.docsPath) - " +
+          "more-like-this reads the seed's text from the corpus"))
+    val seedId = pathKey(ex, "/search/mlt/")
+      .flatMap(s => scala.util.Try(s.toLong).toOption)
+      .getOrElse(throw new IllegalArgumentException(
+        "more-like-this needs a numeric doc id"))
+    val m = queryParam(ex, "m").map(_.toInt).getOrElse(3)
+    LexicalIndex.moreLikeThisIndexed(conf.spark, path,
+        conf.spark.read.parquet(docs), conf.docIdCol, conf.docTextCol,
+        oneQuery(conf, "doc_id" -> lit(seedId)), "doc_id",
+        mTerms = m, k = kOf(ex, conf))
+      .orderBy("rank").select("rank", "doc_id")
+  }
 
   /** `/search/significant/{terms}`: the match set's over-represented
     * vocabulary ([[graft.operators.LexicalIndex
@@ -522,59 +478,35 @@ final class HttpApi(serving: Serving, port: Int = 0) {
     * query's own terms excluded), the mined facet panel beside
     * `/search/facets`. `[{"rank":1,"term":"...","score":1.234567},...]`.
     */
-  server.createContext("/search/significant/", { ex =>
-    searchRoute(ex) { conf =>
-      import org.apache.spark.sql.functions.lit
-      val path = conf.lexicalIndexPath.getOrElse(
-        throw new IllegalStateException("no lexical index configured"))
-      val terms = pathKey(ex, "/search/significant/").getOrElse(
-        throw new IllegalArgumentException("no query terms"))
-      val q = oneQuery(conf, "query_id" -> lit(0L),
-        "qterms" -> lit(terms))
-      graft.operators.LexicalIndex
-        .significantTermsIndexed(conf.spark, path, q, "query_id",
-          "qterms", kOf(ex, conf))
-        .orderBy("rank").collect()
-        .map(r => s"""{"rank":${r.getAs[Long]("rank")},"term":${
-          jsonStr(r.getAs[String]("term"))},"score":${
-          r.getAs[Double]("score")}}""")
-        .mkString("[", ",", "]")
-    }
-  })
+  searchContext("significant") { (conf, path, ex) =>
+    LexicalIndex.significantTermsIndexed(conf.spark, path,
+        oneQuery(conf, "query_id" -> lit(0L),
+          "qterms" -> lit(keyOf(ex, "significant", "query terms"))),
+        "query_id", "qterms", kOf(ex, conf))
+      .orderBy("rank").select("rank", "term", "score")
+  }
 
   /** `/search/facets/{terms}`: the search-facet panel — how the docs
     * matching ANY query term distribute over the corpus's configured
     * facet column (`Retrieval.facetCol`), biggest slice first (facet
-    * string as tiebreak). Match set from the maintained index, facet
+    * as tiebreak). Match set from the maintained index, facet
     * attribute from the corpus table (`docsPath` — 400 when absent).
-    * `[{"facet":"en","n_docs":3},...]`; an unlabeled (null-facet)
-    * slice renders `"facet":null`.
+    * `[{"facet":"en","n_docs":3},...]` (facets render as strings); an
+    * unlabeled (null-facet) slice renders `"facet":null`.
     */
-  server.createContext("/search/facets/", { ex =>
-    searchRoute(ex) { conf =>
-      import org.apache.spark.sql.functions.lit
-      val path = conf.lexicalIndexPath.getOrElse(
-        throw new IllegalStateException("no lexical index configured"))
-      val docs = conf.docsPath.getOrElse(
-        throw new IllegalStateException(
-          "no corpus table configured (Retrieval.docsPath) - facets " +
-            "join per-doc attributes from the corpus"))
-      val terms = pathKey(ex, "/search/facets/").getOrElse(
-        throw new IllegalArgumentException("no query terms"))
-      val q = oneQuery(conf, "query_id" -> lit(0L),
-        "qterms" -> lit(terms))
-      graft.operators.LexicalIndex
-        .facetCountsIndexed(conf.spark, path, q, "query_id", "qterms",
-          conf.spark.read.parquet(docs), conf.docIdCol, conf.facetCol)
-        .orderBy(org.apache.spark.sql.functions.col("n_docs").desc,
-          org.apache.spark.sql.functions.col("facet"))
-        .collect()
-        .map(r => s"""{"facet":${Option(r.getAs[Any]("facet"))
-          .map(f => jsonStr(f.toString)).getOrElse("null")},"n_docs":${
-          r.getAs[Long]("n_docs")}}""")
-        .mkString("[", ",", "]")
-    }
-  })
+  searchContext("facets") { (conf, path, ex) =>
+    val docs = conf.docsPath.getOrElse(
+      throw new IllegalStateException(
+        "no corpus table configured (Retrieval.docsPath) - facets " +
+          "join per-doc attributes from the corpus"))
+    LexicalIndex.facetCountsIndexed(conf.spark, path,
+        oneQuery(conf, "query_id" -> lit(0L),
+          "qterms" -> lit(keyOf(ex, "facets", "query terms"))),
+        "query_id", "qterms", conf.spark.read.parquet(docs), conf.docIdCol,
+        conf.facetCol)
+      .orderBy(col("n_docs").desc, col("facet"))
+      .select(col("facet").cast("string").as("facet"), col("n_docs"))
+  }
 
   /** `/search/hybrid/{terms}?vec=0.1,0.2,...`: reciprocal-rank fusion
     * ([[graft.operators.RankFusion.rrf]] — the q137 math, single-homed)
@@ -583,55 +515,43 @@ final class HttpApi(serving: Serving, port: Int = 0) {
     * configured ANN index; the caller supplies the query embedding (the
     * encoder lives outside the engine). `[{"rank":1,"doc_id":42},...]`.
     */
-  server.createContext("/search/hybrid/", { ex =>
-    searchRoute(ex) { conf =>
-      import org.apache.spark.sql.functions.{lit, typedlit}
-      val lexPath = conf.lexicalIndexPath.getOrElse(
-        throw new IllegalStateException("no lexical index configured"))
-      val annPath = conf.annIndexPath.getOrElse(
-        throw new IllegalStateException("no ANN index configured"))
-      val terms = pathKey(ex, "/search/hybrid/")
-        .map(_.split("\\s+").filter(_.nonEmpty).toSeq)
-        .filter(_.nonEmpty)
-        .getOrElse(throw new IllegalArgumentException("no query terms"))
-      val qv = queryParam(ex, "vec")
-        .map(_.split(",").map(_.trim.toDouble))
-        .getOrElse(throw new IllegalArgumentException(
-          "hybrid search needs ?vec=<comma-separated query embedding>"))
-      val k = kOf(ex, conf)
-      val lex = graft.operators.LexicalIndex.bm25TopKIndexed(conf.spark,
-        lexPath,
-        oneQuery(conf, "query_id" -> lit(0L), "qterms" -> typedlit(terms)),
-        "query_id", "qterms", k)
-      // the dense list is ordered (sim desc, id asc); rebuild the
-      // (query_id, rank, doc_id) shape rrf expects from its k rows
-      val dense = graft.operators.Similarity.ivfTopKIndexed(conf.spark,
-          annPath, conf.annIdCol, conf.annEmbCol, qv, queryId = -1L, k)
-        .collect().zipWithIndex
-        // read the id defensively: a non-integral annIdCol must surface
-        // as the route's 400 (searchRoute maps IllegalArgumentException),
-        // not as a ClassCastException-driven 500 on every request
-        .map { case (r, i) =>
-          val id = r.get(0) match {
-            case n: java.lang.Number => n.longValue()
-            case other => throw new IllegalArgumentException(
-              s"ANN id column '${conf.annIdCol}' must be integral; " +
-                s"index holds ${if (other == null) "null"
-                  else other.getClass.getSimpleName}")
-          }
-          (0L, (i + 1).toLong, id)
+  searchContext("hybrid") { (conf, lexPath, ex) =>
+    val annPath = conf.annIndexPath.getOrElse(
+      throw new IllegalStateException("no ANN index configured"))
+    val terms = termsOf(ex, "hybrid")
+    val qv = queryParam(ex, "vec")
+      .map(_.split(",").map(_.trim.toDouble))
+      .getOrElse(throw new IllegalArgumentException(
+        "hybrid search needs ?vec=<comma-separated query embedding>"))
+    val k = kOf(ex, conf)
+    val lex = LexicalIndex.bm25TopKIndexed(conf.spark, lexPath,
+      oneQuery(conf, "query_id" -> lit(0L), "qterms" -> typedlit(terms)),
+      "query_id", "qterms", k)
+    // the dense list is ordered (sim desc, id asc); rebuild the
+    // (query_id, rank, doc_id) shape rrf expects from its k rows
+    val dense = graft.operators.Similarity.ivfTopKIndexed(conf.spark,
+        annPath, conf.annIdCol, conf.annEmbCol, qv, queryId = -1L, k)
+      .collect().zipWithIndex
+      // read the id defensively: a non-integral annIdCol must surface
+      // as the route's 400 (searchRoute maps IllegalArgumentException),
+      // not as a ClassCastException-driven 500 on every request
+      .map { case (r, i) =>
+        val id = r.get(0) match {
+          case n: java.lang.Number => n.longValue()
+          case other => throw new IllegalArgumentException(
+            s"ANN id column '${conf.annIdCol}' must be integral; " +
+              s"index holds ${if (other == null) "null"
+                else other.getClass.getSimpleName}")
         }
-      import conf.spark.implicits._
-      val denseDf = dense.toSeq.toDF("query_id", "rank", "doc_id")
-      graft.operators.RankFusion
-        .rrf(Seq(lex.select("query_id", "rank", "doc_id"), denseDf),
-          "doc_id", k)
-        .orderBy("rank").collect()
-        .map(r => s"""{"rank":${r.getAs[Long]("rank")},"doc_id":${
-          r.getAs[Long]("doc_id")}}""")
-        .mkString("[", ",", "]")
-    }
-  })
+        (0L, (i + 1).toLong, id)
+      }
+    import conf.spark.implicits._
+    val denseDf = dense.toSeq.toDF("query_id", "rank", "doc_id")
+    graft.operators.RankFusion
+      .rrf(Seq(lex.select("query_id", "rank", "doc_id"), denseDf),
+        "doc_id", k)
+      .orderBy("rank").select("rank", "doc_id")
+  }
 
   def start(): this.type = { server.start(); this }
   def stop(): Unit = { server.stop(0); pool.shutdown() }

@@ -205,7 +205,7 @@ class Bm25Spec extends AnyFunSuite with Matchers with SparkSpec {
       val expected = (for {
         (q, i) <- qterms.zipWithIndex; v <- vocab if lev(q, v) <= d
       } yield (i.toLong, v)).toSet
-      val got = TextAnalysis.fuzzyExpandTerms(
+      val got = Postings.fuzzyExpandTerms(
           vocab.toDF("term"),
           qterms.zipWithIndex.map { case (t, i) => (i.toLong, t) }
             .toDF("query_id", "term"),
@@ -216,7 +216,7 @@ class Bm25Spec extends AnyFunSuite with Matchers with SparkSpec {
     }
     // depth 3 is out of contract and must refuse, not silently under-recall
     intercept[IllegalArgumentException] {
-      TextAnalysis.fuzzyExpandTerms(vocab.toDF("term"),
+      Postings.fuzzyExpandTerms(vocab.toDF("term"),
         Seq((0L, "abc")).toDF("query_id", "term"), maxDist = 3)
     }
   }

@@ -149,48 +149,22 @@ object Layout {
     * release — a consumer verifies the download against the manifest,
     * and two releases diff at file granularity before
     * [[graft.operators.CorpusDiff]] diffs at document granularity.
-    *
-    * Scale shape: hashing runs as ONE distributed job (a task per
-    * file — binaryFile-style streaming read, 8 MiB chunks, never a
-    * whole file in memory); per-file ROW counts come from parquet
-    * FOOTERS (a metadata read, not a data scan). Only the file LIST
-    * (paths + digests, bytes-per-file rows) returns to the driver,
-    * which writes the manifest JSON — file-count-sized, never
-    * data-sized.
+    * Hashing is [[hashFiles]]' one distributed job; only the file list
+    * returns to the driver, which writes the manifest JSON. Fails on a
+    * file that cannot be read.
     */
   def writeManifest(spark: org.apache.spark.sql.SparkSession,
       path: String): Int = {
     val hPath = new org.apache.hadoop.fs.Path(path)
-    val fs = hPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val files = fs.listStatus(hPath)
-      .filter(_.getPath.getName.endsWith(".parquet"))
-      .map(s => (s.getPath.toString, s.getPath.getName, s.getLen))
-      .sortBy(_._2)
-    val conf = new org.apache.spark.util.SerializableConfiguration(
-      spark.sparkContext.hadoopConfiguration)
-    val hashed = spark.sparkContext
-      .parallelize(files.toSeq, math.max(1, files.length))
-      .map { case (full, name, bytes) =>
-        val p = new org.apache.hadoop.fs.Path(full)
-        val in = p.getFileSystem(conf.value).open(p)
-        val md = java.security.MessageDigest.getInstance("MD5")
-        try {
-          val buf = new Array[Byte](8 << 20)
-          var n = in.read(buf)
-          while (n >= 0) { md.update(buf, 0, n); n = in.read(buf) }
-        } finally in.close()
-        val rows = {
-          val r = org.apache.parquet.hadoop.ParquetFileReader.open(
-            org.apache.parquet.hadoop.util.HadoopInputFile
-              .fromPath(p, conf.value))
-          try r.getRecordCount finally r.close()
-        }
-        (name, bytes, rows,
-          md.digest().map("%02x".format(_)).mkString)
-      }.collect().sortBy(_._1)
+    val hashed = hashFiles(spark, hPath, withRows = true).map {
+      case (name, bytes, rows, Some(md5)) => (name, bytes, rows, md5)
+      case (name, _, _, None) =>
+        throw new java.io.IOException(s"unreadable data file $name under $path")
+    }
     val lines = hashed.map { case (name, bytes, rows, md5) =>
       s"""{"file":"$name","bytes":$bytes,"rows":$rows,"md5":"$md5"}"""
     } :+ s"""{"files":${hashed.length},"rows":${hashed.map(_._3).sum},"bytes":${hashed.map(_._2).sum}}"""
+    val fs = hPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val out = fs.create(new org.apache.hadoop.fs.Path(hPath, "_MANIFEST.json"), true)
     try out.write((lines.mkString("\n") + "\n").getBytes("UTF-8"))
     finally out.close()
@@ -201,7 +175,8 @@ object Layout {
     * file's md5/bytes (the same distributed job as [[writeManifest]])
     * and return the mismatching or missing file names (empty = the
     * release is intact). Extra files not in the manifest also report —
-    * a partial overwrite is corruption, not an append.
+    * a partial overwrite is corruption, not an append — and so does a
+    * file that cannot be read.
     */
   def verifyManifest(spark: org.apache.spark.sql.SparkSession,
       path: String): Seq[String] = {
@@ -213,35 +188,53 @@ object Layout {
     val entry = """"file":"([^"]+)","bytes":(\d+),"rows":(\d+),"md5":"([0-9a-f]+)"""".r
     val want = entry.findAllMatchIn(text)
       .map(m => m.group(1) -> (m.group(2).toLong, m.group(4))).toMap
-    // recompute through writeManifest's own hashing job on a temp pass:
-    // reuse the same per-file logic by listing + hashing here
-    val conf = new org.apache.spark.util.SerializableConfiguration(
-      spark.sparkContext.hadoopConfiguration)
-    val files = fs.listStatus(hPath)
-      .filter(_.getPath.getName.endsWith(".parquet"))
-      .map(s => (s.getPath.toString, s.getPath.getName, s.getLen)).toSeq
-    val got = spark.sparkContext
-      .parallelize(files, math.max(1, files.length))
-      .map { case (full, name, bytes) =>
-        // a filesystem-level read/checksum failure IS corruption —
-        // report the file rather than crashing the audit (local FS
-        // keeps .crc sidecars, so a tampered file throws here)
-        try {
-          val p = new org.apache.hadoop.fs.Path(full)
-          val s = p.getFileSystem(conf.value).open(p)
-          val md = java.security.MessageDigest.getInstance("MD5")
-          try {
-            val buf = new Array[Byte](8 << 20)
-            var n = s.read(buf)
-            while (n >= 0) { md.update(buf, 0, n); n = s.read(buf) }
-          } finally s.close()
-          name -> (bytes, md.digest().map("%02x".format(_)).mkString)
-        } catch { case _: java.io.IOException =>
-          name -> (-1L, "unreadable")
-        }
-      }.collect().toMap
+    val got = hashFiles(spark, hPath, withRows = false)
+      .map { case (name, bytes, _, md5) => name -> (bytes, md5.getOrElse("unreadable")) }
+      .toMap
     val bad = got.collect { case (n, g) if !want.get(n).contains(g) => n }
     val missing = want.keySet -- got.keySet
     (bad ++ missing).toSeq.sorted
+  }
+
+  /** The md5-per-file job of the manifest pair: ONE distributed job, a
+    * task per parquet file directly under `hPath` (streaming 8 MiB reads,
+    * never a whole file in memory). Returns (name, bytes, rows, md5)
+    * sorted by name; `rows` comes from the parquet FOOTER (a metadata
+    * read, not a data scan) when `withRows`, else -1. A filesystem-level
+    * read/checksum failure gives md5 None (local FS keeps .crc sidecars,
+    * so a tampered file throws here) and the caller decides whether that
+    * fails the call or reports the file.
+    */
+  private def hashFiles(spark: org.apache.spark.sql.SparkSession,
+      hPath: org.apache.hadoop.fs.Path,
+      withRows: Boolean): Array[(String, Long, Long, Option[String])] = {
+    val fs = hPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val files = fs.listStatus(hPath)
+      .filter(_.getPath.getName.endsWith(".parquet"))
+      .map(s => (s.getPath.toString, s.getPath.getName, s.getLen)).toSeq
+    val conf = new org.apache.spark.util.SerializableConfiguration(
+      spark.sparkContext.hadoopConfiguration)
+    spark.sparkContext
+      .parallelize(files, math.max(1, files.length))
+      .map { case (full, name, bytes) =>
+        val p = new org.apache.hadoop.fs.Path(full)
+        val md5 = try {
+          val in = p.getFileSystem(conf.value).open(p)
+          val md = java.security.MessageDigest.getInstance("MD5")
+          try {
+            val buf = new Array[Byte](8 << 20)
+            var n = in.read(buf)
+            while (n >= 0) { md.update(buf, 0, n); n = in.read(buf) }
+          } finally in.close()
+          Some(md.digest().map("%02x".format(_)).mkString)
+        } catch { case _: java.io.IOException => None }
+        val rows = if (!withRows || md5.isEmpty) -1L else {
+          val r = org.apache.parquet.hadoop.ParquetFileReader.open(
+            org.apache.parquet.hadoop.util.HadoopInputFile
+              .fromPath(p, conf.value))
+          try r.getRecordCount finally r.close()
+        }
+        (name, bytes, rows, md5)
+      }.collect().sortBy(_._1)
   }
 }

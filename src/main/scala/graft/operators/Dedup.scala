@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 import graft.functions.{GraftFunctions, TextFunctions}
+import graft.io.BatchTable
 
 /** Deduplication operators for the training-data pipeline (SURVEY §2.6
   * north-star). Design posture for 100 TB:
@@ -106,15 +107,13 @@ object Dedup {
     * novel fingerprints, and returns only the novel documents. Feed it from
     * `foreachBatch` for streaming ingestion, passing the micro-batch id.
     *
-    * RETRY SAFETY: each call's fingerprints land in their own
-    * `batch=<id>/` subdirectory (overwritten, not appended) and the "seen"
-    * set EXCLUDES the current id — so when Structured Streaming retries a
-    * failed micro-batch, the replay does not anti-join against its own
-    * first attempt's fingerprints (which would silently drop the batch's
-    * documents forever: marked seen, never emitted). A replay returns the
-    * identical novel set and idempotently rewrites the same directory.
-    * Callers without a batch id get a random one (no replay exists to
-    * collide with).
+    * RETRY SAFETY: the fingerprint table is a [[BatchTable]], so when
+    * Structured Streaming retries a failed micro-batch, the replay does
+    * not anti-join against its own first attempt's fingerprints (which
+    * would silently drop the batch's documents forever: marked seen,
+    * never emitted). A replay returns the identical novel set and
+    * rewrites the same directory. Callers without a batch id get a
+    * one-shot one.
     *
     * Order of operations inside a call: the novel set is materialized to a
     * session-temp table BEFORE the fingerprint write, so the returned plan
@@ -138,32 +137,24 @@ object Dedup {
     */
   def incrementalExactDedup(docs: DataFrame, idCol: String, textCol: String,
       fpTablePath: String, batchId: String = null): DataFrame = {
-    val spark = docs.sparkSession
-    graft.io.BloomStore.clear(spark, fpTablePath)
-    val bid = Option(batchId).getOrElse(
-      "oneshot-" + java.util.UUID.randomUUID().toString.take(12))
-    val withFp = docs.select(col(idCol),
-      TextFunctions.fingerprint(col(textCol)).as("fp"))
-    // in-batch collapse: (fp, min id) pairs
-    val batchReps = withFp.groupBy(col("fp")).agg(min(col(idCol)).as(idCol))
-    // explicit schema: partition-value inference would type `batch` as int
-    // when every existing dir id happens to be numeric (e.g. streaming
-    // epoch ids), and the =!= against a non-numeric bid then crashes under
-    // ANSI (or NULLs out the whole history without it)
-    val seen =
-      try spark.read.schema("fp STRING, batch STRING").parquet(fpTablePath)
-        .where(col("batch") =!= bid).select(col("fp"))
-      catch { case e: org.apache.spark.sql.AnalysisException
-          if e.getCondition == "PATH_NOT_FOUND" =>
-        spark.createDataFrame(new java.util.ArrayList[org.apache.spark.sql.Row](),
-          org.apache.spark.sql.types.StructType.fromDDL("fp STRING"))
-      }
+    graft.io.BloomStore.clear(docs.sparkSession, fpTablePath)
+    val bid = BatchTable.batchId(batchId)
     val novel = graft.io.Spill(
-      batchReps.join(seen, Seq("fp"), "left_anti"), "graft-novel-")
-    novel.select(col("fp")).write.mode("overwrite")
-      .parquet(s"$fpTablePath/batch=$bid")
+      batchReps(docs, idCol, textCol).join(
+        BatchTable.history(docs.sparkSession, fpTablePath, "fp STRING", bid),
+        Seq("fp"), "left_anti"),
+      "graft-novel-")
+    BatchTable.overwrite(novel.select(col("fp")), fpTablePath, bid)
     docs.join(novel.select(col(idCol)), Seq(idCol), "left_semi")
   }
+
+  /** In-batch collapse of the incremental exact paths: one (fp, min id)
+    * row per normalized text.
+    */
+  private def batchReps(docs: DataFrame, idCol: String,
+      textCol: String): DataFrame =
+    docs.select(col(idCol), TextFunctions.fingerprint(col(textCol)).as("fp"))
+      .groupBy(col("fp")).agg(min(col(idCol)).as(idCol))
 
   /** [[incrementalExactDedup]] with a PERSISTED Bloom-filter fast path
     * for the common case: most of an incoming batch is NOVEL, yet the
@@ -197,7 +188,7 @@ object Dedup {
     * to the confirm lane, harmless), and a replayed micro-batch finds
     * its own first-attempt fps in the filter, confirms against a
     * history that EXCLUDES its own directory, and re-emits — the
-    * [[incrementalExactDedup]] retry contract.
+    * [[BatchTable]] retry contract.
     *
     * Scale posture: the filter costs ~1.2·n·ln(1/fpp)/ln²2 bits (120 MB
     * per 10⁸ history fps at fpp=0.01), lives on the table's filesystem,
@@ -217,19 +208,9 @@ object Dedup {
       maxConfirmBroadcastRows: Long = 1L << 20): DataFrame = {
     require(fpp > 0 && fpp < 1, s"fpp must be in (0,1), got $fpp")
     val spark = docs.sparkSession
-    val bid = Option(batchId).getOrElse(
-      "oneshot-" + java.util.UUID.randomUUID().toString.take(12))
-    val withFp = docs.select(col(idCol),
-      TextFunctions.fingerprint(col(textCol)).as("fp"))
-    val batchReps = withFp.groupBy(col("fp")).agg(min(col(idCol)).as(idCol))
-    val seen =
-      try spark.read.schema("fp STRING, batch STRING").parquet(fpTablePath)
-        .where(col("batch") =!= bid).select(col("fp"))
-      catch { case e: org.apache.spark.sql.AnalysisException
-          if e.getCondition == "PATH_NOT_FOUND" =>
-        spark.createDataFrame(new java.util.ArrayList[org.apache.spark.sql.Row](),
-          org.apache.spark.sql.types.StructType.fromDDL("fp STRING"))
-      }
+    val bid = BatchTable.batchId(batchId)
+    val reps = batchReps(docs, idCol, textCol)
+    val seen = BatchTable.history(spark, fpTablePath, "fp STRING", bid)
     def filterBytes(n: Long) =
       math.ceil(-n.max(1L) * math.log(fpp) / (math.log(2) * math.log(2)) / 8)
 
@@ -262,16 +243,16 @@ object Dedup {
     }
 
     val novelPlan = filterState match {
-      case None => batchReps.join(seen, Seq("fp"), "left_anti")
+      case None => reps.join(seen, Seq("fp"), "left_anti")
       case Some((bloom, _)) =>
         // null fp (null text) never equi-joins as seen — route it down
         // the definitely-novel lane, exactly where the plain anti-join
         // path leaves it
         val mightBeSeen =
           udf((fp: String) => fp != null && bloom.mightContain(fp))
-        val definite = batchReps.where(!mightBeSeen(col("fp")))
+        val definite = reps.where(!mightBeSeen(col("fp")))
         val sliver = graft.io.Spill(
-          batchReps.where(mightBeSeen(col("fp"))), "graft-sliver-")
+          reps.where(mightBeSeen(col("fp"))), "graft-sliver-")
         val sliverCount = sliver.count()
         val confirmed =
           if (sliverCount == 0) sliver // no history touch at all
@@ -308,25 +289,19 @@ object Dedup {
         graft.io.BloomStore.save(spark, fpTablePath, bloom,
           meta.copy(inserted = meta.inserted + added))
     }
-    novel.select(col("fp")).write.mode("overwrite")
-      .parquet(s"$fpTablePath/batch=$bid")
+    BatchTable.overwrite(novel.select(col("fp")), fpTablePath, bid)
     docs.join(novel.select(col(idCol)), Seq(idCol), "left_semi")
   }
 
   /** Compact the [[incrementalExactDedup]] fingerprint table: every call
     * adds a `batch=<id>/` directory, so at daily-batch cadence the "seen"
     * scan degrades into a small-files read (per-file open/footer overhead
-    * dominating 16-byte rows). Folds all batch directories — EXCEPT
-    * `excludeBatch`, the possibly-in-flight id whose retry-safety contract
-    * requires its directory untouched — into one distinct-fp
-    * `batch=<compact-uuid>/` directory sized to `targetFileBytes`.
-    *
-    * Crash-safe in the direction that matters: the folded directory is
-    * written BEFORE the sources are deleted, and duplicate fingerprints
-    * across batch dirs never change results (the seen-set is a union), so
-    * a crash between write and delete only wastes space. Distinct-ness
-    * also makes re-running compaction idempotent. Returns the number of
-    * parquet data files under the table after compaction.
+    * dominating 16-byte rows). Folds all batch directories except
+    * `excludeBatch` into one distinct-fp directory sized to
+    * `targetFileBytes` ([[BatchTable.compact]]). Duplicate fingerprints
+    * across batch dirs never change results (the seen-set is a union),
+    * so the fold is idempotent. Returns the number of parquet data files
+    * under the table after compaction.
     *
     * The [[incrementalExactDedupBloom]] filter under `_bloom/` is left
     * untouched and stays VALID: compaction rewrites layout without
@@ -336,54 +311,20 @@ object Dedup {
   def compactFingerprints(spark: org.apache.spark.sql.SparkSession,
       fpTablePath: String, excludeBatch: String = null,
       targetFileBytes: Long = 128L << 20): Int =
-    compactDistinctFold(spark, fpTablePath, excludeBatch, targetFileBytes)(
+    BatchTable.compact(spark, fpTablePath, excludeBatch, targetFileBytes)(
       _.select(col("fp")).distinct())
 
   /** Compact the [[incrementalMinhashLsh]] signature table: fold the
     * accumulating `batch=<id>` dirs into one, keeping one (doc_id, sig)
     * row per document. Idempotent like [[compactFingerprints]] — the same
     * doc resubmitted across batches carries the same signature, so a
-    * distinct-by-id fold never changes pairing results and a crash
-    * between write and delete only wastes space until the next fold.
+    * distinct-by-id fold never changes pairing results.
     */
   def compactSignatures(spark: org.apache.spark.sql.SparkSession,
       sigTablePath: String, excludeBatch: String = null,
       targetFileBytes: Long = 128L << 20): Int =
-    compactDistinctFold(spark, sigTablePath, excludeBatch, targetFileBytes)(
+    BatchTable.compact(spark, sigTablePath, excludeBatch, targetFileBytes)(
       _.dropDuplicates("doc_id"))
-
-  /** Shared scaffold of the IDEMPOTENT compactions (distinct-style folds,
-    * where re-folding a fold with its sources cannot change results —
-    * unlike [[compactSpanCounts]]' summed fold, which needs the inflight
-    * marker): list `batch=` dirs minus the in-flight one, fold, write
-    * before delete, report the table's data-file count.
-    */
-  private def compactDistinctFold(spark: org.apache.spark.sql.SparkSession,
-      tablePath: String, excludeBatch: String, targetFileBytes: Long)(
-      fold: DataFrame => DataFrame): Int = {
-    require(targetFileBytes > 0, "targetFileBytes must be positive")
-    val root = new org.apache.hadoop.fs.Path(tablePath)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    def dataFileCount: Int = {
-      val it = fs.listFiles(root, true)
-      var n = 0
-      while (it.hasNext) if (it.next().getPath.getName.endsWith(".parquet")) n += 1
-      n
-    }
-    val sources = fs.listStatus(root).filter(_.isDirectory).map(_.getPath)
-      .filter(_.getName.startsWith("batch="))
-      .filterNot(p => excludeBatch != null && p.getName == s"batch=$excludeBatch")
-    if (sources.length <= 1) return dataFileCount
-    val bytes = sources.map(p => fs.getContentSummary(p).getLength).sum
-    val nFiles = math.max(1, math.ceil(bytes.toDouble / targetFileBytes).toInt)
-    fold(spark.read.parquet(sources.map(_.toString).toIndexedSeq: _*))
-      .coalesce(nFiles)
-      .write.mode("overwrite")
-      .parquet(s"$tablePath/batch=compact-" +
-        java.util.UUID.randomUUID().toString.take(12))
-    sources.foreach(fs.delete(_, true))
-    dataFileCount
-  }
 
   /** Cross-RUN [[duplicateSpans]] for continuous corpus ingestion: a
     * persistent table at `spanTablePath` accumulates per-window fingerprint
@@ -396,12 +337,8 @@ object Dedup {
     * (spec-pinned) — and appends the batch's window counts for future
     * calls. Feed it from `foreachBatch`, passing the micro-batch id.
     *
-    * Same retry-safety discipline as [[incrementalExactDedup]]: counts land
-    * in an overwritten `batch=<id>/` directory the history read EXCLUDES,
-    * so a replayed micro-batch neither double-counts its own first attempt
-    * nor changes its result; the result is materialized to a session-temp
-    * table before the count write so the returned plan is stable no matter
-    * when the caller executes it.
+    * The table is a [[BatchTable]]; the result spills before the count
+    * write.
     *
     * Table size: one row per distinct window per batch — order corpus
     * tokens, not corpus bytes, and the rows are 16-hex digests + a long.
@@ -412,23 +349,12 @@ object Dedup {
   def incrementalDuplicateSpans(docs: DataFrame, idCol: String,
       textCol: String, spanTablePath: String, k: Int = 8, minCount: Int = 2,
       batchId: String = null): DataFrame = {
-    val spark = docs.sparkSession
-    val bid = Option(batchId).getOrElse(
-      "oneshot-" + java.util.UUID.randomUUID().toString.take(12))
+    val bid = BatchTable.batchId(batchId)
     val grams = windowGrams(docs, idCol, textCol, k)
     val batchCounts = grams.groupBy(col("fp")).agg(count(lit(1)).as("cnt"))
-    // explicit schema for the same reason as [[incrementalExactDedup]]'s
-    // seen-read: all-numeric batch dirs would infer `batch` as int
-    val hist =
-      try spark.read.schema("fp STRING, cnt BIGINT, batch STRING")
-        .parquet(spanTablePath)
-        .where(col("batch") =!= bid)
-        .groupBy(col("fp")).agg(sum(col("cnt")).as("cnt"))
-      catch { case e: org.apache.spark.sql.AnalysisException
-          if e.getCondition == "PATH_NOT_FOUND" =>
-        spark.createDataFrame(new java.util.ArrayList[org.apache.spark.sql.Row](),
-          org.apache.spark.sql.types.StructType.fromDDL("fp STRING, cnt BIGINT"))
-      }
+    val hist = BatchTable.history(docs.sparkSession, spanTablePath,
+        "fp STRING, cnt BIGINT", bid)
+      .groupBy(col("fp")).agg(sum(col("cnt")).as("cnt"))
     val dupFps = batchCounts.as("b")
       .join(hist.as("h"), Seq("fp"), "left")
       .where(col("b.cnt") + coalesce(col("h.cnt"), lit(0L)) >= minCount)
@@ -436,24 +362,17 @@ object Dedup {
     val hits = grams.join(dupFps, Seq("fp"), "left_semi")
       .select(col(idCol), col("pos"))
     val result = graft.io.Spill(spanAgg(hits, idCol, k), "graft-spans-")
-    batchCounts.write.mode("overwrite").parquet(s"$spanTablePath/batch=$bid")
+    BatchTable.overwrite(batchCounts, spanTablePath, bid)
     result
   }
 
   /** Compact the [[incrementalDuplicateSpans]] count table: folds all
     * `batch=<id>/` directories — except the possibly-in-flight
     * `excludeBatch` — into one directory with counts SUMMED per
-    * fingerprint (a count table folds by addition where
-    * [[compactFingerprints]]' seen-set folds by distinct). Because a count
-    * fold is NOT naturally idempotent (re-summing a fold together with the
-    * sources it already includes bakes doubled counts in permanently), the
-    * fold is guarded by an `_compact_inflight` marker at the table root:
-    * written (target + source names) before the fold, removed after the
-    * source delete. A retry after a crash at ANY point first completes or
-    * rolls back the recorded fold — sources are deleted iff the target
-    * finished (`_SUCCESS`), a partial target is dropped — so counts can
-    * read double only in the transient window between fold-write and
-    * delete, never permanently. That transient direction is the
+    * fingerprint ([[BatchTable.compactSumFold]]; a count table folds by
+    * addition where [[compactFingerprints]]' seen-set folds by distinct).
+    * Counts can read double only in the transient window between
+    * fold-write and source delete, and that direction is the
     * conservative one for a dedup gate (inflated counts flag windows as
     * duplicated EARLIER — a little extra text dropped, never a duplicate
     * silently kept). Returns the number of parquet data files after
@@ -462,9 +381,7 @@ object Dedup {
   def compactSpanCounts(spark: org.apache.spark.sql.SparkSession,
       spanTablePath: String, excludeBatch: String = null,
       targetFileBytes: Long = 128L << 20): Int =
-    // the additive sum-fold lives in io.BatchTable since round 10 (the
-    // NB count table shares it); semantics unchanged, spec-pinned
-    graft.io.BatchTable.compactSumFold(spark, spanTablePath,
+    BatchTable.compactSumFold(spark, spanTablePath,
       Seq("fp"), "cnt", excludeBatch, targetFileBytes)
 
   /** All-pairs n-gram Jaccard >= threshold via an inverted-index join:
@@ -537,11 +454,7 @@ object Dedup {
       n: Int = 3, k: Int = 16, rowsPerBand: Int = 1, seed: Long = 7L): DataFrame = {
     require(k % rowsPerBand == 0, "k must be divisible by rowsPerBand")
     val nBands = k / rowsPerBand
-    val sig = docs
-      .select(col(idCol).as("doc_id"), TextFunctions.words(col(textCol)).as("w"))
-      .where(size(col("w")) >= n)
-      .select(col("doc_id"),
-        GraftFunctions.minhash(TextFunctions.wordShingles(col("w"), n), k, seed).as("sig"))
+    val sig = minhashSigs(docs, col(idCol), textCol, n, k, seed)
 
     // band indexes are static, so the per-band slice bounds stay literal and
     // the whole signature->bands step remains a single codegen'd projection.
@@ -555,13 +468,45 @@ object Dedup {
     }
     val bands = sig.select(col("doc_id"), explode(array(bandStructs: _*)).as("bb"))
       .select(col("doc_id"), col("bb.band").as("band"), col("bb.bucket").as("bucket"))
+    bandPairs(bands, None).distinct()
+  }
 
-    bands.as("a")
-      .join(bands.as("b"),
-        col("a.band") === col("b.band") && col("a.bucket") === col("b.bucket") &&
-          col("a.doc_id") < col("b.doc_id"))
-      .select(col("a.doc_id").as("id_a"), col("b.doc_id").as("id_b"))
-      .distinct()
+  /** (doc_id, sig): the k-component MinHash signature over word
+    * n-shingles of every document with at least `n` words.
+    */
+  private def minhashSigs(docs: DataFrame, id: Column, textCol: String,
+      n: Int, k: Int, seed: Long): DataFrame =
+    docs.select(id.as("doc_id"), TextFunctions.words(col(textCol)).as("w"))
+      .where(size(col("w")) >= n)
+      .select(col("doc_id"),
+        GraftFunctions.minhash(TextFunctions.wordShingles(col("w"), n), k, seed).as("sig"))
+
+  /** Candidate pairs of documents sharing a (band, bucket) posting — the
+    * one candidate join of every banded near-dup path (MinHash LSH bands,
+    * the 16-bit pigeonhole fingerprint bands). `bands` (doc_id, band,
+    * bucket, ...) pairs with itself as (id_a < id_b); `hist`, when given,
+    * pairs with `bands` on distinct ids, ordered into (least, greatest) —
+    * both sides shuffle on (band, bucket), never all-pairs. Each `carry`
+    * column rides along as `__a_<c>`/`__b_<c>`, one value per side (on
+    * history rows the two are NOT ordered like id_a/id_b, so consumers
+    * must be symmetric in them). Not de-duplicated: a pair sharing several
+    * buckets appears once per bucket.
+    */
+  private def bandPairs(bands: DataFrame, hist: Option[DataFrame],
+      carry: String*): DataFrame = {
+    def pairs(a: DataFrame, b: DataFrame, cross: Boolean): DataFrame = {
+      val (ia, ib) = (col("a.doc_id"), col("b.doc_id"))
+      a.as("a").join(b.as("b"),
+          col("a.band") === col("b.band") && col("a.bucket") === col("b.bucket") &&
+            (if (cross) ia =!= ib else ia < ib))
+        .select(Seq(
+          (if (cross) least(ia, ib) else ia).as("id_a"),
+          (if (cross) greatest(ia, ib) else ib).as("id_b")) ++
+          carry.flatMap(c =>
+            Seq(col(s"a.$c").as(s"__a_$c"), col(s"b.$c").as(s"__b_$c"))): _*)
+    }
+    val inBatch = pairs(bands, bands, cross = false)
+    hist.fold(inBatch)(h => inBatch.unionByName(pairs(h, bands, cross = true)))
   }
 
   /** Cross-RUN [[minhashLshCandidates]] for continuous ingestion: a
@@ -580,72 +525,38 @@ object Dedup {
     * read by a map-side posexplode of the scanned signatures, so the
     * table carries k longs per document ever seen, not k posting rows,
     * and the candidate join still shuffles on (band, bucket) exactly as
-    * the in-batch form does. Same retry-safety discipline as
-    * [[incrementalExactDedup]]: counts land in an overwritten
-    * `batch=<id>` dir the history read EXCLUDES, and the result is
-    * spilled before the signature write. A doc id resubmitted across
-    * batches keeps one signature (identical text => identical sig;
+    * the in-batch form does. Replay-safe through [[BatchTable]]; the
+    * result is spilled before the signature write. A doc id resubmitted
+    * across batches keeps one signature (identical text => identical sig;
     * conflicting text for one id is a caller data bug).
     */
   def incrementalMinhashLsh(docs: DataFrame, idCol: String, textCol: String,
       sigTablePath: String, n: Int = 3, k: Int = 16, seed: Long = 7L,
       minEstJaccard: Double = 0.0, batchId: String = null): DataFrame = {
-    val spark = docs.sparkSession
-    val bid = Option(batchId).getOrElse(
-      "oneshot-" + java.util.UUID.randomUUID().toString.take(12))
+    val bid = BatchTable.batchId(batchId)
     // materialize the batch signatures ONCE: the shingling + k-hash
     // MinHash projection would otherwise re-evaluate in every consumer
     // below (self-join x2, cross join, both estimate joins, the final
     // append — ~6 passes over the batch text)
     val sig = graft.io.Spill(
-      docs
-        .select(col(idCol).cast("long").as("doc_id"),
-          TextFunctions.words(col(textCol)).as("w"))
-        .where(size(col("w")) >= n)
-        .select(col("doc_id"),
-          GraftFunctions.minhash(
-            TextFunctions.wordShingles(col("w"), n), k, seed).as("sig")),
+      minhashSigs(docs, col(idCol).cast("long"), textCol, n, k, seed),
       "graft-mhsig-")
-    // explicit schema: all-numeric batch dirs must not retype `batch`
-    val histSig =
-      try spark.read.schema("doc_id BIGINT, sig ARRAY<BIGINT>, batch STRING")
-        .parquet(sigTablePath)
-        .where(col("batch") =!= bid)
-        // a history written with a different k would silently zip-pad
-        // with null in est_jaccard (scoring components 0, deflating
-        // estimates) — fail loudly map-side instead
-        .select(col("doc_id"),
-          when(size(col("sig")) === k, col("sig"))
-            .otherwise(raise_error(concat(
-              lit(s"incrementalMinhashLsh: history sig length != k=$k at doc_id "),
-              col("doc_id").cast("string"), lit(" (found "),
-              size(col("sig")).cast("string"),
-              lit(") — run with the k the table was built with")))).as("sig"))
-      catch { case e: org.apache.spark.sql.AnalysisException
-          if e.getCondition == "PATH_NOT_FOUND" =>
-        spark.createDataFrame(new java.util.ArrayList[org.apache.spark.sql.Row](),
-          org.apache.spark.sql.types.StructType.fromDDL(
-            "doc_id BIGINT, sig ARRAY<BIGINT>"))
-      }
+    val histSig = BatchTable.history(docs.sparkSession, sigTablePath,
+        "doc_id BIGINT, sig ARRAY<BIGINT>", bid)
+      // a history written with a different k would silently zip-pad
+      // with null in est_jaccard (scoring components 0, deflating
+      // estimates) — fail loudly map-side instead
+      .select(col("doc_id"),
+        when(size(col("sig")) === k, col("sig"))
+          .otherwise(raise_error(concat(
+            lit(s"incrementalMinhashLsh: history sig length != k=$k at doc_id "),
+            col("doc_id").cast("string"), lit(" (found "),
+            size(col("sig")).cast("string"),
+            lit(") — run with the k the table was built with")))).as("sig"))
     def toBands(s: DataFrame): DataFrame =
       s.select(col("doc_id"), posexplode(col("sig")).as(Seq("band", "bucket")))
-    val batchBands = toBands(sig)
-    val inBatch = batchBands.as("a")
-      .join(batchBands.as("b"),
-        col("a.band") === col("b.band") &&
-          col("a.bucket") === col("b.bucket") &&
-          col("a.doc_id") < col("b.doc_id"))
-      .select(col("a.doc_id").as("id_a"), col("b.doc_id").as("id_b"))
-    val cross = toBands(histSig).as("h")
-      .join(batchBands.as("n"),
-        col("h.band") === col("n.band") &&
-          col("h.bucket") === col("n.bucket") &&
-          col("h.doc_id") =!= col("n.doc_id"))
-      .select(
-        least(col("h.doc_id"), col("n.doc_id")).as("id_a"),
-        greatest(col("h.doc_id"), col("n.doc_id")).as("id_b"))
     val allSigs = sig.unionByName(histSig).dropDuplicates("doc_id")
-    val pairs = inBatch.unionByName(cross).distinct()
+    val pairs = bandPairs(toBands(sig), Some(toBands(histSig))).distinct()
       .join(allSigs.select(col("doc_id").as("id_a"), col("sig").as("__sa")), Seq("id_a"))
       .join(allSigs.select(col("doc_id").as("id_b"), col("sig").as("__sb")), Seq("id_b"))
       .withColumn("est_jaccard",
@@ -656,7 +567,7 @@ object Dedup {
       .where(col("est_jaccard") >= minEstJaccard)
       .select(col("id_a"), col("id_b"), col("est_jaccard"))
     val result = graft.io.Spill(pairs, "graft-mhinc-")
-    sig.write.mode("overwrite").parquet(s"$sigTablePath/batch=$bid")
+    BatchTable.overwrite(sig, sigTablePath, bid)
     result
   }
 
@@ -680,20 +591,8 @@ object Dedup {
     * verifies. The exchange carries (doc_id, fp, band, bucket) only —
     * never payload bytes — so the posture holds at corpus scale.
     */
-  def fingerprintPairs(fp: DataFrame, maxHamming: Int = 3): DataFrame = {
-    require(maxHamming >= 0 && maxHamming <= 3,
-      "4x16-bit banding guarantees candidate recall only for maxHamming <= 3 (pigeonhole)")
-    val bands = simhashBands(fp)
-
-    bands.as("a")
-      .join(bands.as("b"),
-        col("a.band") === col("b.band") && col("a.bucket") === col("b.bucket") &&
-          col("a.doc_id") < col("b.doc_id"))
-      .select(col("a.doc_id").as("id_a"), col("b.doc_id").as("id_b"),
-        bit_count(col("a.fp").bitwiseXOR(col("b.fp"))).as("hamming"))
-      .distinct()
-      .where(col("hamming") <= maxHamming)
-  }
+  def fingerprintPairs(fp: DataFrame, maxHamming: Int = 3): DataFrame =
+    hammingPairs(None, fp, maxHamming)
 
   /** The 16-bit pigeonhole band postings of a (doc_id, fp) frame — the
     * shared banding of [[simhashPairs]] and [[incrementalSimhash]] (any
@@ -711,6 +610,22 @@ object Dedup {
         col("bb.band").as("band"), col("bb.bucket").as("bucket"))
   }
 
+  /** Distinct (id_a, id_b, hamming) pairs within `maxHamming` among the
+    * `fp` frame's documents and, when `hist` is given, between them and
+    * the history's: the band candidates of [[bandPairs]] verified by an
+    * exact popcount.
+    */
+  private def hammingPairs(hist: Option[DataFrame], fp: DataFrame,
+      maxHamming: Int): DataFrame = {
+    require(maxHamming >= 0 && maxHamming <= 3,
+      "4x16-bit banding guarantees candidate recall only for maxHamming <= 3 (pigeonhole)")
+    bandPairs(simhashBands(fp), hist.map(simhashBands), "fp")
+      .select(col("id_a"), col("id_b"),
+        bit_count(col("__a_fp").bitwiseXOR(col("__b_fp"))).as("hamming"))
+      .distinct()
+      .where(col("hamming") <= maxHamming)
+  }
+
   /** Cross-RUN [[simhashPairs]]: the fingerprint-table discipline of
     * [[incrementalMinhashLsh]] with SimHash's 8-bytes-per-doc state — the
     * cheapest cross-run near-dup memory there is (one long per document
@@ -718,11 +633,8 @@ object Dedup {
     * AND the persisted history on the 16-bit pigeonhole bands, verified
     * with the exact popcount <= maxHamming filter; against an EMPTY
     * history this is exactly [[simhashPairs]] (q113's oracle replays the
-    * batch case). Bands are re-derived from the scanned fingerprints
-    * (map-side), history reads use an explicit schema (epoch-id dirs
-    * must not retype `batch`), the result spills before the fingerprint
-    * append (replay-stable), and the accumulating dirs fold with
-    * [[compactSimhash]] (distinct by doc_id — idempotent).
+    * batch case). The table is a [[BatchTable]] (the result spills
+    * before its write) and folds with [[compactSimhash]].
     */
   def incrementalSimhash(docs: DataFrame, idCol: String, textCol: String,
       fpTablePath: String, maxHamming: Int = 3,
@@ -735,59 +647,22 @@ object Dedup {
 
   /** Cross-run near-dup pairs for ANY 64-bit fingerprint family — the
     * [[incrementalSimhash]] machinery over a precomputed (doc_id, fp)
-    * frame, so the perceptual ([[Multimodal.imageHash]]) and acoustic
-    * ([[Multimodal.audioHash]]) fingerprints get the identical
-    * fingerprint-table discipline (band self-join + history cross-join,
-    * popcount verify, replay-stable spill-before-append,
-    * [[compactSimhash]] folds) without re-implementing it per modality.
-    * Same contract: pairs among the batch AND against everything ever
-    * seen; empty history reduces to [[fingerprintPairs]].
+    * frame, shared by the perceptual ([[Multimodal.imageHash]]) and
+    * acoustic ([[Multimodal.audioHash]]) fingerprints. Same contract:
+    * pairs among the batch AND against everything ever seen; empty
+    * history reduces to [[fingerprintPairs]].
     */
   def incrementalFingerprintPairs(fp0: DataFrame,
       fpTablePath: String, maxHamming: Int = 3,
       batchId: String = null): DataFrame = {
-    require(maxHamming >= 0 && maxHamming <= 3,
-      "4x16-bit banding guarantees candidate recall only for maxHamming <= 3 (pigeonhole)")
-    val spark = fp0.sparkSession
-    val bid = Option(batchId).getOrElse(
-      "oneshot-" + java.util.UUID.randomUUID().toString.take(12))
+    val bid = BatchTable.batchId(batchId)
     val fp = graft.io.Spill(fp0.select(col("doc_id"), col("fp")),
       "graft-shfp-")
-    val hist =
-      try spark.read.schema("doc_id BIGINT, fp BIGINT, batch STRING")
-        .parquet(fpTablePath)
-        .where(col("batch") =!= bid).select(col("doc_id"), col("fp"))
-      catch { case e: org.apache.spark.sql.AnalysisException
-          if e.getCondition == "PATH_NOT_FOUND" =>
-        spark.createDataFrame(new java.util.ArrayList[org.apache.spark.sql.Row](),
-          org.apache.spark.sql.types.StructType.fromDDL(
-            "doc_id BIGINT, fp BIGINT"))
-      }
-    val batchBands = simhashBands(fp)
-    val inBatch = batchBands.as("a")
-      .join(batchBands.as("b"),
-        col("a.band") === col("b.band") &&
-          col("a.bucket") === col("b.bucket") &&
-          col("a.doc_id") < col("b.doc_id"))
-      .select(col("a.doc_id").as("id_a"), col("b.doc_id").as("id_b"),
-        col("a.fp").as("__fa"), col("b.fp").as("__fb"))
-    val cross = simhashBands(hist).as("h")
-      .join(batchBands.as("n"),
-        col("h.band") === col("n.band") &&
-          col("h.bucket") === col("n.bucket") &&
-          col("h.doc_id") =!= col("n.doc_id"))
-      .select(
-        least(col("h.doc_id"), col("n.doc_id")).as("id_a"),
-        greatest(col("h.doc_id"), col("n.doc_id")).as("id_b"),
-        col("h.fp").as("__fa"), col("n.fp").as("__fb"))
-    val pairs = inBatch.unionByName(cross)
-      .withColumn("hamming",
-        bit_count(col("__fa").bitwiseXOR(col("__fb"))))
-      .select(col("id_a"), col("id_b"), col("hamming"))
-      .distinct()
-      .where(col("hamming") <= maxHamming)
-    val result = graft.io.Spill(pairs, "graft-shinc-")
-    fp.write.mode("overwrite").parquet(s"$fpTablePath/batch=$bid")
+    val hist = BatchTable.history(fp0.sparkSession, fpTablePath,
+      "doc_id BIGINT, fp BIGINT", bid)
+    val result = graft.io.Spill(hammingPairs(Some(hist), fp, maxHamming),
+      "graft-shinc-")
+    BatchTable.overwrite(fp, fpTablePath, bid)
     result
   }
 
@@ -797,7 +672,7 @@ object Dedup {
   def compactSimhash(spark: org.apache.spark.sql.SparkSession,
       fpTablePath: String, excludeBatch: String = null,
       targetFileBytes: Long = 128L << 20): Int =
-    compactDistinctFold(spark, fpTablePath, excludeBatch, targetFileBytes)(
+    BatchTable.compact(spark, fpTablePath, excludeBatch, targetFileBytes)(
       _.dropDuplicates("doc_id"))
 
   /** Compact the [[incrementalSemanticDedup]] embedding-history table
@@ -807,15 +682,14 @@ object Dedup {
   def compactEmbeddings(spark: org.apache.spark.sql.SparkSession,
       histTablePath: String, excludeBatch: String = null,
       targetFileBytes: Long = 128L << 20): Int =
-    compactDistinctFold(spark, histTablePath, excludeBatch, targetFileBytes)(
+    BatchTable.compact(spark, histTablePath, excludeBatch, targetFileBytes)(
       _.dropDuplicates("doc_id"))
 
   /** One-call maintenance for every incremental table a pipeline keeps:
     * runs the right fold for each path — fingerprints (distinct fp),
     * MinHash signatures / SimHash fingerprints / semantic embedding
-    * histories (distinct doc_id), span counts (SUMMED per fp, with the
-    * crash-recovery marker that fold requires) — under ONE shared
-    * in-flight-exclusion discipline: `excludeBatch` (the possibly
+    * histories (distinct doc_id), span counts (SUMMED per fp) — under ONE
+    * shared [[BatchTable.compact]] discipline: `excludeBatch` (the possibly
     * mid-write batch id) is excluded from every fold, so a single call
     * site can service all tables between ingest runs without tracking
     * which table uses which fold. Returns table path -> post-compaction
@@ -830,24 +704,14 @@ object Dedup {
       embeddings: Seq[String] = Nil,
       excludeBatch: String = null,
       targetFileBytes: Long = 128L << 20): Map[String, Int] = {
-    val folds =
-      fingerprints.map(p => p -> (() =>
-        compactFingerprints(spark, p, excludeBatch, targetFileBytes))) ++
-      signatures.map(p => p -> (() =>
-        compactSignatures(spark, p, excludeBatch, targetFileBytes))) ++
-      spanCounts.map(p => p -> (() =>
-        compactSpanCounts(spark, p, excludeBatch, targetFileBytes))) ++
-      simhash.map(p => p -> (() =>
-        compactSimhash(spark, p, excludeBatch, targetFileBytes))) ++
-      embeddings.map(p => p -> (() =>
-        compactEmbeddings(spark, p, excludeBatch, targetFileBytes)))
-    folds.map { case (p, f) => p -> f() }.toMap
+    def fold(paths: Seq[String],
+        compact: (org.apache.spark.sql.SparkSession, String, String, Long) => Int) =
+      paths.map(p => p -> compact(spark, p, excludeBatch, targetFileBytes))
+    (fold(fingerprints, compactFingerprints) ++ fold(signatures, compactSignatures) ++
+      fold(spanCounts, compactSpanCounts) ++ fold(simhash, compactSimhash) ++
+      fold(embeddings, compactEmbeddings)).toMap
   }
 
-  /** Embedding-cosine near-duplicate pairs, blocked on a partition column
-    * (label, LSH bucket, ...) so the pair join shuffles on the block key
-    * instead of exploding into a cross product.
-    */
   /** Embedding near-dup pairs blocked on random-hyperplane LSH buckets —
     * the scale path when no natural blocking column exists: bucket ids come
     * from the data itself, so the pair join still shuffles on a key instead
@@ -1243,67 +1107,17 @@ object Dedup {
     * history this is exactly [[semanticDedup]] and q110's oracle applies
     * verbatim. Returns the surviving batch rows unchanged.
     *
-    * Same retry-safety discipline as [[incrementalExactDedup]] /
-    * [[incrementalMinhashLsh]]: the history read EXCLUDES the current
-    * `batch=<id>` (a replayed batch never pairs against its own first
-    * attempt), the result is spilled before the history write, and the
-    * write itself is an idempotent overwrite of the batch dir. A doc id
-    * resubmitted across batches keeps its first-seen embedding row per
-    * batch dir; the cross join's `doc_id` inequality keeps it from
-    * self-pairing.
+    * Replay-safe through [[BatchTable]]; the result is spilled before the
+    * history write. A doc id resubmitted across batches keeps its
+    * first-seen embedding row per batch dir; the cross join's `doc_id`
+    * inequality keeps it from self-pairing.
     */
   def incrementalSemanticDedup(embs: DataFrame, idCol: String, embCol: String,
       blockCol: String, threshold: Double, histTablePath: String,
-      batchId: String = null): DataFrame = {
-    val spark = embs.sparkSession
-    val bid = Option(batchId).getOrElse(
-      "oneshot-" + java.util.UUID.randomUUID().toString.take(12))
-    // materialize once: the batch feeds the self-join (x2), the cross
-    // join, the final anti-join, and the history append
-    val batch = graft.io.Spill(embs, "graft-semb-")
-    val bproj = batch.select(col(idCol).cast("long").as("doc_id"),
-      col(blockCol).cast("string").as("block"),
-      col(embCol).cast("array<double>").as("emb"))
-    // explicit schema: all-numeric batch dirs must not retype `batch`
-    val hist =
-      try spark.read
-        .schema("doc_id BIGINT, block STRING, emb ARRAY<DOUBLE>, batch STRING")
-        .parquet(histTablePath)
-        .where(col("batch") =!= bid)
-        .select(col("doc_id"), col("block"), col("emb"))
-      catch { case e: org.apache.spark.sql.AnalysisException
-          if e.getCondition == "PATH_NOT_FOUND" =>
-        spark.createDataFrame(new java.util.ArrayList[org.apache.spark.sql.Row](),
-          org.apache.spark.sql.types.StructType.fromDDL(
-            "doc_id BIGINT, block STRING, emb ARRAY<DOUBLE>"))
-      }
-    val inBatch = embeddingNearDupPairs(batch, idCol, embCol, blockCol, threshold)
-      .select(col("id_a").cast("long").as("id_a"),
-        col("id_b").cast("long").as("id_b"))
-    val cross = hist.as("h")
-      .join(bproj.as("n"),
-        col("h.block") === col("n.block") &&
-          col("h.doc_id") =!= col("n.doc_id"))
-      .where(round(GraftFunctions.cosine_sim(col("h.emb"), col("n.emb")), 4)
-        >= threshold)
-      .select(least(col("h.doc_id"), col("n.doc_id")).as("id_a"),
-        greatest(col("h.doc_id"), col("n.doc_id")).as("id_b"))
-    val labels = connectedComponents(inBatch.unionByName(cross).distinct())
-    // components touching history: every batch member drops (the cluster's
-    // survivor was already emitted); batch-only components: keep min id
-    val histComps = labels
-      .join(hist.select(col("doc_id").as("id")).distinct(), Seq("id"))
-      .select(col("comp")).distinct()
-    val drop = labels.join(histComps, Seq("comp"), "left_semi")
-      .select(col("id"))
-      .unionByName(labels.join(histComps, Seq("comp"), "left_anti")
-        .where(col("id") =!= col("comp")).select(col("id")))
-    val result = graft.io.Spill(
-      batch.join(drop, col(idCol).cast("long") === col("id"), "left_anti"),
-      "graft-seminc-")
-    bproj.write.mode("overwrite").parquet(s"$histTablePath/batch=$bid")
-    result
-  }
+      batchId: String = null): DataFrame =
+    incrementalSemantic(embs, idCol, embCol, blockCol, threshold,
+      histTablePath, batchId, col(embCol).cast("array<double>"),
+      "emb ARRAY<DOUBLE>", GraftFunctions.cosine_sim)
 
   /** [[incrementalSemanticDedup]] with an int8-QUANTIZED history: the
     * cross-run table stores 1-byte-per-dim packed codes
@@ -1325,47 +1139,50 @@ object Dedup {
     * caught. The float form stays the oracle default (q117) — choose
     * this one when history-table size dominates pipeline cost. The two
     * forms' history schemas differ: never point them at one table path.
-    *
-    * Same retry-safety discipline as the float form: the history read
-    * excludes the in-flight `batch=<id>`, the result spills before the
-    * history write, the write is an idempotent overwrite of the batch
-    * dir, and [[compactEmbeddings]] folds the accumulating dirs
-    * (distinct by doc_id — the fold never reads vector payloads).
+    * [[compactEmbeddings]] folds the accumulating dirs (distinct by
+    * doc_id — the fold never reads vector payloads).
     */
   def incrementalSemanticDedupInt8(embs: DataFrame, idCol: String,
       embCol: String, blockCol: String, threshold: Double,
       histTablePath: String, batchId: String = null): DataFrame = {
     import graft.functions.GraftFunctions.{cosine_int8, int8_pack, int8_quantize}
-    val spark = embs.sparkSession
-    val bid = Option(batchId).getOrElse(
-      "oneshot-" + java.util.UUID.randomUUID().toString.take(12))
-    val batch = graft.io.Spill(embs, "graft-semq-")
-    val bq = batch.select(col(idCol).cast("long").as("doc_id"),
-      col(blockCol).cast("string").as("block"),
-      int8_pack(int8_quantize(col(embCol)).getField("q")).as("qb"))
-    val hist =
-      try spark.read
-        .schema("doc_id BIGINT, block STRING, qb BINARY, batch STRING")
-        .parquet(histTablePath)
-        .where(col("batch") =!= bid)
-        .select(col("doc_id"), col("block"), col("qb"))
-      catch { case e: org.apache.spark.sql.AnalysisException
-          if e.getCondition == "PATH_NOT_FOUND" =>
-        spark.createDataFrame(new java.util.ArrayList[org.apache.spark.sql.Row](),
-          org.apache.spark.sql.types.StructType.fromDDL(
-            "doc_id BIGINT, block STRING, qb BINARY"))
-      }
+    incrementalSemantic(embs, idCol, embCol, blockCol, threshold,
+      histTablePath, batchId, int8_pack(int8_quantize(col(embCol)).getField("q")),
+      "qb BINARY", cosine_int8)
+  }
+
+  /** The one body of the incremental semantic pair: the history table
+    * holds (doc_id, block, <payload>) with `payload` stored under the
+    * `payloadDdl` column, and `score` rates a history payload against a
+    * batch payload for the cross-batch pairs. In-batch pairs are always
+    * the float-exact [[embeddingNearDupPairs]].
+    */
+  private def incrementalSemantic(embs: DataFrame, idCol: String,
+      embCol: String, blockCol: String, threshold: Double,
+      histTablePath: String, batchId: String, payload: Column,
+      payloadDdl: String, score: (Column, Column) => Column): DataFrame = {
+    val bid = BatchTable.batchId(batchId)
+    val p = payloadDdl.takeWhile(_ != ' ')
+    // materialize once: the batch feeds the self-join (x2), the cross
+    // join, the final anti-join, and the history append
+    val batch = graft.io.Spill(embs, "graft-semb-")
+    val bproj = batch.select(col(idCol).cast("long").as("doc_id"),
+      col(blockCol).cast("string").as("block"), payload.as(p))
+    val hist = BatchTable.history(embs.sparkSession, histTablePath,
+      s"doc_id BIGINT, block STRING, $payloadDdl", bid)
     val inBatch = embeddingNearDupPairs(batch, idCol, embCol, blockCol, threshold)
       .select(col("id_a").cast("long").as("id_a"),
         col("id_b").cast("long").as("id_b"))
     val cross = hist.as("h")
-      .join(bq.as("n"),
+      .join(bproj.as("n"),
         col("h.block") === col("n.block") &&
           col("h.doc_id") =!= col("n.doc_id"))
-      .where(round(cosine_int8(col("h.qb"), col("n.qb")), 4) >= threshold)
+      .where(round(score(col(s"h.$p"), col(s"n.$p")), 4) >= threshold)
       .select(least(col("h.doc_id"), col("n.doc_id")).as("id_a"),
         greatest(col("h.doc_id"), col("n.doc_id")).as("id_b"))
     val labels = connectedComponents(inBatch.unionByName(cross).distinct())
+    // components touching history: every batch member drops (the cluster's
+    // survivor was already emitted); batch-only components: keep min id
     val histComps = labels
       .join(hist.select(col("doc_id").as("id")).distinct(), Seq("id"))
       .select(col("comp")).distinct()
@@ -1375,11 +1192,15 @@ object Dedup {
         .where(col("id") =!= col("comp")).select(col("id")))
     val result = graft.io.Spill(
       batch.join(drop, col(idCol).cast("long") === col("id"), "left_anti"),
-      "graft-semqinc-")
-    bq.write.mode("overwrite").parquet(s"$histTablePath/batch=$bid")
+      "graft-seminc-")
+    BatchTable.overwrite(bproj, histTablePath, bid)
     result
   }
 
+  /** Embedding-cosine near-duplicate pairs, blocked on a partition column
+    * (label, LSH bucket, ...) so the pair join shuffles on the block key
+    * instead of exploding into a cross product.
+    */
   def embeddingNearDupPairs(embs: DataFrame, idCol: String, embCol: String,
       blockCol: String, threshold: Double): DataFrame =
     embs.as("a")

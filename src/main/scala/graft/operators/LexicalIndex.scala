@@ -29,7 +29,7 @@ import org.apache.spark.sql.functions._
   *     lands in exactly ONE directory per batch — a query's scan prunes
   *     to at most |batches| x |distinct query-term buckets| directories
   *     (plan-pinned in the spec). The OUTER `batch=` level is the
-  *     [[graft.operators.Dedup.incrementalExactDedup]] retry discipline:
+  *     [[graft.io.BatchTable]] retry discipline:
   *     each append OVERWRITES its own batch directory, so a streaming
   *     replay of an epoch rewrites the same files instead of doubling
   *     postings.
@@ -280,7 +280,7 @@ object LexicalIndex {
   /** Append a batch of NEW documents under the index's own bucket count.
     * The batch's postings and its one stats delta row land in their own
     * `batch=<id>` directories (OVERWRITTEN, not appended — the
-    * [[Dedup.incrementalExactDedup]] retry discipline), so a retried
+    * [[graft.io.BatchTable]] retry discipline), so a retried
     * append with the SAME `batchId` rewrites the same directories and
     * the index holds the batch exactly once; a crash between the two
     * writes leaves postings without their stats delta only until the
@@ -300,8 +300,7 @@ object LexicalIndex {
       idCol: String, textCol: String, batchId: String = null): Unit = {
     val docs = graft.io.Layout.spread(docs0) // the write()-side rationale
     graft.io.Maintenance.withLease(spark, path, "lexical-append") {
-      val bid = Option(batchId).getOrElse(
-        "oneshot-" + java.util.UUID.randomUUID().toString.take(12))
+      val bid = graft.io.BatchTable.batchId(batchId)
       // the reserved generation ids are not appendable: they are not in
       // the folded manifest, so without this guard the mode-overwrite
       // write below would silently REPLACE batch=compacted (the entire
@@ -465,10 +464,7 @@ object LexicalIndex {
           old.foreach(p => fs.delete(p, false))
         }
       }
-      val it = fs.listFiles(root, true)
-      var n = 0
-      while (it.hasNext) if (it.next().getPath.getName.endsWith(".parquet")) n += 1
-      n
+      graft.io.BatchTable.dataFileCount(fs, root)
     }
 
   /** Operational snapshot of a persisted index — the introspection a
@@ -492,16 +488,12 @@ object LexicalIndex {
       .agg(coalesce(sum(col("n_docs")), lit(0L)).as("n"),
         coalesce(sum(col("total_len")), lit(0L)).as("t")).head()
     val root = new org.apache.hadoop.fs.Path(path)
-    val fs = fsOf(spark, root)
-    val it = fs.listFiles(root, true)
-    var files = 0
-    while (it.hasNext)
-      if (it.next().getPath.getName.endsWith(".parquet")) files += 1
     IndexInfo(nBuckets, positional,
       generationIds(spark, path, "postings").sorted,
       generationIds(spark, path, "stats").sorted,
       foldedIds(spark, path).size,
-      totals.getLong(0), totals.getLong(1), files)
+      totals.getLong(0), totals.getLong(1),
+      graft.io.BatchTable.dataFileCount(fsOf(spark, root), root))
   }
 
   // ---- retrieval: the [[Postings]] rankers over the [[Index]] source ---

@@ -134,20 +134,16 @@ object NaiveBayes {
     * `countsTablePath/batch=<id>` and returns the model derived from
     * ALL counts (history + this batch).
     *
-    * Same retry discipline as the incremental dedup tables: the history
-    * read EXCLUDES the in-flight `batch=<id>` (a replayed batch never
-    * double-counts its own first attempt), the batch counts spill
-    * before the write, and the write is an idempotent overwrite of the
-    * batch dir. The accumulating dirs fold with [[compactCounts]]
-    * (summed — the additive `BatchTable` fold).
+    * The count table is a [[graft.io.BatchTable]] (a replayed batch
+    * never double-counts its own first attempt); the batch counts spill
+    * before the write. The accumulating dirs fold with [[compactCounts]]
+    * (summed — the additive fold).
     */
   def trainIncremental(docs: DataFrame, labelCol: String, tokensCol: String,
       countsTablePath: String, batchId: String = null,
       alpha: Double = 1.0): DataFrame = {
     require(alpha > 0, "alpha must be positive")
-    val spark = docs.sparkSession
-    val bid = Option(batchId).getOrElse(
-      "oneshot-" + java.util.UUID.randomUUID().toString.take(12))
+    val bid = graft.io.BatchTable.batchId(batchId)
     val base = docs.select(col(labelCol).cast("string").as("label"),
       col(tokensCol).as("__toks"))
     val batchCounts = graft.io.Spill(
@@ -162,32 +158,21 @@ object NaiveBayes {
             .select(lit("tok").as("kind"), col("label"), col("token"),
               col("c"))),
       "graft-nbc-")
-    val hist =
-      try spark.read
-        .schema("kind STRING, label STRING, token STRING, c BIGINT, batch STRING")
-        .parquet(countsTablePath)
-        .where(col("batch") =!= bid)
-        .select(col("kind"), col("label"), col("token"), col("c"))
-      catch { case e: org.apache.spark.sql.AnalysisException
-          if e.getCondition == "PATH_NOT_FOUND" =>
-        spark.createDataFrame(new java.util.ArrayList[org.apache.spark.sql.Row](),
-          org.apache.spark.sql.types.StructType.fromDDL(
-            "kind STRING, label STRING, token STRING, c BIGINT"))
-      }
-    val all = hist.unionByName(batchCounts)
+    val all = graft.io.BatchTable.history(docs.sparkSession, countsTablePath,
+        "kind STRING, label STRING, token STRING, c BIGINT", bid)
+      .unionByName(batchCounts)
     val model = modelFromCounts(
       all.where(col("kind") === "doc")
         .groupBy(col("label")).agg(sum(col("c")).as("__docs")),
       all.where(col("kind") === "tok")
         .groupBy(col("label"), col("token")).agg(sum(col("c")).as("__c")),
       alpha)
-    batchCounts.write.mode("overwrite").parquet(s"$countsTablePath/batch=$bid")
+    graft.io.BatchTable.overwrite(batchCounts, countsTablePath, bid)
     model
   }
 
   /** Fold the [[trainIncremental]] count table's batch dirs (summed per
-    * (kind, label, token) — the additive fold, with the span-count crash
-    * discipline).
+    * (kind, label, token) — [[graft.io.BatchTable.compactSumFold]]).
     */
   def compactCounts(spark: org.apache.spark.sql.SparkSession,
       countsTablePath: String, excludeBatch: String = null,

@@ -36,12 +36,12 @@ import graft.operators.Dedup
   * deterministic, so the fold is exact (the associativity argument of
   * the incremental dedup family, composed end to end).
   *
-  * Retry safety is inherited: every persistent table write lands in an
-  * overwritten `batch=<epoch>/` dir the history read excludes, so a
-  * replayed micro-batch (checkpoint restart mid-epoch) recomputes the
-  * identical survivor set instead of anti-joining against its own first
-  * attempt. The survivor write is an overwritten per-epoch dir for the
-  * same reason. At scale, fold the accruing dirs with
+  * Retry safety is inherited: every persistent table is a
+  * [[graft.io.BatchTable]] keyed by the epoch, so a replayed micro-batch
+  * (checkpoint restart mid-epoch) recomputes the identical survivor set
+  * instead of anti-joining against its own first attempt. The survivor
+  * write is the same per-epoch overwrite. At scale, fold the accruing
+  * dirs with
   * [[Dedup.compactFingerprints]]/[[Dedup.compactSignatures]] on a
   * maintenance cadence.
   */
@@ -274,21 +274,23 @@ object StreamingPrep {
         graft.io.Spill.scoped {
           val rec = lineageDir.map(_ =>
             TrainingData.lineageRecorder(idCol))
-          processBatch(b, idCol, textCol, tablesDir, s"epoch-$epoch",
+          val bid = s"epoch-$epoch"
+          graft.io.BatchTable.overwrite(
+            processBatch(b, idCol, textCol, tablesDir, bid,
               lang, minQuality, nearDupThreshold, minhashK,
               nbModel, nbCharGrams, maxDupGramFrac,
               lmTiers, maxLmBits, dsirRatio, minDsirLogw, dsirSalt,
               blocklistPhrases, blocklistMaxHits, gopherGate,
               compressionRatioBounds,
               fixEncoding, maxControlFrac, c4MinLineWords, bloomDedup,
-              rec)
-            .write.mode("overwrite").parquet(s"$outDir/batch=epoch-$epoch")
+              rec),
+            outDir, bid)
           // lineage AFTER the survivor write: the epoch's state-table
           // dirs exist by now and the history reads exclude this
           // epoch's own batch dir, so the recorded frames re-evaluate
           // to the same drops a replay would recompute
-          lineageDir.foreach(ld => rec.get.frame(b.sparkSession)
-            .write.mode("overwrite").parquet(s"$ld/batch=epoch-$epoch"))
+          lineageDir.foreach(ld =>
+            graft.io.BatchTable.overwrite(rec.get.frame(b.sparkSession), ld, bid))
         }
         ()
       }.start()

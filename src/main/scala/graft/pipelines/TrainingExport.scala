@@ -55,13 +55,15 @@ import graft.operators.{Conversations, Dedup, Fim, Packing, Sampling}
   * cleaning subplan re-executes per branch: measured 66 exchanges in
   * the un-spilled battery plan vs 3 in the audited tail, with each
   * stage's own audited subplan running exactly ONCE, eagerly, at spill
-  * time). Pass `spillIntermediate = false` when managing intermediate
-  * storage externally.
+  * time).
   *
   * Reference scope: the scaffold has no training-data surface; this
   * extends the LLM-pipeline family per the project north star.
   */
 object TrainingExport {
+
+  private def spill(df: DataFrame): DataFrame =
+    graft.io.Spill(df, "graft-export-")
 
   /** Per-document export assignment for ONE epoch of the train side:
     * `(idCol, fmt, tokens, group, shard, seq_id, seq_pos, oversize)`.
@@ -78,14 +80,13 @@ object TrainingExport {
       groupExpr: Column, valFraction: Double = 0.1,
       pairThreshold: Double = 0.02, epochSalt: String = "ep0",
       fimFraction: Double = 0.5, spmFraction: Double = 0.5,
-      budget: Long = 4096L, nShards: Int = 256,
-      spillIntermediate: Boolean = true): DataFrame = {
+      budget: Long = 4096L, nShards: Int = 256): DataFrame = {
     val (surv, split) = survivorSplit(docs, idCol, textCol, groupExpr,
-      valFraction, pairThreshold, spillIntermediate)
+      valFraction, pairThreshold)
     val train = surv.join(
       split.where(col("split") === "train").select(col(idCol)), Seq(idCol))
     epochSlice(train, idCol, textCol, epochSalt, fimFraction, spmFraction,
-      budget, nShards, spillIntermediate)
+      budget, nShards)
   }
 
   /** Stages 1-2 shared by every export surface: clean survivors joined
@@ -96,18 +97,16 @@ object TrainingExport {
     */
   private def survivorSplit(docs: DataFrame, idCol: String,
       textCol: String, groupExpr: Column, valFraction: Double,
-      pairThreshold: Double,
-      spillIntermediate: Boolean): (DataFrame, DataFrame) = {
-    def spill(df: DataFrame): DataFrame =
-      if (spillIntermediate) graft.io.Spill(df, "graft-export-") else df
+      pairThreshold: Double): (DataFrame, DataFrame) = {
     val survIds = TrainingData.clean(docs, idCol, textCol)
       .select(col(idCol))
     val surv = spill(survIds.join(
       docs.select(col(idCol), col(textCol), groupExpr.as("__grp")),
       Seq(idCol)))
     // the fresh pair graph re-tokenizes the spilled survivors, whose file
-    // count mirrors their tiny byte size at bench scale — spread keeps
-    // the shingle pass parallel (identity on well-split inputs)
+    // count mirrors their tiny byte size at bench scale — `surv` is a
+    // spilled scan, so spread keeps the shingle pass parallel (identity
+    // on well-split inputs)
     val pairs = Dedup.ngramJaccardPairs(graft.io.Layout.spread(surv),
       idCol, textCol, n = 3, threshold = pairThreshold)
     val split = Sampling.leakageSafeSplit(surv.select(col(idCol)), idCol,
@@ -121,13 +120,13 @@ object TrainingExport {
     */
   private def epochSlice(train: DataFrame, idCol: String, textCol: String,
       epochSalt: String, fimFraction: Double, spmFraction: Double,
-      budget: Long, nShards: Int,
-      spillIntermediate: Boolean): DataFrame = {
-    def spill(df: DataFrame): DataFrame =
-      if (spillIntermediate) graft.io.Spill(df, "graft-export-") else df
+      budget: Long, nShards: Int): DataFrame = {
     // only the assignment columns spill — text_out is corpus-sized and
     // nothing downstream reads it (writePretrainCorpus re-derives the
-    // text through the same deterministic transform)
+    // text through the same deterministic transform). spread acts only
+    // on a spilled `train` (epochAssignments'); pretrainAssignments'
+    // `train` is the join surv ⋈ split, whose parallelism AQE manages,
+    // so spread is the identity there
     val fimmed = spill(Fim.transform(graft.io.Layout.spread(train),
         idCol, textCol, fimFraction, spmFraction, epochSalt)
       .where(!col("sentinel_clash"))
@@ -157,11 +156,9 @@ object TrainingExport {
   def valAssignments(docs: DataFrame, idCol: String, textCol: String,
       groupExpr: Column, valFraction: Double = 0.1,
       pairThreshold: Double = 0.02, budget: Long = 4096L,
-      nShards: Int = 256, spillIntermediate: Boolean = true): DataFrame = {
-    def spill(df: DataFrame): DataFrame =
-      if (spillIntermediate) graft.io.Spill(df, "graft-export-") else df
+      nShards: Int = 256): DataFrame = {
     val (surv, split0) = survivorSplit(docs, idCol, textCol, groupExpr,
-      valFraction, pairThreshold, spillIntermediate)
+      valFraction, pairThreshold)
     val split = spill(split0.select(col(idCol), col("split")))
     val vals = surv.join(
       split.where(col("split") === "val").select(col(idCol)), Seq(idCol))
@@ -197,16 +194,13 @@ object TrainingExport {
       groupExpr: Column, epochSalts: Seq[String],
       valFraction: Double = 0.1, pairThreshold: Double = 0.02,
       fimFraction: Double = 0.5, spmFraction: Double = 0.5,
-      budget: Long = 4096L, nShards: Int = 256,
-      spillIntermediate: Boolean = true): DataFrame = {
+      budget: Long = 4096L, nShards: Int = 256): DataFrame = {
     require(epochSalts.nonEmpty, "epochSalts must be non-empty")
     require(epochSalts.distinct.size == epochSalts.size,
       "epochSalts must be distinct — identical salts draw identical " +
         "holes and the epochs collapse to copies")
-    def spill(df: DataFrame): DataFrame =
-      if (spillIntermediate) graft.io.Spill(df, "graft-export-") else df
     val (surv, split) = survivorSplit(docs, idCol, textCol, groupExpr,
-      valFraction, pairThreshold, spillIntermediate)
+      valFraction, pairThreshold)
     // spilled: every epoch consumes the train frame twice (FIM + group
     // join) — E epochs would otherwise re-run the survivor join 2E times
     val train = spill(surv.join(
@@ -221,7 +215,7 @@ object TrainingExport {
     graft.core.Jobs.parallel(docs.sparkSession.sparkContext,
         epochSalts) { salt =>
       epochSlice(train, idCol, textCol, salt, fimFraction, spmFraction,
-          budget, nShards, spillIntermediate)
+          budget, nShards)
         .select(lit(salt).as("epoch"), col(idCol), col("fmt"),
           col("tokens"), col("group"), col("shard"), col("seq_id"),
           col("seq_pos"), col("oversize"))
@@ -255,10 +249,7 @@ object TrainingExport {
   def sftAssignments(events: DataFrame, keyCol: String, tsCol: String,
       seqCol: String, roleCol: String, contentCol: String,
       tokenBudget: Long, trainRoles: Seq[String], groupExpr: Column,
-      budget: Long, nShards: Int,
-      spillIntermediate: Boolean = true): DataFrame = {
-    def spill(df: DataFrame): DataFrame =
-      if (spillIntermediate) graft.io.Spill(df, "graft-export-") else df
+      budget: Long, nShards: Int): DataFrame = {
     val spans = spill(Conversations.lossMaskSpans(events, keyCol, tsCol,
       seqCol, roleCol, contentCol, tokenBudget, trainRoles))
     val convs = spans.groupBy(col(keyCol))
@@ -298,9 +289,9 @@ object TrainingExport {
       contentCol: String, tokenBudget: Long, trainRoles: Seq[String],
       groupExpr: Column, outDir: String, budget: Long,
       nShards: Int): Int = {
-    val assign = graft.io.Spill(sftAssignments(events, keyCol, tsCol,
+    val assign = spill(sftAssignments(events, keyCol, tsCol,
       seqCol, roleCol, contentCol, tokenBudget, trainRoles, groupExpr,
-      budget, nShards), "graft-export-")
+      budget, nShards))
     val nested = assign
       .groupBy(col(keyCol), col("tokens"), col("group"), col("shard"),
         col("seq_id"), col("seq_pos"), col("oversize"))
@@ -350,10 +341,9 @@ object TrainingExport {
     // spilled: the assignment frame feeds TWO consumers (the id filter
     // below and the final join) — left in-plan each would re-execute the
     // whole clean/split/FIM/pack chain
-    val assign = graft.io.Spill(
-      pretrainAssignments(docs, idCol, textCol, groupExpr, valFraction,
-        pairThreshold, epochSalt, fimFraction, spmFraction, budget,
-        nShards), "graft-export-")
+    val assign = spill(pretrainAssignments(docs, idCol, textCol,
+      groupExpr, valFraction, pairThreshold, epochSalt, fimFraction,
+      spmFraction, budget, nShards))
     // transform ONLY the exported subset: every clean-rejected or val
     // doc would otherwise pay tokenize+FIM cost just to be dropped by
     // the join (advisor r19 item 2). Determinism is unaffected — draws

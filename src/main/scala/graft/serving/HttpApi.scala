@@ -161,25 +161,25 @@ final class HttpApi(serving: Serving, port: Int = 0) {
   server.createContext("/purchases/", { ex =>
     pathKey(ex, "/purchases/") match {
       case Some(key) =>
-        val local = serving.table("purchases")
+        val local: Map[String, Any] = serving.table("purchases")
           .map(_.prefix(key + "-").toMap).getOrElse(Map.empty)
         val guarded = ex.getRequestHeaders.containsKey("X-Provenance-Enabled")
         val merged = routing match {
           case Some((self, peers)) if !guarded =>
-            val remote = peers.indices.filter(_ != self).flatMap { i =>
+            local ++ peers.indices.filter(_ != self).flatMap { i =>
               fetchEntries(s"http://${peers(i)}/purchases/${HttpApi.encodePath(key)}")
             }
-            local.map { case (k, v) => k -> jsonVal(v) } ++ remote
-          case _ => local.map { case (k, v) => k -> jsonVal(v) }
+          case _ => local
         }
         if (merged.isEmpty) respond(ex, 404, "{}")
-        else respond(ex, 200, merged.toSeq.sortBy(_._1)
-          .map { case (k, v) => jsonStr(k) + ":" + v }.mkString("{", ",", "}"))
+        else respond(ex, 200, jsonVal(merged))
       case None => respond(ex, 404, "{}")
     }
   })
 
-  /** GET a peer's guarded prefix scan; returns (key, rawJsonValue) pairs.
+  /** GET a peer's guarded prefix scan; returns its (key, value) entries,
+    * decoded with [[ServingJson]] (the codec the peer encoded them with;
+    * the merged response re-emits them through the same codec).
     * Best-effort: an unreachable peer contributes nothing instead of
     * failing the whole merge (its keys reappear once it returns — same
     * availability posture as the reference's per-host okhttp loop). The
@@ -187,14 +187,18 @@ final class HttpApi(serving: Serving, port: Int = 0) {
     * thread (HttpTimeoutException is an IOException → treated as
     * unreachable).
     */
-  private def fetchEntries(url: String): Seq[(String, String)] =
+  private def fetchEntries(url: String): Seq[(String, Any)] =
     try {
       val res = client.send(
         HttpRequest.newBuilder(URI.create(url))
           .timeout(java.time.Duration.ofSeconds(5))
           .header("X-Provenance-Enabled", "true").GET().build(),
         HttpResponse.BodyHandlers.ofString())
-      if (res.statusCode() != 200) Nil else HttpApi.parseEntries(res.body())
+      if (res.statusCode() != 200) Nil
+      else ServingJson.parse(res.body()) match {
+        case m: Map[_, _] => m.toSeq.map { case (k, v) => k.toString -> v }
+        case _ => Nil
+      }
     } catch { case _: java.io.IOException | _: InterruptedException => Nil }
 
   /** `/metadata` and `/metadata/{store}`: host → store-names map —
@@ -599,35 +603,5 @@ object HttpApi {
     var i = 0
     while (i < key.length) { h = 31 * h + key.charAt(i); i += 1 }
     java.lang.Math.floorMod(h, nInstances)
-  }
-
-  /** Split a flat one-level JSON object body `{"k":v,...}` into
-    * (key, rawValue) pairs — values may themselves be objects (depth-aware
-    * split on top-level commas). Sufficient for the serving payloads; not a
-    * general JSON parser.
-    */
-  def parseEntries(body: String): Seq[(String, String)] = {
-    val inner = body.trim.stripPrefix("{").stripSuffix("}").trim
-    if (inner.isEmpty) return Nil
-    val parts = Vector.newBuilder[String]
-    var depth = 0; var inStr = false; var esc = false; var start = 0
-    for (i <- inner.indices) {
-      val c = inner.charAt(i)
-      if (esc) esc = false
-      else if (inStr) { if (c == '\\') esc = true else if (c == '"') inStr = false }
-      else c match {
-        case '"' => inStr = true
-        case '{' | '[' => depth += 1
-        case '}' | ']' => depth -= 1
-        case ',' if depth == 0 => parts += inner.substring(start, i); start = i + 1
-        case _ =>
-      }
-    }
-    parts += inner.substring(start)
-    parts.result().map { kv =>
-      val idx = kv.indexOf(':')
-      val rawKey = kv.substring(0, idx).trim
-      (rawKey.stripPrefix("\"").stripSuffix("\""), kv.substring(idx + 1).trim)
-    }
   }
 }

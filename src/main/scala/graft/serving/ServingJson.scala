@@ -2,9 +2,10 @@ package graft.serving
 
 /** The serving tier's JSON codec. The EMITTER is the reference-shape
   * serializer [[HttpApi]] always used (flat maps of numbers/strings,
-  * keys sorted, whole doubles printed as integers); the PARSER exists for
+  * keys sorted, whole doubles printed as integers); the PARSER serves
   * the parquet spill tier ([[ServingTable]] with `spillDir`), which
-  * round-trips values through (key, json) rows. Scalar fidelity through
+  * round-trips values through (key, json) rows, and the `/purchases`
+  * fan-out, which decodes a peer's body. Scalar fidelity through
   * the round trip: integral numbers come back as Long, decimals as
   * Double, everything else as the string the emitter printed — exactly
   * what the HTTP layer would have emitted either way, so spilled and

@@ -592,7 +592,7 @@ object Dedup {
     * never payload bytes — so the posture holds at corpus scale.
     */
   def fingerprintPairs(fp: DataFrame, maxHamming: Int = 3): DataFrame =
-    hammingPairs(None, fp, maxHamming)
+    hammingPairs(fp, None, maxHamming)
 
   /** The 16-bit pigeonhole band postings of a (doc_id, fp) frame — the
     * shared banding of [[simhashPairs]] and [[incrementalSimhash]] (any
@@ -615,7 +615,7 @@ object Dedup {
     * the history's: the band candidates of [[bandPairs]] verified by an
     * exact popcount.
     */
-  private def hammingPairs(hist: Option[DataFrame], fp: DataFrame,
+  private def hammingPairs(fp: DataFrame, hist: Option[DataFrame],
       maxHamming: Int): DataFrame = {
     require(maxHamming >= 0 && maxHamming <= 3,
       "4x16-bit banding guarantees candidate recall only for maxHamming <= 3 (pigeonhole)")
@@ -660,7 +660,7 @@ object Dedup {
       "graft-shfp-")
     val hist = BatchTable.history(fp0.sparkSession, fpTablePath,
       "doc_id BIGINT, fp BIGINT", bid)
-    val result = graft.io.Spill(hammingPairs(Some(hist), fp, maxHamming),
+    val result = graft.io.Spill(hammingPairs(fp, Some(hist), maxHamming),
       "graft-shinc-")
     BatchTable.overwrite(fp, fpTablePath, bid)
     result

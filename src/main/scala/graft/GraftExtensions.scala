@@ -14,8 +14,9 @@ import graft.functions.GraftFunctions
   *   spark-submit --conf spark.sql.extensions=graft.GraftExtensions ...
   * }}}
   *
-  * Local tools/tests use [[GraftFunctions.register]] instead (same builder
-  * table, per-session temp functions).
+  * [[graft.core.Engine.builder]] applies the same extension to every
+  * session it builds, so local tools, tests and clusters run one function
+  * set and one optimizer.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {

@@ -28,6 +28,9 @@ object Engine {
     SparkSession
       .builder()
       .appName(appName)
+      // graft's SQL functions and optimizer rule, in every session built
+      // here (a cluster ships the same set via spark.sql.extensions)
+      .withExtensions(new graft.GraftExtensions)
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
       .config("spark.sql.adaptive.skewJoin.enabled", "true")
@@ -66,18 +69,13 @@ object Engine {
       // the debris without measurable GC overhead.
       .config("spark.cleaner.periodicGC.interval", "5min")
 
-  /** Local session sized to the container; registers graft SQL functions. */
+  /** Local session sized to the container. */
   def local(appName: String = "graft"): SparkSession = {
     val spark = builder(appName)
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus.toString)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    graft.functions.GraftFunctions.register(spark)
-    // session-level optimizer rules (the cluster path injects the same
-    // rule via GraftExtensions.injectOptimizerRule)
-    spark.experimental.extraOptimizations =
-      Seq(graft.plans.LevenshteinPrefilter)
     spark
   }
 }

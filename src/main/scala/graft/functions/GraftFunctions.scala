@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.{Cast, Expression, Literal}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ArrayType, DoubleType, StringType}
@@ -8,9 +8,10 @@ import org.apache.spark.unsafe.types.UTF8String
 
 /** Registry + Column-level API for graft's custom Catalyst expressions.
   *
-  * Registration goes through the session `FunctionRegistry` (the public
-  * extension point SURVEY §4.2 calls for), so the functions are usable both
-  * from the Column DSL (via `call_function`) and from `spark.sql(...)` text.
+  * [[graft.GraftExtensions]] injects [[builders]] into the session
+  * `FunctionRegistry` (the public extension point SURVEY §4.2 calls for),
+  * so the functions are usable both from the Column DSL (via
+  * `call_function`) and from `spark.sql(...)` text.
   */
 object GraftFunctions {
 
@@ -41,9 +42,9 @@ object GraftFunctions {
     }
   }
 
-  /** Name -> expression builder for every graft function; consumed by both
-    * [[register]] (per-session, tests/tools) and
-    * [[graft.GraftExtensions]] (cluster-wide via `spark.sql.extensions`).
+  /** Name -> expression builder for every graft function; injected by
+    * [[graft.GraftExtensions]] (every [[graft.core.Engine]] session, and a
+    * cluster's via `spark.sql.extensions`).
     */
   val builders: Seq[(String, Seq[Expression] => Expression)] = Seq(
     "ascii_clean" -> { exprs => AsciiClean(exprs(0)) },
@@ -301,13 +302,6 @@ object GraftFunctions {
           "hyperplane_buckets(emb, nTables, nPlanes, dim, seed literals); " +
             s"got ${other.size} args")
     })
-
-  def register(spark: SparkSession): Unit = {
-    val registry = spark.sessionState.functionRegistry
-    builders.foreach { case (name, builder) =>
-      registry.createOrReplaceTempFunction(name, builder, "built-in")
-    }
-  }
 
   /** Cosine similarity between two array<float|double> columns. */
   def cosine_sim(a: Column, b: Column): Column = call_function("cosine_sim", a, b)

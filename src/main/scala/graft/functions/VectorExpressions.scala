@@ -76,7 +76,7 @@ case class HyperplaneBuckets(child: Expression, nTables: Int, nPlanes: Int,
 case class CosineSimilarity(left: Expression, right: Expression)
     extends BinaryExpression {
 
-  // input contract: array<double> x2 (GraftFunctions.register inserts Casts)
+  // input contract: array<double> x2 (the "cosine_sim" builder inserts Casts)
   override def dataType: DataType = DoubleType
 
   override def prettyName: String = "cosine_sim"

@@ -29,17 +29,23 @@ object BatchTable {
     * when every existing directory id happens to be numeric (streaming
     * epoch ids), and the `=!=` against a non-numeric id then crashes
     * under ANSI (or NULLs out the whole history without it). A missing
-    * `path` (first batch) is an empty frame of `ddl`.
+    * `path` (first batch) is an empty frame of `ddl`; it is checked
+    * before the read because Spark logs a FileNotFoundException trace
+    * for every missing path it is handed.
     */
   def history(spark: SparkSession, path: String, ddl: String,
-      exclude: String): DataFrame =
-    try spark.read.schema(ddl + ", batch STRING").parquet(path)
+      exclude: String): DataFrame = {
+    def empty = spark.createDataFrame(
+      new java.util.ArrayList[org.apache.spark.sql.Row](),
+      org.apache.spark.sql.types.StructType.fromDDL(ddl))
+    val dir = new org.apache.hadoop.fs.Path(path)
+    if (!dir.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(dir)) empty
+    else try spark.read.schema(ddl + ", batch STRING").parquet(path)
       .where(col("batch") =!= exclude).drop("batch")
     catch { case e: org.apache.spark.sql.AnalysisException
-        if e.getCondition == "PATH_NOT_FOUND" =>
-      spark.createDataFrame(new java.util.ArrayList[org.apache.spark.sql.Row](),
-        org.apache.spark.sql.types.StructType.fromDDL(ddl))
+        if e.getCondition == "PATH_NOT_FOUND" => empty
     }
+  }
 
   /** Write `df` as batch `batch` of the table at `path`, replacing any
     * earlier attempt of the same batch.

@@ -712,35 +712,24 @@ object Dedup {
       fold(embeddings, compactEmbeddings)).toMap
   }
 
-  /** Embedding near-dup pairs blocked on random-hyperplane LSH buckets —
-    * the scale path when no natural blocking column exists: bucket ids come
-    * from the data itself, so the pair join still shuffles on a key instead
-    * of cross-joining.
-    *
-    * OR-amplified like [[Similarity.lshTopK]]: a pair is a candidate when
-    * it shares a bucket in ANY of `nTables` independent plane families —
-    * one table alone recalls ~p^nPlanes of true pairs (p = per-plane
-    * collision prob), which measured at only ~0.2 on the fixture; the
-    * union lifts that to 1-(1-p^nPlanes)^nTables. Candidates are verified
-    * with exact cosine, so precision stays 1.0; recall is the dial
-    * (`nTables` up = recall up, candidate volume up).
+  /** Embedding near-dup pairs blocked on random-hyperplane LSH buckets, for
+    * data with no natural blocking column; the [[Similarity.lshPairs]] join
+    * over [[Similarity.lshPostings]]. OR-amplified: a pair is a candidate
+    * when it shares a bucket in ANY of `nTables` plane families (one table
+    * recalls ~p^nPlanes of true pairs, ~0.2 on the fixture; the union
+    * 1-(1-p^nPlanes)^nTables). Candidates are verified by exact cosine, so
+    * precision is 1.0 and `nTables` is the recall dial.
     */
   def embeddingNearDupPairsLsh(embs: DataFrame, idCol: String, embCol: String,
       threshold: Double, nPlanes: Int = 4, nTables: Int = 8,
       dim: Int = -1): DataFrame = {
     val d = if (dim > 0) dim else Similarity.inferDim(embs, embCol)
-    val posted = embs.select(col(idCol), col(embCol),
-      posexplode(GraftFunctions.hyperplane_buckets(col(embCol), nTables, nPlanes, d))
-        .as(Seq("table", "bucket")))
-    posted.as("a")
-      .join(posted.as("b"),
-        col("a.table") === col("b.table") && col("a.bucket") === col("b.bucket") &&
-          col(s"a.$idCol") < col(s"b.$idCol"))
-      .select(col(s"a.$idCol").as("id_a"), col(s"b.$idCol").as("id_b"),
-        round(GraftFunctions.cosine_sim(col(s"a.$embCol"), col(s"b.$embCol")), 4).as("sim"))
-      .where(col("sim") >= threshold)
-      // a pair can collide in several tables; sim is identical in each
-      .groupBy(col("id_a"), col("id_b")).agg(max(col("sim")).as("sim"))
+    val posted = Similarity.lshPostings(embs, idCol, embCol, nPlanes, nTables, d)
+    def side(id: String, v: String) =
+      posted.select(col(idCol).as(id), col(embCol).as(v), col("table"), col("bucket"))
+    Similarity.lshPairs(side("id_a", "__va"), side("id_b", "__vb"), "id_a", "id_b",
+      "sim", round(GraftFunctions.cosine_sim(col("__va"), col("__vb")), 4),
+      col("id_a") < col("id_b") && col("sim") >= threshold)
   }
 
   /** Connected components over near-dup candidate pairs: every document is
@@ -1127,7 +1116,7 @@ object Dedup {
     * [[graft.functions.CosineInt8]] kernel (cosine is invariant under
     * the per-vector quantization scale, so the table needs no scale
     * column and the scoring no dequantization; the same posture as the
-    * quantized ANN indexes, `Similarity.lshTopKIndexedQuantized`).
+    * int8 posting codec of the quantized ANN indexes, `Similarity.int8Codes`).
     *
     * In-batch pairs stay FLOAT-exact (the batch's own embeddings are in
     * hand), so against an empty history this is exactly [[semanticDedup]]
@@ -1145,10 +1134,9 @@ object Dedup {
   def incrementalSemanticDedupInt8(embs: DataFrame, idCol: String,
       embCol: String, blockCol: String, threshold: Double,
       histTablePath: String, batchId: String = null): DataFrame = {
-    import graft.functions.GraftFunctions.{cosine_int8, int8_pack, int8_quantize}
     incrementalSemantic(embs, idCol, embCol, blockCol, threshold,
-      histTablePath, batchId, int8_pack(int8_quantize(col(embCol)).getField("q")),
-      "qb BINARY", cosine_int8)
+      histTablePath, batchId, Similarity.int8Codes(col(embCol)), "qb BINARY",
+      GraftFunctions.cosine_int8)
   }
 
   /** The one body of the incremental semantic pair: the history table

@@ -173,14 +173,15 @@ object LexicalIndex {
       .filter(_.startsWith("batch=")).map(_.stripPrefix("batch=")).toSeq
   }
 
-  /** Fail loud (with the rebuild remedy) when `$path/$table` predates
-    * the `batch=` generation layout — tb= buckets or bare parquet
-    * directly under the table — instead of surfacing a raw
-    * PATH_NOT_FOUND from the `batch=*` glob.
+  /** The `batch=<id>` directories of `$path/$table` as explicit read
+    * paths (Spark logs a stack trace for a literal `batch=*` glob). Fails
+    * loud, with the rebuild remedy, on a table with no generation or one
+    * in the pre-batch layout (tb= buckets or bare parquet).
     */
-  private def requireBatchLayout(spark: SparkSession, path: String,
-      table: String): Unit =
-    if (generationIds(spark, path, table).isEmpty) {
+  private def batchDirs(spark: SparkSession, path: String,
+      table: String): Seq[String] = {
+    val ids = generationIds(spark, path, table)
+    if (ids.isEmpty) {
       val dir = new org.apache.hadoop.fs.Path(s"$path/$table")
       val fs = fsOf(spark, dir)
       val stale = fs.exists(dir) && fs.listStatus(dir).exists { st =>
@@ -194,18 +195,18 @@ object LexicalIndex {
         s"$path/$table holds no batch=* generations - build the index " +
           "with LexicalIndex.write first")
     }
+    ids.sorted.map(id => s"$path/$table/batch=$id")
+  }
 
   /** All accrued posting batches as one frame (partition columns `batch`
-    * STRING and `tb` INT discovered under the basePath; the `batch=*`
-    * glob keeps a stray streaming `_spark_metadata` log from shadowing
-    * batch-written files).
+    * STRING and `tb` INT discovered under the basePath; reading the
+    * batch directories keeps a stray streaming `_spark_metadata` log from
+    * shadowing batch-written files).
     */
   private[operators] def readPostings(spark: SparkSession,
-      path: String): DataFrame = {
-    requireBatchLayout(spark, path, "postings")
+      path: String): DataFrame =
     spark.read.option("basePath", s"$path/postings")
-      .parquet(s"$path/postings/batch=*")
-  }
+      .parquet(batchDirs(spark, path, "postings"): _*)
 
   /** All accrued stats deltas. Explicit schema-on-read: delta rows
     * written before `n_len` existed (round-11 null-text fix) surface it
@@ -216,11 +217,10 @@ object LexicalIndex {
     * instead of failing resolution or silently inflating avgdl.
     */
   private[operators] def readStats(spark: SparkSession,
-      path: String): DataFrame = {
-    requireBatchLayout(spark, path, "stats")
+      path: String): DataFrame =
     spark.read.schema("n_docs BIGINT, n_len BIGINT, total_len BIGINT")
-      .option("basePath", s"$path/stats").parquet(s"$path/stats/batch=*")
-  }
+      .option("basePath", s"$path/stats")
+      .parquet(batchDirs(spark, path, "stats"): _*)
 
   /** (n_buckets, positional) from the meta table. Explicit
     * schema-on-read: indexes written before the `positional` column

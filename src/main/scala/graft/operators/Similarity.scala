@@ -1,36 +1,42 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.functions.GraftFunctions.cosine_sim
+import graft.functions.GraftFunctions.{cosine_int8, cosine_sim, int8_pack,
+  int8_quantize, pq_adc, pq_encode}
 
-/** Approximate-nearest-neighbor search over an embedding column (SURVEY §2.6
-  * north-star). Two paths:
+/** Nearest-neighbor search over an embedding column (SURVEY §2.6
+  * north-star): exact scans against a broadcast query or probe batch, and
+  * ANN indexes. Every persisted index is one posting LAYOUT x one posting
+  * CODEC, and its write, probe, per-id ranking tail, append and drift
+  * maintenance are each written once over them.
   *
-  *   - [[bruteForceTopK]]: exact scan — the single-query baseline. The query
-  *     vector is broadcast (one row), so the scan is embarrassingly parallel
-  *     and the only global step is the top-k (Spark's TakeOrderedAndProject,
-  *     per-partition heaps + driver merge of k rows, no full sort shuffle).
-  *   - [[lshTopK]]: random-hyperplane LSH — each vector gets a small integer
-  *     bucket from the sign pattern of `nPlanes` fixed hyperplanes; search
-  *     touches only the query's bucket. At 100 TB the bucket column becomes
-  *     the table's partition key so a query prunes to one partition.
+  * Layouts: LSH (`path/table=/bucket=`, probed with [[queryBuckets]]) and
+  * IVF (`path/postings/cell=` beside `centroids` and the drift `anchor`,
+  * probed with [[ivfProbeCells]]). Codecs: float (the vector in `embCol`,
+  * cosine), int8 (packed codes in `qb`, integer-dot cosine) and PQ
+  * (residual codes in `pq` plus a `pqcodebook`, ascending cell-relative
+  * ADC distance). The map:
+  *   - LSH: float [[writeLshIndex]]/[[lshTopKIndexed]], int8
+  *     [[writeLshIndexQuantized]]/[[lshTopKIndexedQuantized]];
+  *   - IVF: float [[writeIvfIndex]]/[[ivfTopKIndexed]], int8
+  *     [[writeIvfIndexQuantized]]/[[ivfTopKIndexedQuantized]], PQ
+  *     [[writeIvfPqIndex]]/[[ivfPqTopKIndexed]]; float and PQ also append
+  *     and maintain ([[appendIvfIndex]], [[maintainIvfIndex]],
+  *     [[appendIvfPqIndex]], [[maintainIvfPqIndex]]).
+  * [[lshTopK]]/[[ivfTopK]] bucket or fit per call; the batched LSH
+  * searches share one (table, bucket) pair join, [[lshPairs]].
   */
 object Similarity {
 
   /** SEMANTIC benchmark decontamination — the embedding-space complement
-    * of [[TextAnalysis.contaminationPairs]]: flag every corpus vector
-    * whose cosine to some probe (benchmark/eval) vector reaches
-    * `threshold`. Paraphrased contamination slips past n-gram
-    * containment; it does not slip past the embedding. The probe set is
-    * benchmark-sized by nature, so it BROADCASTS and the corpus scan
-    * stays map-only — one codegen'd cosine per (corpus row, probe)
-    * inside a broadcast nested-loop join (the sanctioned q31/q83
-    * posture: the inner side is the broadcast probe table, not a second
-    * corpus), no corpus shuffle. Cost is corpus x probes cosines — exact
-    * by design; at extreme probe counts switch to the LSH-bucketed
-    * [[batchLshTopK]] candidates instead.
+    * of [[TextAnalysis.contaminationPairs]]: flag every corpus vector whose
+    * cosine to some probe (benchmark/eval) vector reaches `threshold`
+    * (paraphrases slip past n-gram containment, not past the embedding). The
+    * benchmark-sized probe set BROADCASTS, so the corpus scan stays map-only
+    * (the sanctioned q31/q83 nested-loop posture); exact by design — at
+    * extreme probe counts use [[batchLshTopK]]'s candidates instead.
     */
   def embeddingContaminationPairs(corpus: DataFrame, probes: DataFrame,
       idCol: String, embCol: String, threshold: Double): DataFrame =
@@ -42,14 +48,10 @@ object Similarity {
       .where(col("sim") >= threshold)
 
   /** Shared ranking tail of the batched searchers ([[batchLshTopK]],
-    * [[hardNegatives]], [[TextAnalysis.bm25TopK]]): bounded per-query
-    * top-k over a (query_id, id, sim) pair frame, emitted as
-    * (query_id, rank, idCol) with rank 1..k — THE single home of the q95
-    * determinism contract (rounded-score ordering — 4-decimal cosines
-    * for the embedding searchers, exact integer micros for the lexical
-    * one — with the ascending-id tiebreak inside
-    * [[graft.functions.TopKAggregator]]), so a tiebreak or rank-shape
-    * change cannot land in one searcher and not the other.
+    * [[hardNegatives]], [[TextAnalysis.bm25TopK]]): bounded per-query top-k
+    * over a (query_id, id, sim) pair frame as (query_id, rank, idCol), rank
+    * 1..k — THE single home of the q95 determinism contract (rounded-score
+    * order, ascending-id tiebreak inside [[graft.functions.TopKAggregator]]).
     */
   private[operators] def rankTopKPerQuery(pairs: DataFrame, idCol: String,
       k: Int): DataFrame = {
@@ -62,16 +64,12 @@ object Similarity {
         col(idCol))
   }
 
-  /** EXACT batched top-k: for every probe, the k most-cosine-similar
-    * corpus vectors (self excluded) — the dense side of hybrid
-    * retrieval ([[RankFusion.rrf]]) and the exact twin of
-    * [[batchLshTopK]]. Probes broadcast (training-batch-sized by
-    * nature), the corpus scan stays map-only with one codegen'd cosine
-    * per (corpus row, probe), and the bounded
-    * [[graft.functions.TopKAggregator]] ships ≤ k pairs per probe per
-    * map task. Returns (query_id, rank, idCol), the q95 determinism
-    * contract; at extreme probe counts use [[batchLshTopK]]'s bucket
-    * join instead.
+  /** EXACT batched top-k: for every probe, the k most-cosine-similar corpus
+    * vectors (self excluded) — the dense side of hybrid retrieval
+    * ([[RankFusion.rrf]]) and the exact twin of [[batchLshTopK]]. The probes
+    * broadcast, the corpus scan stays map-only, and the bounded
+    * [[graft.functions.TopKAggregator]] ships ≤ k pairs per probe per map
+    * task. Returns (query_id, rank, idCol), the q95 determinism contract.
     */
   def batchExactTopK(corpus: DataFrame, probes: DataFrame, idCol: String,
       embCol: String, k: Int): DataFrame = {
@@ -86,32 +84,16 @@ object Similarity {
       idCol, k)
   }
 
-  /** Margin-based bitext mining (the CCMatrix criterion; Artetxe &
-    * Schwenk, ACL 2019 "Margin-based Parallel Corpus Mining"): for every
-    * `src` vector, its best `tgt` candidate scored by the RATIO margin —
-    * cos(x, y) normalized by the mean of both vectors' average top-k
-    * neighborhood sims — which demotes "hub" vectors that are close to
-    * everything (raw nearest-cosine mining pairs hubs with dozens of
-    * sources; the margin criterion is why CCMatrix works). The standard
-    * multilingual-training-data miner: src = embeddings of language A,
-    * tgt = language B, pairs above `minMargin` become candidate bitext.
-    * Output (src_id, tgt_id, margin), the forward-best pair per src
-    * (ties to the ascending tgt id), margin >= `minMargin` (pairs whose
-    * combined neighborhood sim is non-positive are dropped — the ratio
-    * is undefined there).
-    *
-    * Plan: the src side broadcasts over a map-only tgt scan (mine in
-    * probe-batches, the [[batchExactTopK]] contract; at web scale feed
-    * LSH/IVF-bucketed candidates instead of the exact sweep) — that
-    * pairs projection runs twice, once under each neighborhood grouping
-    * (recomputing a map-only broadcast join is cheaper than spilling the
-    * |src| x |tgt| pair frame), each through the bounded
-    * [[graft.functions.TopKScoredAggregator]] (the margin needs the
-    * top-k SIMS, not just ids), then one |src|*k x |tgt| equi-join and a
-    * bounded best-per-src aggregate. Determinism: cosines take the q95
-    * 4-decimal contract as exact 1e4-scaled longs, neighborhood sums are
-    * integer, and the margin is one fixed double-division sequence
-    * rounded to 6 — the DuckDB oracle replays it bit-for-bit.
+  /** Margin-based bitext mining (the CCMatrix criterion; Artetxe & Schwenk,
+    * ACL 2019): each `src` vector's best `tgt` by the RATIO margin — cos(x, y)
+    * over the mean of both sides' average top-k neighborhood sims — which
+    * demotes "hub" vectors close to everything. Output (src_id, tgt_id,
+    * margin), forward-best per src (ties to the ascending tgt id), margin >=
+    * `minMargin` (a non-positive neighborhood sum has no ratio: dropped).
+    * The broadcast src side sweeps a map-only tgt scan once per neighborhood
+    * grouping (cheaper than spilling |src| x |tgt| pairs); cosines are exact
+    * 1e4-scaled longs of the q95 contract and the margin fixed-point, so the
+    * DuckDB oracle replays it bit-for-bit.
     */
   def marginMinePairs(src: DataFrame, tgt: DataFrame, idCol: String,
       embCol: String, k: Int, minMargin: Double = 0.0): DataFrame = {
@@ -128,66 +110,50 @@ object Similarity {
   }
 
   /** [[marginMinePairs]] over LSH-bucketed candidates — the 100 TB
-    * path: instead of the exact |src| x |tgt| sweep, candidate pairs
-    * come from the [[batchLshTopK]] OR-amplified bucket join (a pair
-    * is scored only when it shares a sign-LSH bucket in ANY of the
-    * `nTables` tables), so the pair frame is collision-bounded and the
-    * neighborhood averages are computed over the candidates — the
-    * standard approximate-neighborhood trade every production margin
-    * miner (FAISS-backed CCMatrix) makes. When the bucketing recalls
-    * every cross pair (tightly clustered data, or generous
-    * tables-x-planes), the output is IDENTICAL to the exact variant
-    * (shared [[marginTail]], spec-pinned); under partial recall the
-    * neighborhood sums shrink toward the true top-k sums from below —
-    * margins drift only where candidates were lost.
-    *
-    * The candidate sims spill eagerly: the tail consumes them under
-    * two groupings, and re-planning would re-run the bucket SHUFFLE
-    * join (the exact variant's map-only broadcast sweep is cheaper to
-    * re-plan than to spill — opposite trade here).
+    * path: a pair is scored only when it shares a sign-LSH bucket in ANY
+    * of the `nTables` tables, so the pair frame is collision-bounded and
+    * the neighborhood averages run over the candidates (the trade every
+    * FAISS-backed CCMatrix miner makes). When the bucketing recalls every
+    * cross pair the output is IDENTICAL to the exact variant (shared
+    * [[marginTail]], spec-pinned); under partial recall margins drift
+    * only where candidates were lost.
     */
   def marginMinePairsLsh(src: DataFrame, tgt: DataFrame, idCol: String,
       embCol: String, k: Int, minMargin: Double = 0.0, nPlanes: Int = 4,
-      nTables: Int = 12, dim: Int = -1, seed: Long = 11L): DataFrame = {
-    require(k > 0, "k must be positive")
-    val d = if (dim > 0) dim else inferDim(src, embCol)
-    val sp = lshPostings(src.select(col(idCol).cast("long").as("src_id"),
-        col(embCol)), "src_id", embCol, nPlanes, nTables, d, seed)
-      .select(col("src_id"), col(embCol).as("__sv"), col("table"),
-        col("bucket"))
-    val tp = lshPostings(tgt.select(col(idCol).cast("long").as("tgt_id"),
+      nTables: Int = 12, dim: Int = -1, seed: Long = 11L): DataFrame =
+    marginMineLsh(src, idCol, embCol, k, minMargin, nPlanes, nTables, dim,
+        seed, indexed = false) { d =>
+      lshPostings(tgt.select(col(idCol).cast("long").as("tgt_id"),
         col(embCol)), "tgt_id", embCol, nPlanes, nTables, d, seed)
-    val sims = graft.io.Spill(
-      tp.join(sp, Seq("table", "bucket"))
-        .select(col("src_id"), col("tgt_id"),
-          round(round(cosine_sim(col(embCol), col("__sv")), 4) * 1e4)
-            .cast("long").as("__c"))
-        // a pair may collide in several tables; its cosine is identical
-        // in each (the batchLshTopK dedup idiom)
-        .groupBy(col("src_id"), col("tgt_id"))
-        .agg(max(col("__c")).as("__c")),
-      "graft-bitext-lsh-")
-    marginTail(sims, k, minMargin)
-  }
+    }
 
-  /** [[marginMinePairsLsh]] against a PERSISTED [[writeLshIndex]] —
-    * the incremental mining shape: a batch of NEW source documents
-    * (fresh crawl of language A) mines against the already-bucketed
-    * target index without re-bucketing or re-scanning raw target
-    * embeddings; a streaming maintainer appending target postings via
-    * the file sink keeps the index current between batches. The src
-    * batch's postings BROADCAST over the map-only index scan (probe
-    * batches are small by contract), then the shared [[marginTail]].
-    * Identical to the one-shot LSH variant when the batch is the full
-    * source corpus (spec-pinned); for a partial batch the backward
-    * neighborhoods are batch-local by construction — the margin
-    * normalizes against the candidates THIS batch competes with,
-    * which is the standard incremental-mining posture.
+  /** [[marginMinePairsLsh]] against a PERSISTED [[writeLshIndex]] — the
+    * incremental shape: a batch of NEW sources mines against the target
+    * index (kept current by a streaming maintainer) without re-bucketing
+    * raw target embeddings. Identical to the one-shot LSH variant when the
+    * batch is the full source corpus (spec-pinned); for a partial batch
+    * the backward neighborhoods are batch-local by construction.
     */
-  def marginMinePairsIndexed(spark: org.apache.spark.sql.SparkSession,
+  def marginMinePairsIndexed(spark: SparkSession,
       indexPath: String, src: DataFrame, idCol: String, embCol: String,
       k: Int, minMargin: Double = 0.0, nPlanes: Int = 4,
-      nTables: Int = 12, dim: Int = -1, seed: Long = 11L): DataFrame = {
+      nTables: Int = 12, dim: Int = -1, seed: Long = 11L): DataFrame =
+    marginMineLsh(src, idCol, embCol, k, minMargin, nPlanes, nTables, dim,
+        seed, indexed = true) { _ =>
+      readPostings(spark, LshLayout, indexPath)
+        .select(col(idCol).cast("long").as("tgt_id"), col(embCol),
+          col("table"), col("bucket"))
+    }
+
+  /** The one body of the LSH margin miners; `tgt` gives the target's
+    * (tgt_id, embCol, table, bucket) postings for the plane width. An
+    * index scan is map-only, so the (small) src batch broadcasts over it.
+    * The sims spill: the tail reads them under two groupings, and a
+    * re-plan would re-run the bucket join.
+    */
+  private def marginMineLsh(src: DataFrame, idCol: String, embCol: String,
+      k: Int, minMargin: Double, nPlanes: Int, nTables: Int, dim: Int,
+      seed: Long, indexed: Boolean)(tgt: Int => DataFrame): DataFrame = {
     require(k > 0, "k must be positive")
     val d = if (dim > 0) dim else inferDim(src, embCol)
     val sp = lshPostings(src.select(col(idCol).cast("long").as("src_id"),
@@ -195,34 +161,20 @@ object Similarity {
       .select(col("src_id"), col(embCol).as("__sv"), col("table"),
         col("bucket"))
     val sims = graft.io.Spill(
-      readPostings(spark, indexPath, "table=*")
-        .select(col(idCol).cast("long").as("tgt_id"),
-          col(embCol).as("__tv"), col("table"), col("bucket"))
-        .join(broadcast(sp), Seq("table", "bucket"))
-        .select(col("src_id"), col("tgt_id"),
-          round(round(cosine_sim(col("__tv"), col("__sv")), 4) * 1e4)
-            .cast("long").as("__c"))
-        .groupBy(col("src_id"), col("tgt_id"))
-        .agg(max(col("__c")).as("__c")),
-      "graft-bitext-idx-")
+      lshPairs(tgt(d), if (indexed) broadcast(sp) else sp, "tgt_id",
+        "src_id", "__c",
+        round(round(cosine_sim(col(embCol), col("__sv")), 4) * 1e4)
+          .cast("long")),
+      if (indexed) "graft-bitext-idx-" else "graft-bitext-lsh-")
     marginTail(sims, k, minMargin)
   }
 
   /** Corpus-level mining quality against a gold alignment (the xSIM
-    * posture of the LASER/CCMatrix eval stack, and the bitext twin of
-    * [[RankFusion.rankingRecall]]'s ANN audit): one row —
-    * (n_gold, n_correct, n_missing, error_rate) — where a gold source
-    * counts correct when the miner's pair hits ANY of its gold
-    * targets, missing when the miner returned no pair for it, and the
-    * error rate is 1 - correct/n_gold rounded to 6 (missing counts as
-    * error; sources the miner paired but nobody judged are ignored,
-    * the [[RankFusion.ndcgAtK]] unjudged posture). "Measure, don't
-    * guess": run the approximate miner ([[marginMinePairsLsh]] /
-    * [[marginMinePairsIndexed]]) against the exact sweep's pairs — or
-    * human-aligned gold — on a probe slice at the same cadence as the
-    * ANN recall audit. Defensive dedup both sides: a duplicated mined
-    * row collapses to its min target, duplicated gold rows to the
-    * distinct target set.
+    * posture): one row (n_gold, n_correct, n_missing, error_rate) — a gold
+    * source is correct when the miner's pair hits ANY of its gold targets,
+    * missing when unpaired, and error_rate = 1 - correct/n_gold to 6 places
+    * (unjudged sources ignored). Duplicated mined rows collapse to their min
+    * target, duplicated gold rows to the distinct set.
     */
   def miningErrorRate(mined: DataFrame, gold: DataFrame): DataFrame = {
     val m = mined.select(col("src_id"), col("tgt_id"))
@@ -248,11 +200,9 @@ object Similarity {
       .where(col("n_gold") > 0)
   }
 
-  /** Margin scoring + forward-best tail shared by [[marginMinePairs]]
-    * (exact sweep), [[marginMinePairsLsh]] (bucketed candidates) and
-    * [[marginMinePairsIndexed]] (persisted postings) — single-homed so
-    * the paths cannot drift. `sims` is one
-    * (src_id, tgt_id, __c 1e4-micros) row per candidate pair.
+  /** Margin scoring + forward-best tail of every margin miner, so they
+    * cannot drift; `sims` is one (src_id, tgt_id, __c 1e4-micros) row per
+    * candidate pair.
     */
   private def marginTail(sims: DataFrame, k: Int,
       minMargin: Double): DataFrame = {
@@ -289,22 +239,13 @@ object Similarity {
         (col("__b")(0)("_1").cast("double") / 1e6).as("margin"))
   }
 
-  /** MMR-diversified top-k: re-rank each query's scored candidates by
-    * Maximal Marginal Relevance — greedy lam*rel - (1-lam)*maxSimToSelected
-    * — so near-duplicate results are traded for diverse ones (diverse
-    * retrieval, diverse few-shot selection, dedup-aware sampling).
-    * `candidates` is (query_id, idCol, relCol double, embCol); feed it
-    * from [[batchExactTopK]]/[[batchLshTopK]] with the similarity joined
-    * back, or any scorer. lambda=1 degenerates to pure relevance order.
-    *
-    * Greedy selection is sequential in k by definition, so the plan
-    * collects each query's candidates (top-m sized by construction —
-    * tiny) into one row and runs the imperative
-    * [[graft.functions.MmrSelect]] pass: one aggregate + a map-only
-    * projection, nothing corpus-sized moves. Determinism: rel rounds to
-    * 4 decimals then micros, pairwise cosines take the q95 4-decimal
-    * contract inside the expression, ties to the ascending id — the
-    * oracle replays the unrolled greedy exactly.
+  /** MMR-diversified top-k: re-rank each query's scored candidates
+    * (query_id, idCol, relCol double, embCol) by Maximal Marginal Relevance —
+    * greedy lam*rel - (1-lam)*maxSimToSelected; lambda=1 is relevance order.
+    * Greedy selection is sequential, so each query's (tiny) candidate list is
+    * collected into one row for the imperative [[graft.functions.MmrSelect]]
+    * pass. rel rounds to 4 decimals then micros, pairwise cosines take the
+    * q95 contract, ties go to the ascending id — the oracle replays it.
     */
   def mmrSelect(candidates: DataFrame, idCol: String, relCol: String,
       embCol: String, k: Int, lambda: Double = 0.5): DataFrame = {
@@ -324,22 +265,11 @@ object Similarity {
         col(idCol))
   }
 
-  /** Hard-negative mining for contrastive / retrieval training data:
-    * for each probe (anchor) vector, the exact top-k most-similar CORPUS
-    * vectors carrying a DIFFERENT label — the near-but-wrong examples a
-    * contrastive objective needs (easy random negatives teach nothing;
-    * same-label neighbors are positives, not negatives). Returns
-    * (query_id, rank, idCol), rank 1..k by 4-decimal-rounded cosine with
-    * the ascending-id tiebreak (the q95 determinism contract).
-    *
-    * Shape at 100 TB: the probe batch BROADCASTS (anchors are
-    * training-batch-sized by nature) so the corpus scan stays map-only —
-    * one codegen'd cosine per (corpus row, probe) under the label
-    * mismatch filter, then the bounded
-    * [[graft.functions.TopKAggregator]] per probe: the only exchange
-    * carries at most k (score, id) pairs per probe per map task. Exact
-    * by design; at extreme probe counts generate candidates with
-    * [[batchLshTopK]]'s bucket join and label-filter those instead.
+  /** Hard-negative mining for contrastive training data: for each probe
+    * (anchor), the exact top-k most-similar CORPUS vectors with a DIFFERENT
+    * label (same-label neighbors are positives). Returns (query_id, rank,
+    * idCol) under the q95 contract, shaped like [[batchExactTopK]]: the
+    * anchors broadcast over a map-only corpus scan under the label filter.
     */
   def hardNegatives(corpus: DataFrame, probes: DataFrame, idCol: String,
       embCol: String, labelCol: String, k: Int): DataFrame = {
@@ -366,35 +296,31 @@ object Similarity {
 
   /** Exact cosine top-k neighbors of the vector with id `queryId`. */
   def bruteForceTopK(embs: DataFrame, idCol: String, embCol: String,
-      queryId: Long, k: Int): DataFrame = {
-    val q = embs.where(col(idCol) === queryId).select(col(embCol).as("qv"))
-    embs.join(broadcast(q))
-      .where(col(idCol) =!= queryId)
-      .select(col(idCol),
-        round(cosine_sim(col(embCol), col("qv")), 4).as("sim"))
-      .orderBy(col("sim").desc, col(idCol))
-      .limit(k)
-  }
+      queryId: Long, k: Int): DataFrame =
+    exactTopK(embs, embs, idCol, embCol, queryId, k)
 
-  /** Metadata-FILTERED exact top-k — the production vector-search shape
-    * ("nearest neighbors among German docs"): candidates are pre-filtered
-    * by a semi-join against the allowed-id set, then ranked exactly.
-    * Pre-filtering (vs post-filtering an ANN candidate list) guarantees k
-    * results whenever k allowed vectors exist and keeps recall exact —
-    * the right default because metadata filters are usually selective,
-    * which makes the exact scan cheap. `broadcastFilter` (default true)
-    * broadcasts the id set; pass false when the filter output is itself
-    * huge (the join then shuffles both sides on the id).
-    *
-    * The query vector is looked up in the UNFILTERED table: the query
-    * need not satisfy the filter ("docs like this English one, but in
-    * German").
+  /** Metadata-FILTERED exact top-k ("nearest neighbors among German
+    * docs"): candidates are pre-filtered by a semi-join against the
+    * allowed-id set, then ranked exactly — unlike post-filtering an ANN list
+    * this returns k results whenever k allowed vectors exist.
+    * `broadcastFilter` broadcasts the id set; pass false when it is itself
+    * huge. The query vector is looked up in the UNFILTERED table, so the
+    * query need not satisfy the filter.
     */
   def filteredTopK(embs: DataFrame, allowed: DataFrame, idCol: String,
       allowedIdCol: String, embCol: String, queryId: Long, k: Int,
       broadcastFilter: Boolean = true): DataFrame = {
     val ids = allowed.select(col(allowedIdCol).as(idCol)).distinct()
-    val cands = embs.join(if (broadcastFilter) broadcast(ids) else ids, idCol)
+    exactTopK(embs.join(if (broadcastFilter) broadcast(ids) else ids, idCol),
+      embs, idCol, embCol, queryId, k)
+  }
+
+  /** The exact single-query scan: `cands` against the broadcast query
+    * vector looked up in `embs`, a TakeOrderedAndProject over the
+    * 4-decimal cosines (per-partition heaps, a driver merge of k rows).
+    */
+  private def exactTopK(cands: DataFrame, embs: DataFrame, idCol: String,
+      embCol: String, queryId: Long, k: Int): DataFrame = {
     val q = embs.where(col(idCol) === queryId).select(col(embCol).as("qv"))
     cands.join(broadcast(q))
       .where(col(idCol) =!= queryId)
@@ -404,42 +330,43 @@ object Similarity {
       .limit(k)
   }
 
-  /** BATCHED ANN — k nearest corpus neighbors for EVERY query vector at
-    * once (candidate generation: near-dup mining, retrieval eval sets,
-    * cross-corpus linking). Per-query loops don't scale past a handful of
-    * queries; this runs the whole batch as one plan:
-    *
-    *   corpus postings ⋈ query postings on (table, bucket)   — the LSH
-    *   candidate join, never all-pairs — then one exact cosine per
-    *   surviving pair, a pair-dedupe (a pair can match in several
-    *   tables), and a bounded [[graft.functions.TopKAggregator]] per
-    *   query, so the final shuffle carries at most k pairs per query per
-    *   map task.
-    *
-    * Ranking uses the 4-decimal-rounded similarity with an ascending-id
-    * tiebreak — deterministic under any partitioning and exactly
-    * replayable by an external engine (the DuckDB oracle re-derives
-    * buckets from the same hyperplane family).
-    *
-    * Returns (query_id, rank, idCol) with rank 1..k per query.
+  /** BATCHED ANN — k nearest corpus neighbors for EVERY query vector in
+    * one plan (near-dup mining, retrieval eval sets, cross-corpus
+    * linking): the [[lshPairs]] bucket join, then a bounded
+    * [[graft.functions.TopKAggregator]] per query, so the final shuffle
+    * carries at most k pairs per query per map task. 4-decimal cosines
+    * with the ascending-id tiebreak (the q95 contract; the DuckDB oracle
+    * re-derives the buckets). Returns (query_id, rank, idCol), rank 1..k.
     */
   def batchLshTopK(corpus: DataFrame, queries: DataFrame, idCol: String,
       embCol: String, k: Int, nPlanes: Int = 4, nTables: Int = 12,
       dim: Int = -1, seed: Long = 11L): DataFrame = {
     val d = if (dim > 0) dim else inferDim(corpus, embCol)
-    val cp = lshPostings(corpus, idCol, embCol, nPlanes, nTables, d, seed)
     val qp = lshPostings(queries, idCol, embCol, nPlanes, nTables, d, seed)
       .select(col(idCol).as("query_id"), col(embCol).as("qv"),
         col("table"), col("bucket"))
     rankTopKPerQuery(
-      cp.join(qp, Seq("table", "bucket"))
-        .where(col(idCol) =!= col("query_id"))
-        .select(col("query_id"), col(idCol),
-          round(cosine_sim(col(embCol), col("qv")), 4).as("sim"))
-        .groupBy(col("query_id"), col(idCol))
-        .agg(max(col("sim")).as("sim")), // a pair may match in several tables
+      lshPairs(lshPostings(corpus, idCol, embCol, nPlanes, nTables, d, seed),
+        qp, idCol, "query_id", "sim",
+        round(cosine_sim(col(embCol), col("qv")), 4),
+        col(idCol) =!= col("query_id")),
       idCol, k)
   }
+
+  /** The LSH candidate pair join: posting frames `a` and `b` (id, vector,
+    * table, bucket; no other name shared) join on (table, bucket), each
+    * pair is scored as `name` and filtered by `keep`, and a pair colliding
+    * in several tables keeps one row (same score in each; `max` is a
+    * HashAggregate, not a dropDuplicates dragging vectors). Returns (aId,
+    * bId, name).
+    */
+  private[operators] def lshPairs(a: DataFrame, b: DataFrame, aId: String,
+      bId: String, name: String, score: Column,
+      keep: Column = lit(true)): DataFrame =
+    a.join(b, Seq("table", "bucket"))
+      .select(col(aId), col(bId), score.as(name))
+      .where(keep)
+      .groupBy(col(aId), col(bId)).agg(max(col(name)).as(name))
 
   /** Embedding width, inferred from the data when the caller doesn't know
     * it statically (one-row lookup; cheap next to any similarity join).
@@ -447,58 +374,29 @@ object Similarity {
   def inferDim(embs: DataFrame, embCol: String): Int =
     embs.select(size(col(embCol)).as("d")).head().getInt(0)
 
-  /** LSH-bucketed ANN top-k with OR-amplification: `nTables` independent
-    * hash tables of `nPlanes` hyperplanes each; a vector is a candidate when
-    * it shares the query's bucket in ANY table (union of buckets), which is
-    * the standard recall lever for sign-LSH — one table alone recalls poorly
-    * because a near neighbor straddling a single hyperplane is lost.
-    *
-    * `dim <= 0` (default) infers the embedding width from the data —
-    * hyperplanes MUST match it exactly or `cosine_sim` throws (it refuses
-    * to silently bucket on a prefix of the vector).
-    *
-    * Scale shape: candidates are found by an equi-join on (table, bucket) —
-    * expected candidate fraction ≈ nTables / 2^nPlanes, tunable per corpus.
-    * At 100 TB the (table, bucket) pair becomes the partition key of a
-    * pre-bucketed index table so a query prunes to `nTables` partitions.
+  /** LSH-bucketed ANN top-k with OR-amplification: `nTables` tables of
+    * `nPlanes` hyperplanes; a vector is a candidate when it shares the
+    * query's bucket in ANY table (one table alone loses every neighbor
+    * straddling a single plane). Candidates come from an equi-join on
+    * (table, bucket), ≈ nTables/2^nPlanes of the corpus. `dim <= 0`
+    * infers the width — the planes MUST match it, or `cosine_sim` throws.
     */
   def lshTopK(embs: DataFrame, idCol: String, embCol: String,
       queryId: Long, k: Int, nPlanes: Int = 4, nTables: Int = 12,
       dim: Int = -1): DataFrame = {
     val d = if (dim > 0) dim else inferDim(embs, embCol)
-    // all tables' buckets in ONE pass over the vector (HyperplaneBuckets):
-    // sign-LSH needs only dot-product signs, so per-plane cosine_sim calls
-    // would re-read the embedding and compute norms 4*nTables times over
-    val buckets = graft.functions.GraftFunctions
-      .hyperplane_buckets(col(embCol), nTables, nPlanes, d)
-    // (id, emb, table, bucket) posting rows — nTables rows per vector
-    val posted = embs
-      .select(col(idCol), col(embCol), posexplode(buckets).as(Seq("table", "bucket")))
+    val posted = lshPostings(embs, idCol, embCol, nPlanes, nTables, d)
     val q = posted.where(col(idCol) === queryId)
       .select(col(embCol).as("qv"), col("table").as("qt"), col("bucket").as("qb"))
-    posted.join(broadcast(q),
-        col("table") === col("qt") && col("bucket") === col("qb"))
-      .where(col(idCol) =!= queryId)
-      .select(col(idCol),
-        round(cosine_sim(col(embCol), col("qv")), 4).as("sim"))
-      // a candidate can match in several tables; its sim is identical in
-      // each, so max() dedups via a HashAggregate — dropDuplicates on the
-      // (id, embedding) row would force a SortAggregate carrying the whole
-      // vector through first()
-      .groupBy(col(idCol)).agg(max(col("sim")).as("sim"))
-      .orderBy(col("sim").desc, col(idCol))
-      .limit(k)
+    rankById(posted.join(broadcast(q),
+        col("table") === col("qt") && col("bucket") === col("qb")),
+      idCol, queryId, cosine_sim(col(embCol), col("qv")), similarity = true, k)
   }
 
-  /** Persist the sign-LSH posting index as a parquet table PARTITIONED BY
-    * (table, bucket) — the 100 TB path [[lshTopK]]'s Scaladoc promises: the
-    * bucketing pass runs once at index-build time, and a query then prunes
-    * to its own `nTables` partition directories instead of re-bucketing the
-    * corpus per query. Pair with [[lshTopKIndexed]].
-    */
-  /** The (id, emb, table, bucket) posting projection — shared by the batch
-    * index build and streaming index maintenance; works unchanged on a
-    * streaming DataFrame (pure per-row expressions, no aggregation).
+  /** The (id, emb, table, bucket) posting projection, nTables rows per
+    * vector — pure per-row expressions, so it also runs on a streaming
+    * DataFrame. ONE [[graft.functions.HyperplaneBuckets]] pass yields every
+    * table's bucket (sign-LSH needs only dot-product signs).
     */
   def lshPostings(embs: DataFrame, idCol: String, embCol: String,
       nPlanes: Int = 4, nTables: Int = 12, dim: Int, seed: Long = 11L): DataFrame =
@@ -506,27 +404,6 @@ object Similarity {
       posexplode(graft.functions.GraftFunctions
         .hyperplane_buckets(col(embCol), nTables, nPlanes, dim, seed))
         .as(Seq("table", "bucket")))
-
-  /** Cluster `df` on `keys` with an EXPLICIT session-parallelism
-    * partition count before a partitionBy write: unshuffled, every input
-    * task opens a file per partition directory it holds (tasks x dirs
-    * small files), while a keyless repartition is AQE-coalesced back to
-    * ~one task at small input sizes, serializing the write (the q127
-    * lesson). Explicit user counts are exempt from coalescing; each
-    * directory still gets exactly one writer. The lexical index's
-    * `clustered` is the same discipline.
-    */
-  private def clusteredBy(df: DataFrame, keys: Column*): DataFrame =
-    df.repartition(df.sparkSession.sparkContext.defaultParallelism, keys: _*)
-
-  def writeLshIndex(embs: DataFrame, idCol: String, embCol: String,
-      path: String, nPlanes: Int = 4, nTables: Int = 12, dim: Int = -1,
-      seed: Long = 11L): Unit = {
-    val d = if (dim > 0) dim else inferDim(embs, embCol)
-    clusteredBy(lshPostings(embs, idCol, embCol, nPlanes, nTables, d, seed),
-        col("table"), col("bucket"))
-      .write.mode("overwrite").partitionBy("table", "bucket").parquet(path)
-  }
 
   /** The query vector's per-table buckets, computed driver-side with the
     * SAME plane family as the index build (tiny: nTables * nPlanes dots).
@@ -544,68 +421,6 @@ object Similarity {
         if (dot > 0) acc | (1 << j) else acc
       }
     }
-  }
-
-  /** ANN top-k against a [[writeLshIndex]] table: the (table, bucket)
-    * predicate is a pure partition filter, so the scan reads at most
-    * `nTables` partition directories — at 100 TB that is the difference
-    * between touching ~nTables/2^nPlanes of the corpus and all of it.
-    * Candidates are ranked by exact cosine like [[lshTopK]].
-    */
-  /** Batch-read an index's partitioned posting tree regardless of WHO
-    * wrote it: streaming maintenance leaves a `_spark_metadata` sink log
-    * at the root, and a plain `spark.read.parquet(root)` then resolves
-    * ONLY sink-committed files — silently hiding the batch-written seed
-    * corpus and every batch append (verified: one committed micro-batch
-    * shadowed a 20-row seed down to 1 visible row). Reading through a
-    * partition-directory glob with `basePath` bypasses the
-    * FileStreamSink detection and lists every file; the trade is that a
-    * crashed micro-batch's partial file is no longer masked by the log —
-    * the same exposure plain batch appends already have. Partition
-    * pruning on the partition columns is unaffected (spec-pinned).
-    */
-  private def readPostings(spark: org.apache.spark.sql.SparkSession,
-      root: String, partGlob: String): DataFrame =
-    spark.read.option("basePath", root).parquet(s"$root/$partGlob")
-
-  def lshTopKIndexed(spark: org.apache.spark.sql.SparkSession, indexPath: String,
-      idCol: String, embCol: String, qv: Array[Double], queryId: Long, k: Int,
-      nPlanes: Int = 4, nTables: Int = 12, seed: Long = 11L): DataFrame = {
-    val buckets = queryBuckets(qv, nPlanes, nTables, seed)
-    val pruned = readPostings(spark, indexPath, "table=*")
-      .where(buckets.zipWithIndex.map { case (b, tbl) =>
-        col("table") === tbl && col("bucket") === b
-      }.reduce(_ || _))
-    pruned
-      .where(col(idCol) =!= queryId)
-      .select(col(idCol),
-        round(cosine_sim(col(embCol), typedlit(qv.toSeq)), 4).as("sim"))
-      .groupBy(col(idCol)).agg(max(col("sim")).as("sim"))
-      .orderBy(col("sim").desc, col(idCol))
-      .limit(k)
-  }
-
-  /** [[writeLshIndex]] with int8-quantized vectors: same (table, bucket)
-    * partition layout and pruning, but each posting stores the
-    * [[graft.functions.Int8Pack]]ed codes (1 byte/dim) instead of
-    * `array<double>` (8 bytes/dim) — at 100 TB the index is ~8x smaller
-    * on disk and the candidate scan reads an eighth of the bytes.
-    * Cosine is scale-invariant, so ranking over the codes needs no
-    * dequantization ([[graft.functions.CosineInt8]]); the recall cost of
-    * int8 is gated in `QuantizationSpec` (cosine error < 0.01).
-    */
-  def writeLshIndexQuantized(embs: DataFrame, idCol: String, embCol: String,
-      path: String, nPlanes: Int = 4, nTables: Int = 12, dim: Int = -1,
-      seed: Long = 11L): Unit = {
-    import graft.functions.GraftFunctions.{int8_pack, int8_quantize}
-    val d = if (dim > 0) dim else inferDim(embs, embCol)
-    clusteredBy(
-        lshPostings(embs, idCol, embCol, nPlanes, nTables, d, seed)
-          .withColumn("qb",
-            int8_pack(int8_quantize(col(embCol)).getField("q")))
-          .drop(embCol),
-        col("table"), col("bucket"))
-      .write.mode("overwrite").partitionBy("table", "bucket").parquet(path)
   }
 
   /** Driver-side twin of [[Quantization.quantize]] for the query vector:
@@ -629,36 +444,203 @@ object Similarity {
     }
   }
 
-  /** ANN top-k against a [[writeLshIndexQuantized]] table: identical
-    * partition pruning to [[lshTopKIndexed]], candidates ranked by the
-    * exact integer-dot cosine over the packed codes.
+  /** The int8 payload of an embedding column, 1 byte/dim; cosine is
+    * scale-invariant, so no scale is stored and none is needed to score.
     */
-  def lshTopKIndexedQuantized(spark: org.apache.spark.sql.SparkSession,
-      indexPath: String, idCol: String, qv: Array[Double], queryId: Long,
-      k: Int, nPlanes: Int = 4, nTables: Int = 12,
-      seed: Long = 11L): DataFrame = {
-    import graft.functions.GraftFunctions.cosine_int8
-    val buckets = queryBuckets(qv, nPlanes, nTables, seed)
-    val qb = quantizeQuery(qv)
-    readPostings(spark, indexPath, "table=*")
-      .where(buckets.zipWithIndex.map { case (b, tbl) =>
-        col("table") === tbl && col("bucket") === b
-      }.reduce(_ || _))
-      .where(col(idCol) =!= queryId)
-      .select(col(idCol),
-        round(cosine_int8(col("qb"), lit(qb)), 4).as("sim"))
-      .groupBy(col(idCol)).agg(max(col("sim")).as("sim"))
-      .orderBy(col("sim").desc, col(idCol))
+  private[operators] def int8Codes(emb: Column): Column =
+    int8_pack(int8_quantize(emb).getField("q"))
+
+  // ---- the dense retrieval core: index layout x posting codec ----------
+
+  /** Where an index keeps its postings, and the keys they partition on. */
+  private sealed abstract class Layout(val keys: Seq[String], sub: String) {
+    def root(path: String): String = path + sub
+  }
+  private case object LshLayout extends Layout(Seq("table", "bucket"), "")
+  private case object IvfLayout extends Layout(Seq("cell"), "/postings")
+
+  /** What a posting stores of its vector — `encode` turns float postings
+    * (idCol, vecCol, keys) into it — and how a query scores it, given the IVF
+    * cells its probe chose; a `similarity` ranks highest first.
+    */
+  private sealed abstract class Codec(val similarity: Boolean) {
+    def encode(postings: DataFrame, idCol: String, vecCol: String): DataFrame =
+      postings
+    def score(qv: Array[Double], cells: Seq[Int]): Column
+  }
+
+  private final case class FloatCodec(embCol: String) extends Codec(true) {
+    def score(qv: Array[Double], cells: Seq[Int]): Column =
+      cosine_sim(col(embCol), typedlit(qv.toSeq))
+  }
+
+  private case object Int8Codec extends Codec(true) {
+    override def encode(postings: DataFrame, idCol: String,
+        vecCol: String): DataFrame =
+      postings.withColumn("qb", int8Codes(col(vecCol))).drop(vecCol)
+    def score(qv: Array[Double], cells: Seq[Int]): Column =
+      cosine_int8(col("qb"), lit(quantizeQuery(qv)))
+  }
+
+  /** Residual PQ codes as pure column expressions, so the build, the append
+    * and a streaming sink encode alike; each probed cell scores against its
+    * OWN ADC table, from the query's residual to THAT cell's centroid.
+    */
+  private final case class PqCodec(centroids: Array[Array[Double]],
+      codebook: Seq[Seq[Seq[Double]]]) extends Codec(false) {
+    override def encode(postings: DataFrame, idCol: String,
+        vecCol: String): DataFrame =
+      postings.select(col(idCol), col("cell"),
+        pq_encode(residual(col(vecCol), centroids), codebook).as("pq"))
+    def score(qv: Array[Double], cells: Seq[Int]): Column = {
+      val adc = cells.map { c =>
+        (col("cell") === c, pq_adc(col("pq"), Quantization.pqDistanceTable(
+          codebook, Array.tabulate(qv.length)(i => qv(i) - centroids(c)(i)))))
+      }
+      adc.tail.foldLeft(when(adc.head._1, adc.head._2)) {
+        case (acc, (inCell, d)) => acc.when(inCell, d)
+      }
+    }
+  }
+
+  /** An embedding column minus its row's `cell` centroid. */
+  private def residual(emb: Column, centroids: Array[Array[Double]]): Column =
+    zip_with(emb,
+      element_at(typedlit(centroids.map(_.toSeq).toSeq), col("cell") + 1),
+      (a, b) => a - b)
+
+  /** Batch-read a layout's postings, whoever wrote them: a streaming sink's
+    * `_spark_metadata` log at the root would hide every batch-written file
+    * from a root read, so the listed first-key partition directories are read
+    * under `basePath` (a `key=*` glob would too, but Spark logs a stack trace
+    * for a literal glob path). A missing or empty tree reads the glob, which
+    * fails PATH_NOT_FOUND.
+    */
+  private def readPostings(spark: SparkSession, layout: Layout,
+      path: String): DataFrame = {
+    val root = layout.root(path)
+    val dir = new org.apache.hadoop.fs.Path(root)
+    val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val key = layout.keys.head + "="
+    val parts =
+      if (!fs.exists(dir)) Seq.empty
+      else fs.listStatus(dir).map(_.getPath.getName)
+        .filter(_.startsWith(key)).sorted.map(p => s"$root/$p").toSeq
+    spark.read.option("basePath", root)
+      .parquet((if (parts.isEmpty) Seq(s"$root/$key*") else parts): _*)
+  }
+
+  /** Overwrite a layout's postings, clustered on its keys with an EXPLICIT
+    * partition count: unclustered, every task writes a file per directory,
+    * and a keyless repartition is AQE-coalesced into one serial writer (the
+    * q127 lesson).
+    */
+  private def writePostings(postings: DataFrame, layout: Layout,
+      path: String): Unit =
+    postings.repartition(postings.sparkSession.sparkContext.defaultParallelism,
+        layout.keys.map(col): _*)
+      .write.mode("overwrite").partitionBy(layout.keys: _*)
+      .parquet(layout.root(path))
+
+  /** The per-id ranking tail of the single-query LSH/IVF searchers: drop the
+    * query id, round `score` to 4 places (`sim`, or `dist` for a distance),
+    * keep ONE row per id — a candidate colliding in several LSH tables, or
+    * replayed by a retried mode-append, must not displace a real one — then
+    * order by score and ascending id and take k. [[bruteForceTopK]] and
+    * [[filteredTopK]] see each vector once and take no such aggregate.
+    */
+  private def rankById(cands: DataFrame, idCol: String, queryId: Long,
+      score: Column, similarity: Boolean, k: Int): DataFrame = {
+    val name = if (similarity) "sim" else "dist"
+    cands.where(col(idCol) =!= queryId)
+      .select(col(idCol), round(score, 4).as(name))
+      .groupBy(col(idCol))
+      .agg((if (similarity) max(col(name)) else min(col(name))).as(name))
+      .orderBy(if (similarity) col(name).desc else col(name).asc, col(idCol))
       .limit(k)
   }
 
-  /** KMeans cell assignment shared by the eager IVF path and the index
-    * build: L2-normalize before clustering (KMeans is Euclidean, ranking is
-    * cosine — on the unit sphere the two orders agree), fit a coarse
-    * quantizer with a fixed seed (few iterations — a coarse quantizer does
-    * not need convergence), and return each vector's cell id plus the
-    * centroid array. The centroids are nList × dim — tiny and driver-held
-    * by design, exactly like the LSH plane family in [[queryBuckets]].
+  /** LSH probe: a (table, bucket) partition filter, so an index scan reads
+    * at most `nTables` directories (~nTables/2^nPlanes of the corpus).
+    */
+  private def lshSearch(postings: DataFrame, idCol: String, codec: Codec,
+      qv: Array[Double], queryId: Long, k: Int, nPlanes: Int, nTables: Int,
+      seed: Long): DataFrame = {
+    val probe = queryBuckets(qv, nPlanes, nTables, seed).zipWithIndex
+      .map { case (b, tbl) => col("table") === tbl && col("bucket") === b }
+      .reduce(_ || _)
+    rankById(postings.where(probe), idCol, queryId, codec.score(qv, Nil),
+      codec.similarity, k)
+  }
+
+  /** IVF probe: a `cell IN (probes)` partition filter, so an index scan
+    * reads at most `nProbe` directories and fits nothing.
+    */
+  private def ivfSearch(postings: DataFrame, centroids: Array[Array[Double]],
+      idCol: String, codec: Codec, qv: Array[Double], queryId: Long, k: Int,
+      nProbe: Int): DataFrame = {
+    val cells = ivfProbeCells(centroids, qv, nProbe).toSeq
+    rankById(postings.where(col("cell").isin(cells: _*)), idCol, queryId,
+      codec.score(qv, cells), codec.similarity, k)
+  }
+
+  /** The one LSH index writer: [[lshPostings]] in `codec`'s payload. */
+  private def writeLsh(embs: DataFrame, idCol: String, embCol: String,
+      path: String, nPlanes: Int, nTables: Int, dim: Int, seed: Long,
+      codec: Codec): Unit = {
+    val d = if (dim > 0) dim else inferDim(embs, embCol)
+    writePostings(codec.encode(
+        lshPostings(embs, idCol, embCol, nPlanes, nTables, d, seed),
+        idCol, embCol),
+      LshLayout, path)
+  }
+
+  /** Persist the sign-LSH posting index PARTITIONED BY (table, bucket) —
+    * the 100 TB path [[lshTopK]]'s Scaladoc promises: the bucketing pass
+    * runs once at build time, and a query then prunes to its own
+    * `nTables` partition directories instead of re-bucketing the corpus.
+    */
+  def writeLshIndex(embs: DataFrame, idCol: String, embCol: String,
+      path: String, nPlanes: Int = 4, nTables: Int = 12, dim: Int = -1,
+      seed: Long = 11L): Unit =
+    writeLsh(embs, idCol, embCol, path, nPlanes, nTables, dim, seed,
+      FloatCodec(embCol))
+
+  /** ANN top-k against a [[writeLshIndex]] table, ranked by exact cosine:
+    * identical to [[lshTopK]] over the indexed corpus.
+    */
+  def lshTopKIndexed(spark: SparkSession, indexPath: String,
+      idCol: String, embCol: String, qv: Array[Double], queryId: Long, k: Int,
+      nPlanes: Int = 4, nTables: Int = 12, seed: Long = 11L): DataFrame =
+    lshSearch(readPostings(spark, LshLayout, indexPath), idCol,
+      FloatCodec(embCol), qv, queryId, k, nPlanes, nTables, seed)
+
+  /** [[writeLshIndex]] with int8 postings (1 byte/dim against 8): at
+    * 100 TB the index is ~8x smaller and a probe reads an eighth of the
+    * bytes; the recall cost is gated in `QuantizationSpec` (cosine error
+    * < 0.01).
+    */
+  def writeLshIndexQuantized(embs: DataFrame, idCol: String, embCol: String,
+      path: String, nPlanes: Int = 4, nTables: Int = 12, dim: Int = -1,
+      seed: Long = 11L): Unit =
+    writeLsh(embs, idCol, embCol, path, nPlanes, nTables, dim, seed,
+      Int8Codec)
+
+  /** ANN top-k against a [[writeLshIndexQuantized]] table, ranked by the
+    * exact integer-dot cosine over the packed codes.
+    */
+  def lshTopKIndexedQuantized(spark: SparkSession,
+      indexPath: String, idCol: String, qv: Array[Double], queryId: Long,
+      k: Int, nPlanes: Int = 4, nTables: Int = 12,
+      seed: Long = 11L): DataFrame =
+    lshSearch(readPostings(spark, LshLayout, indexPath), idCol, Int8Codec,
+      qv, queryId, k, nPlanes, nTables, seed)
+
+  /** KMeans cell assignment of the eager IVF path and the index build:
+    * L2-normalize first (on the unit sphere the Euclidean and cosine orders
+    * agree), fit a coarse quantizer with a fixed seed and few iterations,
+    * return each vector's cell and the nList × dim centroids — driver-held by
+    * design, like the LSH plane family.
     */
   def ivfAssign(embs: DataFrame, idCol: String, embCol: String,
       nList: Int, seed: Long): (DataFrame, Array[Array[Double]]) = {
@@ -693,37 +675,10 @@ object Similarity {
     centroids.zipWithIndex.sortBy { case (c, _) => -cosArr(c, qv) }
       .take(nProbe).map(_._2)
 
-  /** Exact cosine ranking of a pruned candidate set — shared tail of the
-    * eager and indexed IVF paths. The query vector rides along as a literal
-    * (one row's worth of doubles), so the scan is map-only into a top-k.
-    */
-  private def ivfRank(cands: DataFrame, idCol: String, embCol: String,
-      qv: Array[Double], queryId: Long, k: Int): DataFrame =
-    cands
-      .where(col(idCol) =!= queryId)
-      .select(col(idCol),
-        round(cosine_sim(col(embCol), typedlit(qv.toSeq)), 4).as("sim"))
-      // defensive id dedup (the lshTopKIndexed posture): a duplicated
-      // posting row — a retried batch append replaying into the
-      // mode-append layout, or overlapping caller batches — must not
-      // emit its id twice in the top-k and displace a real candidate;
-      // the agg runs on the cell-pruned candidate set only
-      .groupBy(col(idCol)).agg(max(col("sim")).as("sim"))
-      .orderBy(col("sim").desc, col(idCol))
-      .limit(k)
-
-  /** IVF (inverted-file) ANN top-k, eager one-shot form — the
-    * coarse-quantizer scale path the LSH variant trades against: k-means
-    * partitions the corpus into `nList` cells; a query probes only the
-    * `nProbe` cells whose centroids are closest to it and ranks those
-    * candidates exactly. Returns (idCol, sim) like
-    * [[bruteForceTopK]]/[[lshTopK]].
-    *
-    * This form refits the quantizer per call — fine for ad-hoc
-    * exploration, wrong for repeated queries: build the index ONCE with
-    * [[writeIvfIndex]] and serve queries from [[ivfTopKIndexed]], where
-    * the cell id is a partition key and a query reads nProbe/nList of the
-    * data with zero driver-side fitting.
+  /** IVF (inverted-file) ANN top-k, eager one-shot form: k-means splits the
+    * corpus into `nList` cells and a query ranks only the `nProbe` cells
+    * closest to it, exactly. Returns (idCol, sim) like [[lshTopK]]. It refits
+    * per call — for repeated queries serve [[ivfTopKIndexed]].
     */
   def ivfTopK(embs: DataFrame, idCol: String, embCol: String,
       queryId: Long, k: Int, nList: Int = 16, nProbe: Int = 4,
@@ -731,197 +686,129 @@ object Similarity {
     val (assigned, centroids) = ivfAssign(embs, idCol, embCol, nList, seed)
     val q = assigned.where(col(idCol) === queryId)
       .select(col(embCol)).head().getSeq[Double](0).toArray
-    val probeCells = ivfProbeCells(centroids, q, nProbe)
-    ivfRank(
-      assigned.where(col("cell").isin(probeCells.toIndexedSeq: _*)),
-      idCol, embCol, q, queryId, k)
+    ivfSearch(assigned, centroids, idCol, FloatCodec(embCol), q, queryId, k,
+      nProbe)
   }
 
-  /** Persist the IVF index: posting rows PARTITIONED BY cell under
-    * `path/postings` (at 100 TB a probe is then a partition-directory
-    * filter reading nProbe/nList of the corpus) and the tiny centroid
-    * table (nList rows) under `path/centroids`. The KMeans fit — the
-    * expensive, driver-coordinated step — runs exactly once here instead
-    * of once per query; pair with [[ivfTopKIndexed]]. Mirror of
-    * [[writeLshIndex]]/[[lshTopKIndexed]].
+  /** The one IVF index writer: `fit` picks the codec from the assigned
+    * (id, emb, cell) rows and the centroids and returns the rows to encode;
+    * then the postings by cell, the `centroids`, the `pqcodebook` of a PQ
+    * codec, and the drift `anchor`.
     */
-  def writeIvfIndex(embs: DataFrame, idCol: String, embCol: String,
-      path: String, nList: Int = 16, seed: Long = 42L): Unit = {
-    val (assigned, centroids) = ivfAssign(embs, idCol, embCol, nList, seed)
-    clusteredBy(assigned, col("cell")).write.mode("overwrite")
-      .partitionBy("cell").parquet(s"$path/postings")
-    writeCentroids(embs.sparkSession, path, centroids)
-    writeAnchor(embs, embCol, path)
-  }
-
-  /** Persist the nList-row centroid table under `path/centroids` — the
-    * layout [[readIvfCentroids]] depends on, shared by the float and
-    * quantized index writers so it can't drift between them.
-    */
-  private def writeCentroids(spark: org.apache.spark.sql.SparkSession,
-      path: String, centroids: Array[Array[Double]]): Unit = {
+  private def writeIvf(embs: DataFrame, idCol: String, embCol: String,
+      path: String, nList: Int, seed: Long)(
+      fit: (DataFrame, Array[Array[Double]]) => (DataFrame, Codec)): Unit = {
+    val spark = embs.sparkSession
     import spark.implicits._
+    val (assigned, centroids) = ivfAssign(embs, idCol, embCol, nList, seed)
+    val (rows, codec) = fit(assigned, centroids)
+    writePostings(codec.encode(rows, idCol, embCol), IvfLayout, path)
     centroids.zipWithIndex.toSeq
       .map { case (c, i) => (i, c.toSeq) }.toDF("cell", "centroid")
       .coalesce(1).write.mode("overwrite").parquet(s"$path/centroids")
+    codec match {
+      case PqCodec(_, codebook) =>
+        codebook.zipWithIndex
+          .flatMap { case (cents, sub) =>
+            cents.zipWithIndex.map { case (c, cid) => (sub, cid, c) } }
+          .toDF("sub", "cid", "centroid")
+          .coalesce(1).write.mode("overwrite").parquet(s"$path/pqcodebook")
+      case _ =>
+    }
+    writeAnchor(embs, embCol, path)
   }
 
-  /** The centroid table of a [[writeIvfIndex]] index — nList rows, read to
-    * the driver by design (the IVF analog of the LSH plane family).
+  /** Persist the IVF index, postings PARTITIONED BY cell: the KMeans fit
+    * runs once here instead of once per query, and a probe reads nProbe/nList
+    * of the corpus. Pair with [[ivfTopKIndexed]].
     */
-  def readIvfCentroids(spark: org.apache.spark.sql.SparkSession,
+  def writeIvfIndex(embs: DataFrame, idCol: String, embCol: String,
+      path: String, nList: Int = 16, seed: Long = 42L): Unit =
+    writeIvf(embs, idCol, embCol, path, nList, seed)((rows, _) =>
+      (rows, FloatCodec(embCol)))
+
+  /** The centroid table of an IVF index — nList rows, read to the driver
+    * by design (the IVF analog of the LSH plane family).
+    */
+  def readIvfCentroids(spark: SparkSession,
       indexPath: String): Array[Array[Double]] =
     spark.read.parquet(s"$indexPath/centroids")
       .orderBy("cell").select("centroid").collect()
       .map(_.getSeq[Double](0).toArray)
 
-  /** ANN top-k against a [[writeIvfIndex]] table: the centroid read is
-    * nList rows (driver-side by design, like [[queryBuckets]]'s plane
-    * math); the posting scan's `cell IN (probes)` predicate is a pure
-    * partition filter, so at most `nProbe` partition directories are read
-    * and NO per-query KMeans fit or corpus pass happens. Candidates are
-    * ranked by exact cosine, identical to [[ivfTopK]] at equal
-    * nList/nProbe/seed.
+  /** ANN top-k against a [[writeIvfIndex]] table: no per-query fit or
+    * corpus pass; ranked by exact cosine, identical to [[ivfTopK]] at
+    * equal nList/nProbe/seed.
     */
-  def ivfTopKIndexed(spark: org.apache.spark.sql.SparkSession, indexPath: String,
+  def ivfTopKIndexed(spark: SparkSession, indexPath: String,
       idCol: String, embCol: String, qv: Array[Double], queryId: Long, k: Int,
-      nProbe: Int = 4): DataFrame = {
-    val probeCells = ivfProbeCells(readIvfCentroids(spark, indexPath), qv, nProbe)
-    val pruned = readPostings(spark, s"$indexPath/postings", "cell=*")
-      .where(col("cell").isin(probeCells.toIndexedSeq: _*))
-    ivfRank(pruned, idCol, embCol, qv, queryId, k)
-  }
+      nProbe: Int = 4): DataFrame =
+    ivfSearch(readPostings(spark, IvfLayout, indexPath),
+      readIvfCentroids(spark, indexPath), idCol, FloatCodec(embCol), qv,
+      queryId, k, nProbe)
 
-  /** [[writeIvfIndex]] with int8-quantized postings — the IVF twin of
-    * [[writeLshIndexQuantized]]: same cell partitioning and centroid
-    * table, but posting vectors stored as packed codes (1 byte/dim vs 8),
-    * so a probe reads ~an eighth of the bytes. Centroids stay float (the
-    * tiny driver-side table is not a scan cost).
+  /** [[writeIvfIndex]] with int8 postings (1 byte/dim against 8), so a
+    * probe reads ~an eighth of the bytes; the centroids stay float.
     */
   def writeIvfIndexQuantized(embs: DataFrame, idCol: String, embCol: String,
-      path: String, nList: Int = 16, seed: Long = 42L): Unit = {
-    import graft.functions.GraftFunctions.{int8_pack, int8_quantize}
-    val (assigned, centroids) = ivfAssign(embs, idCol, embCol, nList, seed)
-    clusteredBy(assigned
-        .withColumn("qb", int8_pack(int8_quantize(col(embCol)).getField("q")))
-        .drop(embCol), col("cell"))
-      .write.mode("overwrite").partitionBy("cell").parquet(s"$path/postings")
-    writeCentroids(embs.sparkSession, path, centroids)
-    writeAnchor(embs, embCol, path)
-  }
+      path: String, nList: Int = 16, seed: Long = 42L): Unit =
+    writeIvf(embs, idCol, embCol, path, nList, seed)((rows, _) =>
+      (rows, Int8Codec))
 
-  /** ANN top-k against a [[writeIvfIndexQuantized]] table: identical
-    * centroid probing and partition pruning to [[ivfTopKIndexed]],
-    * candidates ranked by the integer-dot cosine over packed codes.
+  /** ANN top-k against a [[writeIvfIndexQuantized]] table, ranked by the
+    * integer-dot cosine over the packed codes.
     */
-  def ivfTopKIndexedQuantized(spark: org.apache.spark.sql.SparkSession,
+  def ivfTopKIndexedQuantized(spark: SparkSession,
       indexPath: String, idCol: String, qv: Array[Double], queryId: Long,
-      k: Int, nProbe: Int = 4): DataFrame = {
-    import graft.functions.GraftFunctions.cosine_int8
-    val probeCells = ivfProbeCells(readIvfCentroids(spark, indexPath), qv, nProbe)
-    val qb = quantizeQuery(qv)
-    readPostings(spark, s"$indexPath/postings", "cell=*")
-      .where(col("cell").isin(probeCells.toIndexedSeq: _*))
-      .where(col(idCol) =!= queryId)
-      .select(col(idCol),
-        round(cosine_int8(col("qb"), lit(qb)), 4).as("sim"))
-      // the ivfRank duplicated-posting defense
-      .groupBy(col(idCol)).agg(max(col("sim")).as("sim"))
-      .orderBy(col("sim").desc, col(idCol))
-      .limit(k)
-  }
+      k: Int, nProbe: Int = 4): DataFrame =
+    ivfSearch(readPostings(spark, IvfLayout, indexPath),
+      readIvfCentroids(spark, indexPath), idCol, Int8Codec, qv, queryId, k,
+      nProbe)
 
-  /** The IVF-PQ composition (the FAISS `IVFPQ` shape; Jégou et al.,
-    * TPAMI 2011): coarse k-means cells partition the postings, and each
-    * posting stores only the m-byte PQ code of its RESIDUAL (vector
-    * minus its cell centroid) — at dim 64 / m 8 a probe reads 64x fewer
-    * posting bytes than the float index and 8x fewer than the int8 one.
-    * PQ quantizes residuals rather than raw vectors because residuals
-    * concentrate near the origin once the coarse quantizer has explained
-    * the cell structure — same codebook bits, finer effective
-    * resolution. The residual PQ codebook (trained here, once) persists
-    * beside the centroid table; the residual projection spills once so
-    * the m training fits and the encode pass scan parquet instead of
-    * re-running the assignment join.
+  /** The IVF-PQ composition (the FAISS `IVFPQ` shape; Jégou et al., TPAMI
+    * 2011): each posting stores only the m-byte PQ code of its RESIDUAL to
+    * its cell centroid — at dim 64 / m 8, 64x fewer posting bytes than the
+    * float index. Residuals concentrate near the origin, so the same codebook
+    * bits resolve finer. The cell assignment spills once: the m codebook fits
+    * and the encode pass scan it instead of re-running it.
     */
   def writeIvfPqIndex(embs: DataFrame, idCol: String, embCol: String,
       path: String, nList: Int = 16, m: Int = 8, ksub: Int = 64,
-      seed: Long = 42L): Unit = {
-    val spark = embs.sparkSession
-    import spark.implicits._
-    val (assigned, centroids) = ivfAssign(embs, idCol, embCol, nList, seed)
-    val centDf = centroids.zipWithIndex.toSeq
-      .map { case (c, i) => (i, c.toSeq) }.toDF("cell", "__cent")
-    val residuals = graft.io.Spill(
-      assigned.join(broadcast(centDf), Seq("cell"))
-        .select(col(idCol), col("cell"),
-          zip_with(col(embCol), col("__cent"), (a, b) => a - b).as("__res")),
-      "graft-ivfpq-")
-    val codebook = Quantization.pqTrain(residuals, "__res", m, ksub, seed)
-    clusteredBy(Quantization.pqEncode(residuals, "__res", codebook)
-        .select(col(idCol), col("cell"), col("pq")), col("cell"))
-      .write.mode("overwrite").partitionBy("cell").parquet(s"$path/postings")
-    writeCentroids(spark, path, centroids)
-    codebook.zipWithIndex
-      .flatMap { case (cents, sub) =>
-        cents.zipWithIndex.map { case (c, cid) => (sub, cid, c) } }
-      .toDF("sub", "cid", "centroid")
-      .coalesce(1).write.mode("overwrite").parquet(s"$path/pqcodebook")
-    writeAnchor(embs, embCol, path)
-  }
+      seed: Long = 42L): Unit =
+    writeIvf(embs, idCol, embCol, path, nList, seed) { (assigned, centroids) =>
+      val rows = graft.io.Spill(assigned, "graft-ivfpq-")
+      (rows, PqCodec(centroids, Quantization.pqTrain(
+        rows.select(residual(col(embCol), centroids).as("__res")), "__res",
+        m, ksub, seed)))
+    }
 
   /** The PQ codebook of a [[writeIvfPqIndex]] index — m*ksub rows, read
     * to the driver by design (kilobytes, like the centroid table).
     */
-  def readPqCodebook(spark: org.apache.spark.sql.SparkSession,
+  def readPqCodebook(spark: SparkSession,
       indexPath: String): Seq[Seq[Seq[Double]]] =
     spark.read.parquet(s"$indexPath/pqcodebook")
       .orderBy("sub", "cid").collect()
       .groupBy(_.getInt(0)).toSeq.sortBy(_._1)
       .map(_._2.sortBy(_.getInt(1)).map(_.getSeq[Double](2)).toSeq)
 
-  /** ANN top-k against a [[writeIvfPqIndex]] table: centroid probing and
-    * partition pruning exactly as [[ivfTopKIndexed]], but each probed
-    * cell gets its OWN ADC distance table (built from the query's
-    * residual against THAT cell's centroid — the residual encoding makes
-    * the tables cell-relative), and candidates are scored by m table
-    * lookups over the m-byte codes. The plan is a union of nProbe
-    * partition-pruned map-only scans into one TakeOrderedAndProject.
-    * Ascending approximate squared-L2; returns (idCol, dist).
+  /** ANN top-k against a [[writeIvfPqIndex]] table: one map-only pruned
+    * scan scored by m table lookups per posting. Ascending approximate
+    * squared-L2; returns (idCol, dist).
     */
-  def ivfPqTopKIndexed(spark: org.apache.spark.sql.SparkSession,
+  def ivfPqTopKIndexed(spark: SparkSession,
       indexPath: String, idCol: String, qv: Array[Double], queryId: Long,
       k: Int, nProbe: Int = 4): DataFrame = {
     val centroids = readIvfCentroids(spark, indexPath)
-    val codebook = readPqCodebook(spark, indexPath)
-    val probeCells = ivfProbeCells(centroids, qv, nProbe)
-    probeCells.toSeq.map { c =>
-        val resQ = Array.tabulate(qv.length)(i => qv(i) - centroids(c)(i))
-        val dt = Quantization.pqDistanceTable(codebook, resQ)
-        readPostings(spark, s"$indexPath/postings", "cell=*")
-          .where(col("cell") === c)
-          .select(col(idCol),
-            round(graft.functions.GraftFunctions.pq_adc(col("pq"), dt), 4)
-              .as("dist"))
-      }
-      .reduce(_ unionByName _)
-      .where(col(idCol) =!= queryId)
-      // the ivfRank duplicated-posting defense (distances: keep the min)
-      .groupBy(col(idCol)).agg(min(col("dist")).as("dist"))
-      .orderBy(col("dist"), col(idCol))
-      .limit(k)
+    ivfSearch(readPostings(spark, IvfLayout, indexPath), centroids, idCol,
+      pqCodec(spark, indexPath)(centroids), qv, queryId, k, nProbe)
   }
 
-  /** Cell id of an embedding against FIXED centroids, as pure column
-    * expressions — the maintenance-path twin of the KMeans model's
-    * predict, so it runs on streaming DataFrames (no model, no fit).
-    *
-    * Replicates the build-time assignment metric exactly: KMeans assigns
-    * by Euclidean distance between the L2-NORMALIZED vector x and centroid
-    * c, and with ||x|| = 1 the argmin of ||x - c||^2 is the argmin of
-    * ||c||^2 - 2 (x . c), where (x . c) = cosine(x, c) * ||c||. The
-    * ||c||-derived constants fold in driver-side; ties break to the first
-    * (lowest) cell like MLlib's findClosest.
+  /** Cell id of an embedding against FIXED centroids as pure column
+    * expressions (so it runs on streaming DataFrames), replicating the KMeans
+    * predict exactly: for the L2-normalized x, argmin ||x - c||^2 = argmin
+    * ||c||^2 - 2 cosine(x, c) ||c||, with the ||c|| constants folded in
+    * driver-side and ties to the lowest cell like MLlib's findClosest.
     */
   def ivfCell(emb: Column, centroids: Array[Array[Double]]): Column = {
     val scores = array(centroids.toIndexedSeq.map { c =>
@@ -932,94 +819,69 @@ object Similarity {
   }
 
   /** The (id, emb, cell) posting projection against fixed centroids —
-    * shared by [[appendIvfIndex]] and streaming index maintenance (append
-    * it into `indexPath/postings` partitioned by `cell` via the file
-    * sink, exactly like the LSH twin in `StreamingLshIndexSpec`).
+    * the [[appendIvfIndex]] rows, and on a streaming frame the rows a
+    * file sink appends into `indexPath/postings` partitioned by `cell`
+    * (the LSH twin is pinned in `StreamingLshIndexSpec`).
     */
   def ivfPostings(embs: DataFrame, idCol: String, embCol: String,
       centroids: Array[Array[Double]]): DataFrame =
     embs.select(col(idCol), col(embCol).cast("array<double>").as(embCol),
       ivfCell(col(embCol), centroids).as("cell"))
 
-  /** Batch-append new vectors into an existing [[writeIvfIndex]] index
-    * WITHOUT refitting: cells come from the persisted centroids, so the
-    * new rows land in the same partition layout queries already prune on.
-    * (The coarse quantizer drifts as the corpus grows — rebuild with
-    * [[writeIvfIndex]] on a rebalance cadence, appends between rebuilds.)
-    *
-    * Replay exposure: the mode-append write is NOT batch-keyed (unlike
-    * [[graft.operators.LexicalIndex.append]]), so a retried append lands
-    * its rows twice. The query tails dedup ids defensively (see
-    * [[ivfRank]]) so RESULTS stay correct, and the next drift refit
-    * folds the exact-duplicate rows away; streaming maintenance through
-    * the file sink is exactly-once via the sink's own commit log.
-    */
-  def appendIvfIndex(spark: org.apache.spark.sql.SparkSession, indexPath: String,
-      embs: DataFrame, idCol: String, embCol: String): Unit =
-    graft.io.Maintenance.withLease(spark, indexPath, "ivf-append") {
-      appendIvfUnfenced(spark, indexPath, embs, idCol, embCol)
-    }
-
-  /** [[appendIvfIndex]] without the maintenance lease — for callers that
-    * already hold it ([[maintainIvfIndex]]); taking it twice would
-    * deadlock-by-throw on our own fence.
-    */
-  private def appendIvfUnfenced(spark: org.apache.spark.sql.SparkSession,
-      indexPath: String, embs: DataFrame, idCol: String,
-      embCol: String): Unit =
-    ivfPostings(embs, idCol, embCol, readIvfCentroids(spark, indexPath))
-      .write.mode("append").partitionBy("cell").parquet(s"$indexPath/postings")
-
-  /** The (id, cell, pq) posting projection of an IVF-PQ index against
-    * FIXED centroids and codebook — pure column expressions end to end
-    * ([[ivfCell]] assignment, literal-indexed centroid lookup for the
-    * residual, codegen'd [[graft.functions.PqEncode]]), so it runs on a
-    * STREAMING frame into the partitioned file sink exactly like
-    * [[ivfPostings]] — new vectors become probe-able per micro-batch
-    * while both quantizers stay fixed between rebuild cadences.
+  /** The (id, cell, pq) postings of an IVF-PQ index against FIXED
+    * centroids and codebook — the [[appendIvfPqIndex]] rows, and on a
+    * streaming frame the sink's, like [[ivfPostings]].
     */
   def ivfPqPostings(embs: DataFrame, idCol: String, embCol: String,
       centroids: Array[Array[Double]],
-      codebook: Seq[Seq[Seq[Double]]]): DataFrame = {
-    val centLit = typedlit(centroids.map(_.toSeq).toSeq)
-    embs
-      .select(col(idCol), col(embCol).cast("array<double>").as(embCol),
-        ivfCell(col(embCol), centroids).as("cell"))
-      .select(col(idCol), col("cell"),
-        graft.functions.GraftFunctions.pq_encode(
-          zip_with(col(embCol), element_at(centLit, col("cell") + 1),
-            (a, b) => a - b),
-          codebook).as("pq"))
+      codebook: Seq[Seq[Seq[Double]]]): DataFrame =
+    PqCodec(centroids, codebook)
+      .encode(ivfPostings(embs, idCol, embCol, centroids), idCol, embCol)
+
+  private def pqCodec(spark: SparkSession, indexPath: String)(
+      centroids: Array[Array[Double]]): Codec =
+    PqCodec(centroids, readPqCodebook(spark, indexPath))
+
+  /** The one append body (the caller holds the lease): `embs` under the
+    * index's FIXED centroids, in the codec `codecOf` gives for them.
+    */
+  private def appendIvf(spark: SparkSession, indexPath: String,
+      embs: DataFrame, idCol: String, embCol: String)(
+      codecOf: Array[Array[Double]] => Codec): Unit = {
+    val centroids = readIvfCentroids(spark, indexPath)
+    codecOf(centroids)
+      .encode(ivfPostings(embs, idCol, embCol, centroids), idCol, embCol)
+      .write.mode("append").partitionBy(IvfLayout.keys: _*)
+      .parquet(IvfLayout.root(indexPath))
   }
 
-  /** Batch-append new vectors into a [[writeIvfPqIndex]] index without
-    * refitting either quantizer (the [[appendIvfIndex]] discipline:
-    * appends between rebuilds, rebuild on a rebalance cadence).
+  /** Batch-append new vectors into a [[writeIvfIndex]] index WITHOUT
+    * refitting; rebuild on a rebalance cadence, as the quantizer drifts. The
+    * mode-append write is NOT batch-keyed, so a retried append lands its rows
+    * twice: the query tail dedups ids, and the next refit folds the
+    * duplicates away (a streaming file sink is exactly-once by its log).
     */
-  def appendIvfPqIndex(spark: org.apache.spark.sql.SparkSession,
+  def appendIvfIndex(spark: SparkSession, indexPath: String,
+      embs: DataFrame, idCol: String, embCol: String): Unit =
+    graft.io.Maintenance.withLease(spark, indexPath, "ivf-append") {
+      appendIvf(spark, indexPath, embs, idCol, embCol)(_ => FloatCodec(embCol))
+    }
+
+  /** [[appendIvfIndex]] for a [[writeIvfPqIndex]] index: neither
+    * quantizer is refitted.
+    */
+  def appendIvfPqIndex(spark: SparkSession,
       indexPath: String, embs: DataFrame, idCol: String,
       embCol: String): Unit =
     graft.io.Maintenance.withLease(spark, indexPath, "ivfpq-append") {
-      appendIvfPqUnfenced(spark, indexPath, embs, idCol, embCol)
+      appendIvf(spark, indexPath, embs, idCol, embCol)(pqCodec(spark, indexPath))
     }
-
-  /** [[appendIvfPqIndex]] without the lease (held by
-    * [[maintainIvfPqIndex]]).
-    */
-  private def appendIvfPqUnfenced(spark: org.apache.spark.sql.SparkSession,
-      indexPath: String, embs: DataFrame, idCol: String,
-      embCol: String): Unit =
-    ivfPqPostings(embs, idCol, embCol,
-      readIvfCentroids(spark, indexPath), readPqCodebook(spark, indexPath))
-      .write.mode("append").partitionBy("cell").parquet(s"$indexPath/postings")
 
   // ---- drift-triggered index maintenance -------------------------------
 
-  /** Persist the fit-time drift ANCHOR beside the index: the per-dimension
-    * sum vector of the corpus the quantizer was fitted on (`dim` rows,
-    * DECIMAL-exact like [[Drift.embeddingCentroidCos]]'s aggregate —
-    * cosine is scale-invariant, so the sum direction IS the mean
-    * direction). [[indexDrift]] compares new batches against it.
+  /** Persist the fit-time drift ANCHOR: the per-dimension sum of the fitted
+    * corpus (DECIMAL-exact; cosine is scale-invariant, so the sum direction
+    * IS the mean direction), which [[indexDrift]] compares batches against.
     */
   private def writeAnchor(embs: DataFrame, embCol: String, path: String): Unit =
     embs.select(posexplode(col(embCol).cast("array<double>")).as(Seq("dim", "x")))
@@ -1028,10 +890,9 @@ object Similarity {
       .coalesce(1).write.mode("overwrite").parquet(s"$path/anchor")
 
   /** Centroid-cosine of a new batch against the index's fit-time anchor
-    * (1 = same direction as the fitted corpus). One `dim`-row aggregate
-    * over the batch; the anchor read is `dim` rows.
+    * (1 = the fitted corpus's direction): one `dim`-row aggregate.
     */
-  def indexDrift(spark: org.apache.spark.sql.SparkSession, indexPath: String,
+  def indexDrift(spark: SparkSession, indexPath: String,
       newEmbs: DataFrame, embCol: String): Double = {
     import spark.implicits._
     val av =
@@ -1049,74 +910,64 @@ object Similarity {
       .head().getAs[Double]("centroid_cos")
   }
 
-  /** Drift-triggered maintenance of a [[writeIvfIndex]] index — the
-    * q103-monitors-the-ANN-index loop closed: if the new batch's centroid
-    * cosine against the fit-time anchor stays at/above `minCentroidCos`,
-    * the batch APPENDS under the existing centroids
-    * ([[appendIvfIndex]] — cheap, no refit); below it, the coarse
-    * quantizer no longer represents the data, so the index REFITS over
-    * existing postings ∪ batch ([[writeIvfIndex]] — the float postings
-    * retain raw vectors, so the rebuild is self-contained and FOLDS all
-    * prior append increments into the fresh partition layout). Returns
-    * true when a refit ran. The union spills before the overwrite (a
-    * lazy self-read would race the rewrite).
+  /** The one maintenance body, under `lease` (which spans the drift
+    * DECISION too): a batch whose centroid cosine against the anchor stays
+    * at/above `minCentroidCos` appends in `codecOf`'s codec, else `refit`
+    * rebuilds the index. Returns true when a refit ran.
     */
-  def maintainIvfIndex(spark: org.apache.spark.sql.SparkSession,
-      indexPath: String, newEmbs: DataFrame, idCol: String, embCol: String,
-      minCentroidCos: Double = 0.95, nList: Int = 16,
-      seed: Long = 42L): Boolean = {
+  private def maintainIvf(spark: SparkSession, indexPath: String,
+      newEmbs: DataFrame, idCol: String, embCol: String,
+      minCentroidCos: Double, lease: String,
+      codecOf: Array[Array[Double]] => Codec)(
+      refit: DataFrame => Unit): Boolean = {
     require(minCentroidCos >= -1.0 && minCentroidCos <= 1.0,
       "minCentroidCos is a cosine")
-    // the lease spans the drift DECISION too: a concurrent mutator
-    // between the measure and the append/refit would invalidate it
-    graft.io.Maintenance.withLease(spark, indexPath, "ivf-maintain") {
+    graft.io.Maintenance.withLease(spark, indexPath, lease) {
       val batch = newEmbs.select(col(idCol),
         col(embCol).cast("array<double>").as(embCol))
-      if (indexDrift(spark, indexPath, batch, embCol) >= minCentroidCos) {
-        appendIvfUnfenced(spark, indexPath, batch, idCol, embCol)
-        false
-      } else {
-        val union = graft.io.Spill(
-          readPostings(spark, s"$indexPath/postings", "cell=*")
-            .select(col(idCol), col(embCol))
-            .unionByName(batch)
-            // exact duplicate rows (a retried append replayed into the
-            // mode-append layout) fold away at the refit instead of
-            // being carried into the fresh layout forever; distinct on
-            // the full row is deterministic (replays are byte-identical)
-            .distinct(),
-          "graft-ivfref-")
-        writeIvfIndex(union, idCol, embCol, indexPath, nList, seed)
-        true
-      }
+      val append = indexDrift(spark, indexPath, batch, embCol) >= minCentroidCos
+      if (append) appendIvf(spark, indexPath, batch, idCol, embCol)(codecOf)
+      else refit(batch)
+      !append
     }
   }
 
-  /** [[maintainIvfIndex]] for a [[writeIvfPqIndex]] index. PQ postings
-    * store lossy codes, not vectors, so the refit cannot rebuild from the
-    * index itself — `refitSource` must be the raw corpus INCLUDING the
-    * new batch (the table the index derives from; the caller owns it).
-    * Non-drifted batches append codes under the fixed quantizers
-    * ([[appendIvfPqIndex]]).
+  /** Drift-triggered maintenance of a [[writeIvfIndex]] index (the
+    * q103-monitors-the-index loop closed): a batch that has not drifted
+    * APPENDS under the existing centroids; a drifted one REFITS the index
+    * over its postings ∪ the batch — the float postings keep raw vectors, so
+    * the rebuild is self-contained and folds every prior append. The union
+    * spills before the overwrite (a lazy self-read would race it).
     */
-  def maintainIvfPqIndex(spark: org.apache.spark.sql.SparkSession,
+  def maintainIvfIndex(spark: SparkSession,
+      indexPath: String, newEmbs: DataFrame, idCol: String, embCol: String,
+      minCentroidCos: Double = 0.95, nList: Int = 16,
+      seed: Long = 42L): Boolean =
+    maintainIvf(spark, indexPath, newEmbs, idCol, embCol, minCentroidCos,
+        "ivf-maintain", _ => FloatCodec(embCol)) { batch =>
+      writeIvfIndex(graft.io.Spill(
+          readPostings(spark, IvfLayout, indexPath)
+            .select(col(idCol), col(embCol)).unionByName(batch)
+            // exact duplicate rows (a retried append replayed into the
+            // mode-append layout) fold away here instead of being
+            // carried forever; replays are byte-identical
+            .distinct(),
+          "graft-ivfref-"),
+        idCol, embCol, indexPath, nList, seed)
+    }
+
+  /** [[maintainIvfIndex]] for a [[writeIvfPqIndex]] index. PQ postings
+    * hold lossy codes, so the refit rebuilds from `refitSource`: the raw
+    * corpus INCLUDING the new batch, which the caller owns.
+    */
+  def maintainIvfPqIndex(spark: SparkSession,
       indexPath: String, newEmbs: DataFrame, refitSource: => DataFrame,
       idCol: String, embCol: String, minCentroidCos: Double = 0.95,
       nList: Int = 16, m: Int = 8, ksub: Int = 64,
-      seed: Long = 42L): Boolean = {
-    require(minCentroidCos >= -1.0 && minCentroidCos <= 1.0,
-      "minCentroidCos is a cosine")
-    graft.io.Maintenance.withLease(spark, indexPath, "ivfpq-maintain") {
-      val batch = newEmbs.select(col(idCol),
-        col(embCol).cast("array<double>").as(embCol))
-      if (indexDrift(spark, indexPath, batch, embCol) >= minCentroidCos) {
-        appendIvfPqUnfenced(spark, indexPath, batch, idCol, embCol)
-        false
-      } else {
-        writeIvfPqIndex(refitSource, idCol, embCol, indexPath, nList, m,
-          ksub, seed)
-        true
-      }
+      seed: Long = 42L): Boolean =
+    maintainIvf(spark, indexPath, newEmbs, idCol, embCol, minCentroidCos,
+        "ivfpq-maintain", pqCodec(spark, indexPath)) { _ =>
+      writeIvfPqIndex(refitSource, idCol, embCol, indexPath, nList, m, ksub,
+        seed)
     }
-  }
 }

@@ -28,7 +28,12 @@ private[serving] object ServingJson {
         .map { case (k, x) => str(k.toString) + ":" + value(x) }
         .mkString("{", ",", "}")
     case xs: Seq[_] => xs.map(value).mkString("[", ",", "]")
-    case d: Double => if (d == d.floor && !d.isInfinite) d.toLong.toString else d.toString
+    // JSON has no NaN or infinity; a whole double prints as an integer
+    // only inside the Long range, where toLong is exact
+    case d: Double if d.isNaN || d.isInfinite => "null"
+    case d: Double if d == d.floor && d >= Long.MinValue.toDouble &&
+        d < -Long.MinValue.toDouble => d.toLong.toString
+    case f: Float if f.isNaN || f.isInfinite => "null"
     case b: Boolean => b.toString
     case n: java.lang.Number => n.toString
     case other => str(other.toString)

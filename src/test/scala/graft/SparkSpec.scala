@@ -24,7 +24,6 @@ object SparkSpec {
       .config("spark.sql.shuffle.partitions", "4")
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
-    graft.functions.GraftFunctions.register(s)
     s
   }
 }

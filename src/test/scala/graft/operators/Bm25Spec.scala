@@ -219,6 +219,12 @@ class Bm25Spec extends AnyFunSuite with Matchers with SparkSpec {
       Postings.fuzzyExpandTerms(vocab.toDF("term"),
         Seq((0L, "abc")).toDF("query_id", "term"), maxDist = 3)
     }
+    // the test session runs the engine's optimizer: an edit-distance
+    // filter carries the O(1) length guard (a range, not a local
+    // relation, which would be constant-folded before the rule shows)
+    spark.range(3).select(col("id").cast("string").as("term"))
+      .where(levenshtein(col("term"), lit("abc")) <= 1)
+      .queryExecution.optimizedPlan.toString should include("abs((length(")
   }
 
   test("bm25TopKFuzzy: a typo'd term scores exactly like the corrected " +

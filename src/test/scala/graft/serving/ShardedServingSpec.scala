@@ -147,4 +147,23 @@ class ShardedServingSpec extends AnyFunSuite with Matchers with SparkSpec {
     val result = SCTest.check(SCTest.Parameters.default.withMinSuccessfulTests(50), prop)
     assert(result.passed, result.status.toString)
   }
+
+  test("ServingJson emits every Double as JSON its own parser reads back") {
+    import org.scalacheck.{Gen, Prop, Test => SCTest}
+    // NaN and the infinities have no JSON form; whole doubles at or past
+    // 2^63 must not saturate through toLong
+    val doubleGen = Gen.oneOf(Gen.oneOf(Double.NaN, Double.PositiveInfinity,
+      Double.NegativeInfinity, 1.5e20, -1.5e20, -0.0, math.pow(2, 63),
+      -math.pow(2, 63), Double.MaxValue, Double.MinPositiveValue),
+      Gen.chooseNum(Double.MinValue, Double.MaxValue),
+      Gen.chooseNum(-1e6, 1e6).map(math.rint))
+    val prop = Prop.forAll(doubleGen) { d =>
+      val body = ServingJson.value(Map("k" -> d))
+      ServingJson.value(ServingJson.parse(body)) == body
+    }
+    val result = SCTest.check(SCTest.Parameters.default.withMinSuccessfulTests(200), prop)
+    assert(result.passed, result.status.toString)
+    ServingJson.value(Map("k" -> 1.5e20)) shouldBe """{"k":1.5E20}"""
+    ServingJson.value(Map("k" -> Double.NaN)) shouldBe """{"k":null}"""
+  }
 }

@@ -435,20 +435,7 @@ object ClassifyRows {
       // three correctly-rounded divisions
       s"""WITH ${nbPredCtes(nbWordTokCtes)},
          heur AS (
-           SELECT doc_id,
-             CASE
-               WHEN s_en >= s_de AND s_en >= s_fr AND s_en >= s_es AND s_en > 0 THEN 'en'
-               WHEN s_de >= s_fr AND s_de >= s_es AND s_de > 0 THEN 'de'
-               WHEN s_fr >= s_es AND s_fr > 0 THEN 'fr'
-               WHEN s_es > 0 THEN 'es'
-               ELSE 'und' END AS lang_pred
-           FROM (
-             SELECT doc_id,
-               len(regexp_extract_all(lower(text), '\\b(the|a|of|to|and|in|is)\\b')) AS s_en,
-               len(regexp_extract_all(lower(text), '\\b(der|die|das|und|ist|nicht)\\b')) AS s_de,
-               len(regexp_extract_all(lower(text), '\\b(le|les|et|est|que|une)\\b')) AS s_fr,
-               len(regexp_extract_all(lower(text), '\\b(el|los|y|es|por|una)\\b')) AS s_es
-             FROM documents WHERE doc_id % 2 = 1)),
+           ${langIdSql("documents WHERE doc_id % 2 = 1")}),
          pk AS (
            SELECT h.lang_pred AS a, p.label AS b, count(*) AS n
            FROM heur h JOIN pred p USING (doc_id) GROUP BY 1, 2),

@@ -20,15 +20,7 @@ object DedupRows {
       .map { case ((a, b), j) => s"min(($a * h + $b) % $p) AS s$j" }
       .mkString(",\n             ")
     val sigList = coeffs.indices.map(j => s"s$j").mkString("[", ", ", "]")
-    s"""dd AS (
-          SELECT doc_id,
-            list_distinct(list_transform(range(1, len(w)-1),
-              i -> w[i] || ' ' || w[i+1] || ' ' || w[i+2])) AS sh
-          FROM (
-            SELECT doc_id,
-              list_filter(string_split_regex(lower(text), '\\W+'), x -> x <> '') AS w
-            FROM documents WHERE doc_id % 5 = 0)
-          WHERE len(w) >= 3),
+    s"""${shingleDocsCte("", "documents WHERE doc_id % 5 = 0")},
         base AS (
           SELECT doc_id,
             CAST(('0x' || substr(md5(unnest(sh)), 1, 16)) AS UBIGINT) % $p AS h
@@ -199,32 +191,10 @@ object DedupRows {
         "doc_id", "text", n = 3, threshold = 0.02)
         .orderBy(col("id_a"), col("id_b")),
       // posting-list form with the same df-cap (2..100) as Dedup.ngramJaccardPairs
-      """WITH dd AS (
-           SELECT doc_id,
-             list_distinct(list_transform(range(1, len(w)-1),
-               i -> w[i] || ' ' || w[i+1] || ' ' || w[i+2])) AS sh
-           FROM (
-             SELECT doc_id,
-               list_filter(string_split_regex(lower(text), '\W+'), x -> x <> '') AS w
-             FROM documents WHERE doc_id % 5 = 0)
-           WHERE len(w) >= 3),
-         posting AS (
-           SELECT doc_id, len(sh) AS sh_size, unnest(sh) AS shingle FROM dd),
-         kept AS (
-           SELECT p.doc_id, p.sh_size, p.shingle FROM posting p
-           JOIN (SELECT shingle, count(*) AS df FROM posting GROUP BY 1) d
-             USING (shingle)
-           WHERE d.df BETWEEN 2 AND 100),
-         inter AS (
-           SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-             a.sh_size AS size_a, b.sh_size AS size_b, count(*) AS inter
-           FROM kept a JOIN kept b
-             ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-           GROUP BY 1, 2, 3, 4)
-         SELECT id_a, id_b,
-           CAST(inter AS DOUBLE) / (size_a + size_b - inter) AS jaccard
-         FROM inter
-         WHERE CAST(inter AS DOUBLE) / (size_a + size_b - inter) >= 0.02
+      s"""WITH ${shingleDocsCte("", "documents WHERE doc_id % 5 = 0")},
+         ${shingleInterCtes("")}
+         SELECT id_a, id_b, $jaccardSql AS jaccard
+         FROM inter WHERE $jaccardSql >= 0.02
          ORDER BY id_a, id_b"""),
 
     Row("q28_dedup_minhash", (s, d) => // oracle recomputes the md5 hash family
@@ -290,31 +260,10 @@ object DedupRows {
         .orderBy(col("id_a"), col("id_b"))
     },
       // q27's candidate CTE + exact levenshtein on each surviving pair
-      """WITH dd AS (
-           SELECT doc_id, text,
-             list_distinct(list_transform(range(1, len(w)-1),
-               i -> w[i] || ' ' || w[i+1] || ' ' || w[i+2])) AS sh
-           FROM (
-             SELECT doc_id, text,
-               list_filter(string_split_regex(lower(text), '\W+'), x -> x <> '') AS w
-             FROM documents WHERE doc_id % 5 = 0)
-           WHERE len(w) >= 3),
-         posting AS (
-           SELECT doc_id, len(sh) AS sh_size, unnest(sh) AS shingle FROM dd),
-         kept AS (
-           SELECT p.doc_id, p.sh_size, p.shingle FROM posting p
-           JOIN (SELECT shingle, count(*) AS df FROM posting GROUP BY 1) d
-             USING (shingle)
-           WHERE d.df BETWEEN 2 AND 100),
-         inter AS (
-           SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-             a.sh_size AS size_a, b.sh_size AS size_b, count(*) AS inter
-           FROM kept a JOIN kept b
-             ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-           GROUP BY 1, 2, 3, 4),
+      s"""WITH ${shingleDocsCte("", "documents WHERE doc_id % 5 = 0", " text,")},
+         ${shingleInterCtes("")},
          pairs AS (
-           SELECT id_a, id_b FROM inter
-           WHERE CAST(inter AS DOUBLE) / (size_a + size_b - inter) >= 0.02)
+           SELECT id_a, id_b FROM inter WHERE $jaccardSql >= 0.02)
          SELECT p.id_a, p.id_b,
            CAST(levenshtein(a.text, b.text) AS INT) AS edit_dist
          FROM pairs p

@@ -72,13 +72,9 @@ object HeavyRows {
       s"""WITH ${heavyDocsCte(300)},
          scored AS (
            SELECT lang, CAST(len(w) AS BIGINT) AS n_words,
-             (((5 * len(list_distinct(w)) + 3 * s_en) * 125
-               + least(len(w), 250) * len(w)) * 2000000
-               + 1250 * len(w)) // (2500 * len(w)) AS qm
+             ${qualityMicrosSql("s_en")} AS qm
            FROM (
-             SELECT lang,
-               list_filter(string_split_regex(lower(text), '\\W+'), x -> x <> '') AS w,
-               len(regexp_extract_all(lower(text), '\\b(the|a|of|to|and|in|is)\\b')) AS s_en
+             SELECT lang, $wordsSql AS w, ${langHits.head}
              FROM documents)
            WHERE len(w) > 0)
          SELECT lang, count(*) AS n_docs,

@@ -1,6 +1,114 @@
 package graft.battery
 
 object OracleSql {
+  /** The word tokenizer over `text` ([[graft.functions.TextFunctions.words]]):
+    * lower-cased, split on `\W+`, empty strings dropped.
+    */
+  private[battery] val wordsSql: String =
+    """list_filter(string_split_regex(lower(text), '\W+'), x -> x <> '')"""
+
+  /** Whitespace-split tokens of `expr`, empty strings dropped. */
+  private[battery] def wsTokensSql(expr: String): String =
+    s"list_filter(string_split_regex($expr, '\\s+'), x -> x <> '')"
+
+  /** The q33 stopword-hit features over `text`, `s_en` first. */
+  private[battery] val langHits: Seq[String] = Seq(
+    "en" -> "the|a|of|to|and|in|is", "de" -> "der|die|das|und|ist|nicht",
+    "fr" -> "le|les|et|est|que|une", "es" -> "el|los|y|es|por|una")
+    .map { case (l, ws) =>
+      s"len(regexp_extract_all(lower(text), '\\b($ws)\\b')) AS s_$l" }
+
+  private[battery] val langHitsSql: String = langHits.mkString(",\n             ")
+
+  /** The q33 decision over the hit features: the most hits wins, ties go
+    * en > de > fr > es, no hit at all is `und`.
+    */
+  private[battery] val langPredSql: String =
+    """CASE
+             WHEN s_en >= s_de AND s_en >= s_fr AND s_en >= s_es AND s_en > 0 THEN 'en'
+             WHEN s_de >= s_fr AND s_de >= s_es AND s_de > 0 THEN 'de'
+             WHEN s_fr >= s_es AND s_fr > 0 THEN 'fr'
+             WHEN s_es > 0 THEN 'es'
+             ELSE 'und' END AS lang_pred"""
+
+  /** `SELECT doc_id, lang_pred` of the q33 language ID over `source`. */
+  private[battery] def langIdSql(source: String): String =
+    s"""SELECT doc_id,
+           $langPredSql
+         FROM (
+           SELECT doc_id,
+             $langHitsSql
+           FROM $source)"""
+
+  /** The q34 quality score in integer micros over `w`, with `stop` as the
+    * stopword-hit term (exact fixed-point arithmetic in both engines).
+    */
+  private[battery] def qualityMicrosSql(stop: String): String =
+    s"""(((5 * len(list_distinct(w)) + 3 * $stop) * 125
+                 + least(len(w), 250) * len(w)) * 2000000
+                 + 1250 * len(w)) // (2500 * len(w))"""
+
+  /** [[qualityMicrosSql]] as the `quality` double. */
+  private[battery] def qualitySql(stop: String = "(s_en)"): String =
+    s"""CAST(${qualityMicrosSql(stop)} AS DOUBLE)
+                 / 1e6 AS quality"""
+
+  /** Distinct word 3-shingles of the token list `w`. */
+  private[battery] val shinglesSql: String =
+    """list_distinct(list_transform(range(1, len(w)-1),
+               i -> w[i] || ' ' || w[i+1] || ' ' || w[i+2]))"""
+
+  /** `${p}dd(doc_id, [carry,] sh)`: the 3-shingle sets of `source`'s
+    * documents with at least three words. `carry` is `""` or a column list
+    * with a leading space and a trailing comma.
+    */
+  private[battery] def shingleDocsCte(p: String, source: String,
+      carry: String = ""): String =
+    s"""${p}dd AS (
+           SELECT doc_id,$carry
+             $shinglesSql AS sh
+           FROM (
+             SELECT doc_id,$carry
+               $wordsSql AS w
+             FROM $source)
+           WHERE len(w) >= 3)"""
+
+  /** The df-capped [2,100] shingle postings of `${p}dd` and their pair
+    * intersections, ending in `${p}inter(id_a, id_b, size_a, size_b, inter)`
+        * ([[graft.operators.Dedup.ngramJaccardPairs]]'s candidate chain). A
+    * `tight` postings CTE keeps its SELECT on the opening line, as the
+    * clean-chain replays spell it.
+    */
+  private[battery] def shingleInterCtes(p: String, tight: Boolean = false): String =
+    s"""${p}posting AS ${if (tight) "(" else "(\n           "}SELECT doc_id, len(sh) AS sh_size, unnest(sh) AS shingle FROM ${p}dd),
+         ${p}kept AS (
+           SELECT p.doc_id, p.sh_size, p.shingle FROM ${p}posting p
+           JOIN (SELECT shingle, count(*) AS df FROM ${p}posting GROUP BY 1) d
+             USING (shingle)
+           WHERE d.df BETWEEN 2 AND 100),
+         ${p}inter AS (
+           SELECT a.doc_id AS id_a, b.doc_id AS id_b,
+             a.sh_size AS size_a, b.sh_size AS size_b, count(*) AS inter
+           FROM ${p}kept a JOIN ${p}kept b
+             ON a.shingle = b.shingle AND a.doc_id < b.doc_id
+           GROUP BY 1, 2, 3, 4)"""
+
+  /** The Jaccard similarity of an `inter` row. */
+  private[battery] val jaccardSql: String =
+    "CAST(inter AS DOUBLE) / (size_a + size_b - inter)"
+
+  /** Undirected `${p}edges` over `${p}pairs(id_a, id_b)` and the recursive
+    * min-label closure `${p}cc(id, comp)`; callers prepend `WITH RECURSIVE`
+    * and take `min(comp)` per id.
+    */
+  private[battery] def closureCtes(p: String): String =
+    s"""${p}edges AS (
+           SELECT id_a AS src, id_b AS dst FROM ${p}pairs
+           UNION ALL SELECT id_b, id_a FROM ${p}pairs),
+         ${p}cc AS (
+           SELECT src AS id, src AS comp FROM ${p}edges
+           UNION
+           SELECT e.src AS id, c.comp FROM ${p}edges e JOIN ${p}cc c ON e.dst = c.id)"""
   /** DuckDB replay of [[graft.functions.Bpe]] — merge rules embedded as
     * VALUES from the SAME Scala constant, applied in rank order with
     * `replace()` to fixpoint per rank (a recursive CTE over the DISTINCT
@@ -57,38 +165,11 @@ object OracleSql {
     * Ends in `${p}cc(id, comp)`.
     */
   private[battery] def nearDupCcCtesOver(source: String, p: String): String =
-    s"""${p}dd AS (
-           SELECT doc_id,
-             list_distinct(list_transform(range(1, len(w)-1),
-               i -> w[i] || ' ' || w[i+1] || ' ' || w[i+2])) AS sh
-           FROM (
-             SELECT doc_id,
-               list_filter(string_split_regex(lower(text), '\\W+'), x -> x <> '') AS w
-             FROM $source)
-           WHERE len(w) >= 3),
-         ${p}posting AS (
-           SELECT doc_id, len(sh) AS sh_size, unnest(sh) AS shingle FROM ${p}dd),
-         ${p}kept AS (
-           SELECT p.doc_id, p.sh_size, p.shingle FROM ${p}posting p
-           JOIN (SELECT shingle, count(*) AS df FROM ${p}posting GROUP BY 1) d
-             USING (shingle)
-           WHERE d.df BETWEEN 2 AND 100),
-         ${p}inter AS (
-           SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-             a.sh_size AS size_a, b.sh_size AS size_b, count(*) AS inter
-           FROM ${p}kept a JOIN ${p}kept b
-             ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-           GROUP BY 1, 2, 3, 4),
+    s"""${shingleDocsCte(p, source)},
+         ${shingleInterCtes(p)},
          ${p}pairs AS (
-           SELECT id_a, id_b FROM ${p}inter
-           WHERE CAST(inter AS DOUBLE) / (size_a + size_b - inter) >= 0.02),
-         ${p}edges AS (
-           SELECT id_a AS src, id_b AS dst FROM ${p}pairs
-           UNION ALL SELECT id_b, id_a FROM ${p}pairs),
-         ${p}cc AS (
-           SELECT src AS id, src AS comp FROM ${p}edges
-           UNION
-           SELECT e.src AS id, c.comp FROM ${p}edges e JOIN ${p}cc c ON e.dst = c.id)"""
+           SELECT id_a, id_b FROM ${p}inter WHERE $jaccardSql >= 0.02),
+         ${closureCtes(p)}"""
 
   /** DuckDB md5 unit-hash bucket fold of a SQL expression — the SQL twin
     * of `floor(Sampling.unitHash(x, salt) * buckets)` cast to INTEGER,

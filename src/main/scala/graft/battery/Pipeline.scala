@@ -67,62 +67,46 @@ object PipelineRows {
          LEFT JOIN __vocab v ON v.tok = x.t)"""
   }
 
-  /** [[graft.pipelines.TrainingData.clean]]-with-defaults survivor CTEs,
-    * shared VERBATIM by the q90 and q199 oracles (the shared-helper
-    * discipline: the gate chain cannot drift between the two replays).
-    * Normalize-dedup min-id, language-ID scores, the exact fixed-point
-    * quality arithmetic, the en/0.26 gate, 3-shingle df-capped
-    * Jaccard-0.5 near-dup removal. Ends in `surv(doc_id, text)`.
+    /** [[graft.pipelines.TrainingData.clean]]-with-defaults gate chain, shared
+    * VERBATIM by the q45, q90, q168 and q199 oracles (the shared-helper
+    * discipline: the gate chain cannot drift between the replays).
+    * Normalize-dedup min-id `uniq`, language-ID scores and the exact
+    * fixed-point quality in `scored` (plus `scoredExtra`: `""` or a column
+    * with a leading space and a trailing comma), the en/0.26 `gated`, and
+    * the 3-shingle df-capped pair chain ending in `inter`.
     */
-  private def cleanSurvivorCtes: String =
-    """uniq AS (
+  private def cleanInterCtes(scoredExtra: String): String =
+    s"""uniq AS (
            SELECT doc_id, text FROM documents
            WHERE doc_id IN (
              SELECT min(doc_id) FROM documents
-             GROUP BY regexp_replace(lower(text), '\s+', ' ', 'g'))),
+             GROUP BY regexp_replace(lower(text), '\\s+', ' ', 'g'))),
          feat AS (
            SELECT doc_id, text,
-             list_filter(string_split_regex(lower(text), '\W+'), x -> x <> '') AS w,
-             len(regexp_extract_all(lower(text), '\b(the|a|of|to|and|in|is)\b')) AS s_en,
-             len(regexp_extract_all(lower(text), '\b(der|die|das|und|ist|nicht)\b')) AS s_de,
-             len(regexp_extract_all(lower(text), '\b(le|les|et|est|que|une)\b')) AS s_fr,
-             len(regexp_extract_all(lower(text), '\b(el|los|y|es|por|una)\b')) AS s_es
+             $wordsSql AS w,
+             $langHitsSql
            FROM uniq),
          scored AS (
            SELECT doc_id, text, w,
-             CASE
-               WHEN s_en >= s_de AND s_en >= s_fr AND s_en >= s_es AND s_en > 0 THEN 'en'
-               WHEN s_de >= s_fr AND s_de >= s_es AND s_de > 0 THEN 'de'
-               WHEN s_fr >= s_es AND s_fr > 0 THEN 'fr'
-               WHEN s_es > 0 THEN 'es'
-               ELSE 'und' END AS lang_pred,
-             CAST((((5 * len(list_distinct(w)) + 3 * (s_en)) * 125
-                 + least(len(w), 250) * len(w)) * 2000000
-                 + 1250 * len(w)) // (2500 * len(w)) AS DOUBLE)
-                 / 1e6 AS quality
+             $langPredSql,$scoredExtra
+             ${qualitySql()}
            FROM feat WHERE len(w) > 0),
          gated AS (
            SELECT * FROM scored WHERE lang_pred = 'en' AND quality >= 0.26),
          dd AS (
-           SELECT doc_id,
-             list_distinct(list_transform(range(1, len(w)-1),
-               i -> w[i] || ' ' || w[i+1] || ' ' || w[i+2])) AS sh
+           SELECT doc_id, $shinglesSql AS sh
            FROM gated WHERE len(w) >= 3),
-         posting AS (SELECT doc_id, len(sh) AS sh_size, unnest(sh) AS shingle FROM dd),
-         kept AS (
-           SELECT p.doc_id, p.sh_size, p.shingle FROM posting p
-           JOIN (SELECT shingle, count(*) AS df FROM posting GROUP BY 1) d
-             USING (shingle)
-           WHERE d.df BETWEEN 2 AND 100),
-         inter AS (
-           SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-             a.sh_size AS size_a, b.sh_size AS size_b, count(*) AS inter
-           FROM kept a JOIN kept b
-             ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-           GROUP BY 1, 2, 3, 4),
+         ${shingleInterCtes("", tight = true)}"""
+
+  /** [[cleanInterCtes]] plus the Jaccard-0.5 near-dup drops `removed(id_b)`. */
+  private def cleanRemovedCtes(scoredExtra: String): String =
+    s"""${cleanInterCtes(scoredExtra)},
          removed AS (
-           SELECT DISTINCT id_b FROM inter
-           WHERE CAST(inter AS DOUBLE) / (size_a + size_b - inter) >= 0.5),
+           SELECT DISTINCT id_b FROM inter WHERE $jaccardSql >= 0.5)"""
+
+  /** [[cleanRemovedCtes]] ending in the survivors `surv(doc_id, text)`. */
+  private def cleanSurvivorCtes: String =
+    s"""${cleanRemovedCtes("")},
          surv AS (
            SELECT g.doc_id, g.text FROM gated g
            WHERE g.doc_id NOT IN (SELECT id_b FROM removed))"""
@@ -450,57 +434,9 @@ object PipelineRows {
       // composed pipeline twin: exact dedup -> lang/quality gates -> df-capped
       // n-gram near-dup removal (drop larger id of each >= 0.5 pair) -> tokens
       s"""WITH RECURSIVE $bpeOracleCtes,
-         uniq AS (
-           SELECT doc_id, text FROM documents
-           WHERE doc_id IN (
-             SELECT min(doc_id) FROM documents
-             GROUP BY regexp_replace(lower(text), '\\s+', ' ', 'g'))),
-         feat AS (
-           SELECT doc_id, text,
-             list_filter(string_split_regex(lower(text), '\\W+'), x -> x <> '') AS w,
-             len(regexp_extract_all(lower(text), '\\b(the|a|of|to|and|in|is)\\b')) AS s_en,
-             len(regexp_extract_all(lower(text), '\\b(der|die|das|und|ist|nicht)\\b')) AS s_de,
-             len(regexp_extract_all(lower(text), '\\b(le|les|et|est|que|une)\\b')) AS s_fr,
-             len(regexp_extract_all(lower(text), '\\b(el|los|y|es|por|una)\\b')) AS s_es
-           FROM uniq),
-         scored AS (
-           SELECT doc_id, text, w,
-             CASE
-               WHEN s_en >= s_de AND s_en >= s_fr AND s_en >= s_es AND s_en > 0 THEN 'en'
-               WHEN s_de >= s_fr AND s_de >= s_es AND s_de > 0 THEN 'de'
-               WHEN s_fr >= s_es AND s_fr > 0 THEN 'fr'
-               WHEN s_es > 0 THEN 'es'
-               ELSE 'und' END AS lang_pred,
-             CAST(len(w) AS BIGINT) AS n_words,
-             CAST((((5 * len(list_distinct(w)) + 3 * (s_en)) * 125
-                 + least(len(w), 250) * len(w)) * 2000000
-                 + 1250 * len(w)) // (2500 * len(w)) AS DOUBLE)
-                 / 1e6 AS quality
-           FROM feat WHERE len(w) > 0),
-         gated AS (
-           SELECT * FROM scored WHERE lang_pred = 'en' AND quality >= 0.26),
-         dd AS (
-           SELECT doc_id,
-             list_distinct(list_transform(range(1, len(w)-1),
-               i -> w[i] || ' ' || w[i+1] || ' ' || w[i+2])) AS sh
-           FROM gated WHERE len(w) >= 3),
-         posting AS (SELECT doc_id, len(sh) AS sh_size, unnest(sh) AS shingle FROM dd),
-         kept AS (
-           SELECT p.doc_id, p.sh_size, p.shingle FROM posting p
-           JOIN (SELECT shingle, count(*) AS df FROM posting GROUP BY 1) d
-             USING (shingle)
-           WHERE d.df BETWEEN 2 AND 100),
-         inter AS (
-           SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-             a.sh_size AS size_a, b.sh_size AS size_b, count(*) AS inter
-           FROM kept a JOIN kept b
-             ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-           GROUP BY 1, 2, 3, 4),
-         removed AS (
-           SELECT DISTINCT id_b FROM inter
-           WHERE CAST(inter AS DOUBLE) / (size_a + size_b - inter) >= 0.5)
+         ${cleanRemovedCtes(" CAST(len(w) AS BIGINT) AS n_words,")}
          SELECT g.doc_id AS doc_id, g.lang_pred, g.n_words, g.quality,
-           CAST(len(list_filter(string_split_regex(g.text, '\\s+'), x -> x <> '')) AS BIGINT) AS ws_tokens,
+           CAST(len(${wsTokensSql("g.text")}) AS BIGINT) AS ws_tokens,
            CAST(coalesce(c.bpe_tokens, 0) AS BIGINT) AS bpe_tokens
          FROM gated g LEFT JOIN __bpe_doc_counts c ON g.doc_id = c.doc_id
          WHERE g.doc_id NOT IN (SELECT id_b FROM removed)
@@ -541,21 +477,8 @@ object PipelineRows {
         .orderBy(col("lang_pred")),
       // language via the q33 marker battery, membership via the q76 unit
       // hash; per-stratum fractions are binary-exact doubles
-      """WITH lang AS (
-           SELECT doc_id,
-             CASE
-               WHEN s_en >= s_de AND s_en >= s_fr AND s_en >= s_es AND s_en > 0 THEN 'en'
-               WHEN s_de >= s_fr AND s_de >= s_es AND s_de > 0 THEN 'de'
-               WHEN s_fr >= s_es AND s_fr > 0 THEN 'fr'
-               WHEN s_es > 0 THEN 'es'
-               ELSE 'und' END AS lang_pred
-           FROM (
-             SELECT doc_id,
-               len(regexp_extract_all(lower(text), '\b(the|a|of|to|and|in|is)\b')) AS s_en,
-               len(regexp_extract_all(lower(text), '\b(der|die|das|und|ist|nicht)\b')) AS s_de,
-               len(regexp_extract_all(lower(text), '\b(le|les|et|est|que|une)\b')) AS s_fr,
-               len(regexp_extract_all(lower(text), '\b(el|los|y|es|por|una)\b')) AS s_es
-             FROM documents))
+      s"""WITH lang AS (
+           ${langIdSql("documents")})
          SELECT lang_pred, count(*) AS cnt, CAST(sum(doc_id) AS BIGINT) AS id_sum
          FROM lang
          WHERE CAST(('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 8))
@@ -1394,55 +1317,10 @@ object PipelineRows {
       // gate — exact-dup complement, empty-token docs, lang/quality
       // first-fail split, and the greedy near-dup drops with their
       // min-partner keeper in the reason
-      """WITH uniq AS (
-           SELECT doc_id, text FROM documents
-           WHERE doc_id IN (
-             SELECT min(doc_id) FROM documents
-             GROUP BY regexp_replace(lower(text), '\s+', ' ', 'g'))),
-         feat AS (
-           SELECT doc_id, text,
-             list_filter(string_split_regex(lower(text), '\W+'), x -> x <> '') AS w,
-             len(regexp_extract_all(lower(text), '\b(the|a|of|to|and|in|is)\b')) AS s_en,
-             len(regexp_extract_all(lower(text), '\b(der|die|das|und|ist|nicht)\b')) AS s_de,
-             len(regexp_extract_all(lower(text), '\b(le|les|et|est|que|une)\b')) AS s_fr,
-             len(regexp_extract_all(lower(text), '\b(el|los|y|es|por|una)\b')) AS s_es
-           FROM uniq),
-         scored AS (
-           SELECT doc_id, text, w,
-             CASE
-               WHEN s_en >= s_de AND s_en >= s_fr AND s_en >= s_es AND s_en > 0 THEN 'en'
-               WHEN s_de >= s_fr AND s_de >= s_es AND s_de > 0 THEN 'de'
-               WHEN s_fr >= s_es AND s_fr > 0 THEN 'fr'
-               WHEN s_es > 0 THEN 'es'
-               ELSE 'und' END AS lang_pred,
-             CAST((((5 * len(list_distinct(w)) + 3 * (s_en)) * 125
-                 + least(len(w), 250) * len(w)) * 2000000
-                 + 1250 * len(w)) // (2500 * len(w)) AS DOUBLE)
-                 / 1e6 AS quality
-           FROM feat WHERE len(w) > 0),
-         gated AS (
-           SELECT * FROM scored WHERE lang_pred = 'en' AND quality >= 0.26),
-         dd AS (
-           SELECT doc_id,
-             list_distinct(list_transform(range(1, len(w)-1),
-               i -> w[i] || ' ' || w[i+1] || ' ' || w[i+2])) AS sh
-           FROM gated WHERE len(w) >= 3),
-         posting AS (SELECT doc_id, len(sh) AS sh_size, unnest(sh) AS shingle FROM dd),
-         kept AS (
-           SELECT p.doc_id, p.sh_size, p.shingle FROM posting p
-           JOIN (SELECT shingle, count(*) AS df FROM posting GROUP BY 1) d
-             USING (shingle)
-           WHERE d.df BETWEEN 2 AND 100),
-         inter AS (
-           SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-             a.sh_size AS size_a, b.sh_size AS size_b, count(*) AS inter
-           FROM kept a JOIN kept b
-             ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-           GROUP BY 1, 2, 3, 4),
+      s"""WITH ${cleanInterCtes("")},
          nd AS (
            SELECT id_b AS doc_id, min(id_a) AS of_id FROM inter
-           WHERE CAST(inter AS DOUBLE) / (size_a + size_b - inter) >= 0.5
-           GROUP BY id_b)
+           WHERE $jaccardSql >= 0.5 GROUP BY id_b)
          SELECT doc_id, stage, reason FROM (
            SELECT d.doc_id, 'exact_dedup' AS stage, 'duplicate_text' AS reason
              FROM documents d

@@ -383,34 +383,16 @@ object TextRows {
     Row("q33_lang_id", (s, d) =>
       TextAnalysis.languageId(t(s, d, "documents"), "doc_id", "text")
         .orderBy(col("doc_id")),
-      """SELECT doc_id,
-           CASE
-             WHEN s_en >= s_de AND s_en >= s_fr AND s_en >= s_es AND s_en > 0 THEN 'en'
-             WHEN s_de >= s_fr AND s_de >= s_es AND s_de > 0 THEN 'de'
-             WHEN s_fr >= s_es AND s_fr > 0 THEN 'fr'
-             WHEN s_es > 0 THEN 'es'
-             ELSE 'und' END AS lang_pred
-         FROM (
-           SELECT doc_id,
-             len(regexp_extract_all(lower(text), '\b(the|a|of|to|and|in|is)\b')) AS s_en,
-             len(regexp_extract_all(lower(text), '\b(der|die|das|und|ist|nicht)\b')) AS s_de,
-             len(regexp_extract_all(lower(text), '\b(le|les|et|est|que|une)\b')) AS s_fr,
-             len(regexp_extract_all(lower(text), '\b(el|los|y|es|por|una)\b')) AS s_es
-           FROM documents)
+      s"""${langIdSql("documents")}
          ORDER BY doc_id"""),
 
     Row("q34_quality", (s, d) =>
       TextAnalysis.quality(t(s, d, "documents"), "doc_id", "text")
         .orderBy(col("doc_id")),
-      """SELECT doc_id, CAST(len(w) AS BIGINT) AS n_words,
-           CAST((((5 * len(list_distinct(w)) + 3 * (s_en)) * 125
-                 + least(len(w), 250) * len(w)) * 2000000
-                 + 1250 * len(w)) // (2500 * len(w)) AS DOUBLE)
-                 / 1e6 AS quality
+      s"""SELECT doc_id, CAST(len(w) AS BIGINT) AS n_words,
+           ${qualitySql()}
          FROM (
-           SELECT doc_id,
-             list_filter(string_split_regex(lower(text), '\W+'), x -> x <> '') AS w,
-             len(regexp_extract_all(lower(text), '\b(the|a|of|to|and|in|is)\b')) AS s_en
+           SELECT doc_id, $wordsSql AS w, ${langHits.head}
            FROM documents)
          WHERE len(w) > 0 ORDER BY doc_id"""),
 
@@ -432,28 +414,15 @@ object TextRows {
         .orderBy(col("doc_id")),
       // lang decision duplicated from q33; stopword hits selected BY the
       // decided language, mirroring TextFunctions.qualityScoreByLang
-      """WITH feat AS (
+      s"""WITH feat AS (
            SELECT doc_id,
-             list_filter(string_split_regex(lower(text), '\W+'), x -> x <> '') AS w,
-             len(regexp_extract_all(lower(text), '\b(the|a|of|to|and|in|is)\b')) AS s_en,
-             len(regexp_extract_all(lower(text), '\b(der|die|das|und|ist|nicht)\b')) AS s_de,
-             len(regexp_extract_all(lower(text), '\b(le|les|et|est|que|une)\b')) AS s_fr,
-             len(regexp_extract_all(lower(text), '\b(el|los|y|es|por|una)\b')) AS s_es
+             $wordsSql AS w,
+             $langHitsSql
            FROM documents),
          langd AS (
-           SELECT *,
-             CASE
-               WHEN s_en >= s_de AND s_en >= s_fr AND s_en >= s_es AND s_en > 0 THEN 'en'
-               WHEN s_de >= s_fr AND s_de >= s_es AND s_de > 0 THEN 'de'
-               WHEN s_fr >= s_es AND s_fr > 0 THEN 'fr'
-               WHEN s_es > 0 THEN 'es'
-               ELSE 'und' END AS lang_pred
-           FROM feat WHERE len(w) > 0)
+           SELECT *, $langPredSql FROM feat WHERE len(w) > 0)
          SELECT doc_id, lang_pred, CAST(len(w) AS BIGINT) AS n_words,
-           CAST((((5 * len(list_distinct(w)) + 3 * (CASE lang_pred WHEN 'en' THEN s_en WHEN 'de' THEN s_de WHEN 'fr' THEN s_fr WHEN 'es' THEN s_es ELSE 0 END)) * 125
-                 + least(len(w), 250) * len(w)) * 2000000
-                 + 1250 * len(w)) // (2500 * len(w)) AS DOUBLE)
-                 / 1e6 AS quality
+           ${qualitySql("(CASE lang_pred WHEN 'en' THEN s_en WHEN 'de' THEN s_de WHEN 'fr' THEN s_fr WHEN 'es' THEN s_es ELSE 0 END)")}
          FROM langd ORDER BY doc_id"""),
 
     // corpus token-frequency audit over the REAL merges-table BPE
@@ -1478,16 +1447,10 @@ object TextRows {
     },
       // quality expression mirrors q34; quantile_cont ≡ Spark's exact
       // interpolated percentile (parity established by q55)
-      """WITH scored AS (
-           SELECT doc_id, lang,
-             CAST((((5 * len(list_distinct(w)) + 3 * (s_en)) * 125
-                 + least(len(w), 250) * len(w)) * 2000000
-                 + 1250 * len(w)) // (2500 * len(w)) AS DOUBLE)
-                 / 1e6 AS quality
+      s"""WITH scored AS (
+           SELECT doc_id, lang, ${qualitySql()}
            FROM (
-             SELECT doc_id, lang,
-               list_filter(string_split_regex(lower(text), '\W+'), x -> x <> '') AS w,
-               len(regexp_extract_all(lower(text), '\b(the|a|of|to|and|in|is)\b')) AS s_en
+             SELECT doc_id, lang, $wordsSql AS w, ${langHits.head}
              FROM documents)
            WHERE len(w) > 0),
          thr AS (

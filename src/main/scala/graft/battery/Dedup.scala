@@ -103,10 +103,7 @@ object DedupRows {
     * cancels.
     */
   private val q104Oracle: String =
-    """WITH toks AS (
-         SELECT doc_id,
-           list_filter(string_split_regex(lower(text), '\W+'), x -> x <> '') AS w
-         FROM documents),
+    s"""WITH $toksCte,
        grams AS (
          SELECT doc_id, i AS pos,
            substr(md5(array_to_string(w[i:i+7], ' ')), 1, 16) AS fp
@@ -137,7 +134,7 @@ object DedupRows {
     s"""h AS (
           SELECT doc_id,
             CAST(('0x' || substr(md5(unnest(
-              list_filter(string_split_regex(lower(text), '\\W+'), x -> x <> ''))), 1, 16))
+              $wordsSql)), 1, 16))
               AS UBIGINT) AS h
           FROM documents),
         c AS (
@@ -297,9 +294,9 @@ object DedupRows {
       // k=3, win=4: grams i in [1, len(w)-2]; windows j in [1, len(gh)-3],
       // gh[j:j+3] is the inclusive 4-element slice; fixed-width lowercase hex
       // makes list_min == numeric min, matching Spark's array_min
-      """WITH t AS (
+      s"""WITH t AS (
            SELECT doc_id,
-             list_filter(string_split_regex(lower(text), '\W+'), x -> x <> '') AS w
+             $wordsSql AS w
            FROM documents),
          g AS (
            SELECT doc_id, list_transform(range(1, len(w) - 1),
@@ -318,13 +315,13 @@ object DedupRows {
         n = 3, minDf = 5)
         .orderBy(col("df").desc, col("shingle")),
       // distinct shingles per doc (as in q27's dd CTE), df = document count
-      """WITH dd AS (
+      s"""WITH dd AS (
            SELECT doc_id,
              list_distinct(list_transform(range(1, len(w) - 1),
                i -> w[i] || ' ' || w[i+1] || ' ' || w[i+2])) AS sh
            FROM (
              SELECT doc_id,
-               list_filter(string_split_regex(lower(text), '\W+'), x -> x <> '') AS w
+               $wordsSql AS w
              FROM documents)
            WHERE len(w) >= 3)
          SELECT shingle, count(*) AS df

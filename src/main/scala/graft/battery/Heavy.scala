@@ -120,7 +120,7 @@ object HeavyRows {
       s"""WITH ${heavyDocsCte(300)},
          tok AS (
            SELECT lang, source,
-             unnest(list_filter(string_split_regex(lower(text), '\\W+'), x -> x <> '')) AS term
+             unnest($wordsSql) AS term
            FROM documents)
          SELECT lang, source, count(*) AS n_tokens,
            CAST(count(DISTINCT term) AS BIGINT) AS n_terms

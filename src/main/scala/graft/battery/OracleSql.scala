@@ -7,6 +7,13 @@ object OracleSql {
   private[battery] val wordsSql: String =
     """list_filter(string_split_regex(lower(text), '\W+'), x -> x <> '')"""
 
+    /** `toks(doc_id, w)`: every document's [[wordsSql]] tokens. */
+  private[battery] val toksCte: String =
+    s"""toks AS (
+         SELECT doc_id,
+           $wordsSql AS w
+         FROM documents)"""
+
   /** Whitespace-split tokens of `expr`, empty strings dropped. */
   private[battery] def wsTokensSql(expr: String): String =
     s"list_filter(string_split_regex($expr, '\\s+'), x -> x <> '')"
@@ -181,25 +188,40 @@ object OracleSql {
     s"CAST(floor(CAST(('0x' || substr(md5($expr || '$salt'), 1, 8)) " +
       s"AS UBIGINT) / 4294967296.0 * $buckets) AS INTEGER)"
 
+    /** BM25 corpus statistics `stats(n, avgdl)` over `toks`. */
+  private[battery] val bm25StatsCte: String =
+    """stats AS (
+         SELECT CAST(count(*) AS DOUBLE) AS n,
+           avg(CAST(len(w) AS DOUBLE)) AS avgdl
+         FROM toks)"""
+
+  /** The BM25 term rows `corpus(doc_id, doc_len, term)` over `toks`. */
+  private[battery] val bm25CorpusCte: String =
+    """corpus AS (
+         SELECT doc_id, CAST(len(w) AS BIGINT) AS doc_len, unnest(w) AS term
+         FROM toks)"""
+
+  /** The BM25 term score (k1 = 1.2, b = 0.75) of tf row `tf` with df row
+    * `df`, rounded to 6 decimals and carried as exact integer micros `sm`.
+    */
+  private[battery] def bm25MicrosSql(tf: String, df: String): String =
+    s"""CAST(round(round(
+             ln((stats.n - $df.df + 0.5) / ($df.df + 0.5) + 1.0)
+               * ($tf.tf * 2.2)
+               / ($tf.tf + 1.2 * (0.25 + 0.75 * $tf.doc_len / stats.avgdl)),
+             6) * 1000000) AS BIGINT) AS sm"""
+
   /** The q134 scorer scaffold with a caller-supplied `q` CTE body
     * (query_id, term) — the fuzzy battery rows swap in a
     * vocabulary-expanded term set while every scoring CTE stays
     * byte-identical to the exact path's.
     */
   private[battery] def bm25RankedCtesWith(qBody: String): String =
-    s"""toks AS (
-         SELECT doc_id,
-           list_filter(string_split_regex(lower(text), '\\W+'), x -> x <> '') AS w
-         FROM documents),
-       stats AS (
-         SELECT CAST(count(*) AS DOUBLE) AS n,
-           avg(CAST(len(w) AS DOUBLE)) AS avgdl
-         FROM toks),
+    s"""$toksCte,
+       $bm25StatsCte,
        q AS (
          $qBody),
-       corpus AS (
-         SELECT doc_id, CAST(len(w) AS BIGINT) AS doc_len, unnest(w) AS term
-         FROM toks),
+       $bm25CorpusCte,
        tf AS (
          SELECT doc_id, doc_len, term, count(*) AS tf
          FROM corpus
@@ -208,11 +230,7 @@ object OracleSql {
        df AS (SELECT term, count(*) AS df FROM tf GROUP BY term),
        sm AS (
          SELECT tf.term, tf.doc_id,
-           CAST(round(round(
-             ln((stats.n - df.df + 0.5) / (df.df + 0.5) + 1.0)
-               * (tf.tf * 2.2)
-               / (tf.tf + 1.2 * (0.25 + 0.75 * tf.doc_len / stats.avgdl)),
-             6) * 1000000) AS BIGINT) AS sm
+           ${bm25MicrosSql("tf", "df")}
          FROM tf JOIN df USING (term) CROSS JOIN stats),
        pairs AS (
          SELECT q.query_id, sm.doc_id, sum(sm.sm) AS m

@@ -498,8 +498,8 @@ object PipelineRows {
         n = 3, threshold = 0.8, excludeSelfIds = true)
         .orderBy(col("corpus_id"), col("probe_id"))
     },
-      """WITH t AS (
-           SELECT doc_id, list_filter(string_split_regex(lower(text), '\W+'), x -> x <> '') AS w
+      s"""WITH t AS (
+           SELECT doc_id, $wordsSql AS w
            FROM documents),
          sh AS (
            SELECT doc_id, list_distinct(list_transform(range(1, len(w)-1),

@@ -9,6 +9,7 @@ import graft.model.Lineitem
 import graft.streaming.Topologies
 
 import Fixtures._
+import OracleSql._
 
 object RelationalRows {
   private def q14JoinMultiway(s: SparkSession, dir: String): DataFrame = {
@@ -645,14 +646,14 @@ object RelationalRows {
           array_max(transform(col("ws"), w => length(w))).cast("long").as("max_word_len"),
           concat_ws(",", slice(sort_array(col("ws")), 1, 3)).as("first3_sorted"))
         .orderBy(col("doc_id")),
-      """SELECT doc_id,
+      s"""SELECT doc_id,
            CAST(len(list_filter(w, x -> len(x) > 4)) AS BIGINT) AS n_long_words,
            CAST(list_sum(list_transform(w, x -> len(x))) AS BIGINT) AS total_chars,
            CAST(list_max(list_transform(w, x -> len(x))) AS BIGINT) AS max_word_len,
            array_to_string(list_sort(w)[1:3], ',') AS first3_sorted
          FROM (
            SELECT doc_id,
-             list_filter(string_split_regex(lower(text), '\W+'), x -> x <> '') AS w
+             $wordsSql AS w
            FROM documents)
          WHERE len(w) > 0 ORDER BY doc_id"""),
 

@@ -38,14 +38,28 @@ object RetrievalRows {
       .groupBy(col("query_id"), col("doc_id"))
       .agg(count(lit(1)).as("grade"))
 
+    /** The more-like-this seed keywords (q157, q159, q162): each
+    * `doc_id % 50 = 0` seed's terms ranked by tf-idf micros over the
+    * corpus `tf`/`kdf`/`n`, ending in `kw(doc_id, term, krank)`.
+    */
+  private val mltKeywordCtes: String =
+    """ksm AS (
+         SELECT tf.doc_id, tf.term,
+           CAST(round(round(ln(n.n / kdf.df), 6) * tf.tf * 1000000)
+             AS BIGINT) AS sm
+         FROM tf JOIN kdf USING (term) CROSS JOIN n
+         WHERE tf.doc_id % 50 = 0),
+       kw AS (
+         SELECT doc_id, term,
+           row_number() OVER (PARTITION BY doc_id
+             ORDER BY sm DESC, term) AS krank
+         FROM ksm)"""
+
   /** Shared replay of the tf-idf keyword ranking (q139 one-shot, q141
     * from the persisted index — identical single-homed math).
     */
   private def tfidfOracle: String =
-    """WITH toks AS (
-         SELECT doc_id,
-           list_filter(string_split_regex(lower(text), '\W+'), x -> x <> '') AS w
-         FROM documents),
+    s"""WITH $toksCte,
        n AS (SELECT CAST(count(*) AS DOUBLE) AS n FROM documents),
        tf AS (
          SELECT doc_id, term, count(*) AS tf
@@ -73,10 +87,7 @@ object RetrievalRows {
     * occurrence count with the ascending-doc-id tiebreak, top 10.
     */
   private def phraseTopKOracle: String =
-    """WITH toks AS (
-         SELECT doc_id,
-           list_filter(string_split_regex(lower(text), '\W+'), x -> x <> '') AS w
-         FROM documents),
+    s"""WITH $toksCte,
        ph(query_id, phrase) AS (VALUES
          (CAST(1 AS BIGINT), 'fast table'), (2, 'a a'), (3, 'table table'),
          (4, 'value table part'), (5, 'key agg row'), (6, 'zebra crossing')),
@@ -111,10 +122,7 @@ object RetrievalRows {
     * after dedup (bare containment, span 0).
     */
   private def proximityTopKOracle: String =
-    """WITH toks AS (
-         SELECT doc_id,
-           list_filter(string_split_regex(lower(text), '\W+'), x -> x <> '') AS w
-         FROM documents),
+    s"""WITH $toksCte,
        pos AS (
          SELECT doc_id, unnest(w) AS term, unnest(range(len(w))) AS p
          FROM toks),
@@ -176,10 +184,7 @@ object RetrievalRows {
     * and slices the window).
     */
   private def passageRankedCtes: String =
-    """toks AS (
-         SELECT doc_id,
-           list_filter(string_split_regex(lower(text), '\W+'), x -> x <> '') AS w
-         FROM documents),
+    s"""$toksCte,
        pos AS (
          SELECT doc_id, unnest(w) AS term, unnest(range(len(w))) AS p
          FROM toks),
@@ -227,10 +232,7 @@ object RetrievalRows {
     * integer rank.
     */
   private def significantTermsOracle: String =
-    """WITH toks AS (
-         SELECT doc_id,
-           list_filter(string_split_regex(lower(text), '\W+'), x -> x <> '') AS w
-         FROM documents),
+    s"""WITH $toksCte,
        qt(query_id, term) AS (VALUES
          (CAST(1 AS BIGINT), 'fast'), (1, 'table'),
          (2, 'value'), (2, 'part'),
@@ -275,14 +277,8 @@ object RetrievalRows {
     * NOT-EXISTS, then the exact-integer rank.
     */
   private def boolBm25Oracle: String =
-    """WITH toks AS (
-         SELECT doc_id,
-           list_filter(string_split_regex(lower(text), '\W+'), x -> x <> '') AS w
-         FROM documents),
-       stats AS (
-         SELECT CAST(count(*) AS DOUBLE) AS n,
-           avg(CAST(len(w) AS DOUBLE)) AS avgdl
-         FROM toks),
+    s"""WITH $toksCte,
+       $bm25StatsCte,
        roles(query_id, term, role) AS (VALUES
          (CAST(1 AS BIGINT), 'table', 'must'), (1, 'fast', 'should'),
          (1, 'value', 'should'),
@@ -290,9 +286,7 @@ object RetrievalRows {
          (3, 'fast', 'should'), (3, 'part', 'should'), (3, 'table', 'not'),
          (4, 'zebra', 'must'), (4, 'crossing', 'should'),
          (5, 'key', 'should'), (5, 'agg', 'should'), (5, 'row', 'should')),
-       corpus AS (
-         SELECT doc_id, CAST(len(w) AS BIGINT) AS doc_len, unnest(w) AS term
-         FROM toks),
+       $bm25CorpusCte,
        tf AS (
          SELECT doc_id, doc_len, term, count(*) AS tf
          FROM corpus
@@ -301,11 +295,7 @@ object RetrievalRows {
        df AS (SELECT term, count(*) AS df FROM tf GROUP BY term),
        sm AS (
          SELECT tf.term, tf.doc_id,
-           CAST(round(round(
-             ln((stats.n - df.df + 0.5) / (df.df + 0.5) + 1.0)
-               * (tf.tf * 2.2)
-               / (tf.tf + 1.2 * (0.25 + 0.75 * tf.doc_len / stats.avgdl)),
-             6) * 1000000) AS BIGINT) AS sm
+           ${bm25MicrosSql("tf", "df")}
          FROM tf JOIN df USING (term) CROSS JOIN stats),
        sroles AS (
          SELECT query_id, term,
@@ -341,15 +331,36 @@ object RetrievalRows {
     * distinct-term-overlap grades (share n of the query's distinct
     * terms -> grade n), composable after [[bm25RankedCtes]].
     */
-  private def overlapJudgmentCtes: String =
-    """topk AS (SELECT query_id, doc_id, rank FROM ranked WHERE rank <= 10),
-       dterms AS (SELECT doc_id, unnest(list_distinct(w)) AS term FROM toks),
-       qd AS (SELECT DISTINCT query_id, term FROM q),
+    private def overlapJudgmentCtes: String =
+    s"""topk AS (SELECT query_id, doc_id, rank FROM ranked WHERE rank <= 10),
+       ${gradeCtes("q")}"""
+
+  /** Overlap grades `j(query_id, doc_id, grade)` of every document against
+    * the (query_id, term) rows of CTE `q`.
+    */
+  private def gradeCtes(q: String): String =
+    s"""dterms AS (SELECT doc_id, unnest(list_distinct(w)) AS term FROM toks),
+       qd AS (SELECT DISTINCT query_id, term FROM $q),
        j AS (
          SELECT qd.query_id, dterms.doc_id,
            CAST(count(*) AS BIGINT) AS grade
          FROM dterms JOIN qd USING (term)
          GROUP BY 1, 2)"""
+
+  /** The ideal DCG@10 `idcg(query_id, idcg)` over the grades `j`: the
+    * grade-desc, doc-asc ordering in exact integer micros.
+    */
+  private val idcgCtes: String =
+    """ideal AS (
+         SELECT query_id, grade,
+           row_number() OVER (PARTITION BY query_id
+             ORDER BY grade DESC, doc_id) AS ir
+         FROM j),
+       idcg AS (
+         SELECT query_id,
+           sum(CAST(round(round((pow(2, grade) - 1)
+             / (ln(ir + 1) / ln(2)), 6) * 1000000) AS BIGINT)) AS idcg
+         FROM ideal WHERE ir <= 10 GROUP BY 1)"""
 
   /** nDCG@10 replay: the per-position micros contribution
     * round(round((2^grade - 1) / (ln(rank+1)/ln 2), 6) * 1e6) summed
@@ -366,16 +377,7 @@ object RetrievalRows {
              / (ln(t.rank + 1) / ln(2)), 6) * 1000000) AS BIGINT)) AS dcg
          FROM topk t JOIN j ON j.query_id = t.query_id AND j.doc_id = t.doc_id
          GROUP BY 1),
-       ideal AS (
-         SELECT query_id, grade,
-           row_number() OVER (PARTITION BY query_id
-             ORDER BY grade DESC, doc_id) AS ir
-         FROM j),
-       idcg AS (
-         SELECT query_id,
-           sum(CAST(round(round((pow(2, grade) - 1)
-             / (ln(ir + 1) / ln(2)), 6) * 1000000) AS BIGINT)) AS idcg
-         FROM ideal WHERE ir <= 10 GROUP BY 1)
+       $idcgCtes
        SELECT i.query_id,
          CASE WHEN i.idcg = 0 THEN 0.0
            ELSE CAST((coalesce(d.dcg, 0) * 2000000 + i.idcg)
@@ -434,10 +436,7 @@ object RetrievalRows {
     * (query, facet), the aggregation-over-retrieval panel.
     */
   private def facetCountsOracle: String =
-    """WITH toks AS (
-         SELECT doc_id,
-           list_filter(string_split_regex(lower(text), '\W+'), x -> x <> '') AS w
-         FROM documents),
+    s"""WITH $toksCte,
        qt(query_id, term) AS (VALUES
          (CAST(1 AS BIGINT), 'fast'), (1, 'table'),
          (2, 'value'), (2, 'part'),
@@ -457,10 +456,7 @@ object RetrievalRows {
     * (n_chars floored to 100s) instead of the lang attribute.
     */
   private def facetHistogramOracle: String =
-    """WITH toks AS (
-         SELECT doc_id,
-           list_filter(string_split_regex(lower(text), '\W+'), x -> x <> '') AS w
-         FROM documents),
+    s"""WITH $toksCte,
        qt(query_id, term) AS (VALUES
          (CAST(1 AS BIGINT), 'fast'), (1, 'table'),
          (2, 'value'), (2, 'part'),
@@ -483,33 +479,15 @@ object RetrievalRows {
     * [[graft.operators.TextAnalysis.moreLikeThis]] math.
     */
   private def moreLikeThisOracle: String =
-    """WITH toks AS (
-         SELECT doc_id,
-           list_filter(string_split_regex(lower(text), '\W+'), x -> x <> '') AS w
-         FROM documents),
+    s"""WITH $toksCte,
        n AS (SELECT CAST(count(*) AS DOUBLE) AS n FROM documents),
-       stats AS (
-         SELECT CAST(count(*) AS DOUBLE) AS n,
-           avg(CAST(len(w) AS DOUBLE)) AS avgdl
-         FROM toks),
-       corpus AS (
-         SELECT doc_id, CAST(len(w) AS BIGINT) AS doc_len, unnest(w) AS term
-         FROM toks),
+       $bm25StatsCte,
+       $bm25CorpusCte,
        tf AS (
          SELECT doc_id, doc_len, term, count(*) AS tf
          FROM corpus GROUP BY doc_id, doc_len, term),
        kdf AS (SELECT term, count(*) AS df FROM tf GROUP BY term),
-       ksm AS (
-         SELECT tf.doc_id, tf.term,
-           CAST(round(round(ln(n.n / kdf.df), 6) * tf.tf * 1000000)
-             AS BIGINT) AS sm
-         FROM tf JOIN kdf USING (term) CROSS JOIN n
-         WHERE tf.doc_id % 50 = 0),
-       kw AS (
-         SELECT doc_id, term,
-           row_number() OVER (PARTITION BY doc_id
-             ORDER BY sm DESC, term) AS krank
-         FROM ksm),
+       $mltKeywordCtes,
        q AS (SELECT doc_id AS query_id, term FROM kw WHERE krank <= 3),
        btf AS (
          SELECT * FROM tf
@@ -517,11 +495,7 @@ object RetrievalRows {
        bdf AS (SELECT term, count(*) AS df FROM btf GROUP BY term),
        bsm AS (
          SELECT btf.term, btf.doc_id,
-           CAST(round(round(
-             ln((stats.n - bdf.df + 0.5) / (bdf.df + 0.5) + 1.0)
-               * (btf.tf * 2.2)
-               / (btf.tf + 1.2 * (0.25 + 0.75 * btf.doc_len / stats.avgdl)),
-             6) * 1000000) AS BIGINT) AS sm
+           ${bm25MicrosSql("btf", "bdf")}
          FROM btf JOIN bdf USING (term) CROSS JOIN stats),
        pairs AS (
          SELECT q.query_id, bsm.doc_id, sum(bsm.sm) AS m
@@ -553,18 +527,10 @@ object RetrievalRows {
     * nDCG math per (ranker, query) and the integer-micros mean.
     */
   private def rankerEvalOracle: String =
-    """WITH toks AS (
-         SELECT doc_id,
-           list_filter(string_split_regex(lower(text), '\W+'), x -> x <> '') AS w
-         FROM documents),
+    s"""WITH $toksCte,
        n AS (SELECT CAST(count(*) AS DOUBLE) AS n FROM documents),
-       stats AS (
-         SELECT CAST(count(*) AS DOUBLE) AS n,
-           avg(CAST(len(w) AS DOUBLE)) AS avgdl
-         FROM toks),
-       corpus AS (
-         SELECT doc_id, CAST(len(w) AS BIGINT) AS doc_len, unnest(w) AS term
-         FROM toks),
+       $bm25StatsCte,
+       $bm25CorpusCte,
        tf AS (
          SELECT doc_id, doc_len, term, count(*) AS tf
          FROM corpus GROUP BY doc_id, doc_len, term),
@@ -583,17 +549,7 @@ object RetrievalRows {
            unnest(list_distinct(list_filter(w[2:8], x -> x <> w[1]))) AS term,
            'should' AS role
          FROM toks WHERE doc_id % 50 = 0),
-       ksm AS (
-         SELECT tf.doc_id, tf.term,
-           CAST(round(round(ln(n.n / kdf.df), 6) * tf.tf * 1000000)
-             AS BIGINT) AS sm
-         FROM tf JOIN kdf USING (term) CROSS JOIN n
-         WHERE tf.doc_id % 50 = 0),
-       kw AS (
-         SELECT doc_id, term,
-           row_number() OVER (PARTITION BY doc_id
-             ORDER BY sm DESC, term) AS krank
-         FROM ksm),
+       $mltKeywordCtes,
        roles AS (
          SELECT 'lexical' AS ranker, query_id, term, 'should' AS role FROM q_lex
          UNION ALL
@@ -604,11 +560,7 @@ object RetrievalRows {
          SELECT 'mlt', doc_id, term, 'should' FROM kw WHERE krank <= 3),
        sm AS (
          SELECT tf.term, tf.doc_id,
-           CAST(round(round(
-             ln((stats.n - kdf.df + 0.5) / (kdf.df + 0.5) + 1.0)
-               * (tf.tf * 2.2)
-               / (tf.tf + 1.2 * (0.25 + 0.75 * tf.doc_len / stats.avgdl)),
-             6) * 1000000) AS BIGINT) AS sm
+           ${bm25MicrosSql("tf", "kdf")}
          FROM tf JOIN kdf USING (term) CROSS JOIN stats
          WHERE tf.term IN (SELECT DISTINCT term FROM roles)),
        pairs AS (
@@ -663,13 +615,7 @@ object RetrievalRows {
          SELECT * FROM rcut
          UNION ALL SELECT * FROM dcut
          UNION ALL SELECT * FROM hcut),
-       dterms AS (SELECT doc_id, unnest(list_distinct(w)) AS term FROM toks),
-       qd AS (SELECT DISTINCT query_id, term FROM q_lex),
-       j AS (
-         SELECT qd.query_id, dterms.doc_id,
-           CAST(count(*) AS BIGINT) AS grade
-         FROM dterms JOIN qd USING (term)
-         GROUP BY 1, 2),
+       ${gradeCtes("q_lex")},
        dcg AS (
          SELECT a.ranker, a.query_id,
            sum(CAST(round(round((pow(2, j.grade) - 1)
@@ -677,16 +623,7 @@ object RetrievalRows {
          FROM all_ranked a
          JOIN j ON j.query_id = a.query_id AND j.doc_id = a.doc_id
          GROUP BY 1, 2),
-       ideal AS (
-         SELECT query_id, grade,
-           row_number() OVER (PARTITION BY query_id
-             ORDER BY grade DESC, doc_id) AS ir
-         FROM j),
-       idcg AS (
-         SELECT query_id,
-           sum(CAST(round(round((pow(2, grade) - 1)
-             / (ln(ir + 1) / ln(2)), 6) * 1000000) AS BIGINT)) AS idcg
-         FROM ideal WHERE ir <= 10 GROUP BY 1),
+       $idcgCtes,
        rankers(ranker) AS (VALUES ('boolean'), ('dense'), ('fuzzy'),
          ('hybrid'), ('lexical'), ('mlt')),
        perq AS (
@@ -734,11 +671,11 @@ object RetrievalRows {
       TextAnalysis.termStats(t(s, d, "documents"), "doc_id", "text",
         Seq("data", "model", "table", "query"))
         .orderBy(col("doc_id"), col("term")),
-      """WITH toks AS (
+      s"""WITH toks AS (
            SELECT doc_id, len(w) AS doc_len, unnest(w) AS term
            FROM (
              SELECT doc_id,
-               list_filter(string_split_regex(lower(text), '\W+'), x -> x <> '') AS w
+               $wordsSql AS w
              FROM documents)),
          tf AS (
            SELECT doc_id, CAST(doc_len AS BIGINT) AS doc_len, term,

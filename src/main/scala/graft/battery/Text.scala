@@ -146,7 +146,7 @@ object TextRows {
          __uvm AS (SELECT map(list(piece), list(lp)) AS m FROM __uv),
          __udw AS (
            SELECT doc_id,
-             list_filter(string_split_regex(lower(text), '\\W+'), x -> x <> '') AS w
+             $wordsSql AS w
            FROM documents),
          __uwords AS (SELECT DISTINCT unnest(w) AS word FROM __udw),
          __ustep(word, pos, best, back) AS (
@@ -221,7 +221,7 @@ object TextRows {
          __wvl AS (SELECT list(piece) AS l FROM __wv),
          __wdw AS (
            SELECT doc_id,
-             list_filter(string_split_regex(lower(text), '\\W+'), x -> x <> '') AS w
+             $wordsSql AS w
            FROM documents),
          __wwords AS (SELECT DISTINCT unnest(w) AS word FROM __wdw),
          __wstep(word, pos, np, seg, failed) AS (
@@ -447,8 +447,8 @@ object TextRows {
     Row("q84_repetition", (s, d) =>
       TextAnalysis.repetition(t(s, d, "documents"), "doc_id", "text", n = 2)
         .orderBy(col("doc_id")),
-      """WITH t AS (
-           SELECT doc_id, list_filter(string_split_regex(lower(text), '\W+'), x -> x <> '') AS w
+      s"""WITH t AS (
+           SELECT doc_id, $wordsSql AS w
            FROM documents),
          g AS (
            SELECT doc_id, unnest(list_transform(range(1, len(w)),
@@ -769,10 +769,7 @@ object TextRows {
         .orderBy(col("doc_id"), col("phrase")),
       // replays the positional-shingle blocklist: every start position
       // per phrase length, literal phrase join, per-(doc, phrase) counts
-      """WITH toks AS (
-           SELECT doc_id,
-             list_filter(string_split_regex(lower(text), '\W+'), x -> x <> '') AS w
-           FROM documents),
+      s"""WITH $toksCte,
          ph(phrase) AS (VALUES ('fast table'), ('a a'), ('table table'),
            ('value table part'), ('key agg row'), ('zebra crossing')),
          sh AS (

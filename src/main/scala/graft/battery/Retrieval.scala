@@ -20,8 +20,91 @@ object RetrievalRows {
       (3L, Seq.empty[String], Seq("fast", "part"), Seq("table")),
       (4L, Seq("zebra"), Seq("crossing"), Seq.empty[String]),
       (5L, Seq.empty[String], Seq("key", "agg", "row"), Seq.empty[String]))
-      .toDF("query_id", "must", "should", "mustNot")
+            .toDF("query_id", "must", "should", "mustNot")
   }
+
+  /** The q142/q143 phrase batch: "a a" pins self-overlap counting, the
+    * capitalized one pins in-plan normalization, zebra pins absence.
+    */
+  private def phraseQueries(s: SparkSession): DataFrame = {
+    import s.implicits._
+    Seq(1L -> "fast table", 2L -> "a a", 3L -> "table table",
+        4L -> "value table part", 5L -> "Key, AGG row!",
+        6L -> "zebra crossing")
+      .toDF("query_id", "phrase")
+  }
+
+  /** The proximity and passage batch (q144, q145, q147, q148, q152):
+    * "Key, AGG row!" pins normalization, "table table" pins term dedup,
+    * zebra pins absence.
+    */
+  private def passageQueries(s: SparkSession): DataFrame = {
+    import s.implicits._
+    Seq(1L -> "fast table", 2L -> "value part",
+        3L -> "value table part", 4L -> "Key, AGG row!",
+        5L -> "zebra crossing", 6L -> "table table")
+      .toDF("query_id", "qterms")
+  }
+
+  /** The facet and significant-terms batch (q151, q160, q161): "table
+    * table" pins dedup, zebra pins the empty match set.
+    */
+  private def facetQueries(s: SparkSession): DataFrame = {
+    import s.implicits._
+    Seq(1L -> "fast table", 2L -> "value part",
+        3L -> "zebra crossing", 4L -> "table table")
+      .toDF("query_id", "qterms")
+  }
+
+  /** The q149/q150 typo'd term sets ("zzzzz" expands to nothing). */
+  private def fuzzyQueries(s: SparkSession): DataFrame = {
+    import s.implicits._
+    Seq(1L -> Seq("tabl"), 2L -> Seq("valu", "pert"),
+        3L -> Seq("fastt", "zzzzz"), 4L -> Seq("key", "agg"))
+      .toDF("query_id", "qterms")
+  }
+
+  /** The BM25 probe queries: every 50th document's first 8 words as
+    * `qterms`, keyed by its doc_id under `idName` (the % 50 split keeps
+    * the fixture's 31-word vocabulary from fanning every query into
+    * every doc).
+    */
+  private def seedQueries(docs: DataFrame, idName: String = "doc_id")
+      : DataFrame =
+    docs.where(col("doc_id") % 50 === 0)
+      .select(col("doc_id").as(idName),
+        slice(graft.functions.TextFunctions.words(col("text")), 1, 8)
+          .as("qterms"))
+
+  /** The indexed rows' corpus and persisted index: `documents`
+    * repartitioned to 32, the even doc_ids written to a fresh
+    * LexicalIndex and the odd ones appended, so every indexed row reads
+    * an index of two batches. 16 buckets: the fixture vocabulary is 31
+    * words — the default 64 would mean mostly-empty directories at this
+    * scale. Returns (docs, index dir).
+    */
+  private def splitIndex(s: SparkSession, d: String,
+      positional: Boolean = false): (DataFrame, String) = {
+    val docs = t(s, d, "documents").repartition(32)
+    val dir = graft.io.Spill.tempDir("graft-lexidx-") + "/idx"
+    graft.operators.LexicalIndex.write(
+      docs.where(col("doc_id") % 2 === 0), "doc_id", "text", dir,
+      nBuckets = 16, positional = positional)
+    graft.operators.LexicalIndex.append(s, dir,
+      docs.where(col("doc_id") % 2 =!= 0), "doc_id", "text")
+    (docs, dir)
+  }
+
+  /** The dense ranker of q137/q162: exact cosine top-`k` of every 50th
+    * embedding against the whole table, keyed as `doc_id` so it fuses
+    * with the lexical rankings.
+    */
+  private def denseTopK(embs: DataFrame, k: Int): DataFrame =
+    graft.operators.Similarity.batchExactTopK(
+      embs.select(col("vec_id").as("doc_id"), col("embedding")),
+      embs.where(col("vec_id") % 50 === 0)
+        .select(col("vec_id").as("doc_id"), col("embedding")),
+      "doc_id", "embedding", k = k)
 
   /** The q153/q154/q162 judgment frame: distinct-term-overlap grades
     * between each probe query's (query_id, term) set and every document
@@ -695,11 +778,7 @@ object RetrievalRows {
     // Phrases reuse q136's: "a a" pins self-overlap counting, the
     // capitalized one pins in-plan normalization, zebra pins absence
     Row("q142_phrase_topk", (s, d) => {
-      import s.implicits._
-      val q = Seq(1L -> "fast table", 2L -> "a a", 3L -> "table table",
-          4L -> "value table part", 5L -> "Key, AGG row!",
-          6L -> "zebra crossing")
-        .toDF("query_id", "phrase")
+      val q = phraseQueries(s)
       TextAnalysis.phraseTopK(t(s, d, "documents"), "doc_id", "text",
           q, "query_id", "phrase", k = 10)
         .orderBy(col("query_id"), col("rank"))
@@ -718,18 +797,8 @@ object RetrievalRows {
     // candidate-doc aggregate, the PhraseStartCount adjacency check;
     // the positional build/append path is what this row pins
     Row("q143_phrase_indexed", (s, d) => {
-      import s.implicits._
-      val docs = t(s, d, "documents").repartition(32)
-      val dir = graft.io.Spill.tempDir("graft-lexidx-") + "/idx"
-      graft.operators.LexicalIndex.write(
-        docs.where(col("doc_id") % 2 === 0), "doc_id", "text", dir,
-        nBuckets = 16, positional = true)
-      graft.operators.LexicalIndex.append(s, dir,
-        docs.where(col("doc_id") % 2 =!= 0), "doc_id", "text")
-      val q = Seq(1L -> "fast table", 2L -> "a a", 3L -> "table table",
-          4L -> "value table part", 5L -> "Key, AGG row!",
-          6L -> "zebra crossing")
-        .toDF("query_id", "phrase")
+      val (_, dir) = splitIndex(s, d, positional = true)
+      val q = phraseQueries(s)
       graft.operators.LexicalIndex.phraseTopKIndexed(s, dir,
           q, "query_id", "phrase", k = 10)
         .orderBy(col("query_id"), col("rank"))
@@ -747,11 +816,7 @@ object RetrievalRows {
     // "table table" pins term dedup (single-term containment, span 0),
     // zebra pins absence
     Row("q144_proximity_topk", (s, d) => {
-      import s.implicits._
-      val q = Seq(1L -> "fast table", 2L -> "value part",
-          3L -> "value table part", 4L -> "Key, AGG row!",
-          5L -> "zebra crossing", 6L -> "table table")
-        .toDF("query_id", "qterms")
+      val q = passageQueries(s)
       TextAnalysis.proximityTopK(t(s, d, "documents"), "doc_id", "text",
           q, "query_id", "qterms", slop = 8, k = 10)
         .orderBy(col("query_id"), col("rank"))
@@ -766,18 +831,8 @@ object RetrievalRows {
     // lists — bucket-pruned posting scan, broadcast (query, off, term)
     // join, the MinWindowSpan sweep per candidate
     Row("q145_proximity_indexed", (s, d) => {
-      import s.implicits._
-      val docs = t(s, d, "documents").repartition(32)
-      val dir = graft.io.Spill.tempDir("graft-lexidx-") + "/idx"
-      graft.operators.LexicalIndex.write(
-        docs.where(col("doc_id") % 2 === 0), "doc_id", "text", dir,
-        nBuckets = 16, positional = true)
-      graft.operators.LexicalIndex.append(s, dir,
-        docs.where(col("doc_id") % 2 =!= 0), "doc_id", "text")
-      val q = Seq(1L -> "fast table", 2L -> "value part",
-          3L -> "value table part", 4L -> "Key, AGG row!",
-          5L -> "zebra crossing", 6L -> "table table")
-        .toDF("query_id", "qterms")
+      val (docs, dir) = splitIndex(s, d, positional = true)
+      val q = passageQueries(s)
       graft.operators.LexicalIndex.proximityTopKIndexed(s, dir,
           q, "query_id", "qterms", slop = 8, k = 10)
         .orderBy(col("query_id"), col("rank"))
@@ -790,11 +845,7 @@ object RetrievalRows {
     // RAG context-selection shape. Query set reuses q144's pins
     // (normalization, dedup-to-single-term, absent terms)
     Row("q147_passage_topk", (s, d) => {
-      import s.implicits._
-      val q = Seq(1L -> "fast table", 2L -> "value part",
-          3L -> "value table part", 4L -> "Key, AGG row!",
-          5L -> "zebra crossing", 6L -> "table table")
-        .toDF("query_id", "qterms")
+      val q = passageQueries(s)
       TextAnalysis.passageTopK(t(s, d, "documents"), "doc_id", "text",
           q, "query_id", "qterms", window = 8, k = 10)
         .orderBy(col("query_id"), col("rank"))
@@ -807,18 +858,8 @@ object RetrievalRows {
     // rank tail, indexed ≡ one-shot spec-pinned) served from persisted
     // position lists
     Row("q148_passage_indexed", (s, d) => {
-      import s.implicits._
-      val docs = t(s, d, "documents").repartition(32)
-      val dir = graft.io.Spill.tempDir("graft-lexidx-") + "/idx"
-      graft.operators.LexicalIndex.write(
-        docs.where(col("doc_id") % 2 === 0), "doc_id", "text", dir,
-        nBuckets = 16, positional = true)
-      graft.operators.LexicalIndex.append(s, dir,
-        docs.where(col("doc_id") % 2 =!= 0), "doc_id", "text")
-      val q = Seq(1L -> "fast table", 2L -> "value part",
-          3L -> "value table part", 4L -> "Key, AGG row!",
-          5L -> "zebra crossing", 6L -> "table table")
-        .toDF("query_id", "qterms")
+      val (docs, dir) = splitIndex(s, d, positional = true)
+      val q = passageQueries(s)
       graft.operators.LexicalIndex.passageTopKIndexed(s, dir,
           q, "query_id", "qterms", window = 8, k = 10)
         .orderBy(col("query_id"), col("rank"))
@@ -831,10 +872,7 @@ object RetrievalRows {
     // so matching needs no corpus join-back. "table table" pins dedup,
     // zebra pins the empty match set (no rows)
     Row("q151_facet_counts", (s, d) => {
-      import s.implicits._
-      val q = Seq(1L -> "fast table", 2L -> "value part",
-          3L -> "zebra crossing", 4L -> "table table")
-        .toDF("query_id", "qterms")
+      val q = facetQueries(s)
       TextAnalysis.facetCounts(t(s, d, "documents"), "doc_id", "text",
           q, "query_id", "qterms", "lang")
         .orderBy(col("query_id"), col("facet"))
@@ -846,11 +884,7 @@ object RetrievalRows {
     // queries x k ranked frame broadcasts onto the corpus scan, so
     // snippet extraction is one more map-only pass
     Row("q152_passage_snippets", (s, d) => {
-      import s.implicits._
-      val q = Seq(1L -> "fast table", 2L -> "value part",
-          3L -> "value table part", 4L -> "Key, AGG row!",
-          5L -> "zebra crossing", 6L -> "table table")
-        .toDF("query_id", "qterms")
+      val q = passageQueries(s)
       TextAnalysis.passageSnippets(t(s, d, "documents"), "doc_id", "text",
           q, "query_id", "qterms", window = 8, k = 10)
         .orderBy(col("query_id"), col("rank"))
@@ -865,10 +899,7 @@ object RetrievalRows {
     // pool), never corpus-scale
     Row("q153_ndcg", (s, d) => {
       val docs = t(s, d, "documents").repartition(32)
-      val queries = docs.where(col("doc_id") % 50 === 0)
-        .select(col("doc_id").as("query_id"),
-          slice(graft.functions.TextFunctions.words(col("text")), 1, 8)
-            .as("qterms"))
+      val queries = seedQueries(docs, "query_id")
       // ONE corpus tokenize: the shared corpus (the q162 discipline)
       // feeds the BM25 ranker AND the judgment frame. Restricted at spill
       // time — the judgments only read query-term matches too, so the
@@ -894,10 +925,7 @@ object RetrievalRows {
     // query's strong matches surface in the top 10
     Row("q154_mrr", (s, d) => {
       val docs = t(s, d, "documents").repartition(32)
-      val queries = docs.where(col("doc_id") % 50 === 0)
-        .select(col("doc_id").as("query_id"),
-          slice(graft.functions.TextFunctions.words(col("text")), 1, 8)
-            .as("qterms"))
+      val queries = seedQueries(docs, "query_id")
       // the q153 shared-corpus discipline: one corpus tokenize,
       // restricted at spill time (judgments read query-term matches too)
       val qt = Postings.bm25QueryTerms(queries, "query_id", "qterms")
@@ -934,10 +962,7 @@ object RetrievalRows {
     // micros, own terms excluded) — "what characterizes these docs";
     // zebra matches nothing and yields no rows
     Row("q160_significant_terms", (s, d) => {
-      import s.implicits._
-      val q = Seq(1L -> "fast table", 2L -> "value part",
-          3L -> "zebra crossing", 4L -> "table table")
-        .toDF("query_id", "qterms")
+      val q = facetQueries(s)
       TextAnalysis.significantTerms(t(s, d, "documents"), "doc_id",
           "text", q, "query_id", "qterms", k = 5)
         .orderBy(col("query_id"), col("rank"))
@@ -950,17 +975,8 @@ object RetrievalRows {
     // pattern): the posting table IS the distinct (doc, term)
     // projection — no tokenize pass; shared tail, shared oracle
     Row("q161_sig_indexed", (s, d) => {
-      import s.implicits._
-      val docs = t(s, d, "documents").repartition(32)
-      val q = Seq(1L -> "fast table", 2L -> "value part",
-          3L -> "zebra crossing", 4L -> "table table")
-        .toDF("query_id", "qterms")
-      val dir = graft.io.Spill.tempDir("graft-lexidx-") + "/idx"
-      graft.operators.LexicalIndex.write(
-        docs.where(col("doc_id") % 2 === 0), "doc_id", "text", dir,
-        nBuckets = 16)
-      graft.operators.LexicalIndex.append(s, dir,
-        docs.where(col("doc_id") % 2 =!= 0), "doc_id", "text")
+      val (_, dir) = splitIndex(s, d)
+      val q = facetQueries(s)
       graft.operators.LexicalIndex.significantTermsIndexed(s, dir, q,
           "query_id", "qterms", k = 5)
         .orderBy(col("query_id"), col("rank"))
@@ -973,13 +989,7 @@ object RetrievalRows {
     // oracle is q157's (single-homed fold/tail, indexed ≡ one-shot
     // spec-pinned)
     Row("q159_mlt_indexed", (s, d) => {
-      val docs = t(s, d, "documents").repartition(32)
-      val dir = graft.io.Spill.tempDir("graft-lexidx-") + "/idx"
-      graft.operators.LexicalIndex.write(
-        docs.where(col("doc_id") % 2 === 0), "doc_id", "text", dir,
-        nBuckets = 16)
-      graft.operators.LexicalIndex.append(s, dir,
-        docs.where(col("doc_id") % 2 =!= 0), "doc_id", "text")
+      val (docs, dir) = splitIndex(s, d)
       graft.operators.LexicalIndex.moreLikeThisIndexed(s, dir, docs,
           "doc_id", "text",
           docs.where(col("doc_id") % 50 === 0).select(col("doc_id")),
@@ -1043,11 +1053,7 @@ object RetrievalRows {
           },
           () => Postings.moreLikeThis(corpus, corpus.tfOf(probeDocs,
             "doc_id"), mTerms = 3, k = 10, Postings.K1, Postings.B),
-          () => graft.operators.Similarity.batchExactTopK(
-            embs.select(col("vec_id").as("doc_id"), col("embedding")),
-            embs.where(col("vec_id") % 50 === 0)
-              .select(col("vec_id").as("doc_id"), col("embedding")),
-            "doc_id", "embedding", k = 10)),
+          () => denseTopK(embs, k = 10)),
         maxInFlight = 5)(mk => sp(mk())): @unchecked
       val hybrid = graft.operators.RankFusion.rrf(
         Seq(lex, dense), "doc_id", k = 10)
@@ -1080,7 +1086,6 @@ object RetrievalRows {
     // excludes table-bearing docs from a should ranking, q4's must
     // term matches nothing (empty result), q5 is the plain-BM25 twin
     Row("q155_bool_bm25", (s, d) => {
-      import s.implicits._
       TextAnalysis.bm25TopKBool(t(s, d, "documents").repartition(32),
           "doc_id", "text", boolQueries(s), "query_id", "must", "should",
           "mustNot", k = 5)
@@ -1095,13 +1100,7 @@ object RetrievalRows {
     // ALL role terms' buckets (mustNot matches disqualify), the tail
     // is single-homed with q155's so the oracle is shared
     Row("q156_bool_indexed", (s, d) => {
-      val docs = t(s, d, "documents").repartition(32)
-      val dir = graft.io.Spill.tempDir("graft-lexidx-") + "/idx"
-      graft.operators.LexicalIndex.write(
-        docs.where(col("doc_id") % 2 === 0), "doc_id", "text", dir,
-        nBuckets = 16)
-      graft.operators.LexicalIndex.append(s, dir,
-        docs.where(col("doc_id") % 2 =!= 0), "doc_id", "text")
+      val (_, dir) = splitIndex(s, d)
       graft.operators.LexicalIndex.bm25TopKBoolIndexed(s, dir,
           boolQueries(s), "query_id", "must", "should", "mustNot", k = 5)
         .orderBy(col("query_id"), col("rank"))
@@ -1114,10 +1113,7 @@ object RetrievalRows {
     // the q134 scorer runs over the expanded sets — "tabel" finds
     // table; "zzzzz" expands to nothing and contributes nothing
     Row("q149_fuzzy_bm25", (s, d) => {
-      import s.implicits._
-      val q = Seq(1L -> Seq("tabl"), 2L -> Seq("valu", "pert"),
-          3L -> Seq("fastt", "zzzzz"), 4L -> Seq("key", "agg"))
-        .toDF("query_id", "qterms")
+      val q = fuzzyQueries(s)
       TextAnalysis.bm25TopKFuzzy(
           t(s, d, "documents").repartition(32), "doc_id", "text",
           q, "query_id", "qterms", k = 5)
@@ -1131,17 +1127,8 @@ object RetrievalRows {
     // the vocabulary folds from the posting table's pruned term column,
     // the expanded query then scans bucket-pruned as usual
     Row("q150_fuzzy_indexed", (s, d) => {
-      import s.implicits._
-      val docs = t(s, d, "documents").repartition(32)
-      val dir = graft.io.Spill.tempDir("graft-lexidx-") + "/idx"
-      graft.operators.LexicalIndex.write(
-        docs.where(col("doc_id") % 2 === 0), "doc_id", "text", dir,
-        nBuckets = 16)
-      graft.operators.LexicalIndex.append(s, dir,
-        docs.where(col("doc_id") % 2 =!= 0), "doc_id", "text")
-      val q = Seq(1L -> Seq("tabl"), 2L -> Seq("valu", "pert"),
-          3L -> Seq("fastt", "zzzzz"), 4L -> Seq("key", "agg"))
-        .toDF("query_id", "qterms")
+      val (_, dir) = splitIndex(s, d)
+      val q = fuzzyQueries(s)
       graft.operators.LexicalIndex.bm25TopKFuzzyIndexed(s, dir,
           q, "query_id", "qterms", k = 5)
         .orderBy(col("query_id"), col("rank"))
@@ -1150,13 +1137,7 @@ object RetrievalRows {
 
     // single-homed; the build/append/scan path is what this row pins
     Row("q141_tfidf_indexed", (s, d) => {
-      val docs = t(s, d, "documents").repartition(32)
-      val dir = graft.io.Spill.tempDir("graft-lexidx-") + "/idx"
-      graft.operators.LexicalIndex.write(
-        docs.where(col("doc_id") % 2 === 0), "doc_id", "text", dir,
-        nBuckets = 16)
-      graft.operators.LexicalIndex.append(s, dir,
-        docs.where(col("doc_id") % 2 =!= 0), "doc_id", "text")
+      val (_, dir) = splitIndex(s, d)
       graft.operators.LexicalIndex.tfidfKeywordsIndexed(s, dir, k = 3)
         .orderBy(col("doc_id"), col("rank"))
     },
@@ -1185,17 +1166,10 @@ object RetrievalRows {
     Row("q137_hybrid_rrf", (s, d) => {
       val docs = t(s, d, "documents").repartition(32)
       val embs = t(s, d, "embeddings")
-      val queries = docs.where(col("doc_id") % 50 === 0)
-        .select(col("doc_id"),
-          slice(graft.functions.TextFunctions.words(col("text")), 1, 8)
-            .as("qterms"))
+      val queries = seedQueries(docs)
       val lex = TextAnalysis.bm25TopK(docs, "doc_id", "text",
         queries, "doc_id", "qterms", k = 5)
-      val dense = graft.operators.Similarity.batchExactTopK(
-          embs.select(col("vec_id").as("doc_id"), col("embedding")),
-          embs.where(col("vec_id") % 50 === 0)
-            .select(col("vec_id").as("doc_id"), col("embedding")),
-          "doc_id", "embedding", k = 5)
+      val dense = denseTopK(embs, k = 5)
       graft.operators.RankFusion.rrf(Seq(lex, dense), "doc_id", k = 5)
         .orderBy(col("query_id"), col("rank"))
     },
@@ -1241,19 +1215,8 @@ object RetrievalRows {
     // oracle is q134's (identical math over the union); the incremental
     // build/append/scan machinery is what this row pins
     Row("q135_bm25_indexed", (s, d) => {
-      val docs = t(s, d, "documents").repartition(32)
-      val dir = graft.io.Spill.tempDir("graft-lexidx-") + "/idx"
-      // 16 buckets: the fixture vocabulary is 31 words — the default 64
-      // would mean mostly-empty directories at this scale
-      graft.operators.LexicalIndex.write(
-        docs.where(col("doc_id") % 2 === 0), "doc_id", "text", dir,
-        nBuckets = 16)
-      graft.operators.LexicalIndex.append(s, dir,
-        docs.where(col("doc_id") % 2 =!= 0), "doc_id", "text")
-      val queries = docs.where(col("doc_id") % 50 === 0)
-        .select(col("doc_id"),
-          slice(graft.functions.TextFunctions.words(col("text")), 1, 8)
-            .as("qterms"))
+      val (docs, dir) = splitIndex(s, d)
+      val queries = seedQueries(docs)
       graft.operators.LexicalIndex.bm25TopKIndexed(s, dir,
           queries, "doc_id", "qterms", k = 5)
         .orderBy(col("query_id"), col("rank"))
@@ -1273,10 +1236,7 @@ object RetrievalRows {
     // 31-word vocabulary from fanning every query into every doc
     Row("q134_bm25_topk", (s, d) => {
       val docs = t(s, d, "documents").repartition(32)
-      val queries = docs.where(col("doc_id") % 50 === 0)
-        .select(col("doc_id"),
-          slice(graft.functions.TextFunctions.words(col("text")), 1, 8)
-            .as("qterms"))
+      val queries = seedQueries(docs)
       TextAnalysis.bm25TopK(docs, "doc_id", "text",
           queries, "doc_id", "qterms", k = 5)
         .orderBy(col("query_id"), col("rank"))

@@ -108,6 +108,50 @@ object ClassifyRows {
                w -> w <> '') AS w
            FROM documents WHERE doc_id % 2 = 1)"""
 
+    /** `documents` as the NB rows' word features `(doc_id, lang, w)`. */
+  private def nbWordDocs(s: SparkSession, d: String): DataFrame =
+    t(s, d, "documents").select(col("doc_id"), col("lang"),
+      graft.functions.TextFunctions.words(col("text")).as("w"))
+
+  /** The NB rows' train/held-out split of `docs(doc_id, lang, tokCol)`:
+    * the model fit on the even doc_ids, and the odd ones to score. The
+    * model is a TABLE: spilled once under `spillPrefix` (the deployment
+    * shape — a persisted model parquet) so classify's three model
+    * consumers scan it instead of re-running the fit per subtree.
+    */
+  private def nbModel(docs: DataFrame, tokCol: String,
+      spillPrefix: String): (DataFrame, DataFrame) = {
+    val model = graft.io.Spill(graft.operators.NaiveBayes.train(
+      docs.where(col("doc_id") % 2 === 0), "lang", tokCol), spillPrefix)
+    (model, docs.where(col("doc_id") % 2 === 1))
+  }
+
+  /** The q173/q181 ranking frame: each held-out doc's NB en-vs-rest
+    * margin `m` (score_en minus the best other score) with `y` = its
+    * true lang is en.
+    */
+  private def enMargin(s: SparkSession, d: String,
+      spillPrefix: String): DataFrame = {
+    val (model, held) = nbModel(nbWordDocs(s, d), "w", spillPrefix)
+    graft.operators.NaiveBayes.labelScores(held, "doc_id", "w", model)
+      .groupBy(col("doc_id"))
+      .agg((max(when(col("label") === "en", col("score"))) -
+        max(when(col("label") =!= "en", col("score")))).as("m"))
+      .join(t(s, d, "documents")
+        .select(col("doc_id"), (col("lang") === "en").as("y")), "doc_id")
+  }
+
+  /** [[nbPredCtes]] over the word tokens plus the en-vs-rest margin
+    * `mg(doc_id, m)` — the oracle twin of [[enMargin]].
+    */
+  private def enMarginCtes: String =
+    s"""${nbPredCtes(nbWordTokCtes)},
+         mg AS (
+           SELECT doc_id,
+             max(CASE WHEN label = 'en' THEN score END) -
+             max(CASE WHEN label <> 'en' THEN score END) AS m
+           FROM scall GROUP BY doc_id)"""
+
   /** The q183/q184 score fixture CTE — the oracle twin of
     * [[evalScores]]: the same k/128-grid label-correlated scores.
     */
@@ -127,21 +171,11 @@ object ClassifyRows {
     // construction, so this validates the COMPUTATION end to end;
     // separability/accuracy is NaiveBayesSpec's generated-corpus job
     Row("q123_nb_classify", (s, d) => {
-      val docs = t(s, d, "documents").select(col("doc_id"), col("lang"),
-        graft.functions.TextFunctions.words(col("text")).as("w"))
-      // the model is a TABLE: materialize it once (the deployment shape
-      // — a persisted model parquet) so classify's three model
-      // consumers scan it instead of re-running the fit per subtree
-      val model = graft.io.Spill(graft.operators.NaiveBayes.train(
-        docs.where(col("doc_id") % 2 === 0), "lang", "w"), "graft-nb-")
-      graft.operators.NaiveBayes.classify(
-          docs.where(col("doc_id") % 2 === 1), "doc_id", "w", model)
+            val (model, held) = nbModel(nbWordDocs(s, d), "w", "graft-nb-")
+      graft.operators.NaiveBayes.classify(held, "doc_id", "w", model)
         .orderBy(col("doc_id"))
     },
-      // blocklist filter, then per-domain rank <= cap (under-cap domains
-      // satisfy it trivially — the engine's under/over plan split is a
-      // performance shape, not a semantics change)
-      // the NB fit re-derived as counting: priors/conds/defaults with
+            // the NB fit re-derived as counting: priors/conds/defaults with
       // Laplace alpha=1, log-probs rounded to 6 at train and scores to 4
       // at classify (the cross-engine ln pin); unseen test tokens take the
       // per-label default mass; argmax = highest rounded score, ties to
@@ -158,10 +192,8 @@ object ClassifyRows {
         graft.operators.NaiveBayes.hashedTokens(
           graft.functions.TextFunctions.words(col("text")), 512, "nbh")
           .as("w"))
-      val model = graft.io.Spill(graft.operators.NaiveBayes.train(
-        docs.where(col("doc_id") % 2 === 0), "lang", "w"), "graft-nbh-")
-      graft.operators.NaiveBayes.classify(
-          docs.where(col("doc_id") % 2 === 1), "doc_id", "w", model)
+      val (model, held) = nbModel(docs, "w", "graft-nbh-")
+      graft.operators.NaiveBayes.classify(held, "doc_id", "w", model)
         .orderBy(col("doc_id"))
     },
       // q123's fit+classify with the md5 bucket fold (512 buckets, salt
@@ -200,10 +232,8 @@ object ClassifyRows {
         .repartition(s.sparkContext.defaultParallelism, col("doc_id"))
         .select(col("doc_id"), col("lang"),
           graft.functions.TextFunctions.charGrams(col("text")).as("g"))
-      val model = graft.io.Spill(graft.operators.NaiveBayes.train(
-        docs.where(col("doc_id") % 2 === 0), "lang", "g"), "graft-nbg-")
-      graft.operators.NaiveBayes.classify(
-          docs.where(col("doc_id") % 2 === 1), "doc_id", "g", model)
+      val (model, held) = nbModel(docs, "g", "graft-nbg-")
+      graft.operators.NaiveBayes.classify(held, "doc_id", "g", model)
         .orderBy(col("doc_id"))
     },
       // q123's fit+classify with the char 2-4-gram tokenizer CTE swapped
@@ -313,12 +343,10 @@ object ClassifyRows {
     // label-bounded pair aggregate) — the audit a model gate must pass
     // before it may drop terabytes
     Row("q172_nb_report", (s, d) => {
-      val docs = t(s, d, "documents").select(col("doc_id"), col("lang"),
-        graft.functions.TextFunctions.words(col("text")).as("w"))
-      val model = graft.io.Spill(graft.operators.NaiveBayes.train(
-        docs.where(col("doc_id") % 2 === 0), "lang", "w"), "graft-nbe-")
-      val pred = graft.operators.NaiveBayes.classify(
-        docs.where(col("doc_id") % 2 === 1), "doc_id", "w", model)
+      val docs = nbWordDocs(s, d)
+            val (model, held) = nbModel(docs, "w", "graft-nbe-")
+      val pred = graft.operators.NaiveBayes.classify(held, "doc_id", "w",
+        model)
       graft.operators.Eval.classificationReport(
         pred.join(docs.select(col("doc_id"), col("lang")), "doc_id"),
         "lang", "label")
@@ -368,30 +396,14 @@ object ClassifyRows {
     // exposes the full per-label frame; margin = score_en - best other)
     // — the threshold-free discrimination audit beside q172's report
     Row("q173_en_margin_auc", (s, d) => {
-      val docs = t(s, d, "documents").select(col("doc_id"), col("lang"),
-        graft.functions.TextFunctions.words(col("text")).as("w"))
-      val model = graft.io.Spill(graft.operators.NaiveBayes.train(
-        docs.where(col("doc_id") % 2 === 0), "lang", "w"), "graft-nba-")
-      val margin = graft.operators.NaiveBayes.labelScores(
-          docs.where(col("doc_id") % 2 === 1), "doc_id", "w", model)
-        .groupBy(col("doc_id"))
-        .agg((max(when(col("label") === "en", col("score"))) -
-          max(when(col("label") =!= "en", col("score")))).as("m"))
-      graft.operators.Eval.rocAuc(
-        margin.join(t(s, d, "documents")
-          .select(col("doc_id"), (col("lang") === "en").as("y")), "doc_id"),
+      graft.operators.Eval.rocAuc(enMargin(s, d, "graft-nba-"),
         "y", "m")
     },
       // q173: exact tie-corrected Mann-Whitney AUC of the en-vs-rest NB
       // margin (score_en - best other score; both 4-decimal doubles from
       // identical integer micros, so the margins — and therefore the
       // ranks — are bit-identical across engines)
-      s"""WITH ${nbPredCtes(nbWordTokCtes)},
-         mg AS (
-           SELECT doc_id,
-             max(CASE WHEN label = 'en' THEN score END) -
-             max(CASE WHEN label <> 'en' THEN score END) AS m
-           FROM scall GROUP BY doc_id),
+      s"""WITH $enMarginCtes,
          lab AS (
            SELECT m.m, (d.lang = 'en') AS y
            FROM mg m JOIN documents d USING (doc_id)),
@@ -417,12 +429,10 @@ object ClassifyRows {
     // and the q123 NB model on the held-out half — the measured answer
     // to "can the cheap gate substitute for the learned one"
     Row("q179_lang_kappa", (s, d) => {
-      val docs = t(s, d, "documents").select(col("doc_id"), col("lang"),
-        graft.functions.TextFunctions.words(col("text")).as("w"))
-      val model = graft.io.Spill(graft.operators.NaiveBayes.train(
-        docs.where(col("doc_id") % 2 === 0), "lang", "w"), "graft-nbk-")
-      val pred = graft.operators.NaiveBayes.classify(
-          docs.where(col("doc_id") % 2 === 1), "doc_id", "w", model)
+      val docs = nbWordDocs(s, d)
+            val (model, held) = nbModel(docs, "w", "graft-nbk-")
+      val pred = graft.operators.NaiveBayes.classify(held, "doc_id", "w",
+        model)
         .select(col("doc_id"), col("label"))
       val heur = TextAnalysis.languageId(
         t(s, d, "documents").where(col("doc_id") % 2 === 1),
@@ -467,28 +477,12 @@ object ClassifyRows {
     // where ROC-AUC counts all pair inversions equally): same NB
     // en-margin ranking, fixed-point integer precision@k terms
     Row("q181_avg_precision", (s, d) => {
-      val docs = t(s, d, "documents").select(col("doc_id"), col("lang"),
-        graft.functions.TextFunctions.words(col("text")).as("w"))
-      val model = graft.io.Spill(graft.operators.NaiveBayes.train(
-        docs.where(col("doc_id") % 2 === 0), "lang", "w"), "graft-nbp-")
-      val margin = graft.operators.NaiveBayes.labelScores(
-          docs.where(col("doc_id") % 2 === 1), "doc_id", "w", model)
-        .groupBy(col("doc_id"))
-        .agg((max(when(col("label") === "en", col("score"))) -
-          max(when(col("label") =!= "en", col("score")))).as("m"))
-      graft.operators.Eval.averagePrecision(
-        margin.join(t(s, d, "documents")
-          .select(col("doc_id"), (col("lang") === "en").as("y")), "doc_id"),
+      graft.operators.Eval.averagePrecision(enMargin(s, d, "graft-nbp-"),
         "y", "m", tieCol = "doc_id")
     },
       // q181: the q173 margin ranking by (margin DESC, doc_id), each
       // precision@k term as the same fixed-point floor division
-      s"""WITH ${nbPredCtes(nbWordTokCtes)},
-         mg AS (
-           SELECT doc_id,
-             max(CASE WHEN label = 'en' THEN score END) -
-             max(CASE WHEN label <> 'en' THEN score END) AS m
-           FROM scall GROUP BY doc_id),
+      s"""WITH $enMarginCtes,
          lab AS (
            SELECT m.doc_id, m.m, (d.lang = 'en') AS y
            FROM mg m JOIN documents d USING (doc_id)),

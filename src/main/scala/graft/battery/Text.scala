@@ -559,7 +559,10 @@ object TextRows {
           "url", "doc_id",
           blocklist = Seq("example.org"), maxPerDomain = 40)
         .select(col("doc_id"), col("source"))
-        .orderBy(col("doc_id")),
+                .orderBy(col("doc_id")),
+      // blocklist filter, then per-domain rank <= cap (under-cap domains
+      // satisfy it trivially — the engine's under/over plan split is a
+      // performance shape, not a semantics change)
       s"""WITH $urlDomainCtes,
          g AS (
            SELECT doc_id, source, coalesce(domain, ' no-domain ') AS dk

@@ -188,7 +188,31 @@ object OracleSql {
     s"CAST(floor(CAST(('0x' || substr(md5($expr || '$salt'), 1, 8)) " +
       s"AS UBIGINT) / 4294967296.0 * $buckets) AS INTEGER)"
 
-    /** BM25 corpus statistics `stats(n, avgdl)` over `toks`. */
+      /** The exact-cosine candidate rows `(query_id, <id>, sim)`: every
+    * `vec_id % 50 = 0` probe against every other embedding, cosine
+    * rounded to 4 decimals.
+    */
+  private[battery] def probeCosineSql(id: String): String =
+    s"""SELECT p.vec_id AS query_id, c.vec_id AS $id,
+           round(list_cosine_similarity(CAST(c.embedding AS DOUBLE[]),
+             CAST(p.embedding AS DOUBLE[])), 4) AS sim
+         FROM embeddings c JOIN embeddings p
+           ON p.vec_id % 50 = 0 AND c.vec_id <> p.vec_id"""
+
+  /** `SELECT <cols>` over the top-`k` rows per query of
+    * `pairs(query_id, <id>, sim)`, ranked by sim desc with the ascending
+    * id tiebreak (the q95 convention).
+    */
+  private[battery] def topBySimSql(cols: String, pairs: String, id: String,
+      k: Int): String =
+    s"""SELECT $cols FROM (
+           SELECT query_id, $id,
+             row_number() OVER (PARTITION BY query_id
+               ORDER BY sim DESC, $id) AS rank
+           FROM $pairs)
+         WHERE rank <= $k"""
+
+  /** BM25 corpus statistics `stats(n, avgdl)` over `toks`. */
   private[battery] val bm25StatsCte: String =
     """stats AS (
          SELECT CAST(count(*) AS DOUBLE) AS n,

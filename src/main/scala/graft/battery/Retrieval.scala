@@ -667,18 +667,10 @@ object RetrievalRows {
            FROM gated)
          WHERE rank <= 10),
        dpairs AS (
-         SELECT p.vec_id AS query_id, c.vec_id AS doc_id,
-           round(list_cosine_similarity(CAST(c.embedding AS DOUBLE[]),
-             CAST(p.embedding AS DOUBLE[])), 4) AS sim
-         FROM embeddings c JOIN embeddings p
-           ON p.vec_id % 50 = 0 AND c.vec_id <> p.vec_id),
+         ${probeCosineSql("doc_id")}),
        dcut AS (
-         SELECT 'dense' AS ranker, query_id, doc_id, rank FROM (
-           SELECT query_id, doc_id,
-             row_number() OVER (PARTITION BY query_id
-               ORDER BY sim DESC, doc_id) AS rank
-           FROM dpairs)
-         WHERE rank <= 10),
+         ${topBySimSql("'dense' AS ranker, query_id, doc_id, rank", "dpairs",
+           "doc_id", 10)}),
        contrib AS (
          SELECT query_id, doc_id,
            CAST(round(1e9 / (60 + rank)) AS BIGINT) AS s
@@ -1180,18 +1172,9 @@ object RetrievalRows {
          lex AS (
            SELECT query_id, doc_id, rank FROM ranked WHERE rank <= 5),
          dpairs AS (
-           SELECT p.vec_id AS query_id, c.vec_id AS doc_id,
-             round(list_cosine_similarity(CAST(c.embedding AS DOUBLE[]),
-               CAST(p.embedding AS DOUBLE[])), 4) AS sim
-           FROM embeddings c JOIN embeddings p
-             ON p.vec_id % 50 = 0 AND c.vec_id <> p.vec_id),
+           ${probeCosineSql("doc_id")}),
          dense AS (
-           SELECT query_id, doc_id, rank FROM (
-             SELECT query_id, doc_id,
-               row_number() OVER (PARTITION BY query_id
-                 ORDER BY sim DESC, doc_id) AS rank
-             FROM dpairs)
-           WHERE rank <= 5),
+           ${topBySimSql("query_id, doc_id, rank", "dpairs", "doc_id", 5)}),
          contrib AS (
            SELECT query_id, doc_id,
              CAST(round(1e9 / (60 + rank)) AS BIGINT) AS s FROM lex

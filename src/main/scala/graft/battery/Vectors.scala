@@ -1,11 +1,13 @@
 package graft.battery
 
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.functions.GraftFunctions
 import graft.operators.Similarity
 
 import Fixtures._
+import OracleSql._
 
 object VectorsRows {
   /** Deterministic synthetic PQ codebook for q121 — m=4 subspaces x
@@ -16,6 +18,15 @@ object VectorsRows {
   private val syntheticPqCodebook: Seq[Seq[Seq[Double]]] =
     (0 until 4).map(sub => (0 until 8).map(cid => (0 until 16).map(d =>
       (((sub * 13 + cid * 31 + d * 7) % 17) - 8) / 8.0)))
+
+  /** The bitext rows' two "languages": the even embeddings as sources,
+    * the odd ones as targets.
+    */
+  private def bitextSides(s: SparkSession, d: String)
+      : (DataFrame, DataFrame) = {
+    val embs = t(s, d, "embeddings")
+    (embs.where(col("vec_id") % 2 === 0), embs.where(col("vec_id") % 2 =!= 0))
+  }
 
   /** The shared `posted` CTE prefix for the LSH oracles (q32, q95): every
     * vector's per-table sign-LSH bucket, derived in SQL from the SAME
@@ -45,6 +56,21 @@ object VectorsRows {
           FROM bucketed)"""
   }
 
+    /** [[lshPostedCte]] plus the q95 candidate pairs `<name>(query_id,
+    * vec_id, sim)`: every `vec_id % 50 = 0` probe against each vector
+    * sharing one of its buckets, max cosine over the colliding tables.
+    */
+  private def lshProbeCtes(name: String): String =
+    s"""$lshPostedCte,
+        q AS (SELECT vec_id AS query_id, tbl, bucket, v AS qv
+              FROM posted WHERE vec_id % 50 = 0),
+        $name AS (
+          SELECT q.query_id, p.vec_id,
+            max(round(list_cosine_similarity(p.v, q.qv), 4)) AS sim
+          FROM posted p JOIN q ON p.tbl = q.tbl AND p.bucket = q.bucket
+          WHERE p.vec_id <> q.query_id
+          GROUP BY 1, 2)"""
+
   /** DuckDB twin of q32: recomputes the sign-LSH bucketing with the SAME
     * LCG hyperplanes as [[graft.functions.HyperplaneBuckets]] (embedded as
     * double literals — both sides derive from
@@ -66,15 +92,7 @@ object VectorsRows {
         ORDER BY sim DESC, vec_id LIMIT 10"""
 
   private def q95Oracle: String =
-    s"""WITH $lshPostedCte,
-        q AS (SELECT vec_id AS query_id, tbl, bucket, v AS qv
-              FROM posted WHERE vec_id % 50 = 0),
-        pairs AS (
-          SELECT q.query_id, p.vec_id,
-            max(round(list_cosine_similarity(p.v, q.qv), 4)) AS sim
-          FROM posted p JOIN q ON p.tbl = q.tbl AND p.bucket = q.bucket
-          WHERE p.vec_id <> q.query_id
-          GROUP BY 1, 2),
+    s"""WITH ${lshProbeCtes("pairs")},
         ranked AS (
           SELECT query_id, vec_id,
             row_number() OVER (PARTITION BY query_id
@@ -113,11 +131,7 @@ object VectorsRows {
         picks$t AS (SELECT * FROM picks${t - 1} UNION ALL SELECT * FROM pick$t)"""
     }.mkString(",\n        ")
     s"""WITH epairs AS (
-          SELECT p.vec_id AS query_id, c.vec_id AS id,
-            round(list_cosine_similarity(CAST(c.embedding AS DOUBLE[]),
-              CAST(p.embedding AS DOUBLE[])), 4) AS sim
-          FROM embeddings c JOIN embeddings p
-            ON p.vec_id % 50 = 0 AND c.vec_id <> p.vec_id),
+          ${probeCosineSql("id")}),
         mcand AS (
           SELECT query_id, id,
             CAST(round(sim * 1000000) AS BIGINT) AS rel_m
@@ -152,35 +166,13 @@ object VectorsRows {
     * cosine reference list, left-joined per (query, id), counted.
     */
   private def q138Oracle: String =
-    s"""WITH $lshPostedCte,
-        q AS (SELECT vec_id AS query_id, tbl, bucket, v AS qv
-              FROM posted WHERE vec_id % 50 = 0),
-        lpairs AS (
-          SELECT q.query_id, p.vec_id,
-            max(round(list_cosine_similarity(p.v, q.qv), 4)) AS sim
-          FROM posted p JOIN q ON p.tbl = q.tbl AND p.bucket = q.bucket
-          WHERE p.vec_id <> q.query_id
-          GROUP BY 1, 2),
-        cand AS (
-          SELECT query_id, vec_id FROM (
-            SELECT query_id, vec_id,
-              row_number() OVER (PARTITION BY query_id
-                ORDER BY sim DESC, vec_id) AS rank
-            FROM lpairs)
-          WHERE rank <= 5),
+    s"""WITH ${lshProbeCtes("lpairs")},
+                cand AS (
+          ${topBySimSql("query_id, vec_id", "lpairs", "vec_id", 5)}),
         epairs AS (
-          SELECT p.vec_id AS query_id, c.vec_id AS vec_id,
-            round(list_cosine_similarity(CAST(c.embedding AS DOUBLE[]),
-              CAST(p.embedding AS DOUBLE[])), 4) AS sim
-          FROM embeddings c JOIN embeddings p
-            ON p.vec_id % 50 = 0 AND c.vec_id <> p.vec_id),
+          ${probeCosineSql("vec_id")}),
         ref AS (
-          SELECT query_id, vec_id FROM (
-            SELECT query_id, vec_id,
-              row_number() OVER (PARTITION BY query_id
-                ORDER BY sim DESC, vec_id) AS rank
-            FROM epairs)
-          WHERE rank <= 5)
+          ${topBySimSql("query_id, vec_id", "epairs", "vec_id", 5)})
         SELECT r.query_id, CAST(count(*) AS BIGINT) AS n_ref,
           CAST(count(c.vec_id) AS BIGINT) AS n_hit,
           CAST((count(c.vec_id) * 2000000 + count(*)) // (2 * count(*))
@@ -465,10 +457,8 @@ object VectorsRows {
     // batchExactTopK posture), neighborhoods through the bounded
     // scored top-k aggregate
     Row("q163_bitext_margin", (s, d) => {
-      val embs = t(s, d, "embeddings")
-      graft.operators.Similarity.marginMinePairs(
-          embs.where(col("vec_id") % 2 === 0),
-          embs.where(col("vec_id") % 2 =!= 0),
+      val (src, tgt) = bitextSides(s, d)
+      graft.operators.Similarity.marginMinePairs(src, tgt,
           "vec_id", "embedding", k = 4, minMargin = 1.0)
         .orderBy(col("src_id"))
     },
@@ -484,10 +474,8 @@ object VectorsRows {
     // were lost (shared tail, exact-equality-under-full-recall
     // spec-pinned)
     Row("q164_bitext_lsh", (s, d) => {
-      val embs = t(s, d, "embeddings")
-      graft.operators.Similarity.marginMinePairsLsh(
-          embs.where(col("vec_id") % 2 === 0),
-          embs.where(col("vec_id") % 2 =!= 0),
+      val (src, tgt) = bitextSides(s, d)
+      graft.operators.Similarity.marginMinePairsLsh(src, tgt,
           "vec_id", "embedding", k = 4, minMargin = 1.0,
           nPlanes = 4, nTables = 12, dim = 64, seed = 11L)
         .orderBy(col("src_id"))
@@ -502,13 +490,12 @@ object VectorsRows {
     // machinery; the oracle is q164's — identical candidates and tail
     // by construction, indexed ≡ one-shot spec-pinned)
     Row("q165_bitext_indexed", (s, d) => {
-      val embs = t(s, d, "embeddings")
+      val (src, tgt) = bitextSides(s, d)
       val dir = graft.io.Spill.tempDir("graft-bitext-") + "/lsh"
-      graft.operators.Similarity.writeLshIndex(
-        embs.where(col("vec_id") % 2 =!= 0), "vec_id", "embedding",
+      graft.operators.Similarity.writeLshIndex(tgt, "vec_id", "embedding",
         dir, nPlanes = 4, nTables = 12, dim = 64, seed = 11L)
       graft.operators.Similarity.marginMinePairsIndexed(s, dir,
-          embs.where(col("vec_id") % 2 === 0), "vec_id", "embedding",
+          src, "vec_id", "embedding",
           k = 4, minMargin = 1.0, nPlanes = 4, nTables = 12, dim = 64,
           seed = 11L)
         .orderBy(col("src_id"))
@@ -522,9 +509,7 @@ object VectorsRows {
     // candidate, scored by the xSIM-style corpus error rate — the
     // measured answer to "what did the bucketing cost me"
     Row("q166_bitext_audit", (s, d) => {
-      val embs = t(s, d, "embeddings")
-      val src = embs.where(col("vec_id") % 2 === 0)
-      val tgt = embs.where(col("vec_id") % 2 =!= 0)
+      val (src, tgt) = bitextSides(s, d)
       graft.operators.Similarity.miningErrorRate(
         graft.operators.Similarity.marginMinePairsLsh(src, tgt,
           "vec_id", "embedding", k = 4, minMargin = 1.0,

@@ -7,6 +7,35 @@ import graft.operators.Multimodal
 import Fixtures._
 
 object MediaRows {
+  /** The keyed-pixel gray value of `v` (the packed b, g, r bytes, each
+    * shifted by the planted perturbation `dp`) — the (b+g+r)//3 of the
+    * image and video hashes.
+    */
+  private val graySql: String =
+    """((((v >> 8) & 255) + dp) % 256
+              + (((v >> 16) & 255) + dp) % 256
+              + (((v >> 24) & 255) + dp) % 256) // 3 AS gray"""
+
+  /** The q126/q129 verify tail over `bands(doc_id, band, bucket)`:
+    * band-collision candidates, Hamming distance from the band xors
+    * (≡ the full-word popcount), kept at <= 3.
+    */
+  private val bandHammingSql: String =
+    """cand AS (
+           SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
+           FROM bands a JOIN bands b
+             ON a.band = b.band AND a.bucket = b.bucket
+               AND a.doc_id < b.doc_id),
+         ham AS (
+           SELECT c.id_a, c.id_b,
+             sum(bit_count(xor(a.bucket, b.bucket))) AS hamming
+           FROM cand c
+           JOIN bands a ON a.doc_id = c.id_a
+           JOIN bands b ON b.doc_id = c.id_b AND b.band = a.band
+           GROUP BY c.id_a, c.id_b)
+         SELECT id_a, id_b, CAST(hamming AS INTEGER) AS hamming
+         FROM ham WHERE hamming <= 3 ORDER BY id_a, id_b"""
+
   def rows: Seq[Row] = Seq(
     // ---- multimodal columns (north star) ----
     Row("q38_multimodal_meta", (s, d) =>
@@ -148,7 +177,7 @@ object MediaRows {
       // pigeonhole bands and the popcount verify — mirrors
       // Multimodal.syntheticBmpHashPipeline end to end without touching
       // a byte; hamming from 4 band xors ≡ the full-word popcount
-      """WITH p AS (
+      s"""WITH p AS (
            SELECT doc_id, doc_id % 2 AS odd, doc_id // 2 AS seed,
              8 + (doc_id // 2) % 32 AS w, 4 + (doc_id // 2) % 16 AS h
            FROM documents),
@@ -167,9 +196,7 @@ object MediaRows {
            FROM cells),
          g AS (
            SELECT doc_id, idx,
-             ((((v >> 8) & 255) + dp) % 256
-              + (((v >> 16) & 255) + dp) % 256
-              + (((v >> 24) & 255) + dp) % 256) // 3 AS gray
+             $graySql
            FROM px),
          bits AS (
            SELECT doc_id, idx,
@@ -180,20 +207,7 @@ object MediaRows {
            SELECT doc_id, idx // 16 AS band,
              CAST(sum(bit << CAST(idx % 16 AS INTEGER)) AS BIGINT) AS bucket
            FROM bits GROUP BY doc_id, idx // 16),
-         cand AS (
-           SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
-           FROM bands a JOIN bands b
-             ON a.band = b.band AND a.bucket = b.bucket
-               AND a.doc_id < b.doc_id),
-         ham AS (
-           SELECT c.id_a, c.id_b,
-             sum(bit_count(xor(a.bucket, b.bucket))) AS hamming
-           FROM cand c
-           JOIN bands a ON a.doc_id = c.id_a
-           JOIN bands b ON b.doc_id = c.id_b AND b.band = a.band
-           GROUP BY c.id_a, c.id_b)
-         SELECT id_a, id_b, CAST(hamming AS INTEGER) AS hamming
-         FROM ham WHERE hamming <= 3 ORDER BY id_a, id_b"""),
+         $bandHammingSql"""),
 
     // acoustic near-dup: synthesize a keyed 16-bit PCM WAV per doc (seed
     // = id/2 plants one-sample-apart even/odd pairs), energy-hash the
@@ -209,7 +223,7 @@ object MediaRows {
       // q126's band/popcount CTEs over the acoustic energy hash: regenerate
       // every PCM sample from the id, bucket into 64 frames, threshold on
       // the 1/64 mean energy
-      """WITH p AS (
+      s"""WITH p AS (
            SELECT doc_id, doc_id % 2 AS odd, doc_id // 2 AS seed,
              64 * (4 + (doc_id // 2) % 8) AS n
            FROM documents),
@@ -233,20 +247,7 @@ object MediaRows {
            SELECT doc_id, f // 16 AS band,
              CAST(sum(bit << CAST(f % 16 AS INTEGER)) AS BIGINT) AS bucket
            FROM bits GROUP BY doc_id, f // 16),
-         cand AS (
-           SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
-           FROM bands a JOIN bands b
-             ON a.band = b.band AND a.bucket = b.bucket
-               AND a.doc_id < b.doc_id),
-         ham AS (
-           SELECT c.id_a, c.id_b,
-             sum(bit_count(xor(a.bucket, b.bucket))) AS hamming
-           FROM cand c
-           JOIN bands a ON a.doc_id = c.id_a
-           JOIN bands b ON b.doc_id = c.id_b AND b.band = a.band
-           GROUP BY c.id_a, c.id_b)
-         SELECT id_a, id_b, CAST(hamming AS INTEGER) AS hamming
-         FROM ham WHERE hamming <= 3 ORDER BY id_a, id_b"""),
+         $bandHammingSql"""),
 
     // video near-dup: synthesize a keyed uncompressed-24bpp AVI per doc
     // (seed = id/2 plants even/odd pairs differing by one pixel of
@@ -267,7 +268,7 @@ object MediaRows {
       // frame slot, per-slot popcount <= 3, then the matched-slot count
       // kept at >= 2 — mirrors Multimodal.syntheticAviHashPipeline end to
       // end without touching a byte
-      """WITH p AS (
+      s"""WITH p AS (
            SELECT doc_id, doc_id % 2 AS odd, doc_id // 2 AS seed,
              8 + (doc_id // 2) % 16 AS w, 4 + (doc_id // 2) % 8 AS h,
              2 + (doc_id // 2) % 3 AS nf
@@ -292,9 +293,7 @@ object MediaRows {
            FROM cells),
          g AS (
            SELECT doc_id, f, idx,
-             ((((v >> 8) & 255) + dp) % 256
-              + (((v >> 16) & 255) + dp) % 256
-              + (((v >> 24) & 255) + dp) % 256) // 3 AS gray
+             $graySql
            FROM px),
          bits AS (
            SELECT doc_id, f, idx,

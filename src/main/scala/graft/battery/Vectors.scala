@@ -71,6 +71,18 @@ object VectorsRows {
           WHERE p.vec_id <> q.query_id
           GROUP BY 1, 2)"""
 
+    /** The q95 ranking tail over `pairs(query_id, vec_id, sim)`: the top 5
+    * per query by sim desc with the ascending vec_id tiebreak.
+    */
+  private val pairsRankTail: String =
+    """ranked AS (
+          SELECT query_id, vec_id,
+            row_number() OVER (PARTITION BY query_id
+              ORDER BY sim DESC, vec_id) AS rank
+          FROM pairs)
+        SELECT query_id, CAST(rank AS BIGINT) AS rank, vec_id
+        FROM ranked WHERE rank <= 5 ORDER BY query_id, rank"""
+
   /** DuckDB twin of q32: recomputes the sign-LSH bucketing with the SAME
     * LCG hyperplanes as [[graft.functions.HyperplaneBuckets]] (embedded as
     * double literals — both sides derive from
@@ -93,13 +105,7 @@ object VectorsRows {
 
   private def q95Oracle: String =
     s"""WITH ${lshProbeCtes("pairs")},
-        ranked AS (
-          SELECT query_id, vec_id,
-            row_number() OVER (PARTITION BY query_id
-              ORDER BY sim DESC, vec_id) AS rank
-          FROM pairs)
-        SELECT query_id, CAST(rank AS BIGINT) AS rank, vec_id
-        FROM ranked WHERE rank <= 5 ORDER BY query_id, rank"""
+        $pairsRankTail"""
 
   /** q140 replay: the exact top-10 candidates, the pairwise candidate
     * cosine matrix, then the MMR greedy UNROLLED into five pick stages —
@@ -434,20 +440,14 @@ object VectorsRows {
     },
       // q95's rank/tiebreak conventions over the exact label-mismatch
       // cosine sweep (anchors = the % 50 probe split)
-      """WITH pairs AS (
+      s"""WITH pairs AS (
            SELECT p.vec_id AS query_id, c.vec_id AS vec_id,
              round(list_cosine_similarity(CAST(c.embedding AS DOUBLE[]),
                CAST(p.embedding AS DOUBLE[])), 4) AS sim
            FROM embeddings c JOIN embeddings p
              ON p.vec_id % 50 = 0 AND c.vec_id % 50 <> 0
                AND c.label <> p.label),
-         ranked AS (
-           SELECT query_id, vec_id,
-             row_number() OVER (PARTITION BY query_id
-               ORDER BY sim DESC, vec_id) AS rank
-           FROM pairs)
-         SELECT query_id, CAST(rank AS BIGINT) AS rank, vec_id
-         FROM ranked WHERE rank <= 5 ORDER BY query_id, rank"""),
+         $pairsRankTail"""),
 
     // margin-based bitext mining (CCMatrix ratio criterion): even
     // embeddings as language A, odd as language B; each source's best

@@ -67,6 +67,19 @@ object DedupRows {
         ORDER BY id_a, id_b"""
   }
 
+    /** The q110 component labelling: same-label pairs at 4-decimal cosine
+    * >= 0.4 and their min-label closure `cc(id, comp)`; callers prepend
+    * `WITH RECURSIVE`.
+    */
+  private val semanticCcCtes: String =
+    s"""pairs AS MATERIALIZED (
+           SELECT a.vec_id AS id_a, b.vec_id AS id_b
+           FROM embeddings a JOIN embeddings b
+             ON a.label = b.label AND a.vec_id < b.vec_id
+           WHERE round(list_cosine_similarity(CAST(a.embedding AS DOUBLE[]),
+                   CAST(b.embedding AS DOUBLE[])), 4) >= 0.4),
+         ${closureCtes("")}"""
+
   /** DuckDB twin of q110 AND q117: blocked cosine pairs, recursive
     * component labeling, min-id anti-join. One definition for both — the
     * incremental operator against an empty history must be EXACTLY the
@@ -74,19 +87,7 @@ object DedupRows {
     * and not the other.
     */
   private def semanticDedupOracle: String =
-    """WITH RECURSIVE pairs AS MATERIALIZED (
-           SELECT a.vec_id AS id_a, b.vec_id AS id_b
-           FROM embeddings a JOIN embeddings b
-             ON a.label = b.label AND a.vec_id < b.vec_id
-           WHERE round(list_cosine_similarity(CAST(a.embedding AS DOUBLE[]),
-                   CAST(b.embedding AS DOUBLE[])), 4) >= 0.4),
-         edges AS (
-           SELECT id_a AS src, id_b AS dst FROM pairs
-           UNION ALL SELECT id_b, id_a FROM pairs),
-         cc AS (
-           SELECT src AS id, src AS comp FROM edges
-           UNION
-           SELECT e.src AS id, c.comp FROM edges e JOIN cc c ON e.dst = c.id),
+    s"""WITH RECURSIVE $semanticCcCtes,
          drp AS (
            SELECT id FROM (SELECT id, min(comp) AS comp FROM cc GROUP BY id)
            WHERE id <> comp)
@@ -393,19 +394,7 @@ object DedupRows {
         .select(col("vec_id"), col("label"))
         .orderBy(col("vec_id")),
       // q110's labeling with the q106 packed arg_max keeper per component
-      """WITH RECURSIVE pairs AS MATERIALIZED (
-           SELECT a.vec_id AS id_a, b.vec_id AS id_b
-           FROM embeddings a JOIN embeddings b
-             ON a.label = b.label AND a.vec_id < b.vec_id
-           WHERE round(list_cosine_similarity(CAST(a.embedding AS DOUBLE[]),
-                   CAST(b.embedding AS DOUBLE[])), 4) >= 0.4),
-         edges AS (
-           SELECT id_a AS src, id_b AS dst FROM pairs
-           UNION ALL SELECT id_b, id_a FROM pairs),
-         cc AS (
-           SELECT src AS id, src AS comp FROM edges
-           UNION
-           SELECT e.src AS id, c.comp FROM edges e JOIN cc c ON e.dst = c.id),
+      s"""WITH RECURSIVE $semanticCcCtes,
          lbl AS (SELECT id, min(comp) AS comp FROM cc GROUP BY id),
          keepers AS (
            SELECT comp,

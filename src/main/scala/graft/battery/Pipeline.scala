@@ -160,32 +160,79 @@ object PipelineRows {
              'd' || CAST(doc_id % 37 AS VARCHAR) AS grp
            FROM ${p}fm)"""
 
-  /** q197's recursive greedy pack walk over `src(doc_id[, extras],
-    * tokens, grp)` — md5 group-bucket shard, (grp, doc_id) order —
-    * prefixed so several walks coexist (q203's epochs). Ends in
-    * `${p}packed(shard, grp, doc_id[, extras], tokens, r, seq_id, cum,
-    * seq_pos)`.
+        /** The q196/q200 synthetic conversations over `documents`: doc_id % 40
+    * is the conversation, doc_id its clock and sequence, even doc_ids
+    * speak as the user and odd ones as the assistant.
+    */
+  private def conversations(s: SparkSession, d: String): DataFrame =
+    t(s, d, "documents").select(
+      (col("doc_id") % 40).as("conv"),
+      col("doc_id").as("ts"), col("doc_id").as("seq"),
+      when(col("doc_id") % 2 === 0, "user").otherwise("assistant")
+        .as("role"),
+      col("text"))
+
+  /** The q194 FIM split of the token list `w` (length `n`) at the
+    * uniform draws `uc1`/`uc2`: prefix, middle and suffix slices.
+    */
+  private val fimSliceSql: String =
+    """w[1:c1] AS pre,
+             w[c1+1:c1 + CAST(floor(uc2 * (n - c1 + 1)) AS INT)] AS mid,
+             w[c1 + CAST(floor(uc2 * (n - c1 + 1)) AS INT) + 1:n] AS suf"""
+
+  /** The q194 FIM rendering: plain text at `ufim >= 0.5`, else SPM or
+    * PSM sentinel order by `uspm`.
+    */
+  private val fimTextOutSql: String =
+    """CASE WHEN ufim >= 0.5 THEN text
+             WHEN uspm < 0.5 THEN array_to_string(
+               ['<SUF>'] || suf || ['<PRE>'] || pre || ['<MID>'] || mid, ' ')
+             ELSE array_to_string(
+               ['<PRE>'] || pre || ['<SUF>'] || suf || ['<MID>'] || mid, ' ')
+             END AS text_out"""
+
+  /** The q85 greedy 256-token pack walk over `base(shard, doc_id, tokens,
+    * rn)` (rn = doc_id order within the shard), ending in
+    * `packed(shard, doc_id, tokens, rn, seq_id, cum, seq_pos)`; callers
+    * prepend `WITH RECURSIVE`.
+    */
+  private val greedyPackCte: String =
+    """packed AS (
+           SELECT shard, doc_id, tokens, rn,
+             CAST(0 AS BIGINT) AS seq_id, tokens AS cum, CAST(0 AS BIGINT) AS seq_pos
+           FROM base WHERE rn = 1
+           UNION ALL
+           SELECT b.shard, b.doc_id, b.tokens, b.rn,
+             CASE WHEN p.cum + b.tokens <= 256 THEN p.seq_id ELSE p.seq_id + 1 END,
+             CASE WHEN p.cum + b.tokens <= 256 THEN p.cum + b.tokens ELSE b.tokens END,
+             CASE WHEN p.cum + b.tokens <= 256 THEN p.seq_pos + 1 ELSE CAST(0 AS BIGINT) END
+           FROM packed p JOIN base b ON b.shard = p.shard AND b.rn = p.rn + 1)"""
+
+  /** q197's recursive greedy pack walk over `src(<id>[, extras], tokens,
+    * grp)` — md5 group-bucket shard, (grp, id) order — prefixed so
+    * several walks coexist (q203's epochs). Ends in `${p}packed(shard,
+    * grp, <id>[, extras], tokens, r, seq_id, cum, seq_pos)`.
     */
   private def packWalkCtes(src: String, p: String, extras: Seq[String],
-      budget: Int, nShards: Int): String = {
+      budget: Int, nShards: Int, id: String = "doc_id"): String = {
     val e = extras.map(", " + _).mkString
     val be = extras.map(c => s", b.$c").mkString
     s"""${p}psh AS MATERIALIZED (
-           SELECT doc_id$e, tokens, grp,
+           SELECT $id$e, tokens, grp,
              CAST(floor(CAST(('0x' || substr(md5(grp || 'pack'), 1, 8))
                AS UBIGINT) / 4294967296.0 * $nShards) AS BIGINT) AS shard
            FROM $src),
          ${p}prn AS MATERIALIZED (
            SELECT *, row_number() OVER (PARTITION BY shard
-             ORDER BY grp, doc_id) AS r
+                          ORDER BY grp, $id) AS r
            FROM ${p}psh),
          ${p}packed AS (
-           SELECT shard, grp, doc_id$e, tokens, r,
+           SELECT shard, grp, $id$e, tokens, r,
              CAST(0 AS BIGINT) AS seq_id, tokens AS cum,
              CAST(0 AS BIGINT) AS seq_pos
            FROM ${p}prn WHERE r = 1
            UNION ALL
-           SELECT b.shard, b.grp, b.doc_id$be, b.tokens, b.r,
+           SELECT b.shard, b.grp, b.$id$be, b.tokens, b.r,
              CASE WHEN p.cum + b.tokens <= $budget THEN p.seq_id
                ELSE p.seq_id + 1 END,
              CASE WHEN p.cum + b.tokens <= $budget THEN p.cum + b.tokens
@@ -234,18 +281,11 @@ object PipelineRows {
            FROM ${p}tu),
          ${p}tseg AS (
            SELECT doc_id, text, ufim, uspm,
-             w[1:c1] AS pre,
-             w[c1+1:c1 + CAST(floor(uc2 * (n - c1 + 1)) AS INT)] AS mid,
-             w[c1 + CAST(floor(uc2 * (n - c1 + 1)) AS INT) + 1:n] AS suf
+             $fimSliceSql
            FROM ${p}tc),
          ${p}txt AS (
            SELECT doc_id,
-             CASE WHEN ufim >= 0.5 THEN text
-               WHEN uspm < 0.5 THEN array_to_string(
-                 ['<SUF>'] || suf || ['<PRE>'] || pre || ['<MID>'] || mid, ' ')
-               ELSE array_to_string(
-                 ['<PRE>'] || pre || ['<SUF>'] || suf || ['<MID>'] || mid, ' ')
-               END AS text_out
+             $fimTextOutSql
            FROM ${p}tseg)"""
 
   /** The q196 loss-mask replay shared VERBATIM with the q200 SFT-export
@@ -360,16 +400,7 @@ object PipelineRows {
          SELECT doc_id % 8 AS shard, doc_id, bpe_tokens AS tokens,
            row_number() OVER (PARTITION BY doc_id % 8 ORDER BY doc_id) AS rn
          FROM __bpe_doc_counts),
-       packed AS (
-         SELECT shard, doc_id, tokens, rn,
-           CAST(0 AS BIGINT) AS seq_id, tokens AS cum, CAST(0 AS BIGINT) AS seq_pos
-         FROM base WHERE rn = 1
-         UNION ALL
-         SELECT b.shard, b.doc_id, b.tokens, b.rn,
-           CASE WHEN p.cum + b.tokens <= 256 THEN p.seq_id ELSE p.seq_id + 1 END,
-           CASE WHEN p.cum + b.tokens <= 256 THEN p.cum + b.tokens ELSE b.tokens END,
-           CASE WHEN p.cum + b.tokens <= 256 THEN p.seq_pos + 1 ELSE CAST(0 AS BIGINT) END
-         FROM packed p JOIN base b ON b.shard = p.shard AND b.rn = p.rn + 1)
+       $greedyPackCte
        SELECT p.shard, p.seq_id, CAST(count(*) AS BIGINT) AS n_docs,
          array_to_string(flatten(list(d.ids ORDER BY p.seq_pos)), ' ') AS ids
        FROM packed p JOIN docids d USING (doc_id)
@@ -533,21 +564,12 @@ object PipelineRows {
           .withColumn("tokens", TextFunctions.wsTokenCount(col("text"))),
         "doc_id", "tokens", "shard", budget = 256L)
         .orderBy(col("doc_id")),
-      """WITH RECURSIVE base AS MATERIALIZED (
+      s"""WITH RECURSIVE base AS MATERIALIZED (
            SELECT doc_id % 8 AS shard, doc_id,
-             CAST(len(list_filter(string_split_regex(text, '\s+'), x -> x <> '')) AS BIGINT) AS tokens,
+             CAST(len(list_filter(string_split_regex(text, '\\s+'), x -> x <> '')) AS BIGINT) AS tokens,
              row_number() OVER (PARTITION BY doc_id % 8 ORDER BY doc_id) AS rn
            FROM documents),
-         packed AS (
-           SELECT shard, doc_id, tokens, rn,
-             CAST(0 AS BIGINT) AS seq_id, tokens AS cum, CAST(0 AS BIGINT) AS seq_pos
-           FROM base WHERE rn = 1
-           UNION ALL
-           SELECT b.shard, b.doc_id, b.tokens, b.rn,
-             CASE WHEN p.cum + b.tokens <= 256 THEN p.seq_id ELSE p.seq_id + 1 END,
-             CASE WHEN p.cum + b.tokens <= 256 THEN p.cum + b.tokens ELSE b.tokens END,
-             CASE WHEN p.cum + b.tokens <= 256 THEN p.seq_pos + 1 ELSE CAST(0 AS BIGINT) END
-           FROM packed p JOIN base b ON b.shard = p.shard AND b.rn = p.rn + 1)
+         $greedyPackCte
          SELECT doc_id, shard, seq_id, seq_pos, tokens > 256 AS oversize
          FROM packed ORDER BY doc_id"""),
 
@@ -735,14 +757,9 @@ object PipelineRows {
     // assignment (the artifact an SFT trainer batches by (shard,
     // seq_id), masking loss outside the train spans)
     Row("q200_sft_export", (s, d) => {
-      val ev = t(s, d, "documents").select(
-        (col("doc_id") % 40).as("conv"),
-        col("doc_id").as("ts"), col("doc_id").as("seq"),
-        when(col("doc_id") % 2 === 0, "user").otherwise("assistant")
-          .as("role"),
-        col("text"))
-      graft.pipelines.TrainingExport.sftAssignments(ev, "conv", "ts",
-          "seq", "role", "text", tokenBudget = 200L, Seq("assistant"),
+      graft.pipelines.TrainingExport.sftAssignments(conversations(s, d),
+          "conv", "ts", "seq", "role", "text", tokenBudget = 200L,
+          Seq("assistant"),
           concat(lit("g"), (col("conv") % 7).cast("string")),
           budget = 256L, nShards = 4)
         .orderBy(col("conv"), col("turn_no"))
@@ -752,40 +769,17 @@ object PipelineRows {
       // over the md5 group-bucket shard and (group, conv) order; the
       // final join hangs every kept turn's span on its conversation's
       // sequence assignment
-      ("WITH RECURSIVE " + lossMaskSpanCtes + """,
+      s"""WITH RECURSIVE $lossMaskSpanCtes,
          cv AS (
            SELECT conv, max(token_end) AS tokens,
              'g' || CAST(conv % 7 AS VARCHAR) AS grp
            FROM spans GROUP BY conv),
-         psh AS MATERIALIZED (
-           SELECT conv, tokens, grp,
-             CAST(floor(CAST(('0x' || substr(md5(grp || 'pack'), 1, 8))
-               AS UBIGINT) / 4294967296.0 * 4) AS BIGINT) AS shard
-           FROM cv),
-         prn AS MATERIALIZED (
-           SELECT *, row_number() OVER (PARTITION BY shard
-             ORDER BY grp, conv) AS r
-           FROM psh),
-         packed AS (
-           SELECT shard, grp, conv, tokens, r,
-             CAST(0 AS BIGINT) AS seq_id, tokens AS cum,
-             CAST(0 AS BIGINT) AS seq_pos
-           FROM prn WHERE r = 1
-           UNION ALL
-           SELECT b.shard, b.grp, b.conv, b.tokens, b.r,
-             CASE WHEN p.cum + b.tokens <= 256 THEN p.seq_id
-               ELSE p.seq_id + 1 END,
-             CASE WHEN p.cum + b.tokens <= 256 THEN p.cum + b.tokens
-               ELSE b.tokens END,
-             CASE WHEN p.cum + b.tokens <= 256 THEN p.seq_pos + 1
-               ELSE CAST(0 AS BIGINT) END
-           FROM packed p JOIN prn b
-             ON b.shard = p.shard AND b.r = p.r + 1)
+         ${packWalkCtes("cv", "", Seq.empty, 256, 4, id = "conv")}
          SELECT s.conv, s.turn_no, s.role, s.token_start, s.token_end,
            s.train, p.tokens, p.grp AS "group", p.shard, p.seq_id,
            p.seq_pos, p.tokens > 256 AS oversize
          FROM spans s JOIN packed p ON s.conv = p.conv
-         ORDER BY s.conv, s.turn_no""")),
+         ORDER BY s.conv, s.turn_no"""),
 
     // the END-TO-END pretraining export (the q90 pattern extended to
     // the full round-18 training surface): clean() survivors ->
@@ -1026,14 +1020,9 @@ object PipelineRows {
     // the assembler — two windows, one key exchange) with train =
     // assistant turns only
     Row("q196_loss_mask", (s, d) => {
-      val ev = t(s, d, "documents").select(
-        (col("doc_id") % 40).as("conv"),
-        col("doc_id").as("ts"), col("doc_id").as("seq"),
-        when(col("doc_id") % 2 === 0, "user").otherwise("assistant")
-          .as("role"),
-        col("text"))
-      graft.operators.Conversations.lossMaskSpans(ev, "conv", "ts",
-          "seq", "role", "text", tokenBudget = 200L, Seq("assistant"))
+      graft.operators.Conversations.lossMaskSpans(conversations(s, d),
+          "conv", "ts", "seq", "role", "text", tokenBudget = 200L,
+          Seq("assistant"))
         .orderBy(col("conv"), col("turn_no"))
     },
       // q196: the budget walk (descending suffix-sum window) and the
@@ -1091,9 +1080,9 @@ object PipelineRows {
       // engines): cut1 = floor(u_c1*(n+1)), cut2 = cut1 +
       // floor(u_c2*(n-cut1+1)), token-array slices re-joined around the
       // sentinels; format from the u_fim/u_spm draws
-      """WITH tok AS (
+      s"""WITH tok AS (
            SELECT doc_id, text,
-             list_filter(string_split_regex(text, '\s+'), x -> x <> '') AS w
+             list_filter(string_split_regex(text, '\\s+'), x -> x <> '') AS w
            FROM documents),
          u AS (
            SELECT doc_id, text, w, len(w) AS n,
@@ -1109,21 +1098,14 @@ object PipelineRows {
            FROM u),
          segs AS (
            SELECT doc_id, text, n, clash, ufim, uspm,
-             w[1:c1] AS pre,
-             w[c1+1:c1 + CAST(floor(uc2 * (n - c1 + 1)) AS INT)] AS mid,
-             w[c1 + CAST(floor(uc2 * (n - c1 + 1)) AS INT) + 1:n] AS suf
+             $fimSliceSql
            FROM cuts)
          SELECT doc_id,
            CASE WHEN ufim >= 0.5 THEN 'plain'
              WHEN uspm < 0.5 THEN 'spm' ELSE 'psm' END AS fmt,
            CAST(n AS BIGINT) AS n_tokens,
            clash AS sentinel_clash,
-           CASE WHEN ufim >= 0.5 THEN text
-             WHEN uspm < 0.5 THEN array_to_string(
-               ['<SUF>'] || suf || ['<PRE>'] || pre || ['<MID>'] || mid, ' ')
-             ELSE array_to_string(
-               ['<PRE>'] || pre || ['<SUF>'] || suf || ['<MID>'] || mid, ' ')
-             END AS text_out
+           $fimTextOutSql
          FROM segs ORDER BY doc_id"""),
 
     // leakage-safe train/val split: assignment by near-dup CLUSTER (the

@@ -14,6 +14,39 @@ object OracleSql {
            $wordsSql AS w
          FROM documents)"""
 
+    /** The LM rows' tokens `toks(doc_id, ws)` ([[wordsSql]] as `ws`). */
+  private[battery] val lmToksCte: String =
+    """toks AS (
+           SELECT doc_id,
+             list_filter(string_split_regex(lower(text), '\W+'), w -> w <> '') AS ws
+           FROM documents)"""
+
+  /** The q98 add-one bigram LM over [[lmToksCte]] — bigrams `big`,
+    * counts `cb`/`cu`, vocabulary `v` — ending in the per-bigram bits
+    * `<name>(doc_id, bits)`.
+    */
+  private[battery] def bigramBitsCtes(name: String): String =
+    s"""$lmToksCte,
+         big AS (
+           SELECT doc_id, ws[i] AS w1, ws[i+1] AS w2
+           FROM (SELECT doc_id, ws, unnest(range(1, len(ws))) AS i
+                 FROM toks WHERE len(ws) >= 2)),
+         cb AS (SELECT w1, w2, count(*) AS cb FROM big GROUP BY 1, 2),
+         cu AS (SELECT w1, sum(cb) AS cu FROM cb GROUP BY 1),
+         v AS (SELECT count(DISTINCT w) AS v
+               FROM (SELECT unnest(ws) AS w FROM toks)),
+         $name AS (
+           SELECT b.doc_id, -log2((cb.cb + 1.0) / (cu.cu + v.v)) AS bits
+           FROM big b JOIN cb USING (w1, w2) JOIN cu USING (w1) CROSS JOIN v)"""
+
+  /** An LM row's per-doc mean of `bits`, rounded to 4 decimals in integer
+    * arithmetic (the cross-engine log pin).
+    */
+  private[battery] val meanBitsSql: String =
+    """CAST((sum(CAST(round(bits * 1e6) AS BIGINT)) * 2
+               + count(*) * 100) // (count(*) * 200) AS DOUBLE) / 1e4
+             AS bits"""
+
   /** Whitespace-split tokens of `expr`, empty strings dropped. */
   private[battery] def wsTokensSql(expr: String): String =
     s"list_filter(string_split_regex($expr, '\\s+'), x -> x <> '')"

@@ -695,26 +695,10 @@ object PipelineRows {
       // q98's scoring CTEs + exact tercile cuts (quantile_cont ≡ Spark's
       // percentile, rounded at 9 — the q108 pin) + per-bucket totals + the
       // q115/q116 md5 unit hash with salt 'ppl'
-      """WITH toks AS (
-           SELECT doc_id,
-             list_filter(string_split_regex(lower(text), '\W+'), w -> w <> '') AS ws
-           FROM documents),
-         big AS (
-           SELECT doc_id, ws[i] AS w1, ws[i+1] AS w2
-           FROM (SELECT doc_id, ws, unnest(range(1, len(ws))) AS i
-                 FROM toks WHERE len(ws) >= 2)),
-         cb AS (SELECT w1, w2, count(*) AS cb FROM big GROUP BY 1, 2),
-         cu AS (SELECT w1, sum(cb) AS cu FROM cb GROUP BY 1),
-         v AS (SELECT count(DISTINCT w) AS v
-               FROM (SELECT unnest(ws) AS w FROM toks)),
-         rows_ AS (
-           SELECT b.doc_id, -log2((cb.cb + 1.0) / (cu.cu + v.v)) AS bits
-           FROM big b JOIN cb USING (w1, w2) JOIN cu USING (w1) CROSS JOIN v),
+      s"""WITH ${bigramBitsCtes("rows_")},
          sc AS (
            SELECT doc_id, CAST(count(*) AS BIGINT) AS n_bigrams,
-             CAST((sum(CAST(round(bits * 1e6) AS BIGINT)) * 2
-               + count(*) * 100) // (count(*) * 200) AS DOUBLE) / 1e4
-             AS bits
+             $meanBitsSql
            FROM rows_ GROUP BY doc_id),
          cuts AS (
            SELECT round(quantile_cont(bits, 1.0 / 3), 9) AS c1,

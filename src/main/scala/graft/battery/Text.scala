@@ -305,6 +305,18 @@ object TextRows {
                (CASE WHEN qf = '' THEN '' ELSE '?' || qf END) END AS canon_url
            FROM cq)"""
 
+    /** [[syntheticUrl]] as a DuckDB expression, character for character. */
+  private val syntheticUrlSql: String =
+    """(CASE WHEN doc_id % 3 = 0 THEN 'http://' ELSE 'https://' END)
+           || (CASE WHEN doc_id % 7 = 0 THEN 'crawler:pw@' ELSE '' END)
+           || (CASE WHEN doc_id % 13 = 0 THEN 'News.' ELSE '' END)
+           || source || '.'
+           || (CASE WHEN doc_id % 5 = 0 THEN 'co.uk'
+                    WHEN doc_id % 5 = 1 THEN 'example.com'
+                    ELSE 'example.org' END)
+           || (CASE WHEN doc_id % 11 = 0 THEN ':8080' ELSE '' END)
+           || '/p/' || doc_id || '?lang=' || lang"""
+
   /** DuckDB twin of [[syntheticUrl]] + [[graft.operators.Urls]] host and
     * registered-domain extraction, shared by the q118/q119 oracles: the
     * URL construction, the host regex (RE2-safe in both engines), and
@@ -313,17 +325,9 @@ object TextRows {
     * last-3 slice Spark spells `slice(labels, -3, 3)`.
     */
   private def urlDomainCtes: String =
-    """u AS (
+    s"""u AS (
          SELECT doc_id, lang, source, n_chars,
-           (CASE WHEN doc_id % 3 = 0 THEN 'http://' ELSE 'https://' END)
-           || (CASE WHEN doc_id % 7 = 0 THEN 'crawler:pw@' ELSE '' END)
-           || (CASE WHEN doc_id % 13 = 0 THEN 'News.' ELSE '' END)
-           || source || '.'
-           || (CASE WHEN doc_id % 5 = 0 THEN 'co.uk'
-                    WHEN doc_id % 5 = 1 THEN 'example.com'
-                    ELSE 'example.org' END)
-           || (CASE WHEN doc_id % 11 = 0 THEN ':8080' ELSE '' END)
-           || '/p/' || doc_id || '?lang=' || lang AS url
+           $syntheticUrlSql AS url
          FROM documents),
        h AS (
          SELECT *, nullif(regexp_extract(lower(url),
@@ -639,15 +643,7 @@ object TextRows {
       // is NULL where Spark's array_join is '')
       s"""WITH n AS (
            SELECT doc_id,
-             (CASE WHEN doc_id % 3 = 0 THEN 'http://' ELSE 'https://' END)
-             || (CASE WHEN doc_id % 7 = 0 THEN 'crawler:pw@' ELSE '' END)
-             || (CASE WHEN doc_id % 13 = 0 THEN 'News.' ELSE '' END)
-             || source || '.'
-             || (CASE WHEN doc_id % 5 = 0 THEN 'co.uk'
-                      WHEN doc_id % 5 = 1 THEN 'example.com'
-                      ELSE 'example.org' END)
-             || (CASE WHEN doc_id % 11 = 0 THEN ':8080' ELSE '' END)
-             || '/p/' || doc_id || '?lang=' || lang
+             $syntheticUrlSql
              || (CASE WHEN doc_id % 4 = 0
                       THEN '&utm_source=feed&utm_campaign=weekly' ELSE '' END)
              || (CASE WHEN doc_id % 6 = 0 THEN '&fbclid=IwAR2xYz' ELSE '' END)
@@ -720,10 +716,7 @@ object TextRows {
       // at 6 decimals, the doc mean at 4 (cross-engine log pin). 0.16 is
       // λ² written as ONE literal on both sides (0.4*0.4 in doubles is
       // 0.16000000000000003).
-      """WITH toks AS (
-           SELECT doc_id,
-             list_filter(string_split_regex(lower(text), '\W+'), w -> w <> '') AS ws
-           FROM documents),
+      s"""WITH $lmToksCte,
          tri AS (
            SELECT doc_id, ws[i] AS w1, ws[i+1] AS w2, ws[i+2] AS w3
            FROM (SELECT doc_id, ws, unnest(range(1, len(ws)-1)) AS i
@@ -754,9 +747,7 @@ object TextRows {
            LEFT JOIN cu USING (w3)
            CROSS JOIN m CROSS JOIN v)
          SELECT doc_id, CAST(count(*) AS BIGINT) AS n_trigrams,
-           CAST((sum(CAST(round(bits * 1e6) AS BIGINT)) * 2
-               + count(*) * 100) // (count(*) * 200) AS DOUBLE) / 1e4
-             AS bits
+           $meanBitsSql
          FROM scored GROUP BY doc_id ORDER BY doc_id"""),
 
     // blocklist phrase filter (the LDNOOBW-style gate): per-(doc,
@@ -1526,25 +1517,9 @@ object TextRows {
       graft.operators.NgramLm.selfScoreBits(
         t(s, d, "documents"), "doc_id", "text")
         .orderBy(col("doc_id")),
-      """WITH toks AS (
-           SELECT doc_id,
-             list_filter(string_split_regex(lower(text), '\W+'), w -> w <> '') AS ws
-           FROM documents),
-         big AS (
-           SELECT doc_id, ws[i] AS w1, ws[i+1] AS w2
-           FROM (SELECT doc_id, ws, unnest(range(1, len(ws))) AS i
-                 FROM toks WHERE len(ws) >= 2)),
-         cb AS (SELECT w1, w2, count(*) AS cb FROM big GROUP BY 1, 2),
-         cu AS (SELECT w1, sum(cb) AS cu FROM cb GROUP BY 1),
-         v AS (SELECT count(DISTINCT w) AS v
-               FROM (SELECT unnest(ws) AS w FROM toks)),
-         scored AS (
-           SELECT b.doc_id, -log2((cb.cb + 1.0) / (cu.cu + v.v)) AS bits
-           FROM big b JOIN cb USING (w1, w2) JOIN cu USING (w1) CROSS JOIN v)
+      s"""WITH ${bigramBitsCtes("scored")}
          SELECT doc_id, CAST(count(*) AS BIGINT) AS n_bigrams,
-           CAST((sum(CAST(round(bits * 1e6) AS BIGINT)) * 2
-               + count(*) * 100) // (count(*) * 200) AS DOUBLE) / 1e4
-             AS bits
+           $meanBitsSql
          FROM scored GROUP BY doc_id ORDER BY doc_id"""),
 
     // BPE tokenizer TRAINING, distributed step: the word histogram under

@@ -47,6 +47,21 @@ object OracleSql {
                + count(*) * 100) // (count(*) * 200) AS DOUBLE) / 1e4
              AS bits"""
 
+    /** `sh(doc_id, shingle)`: every 2- and 3-word shingle of `toks`, the
+    * positional phrase occurrences the q136 phrase counting joins on.
+    */
+  private[battery] val phraseShinglesCte: String =
+    """sh AS (
+         SELECT doc_id,
+           unnest(list_transform(range(1, len(w)),
+             i -> w[i] || ' ' || w[i+1])) AS shingle
+         FROM toks WHERE len(w) >= 2
+         UNION ALL
+         SELECT doc_id,
+           unnest(list_transform(range(1, len(w) - 1),
+             i -> w[i] || ' ' || w[i+1] || ' ' || w[i+2])) AS shingle
+         FROM toks WHERE len(w) >= 3)"""
+
   /** Whitespace-split tokens of `expr`, empty strings dropped. */
   private[battery] def wsTokensSql(expr: String): String =
     s"list_filter(string_split_regex($expr, '\\s+'), x -> x <> '')"

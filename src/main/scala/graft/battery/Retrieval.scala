@@ -121,7 +121,21 @@ object RetrievalRows {
       .groupBy(col("query_id"), col("doc_id"))
       .agg(count(lit(1)).as("grade"))
 
-    /** The more-like-this seed keywords (q157, q159, q162): each
+      /** The full-corpus term statistics of the MLT replays (q157, q162):
+    * `toks`, the doc count `n`, BM25 `stats` and `corpus`, and every
+    * (doc, term) count `tf` with its corpus df `kdf`.
+    */
+  private val corpusTfCtes: String =
+    s"""$toksCte,
+       n AS (SELECT CAST(count(*) AS DOUBLE) AS n FROM documents),
+       $bm25StatsCte,
+       $bm25CorpusCte,
+       tf AS (
+         SELECT doc_id, doc_len, term, count(*) AS tf
+         FROM corpus GROUP BY doc_id, doc_len, term),
+       kdf AS (SELECT term, count(*) AS df FROM tf GROUP BY term)"""
+
+  /** The more-like-this seed keywords (q157, q159, q162): each
     * `doc_id % 50 = 0` seed's terms ranked by tf-idf micros over the
     * corpus `tf`/`kdf`/`n`, ending in `kw(doc_id, term, krank)`.
     */
@@ -174,16 +188,7 @@ object RetrievalRows {
        ph(query_id, phrase) AS (VALUES
          (CAST(1 AS BIGINT), 'fast table'), (2, 'a a'), (3, 'table table'),
          (4, 'value table part'), (5, 'key agg row'), (6, 'zebra crossing')),
-       sh AS (
-         SELECT doc_id,
-           unnest(list_transform(range(1, len(w)),
-             i -> w[i] || ' ' || w[i+1])) AS shingle
-         FROM toks WHERE len(w) >= 2
-         UNION ALL
-         SELECT doc_id,
-           unnest(list_transform(range(1, len(w) - 1),
-             i -> w[i] || ' ' || w[i+1] || ' ' || w[i+2])) AS shingle
-         FROM toks WHERE len(w) >= 3),
+       $phraseShinglesCte,
        counts AS (
          SELECT query_id, doc_id, count(*) AS n_hits
          FROM sh JOIN ph ON shingle = phrase
@@ -562,14 +567,7 @@ object RetrievalRows {
     * [[graft.operators.TextAnalysis.moreLikeThis]] math.
     */
   private def moreLikeThisOracle: String =
-    s"""WITH $toksCte,
-       n AS (SELECT CAST(count(*) AS DOUBLE) AS n FROM documents),
-       $bm25StatsCte,
-       $bm25CorpusCte,
-       tf AS (
-         SELECT doc_id, doc_len, term, count(*) AS tf
-         FROM corpus GROUP BY doc_id, doc_len, term),
-       kdf AS (SELECT term, count(*) AS df FROM tf GROUP BY term),
+    s"""WITH $corpusTfCtes,
        $mltKeywordCtes,
        q AS (SELECT doc_id AS query_id, term FROM kw WHERE krank <= 3),
        btf AS (
@@ -610,14 +608,7 @@ object RetrievalRows {
     * nDCG math per (ranker, query) and the integer-micros mean.
     */
   private def rankerEvalOracle: String =
-    s"""WITH $toksCte,
-       n AS (SELECT CAST(count(*) AS DOUBLE) AS n FROM documents),
-       $bm25StatsCte,
-       $bm25CorpusCte,
-       tf AS (
-         SELECT doc_id, doc_len, term, count(*) AS tf
-         FROM corpus GROUP BY doc_id, doc_len, term),
-       kdf AS (SELECT term, count(*) AS df FROM tf GROUP BY term),
+    s"""WITH $corpusTfCtes,
        q_lex AS (
          SELECT doc_id AS query_id, unnest(list_distinct(w[1:8])) AS term
          FROM toks WHERE doc_id % 50 = 0),

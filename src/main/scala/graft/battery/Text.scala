@@ -766,16 +766,7 @@ object TextRows {
       s"""WITH $toksCte,
          ph(phrase) AS (VALUES ('fast table'), ('a a'), ('table table'),
            ('value table part'), ('key agg row'), ('zebra crossing')),
-         sh AS (
-           SELECT doc_id,
-             unnest(list_transform(range(1, len(w)),
-               i -> w[i] || ' ' || w[i+1])) AS shingle
-           FROM toks WHERE len(w) >= 2
-           UNION ALL
-           SELECT doc_id,
-             unnest(list_transform(range(1, len(w) - 1),
-               i -> w[i] || ' ' || w[i+1] || ' ' || w[i+2])) AS shingle
-           FROM toks WHERE len(w) >= 3)
+         $phraseShinglesCte
          SELECT doc_id, phrase, count(*) AS n_hits
          FROM sh JOIN ph ON shingle = phrase
          GROUP BY doc_id, phrase

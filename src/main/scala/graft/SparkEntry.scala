@@ -12,7 +12,7 @@ import graft.battery._
 object SparkEntry {
 
   private lazy val rows: Seq[Row] = {
-    val all = Seq(RelationalRows.rows, DedupRows.rows, VectorsRows.rows,
+    val all = Seq(RelationalRows.rows, DedupRows.rows, VectorRows.rows,
       RetrievalRows.rows, TextRows.rows, PipelineRows.rows,
       ClassifyRows.rows, MediaRows.rows, HeavyRows.rows).flatten
     val dup = all.groupBy(_.name).collect { case (n, rs) if rs.size > 1 => n }

@@ -9,6 +9,10 @@ import graft.operators.TextAnalysis
 import Fixtures._
 import OracleSql._
 
+/** Classifier and evaluation rows: NaiveBayes over word, hashed and
+  * char-gram features, and the report, AUC, kappa, AP, calibration and
+  * Brier metrics.
+  */
 object ClassifyRows {
   /** The q183/q184 eval-score fixture: label-correlated scores on the
     * k/128 grid — exactly representable doubles, so binning
@@ -108,7 +112,7 @@ object ClassifyRows {
                w -> w <> '') AS w
            FROM documents WHERE doc_id % 2 = 1)"""
 
-    /** `documents` as the NB rows' word features `(doc_id, lang, w)`. */
+  /** `documents` as the NB rows' word features `(doc_id, lang, w)`. */
   private def nbWordDocs(s: SparkSession, d: String): DataFrame =
     t(s, d, "documents").select(col("doc_id"), col("lang"),
       graft.functions.TextFunctions.words(col("text")).as("w"))

@@ -8,6 +8,9 @@ import graft.operators.{Dedup, TextAnalysis}
 import Fixtures._
 import OracleSql._
 
+/** Dedup rows: exact, n-gram, MinHash, SimHash, span, embedding and
+  * semantic dedup, one-shot and incremental against persisted history.
+  */
 object DedupRows {
   /** md5-hash-family CTE scaffold shared by q28 and q109: per-doc shingle
     * sets, hashed base values, the 16-column signature, and the
@@ -67,7 +70,7 @@ object DedupRows {
         ORDER BY id_a, id_b"""
   }
 
-    /** The q110 component labelling: same-label pairs at 4-decimal cosine
+  /** The q110 component labelling: same-label pairs at 4-decimal cosine
     * >= 0.4 and their min-label closure `cc(id, comp)`; callers prepend
     * `WITH RECURSIVE`.
     */

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.core.Tables
 
+/** DataFrame-side helpers shared by every battery family. */
 object Fixtures {
   /** Exact decimal-backed sum of a double column, returned as double. */
   private[battery] def dsum(c: Column): Column = sum(c.cast("decimal(38,9)")).cast("double")

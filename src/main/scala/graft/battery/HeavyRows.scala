@@ -8,6 +8,9 @@ import graft.operators.TextAnalysis
 import Fixtures._
 import OracleSql._
 
+/** The heavy tier: compute-dominated rows over the `documents` corpus
+  * replicated hundreds of times.
+  */
 object HeavyRows {
   /** The heavy-tier corpus: `documents` replicated `rep` times with
     * deterministic id offsets. The base scan repartitions to the session

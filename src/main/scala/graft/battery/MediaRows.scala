@@ -6,6 +6,9 @@ import graft.operators.Multimodal
 
 import Fixtures._
 
+/** Multimodal rows: media metadata, decode and resize, and the image,
+  * audio and video near-dup hashes.
+  */
 object MediaRows {
   /** The keyed-pixel gray value of `v` (the packed b, g, r bytes, each
     * shifted by the planted perturbation `dp`) — the (b+g+r)//3 of the

@@ -1,5 +1,6 @@
 package graft.battery
 
+/** DuckDB oracle fragments shared by more than one battery family. */
 object OracleSql {
   /** The word tokenizer over `text` ([[graft.functions.TextFunctions.words]]):
     * lower-cased, split on `\W+`, empty strings dropped.
@@ -7,14 +8,14 @@ object OracleSql {
   private[battery] val wordsSql: String =
     """list_filter(string_split_regex(lower(text), '\W+'), x -> x <> '')"""
 
-    /** `toks(doc_id, w)`: every document's [[wordsSql]] tokens. */
+  /** `toks(doc_id, w)`: every document's [[wordsSql]] tokens. */
   private[battery] val toksCte: String =
     s"""toks AS (
          SELECT doc_id,
            $wordsSql AS w
          FROM documents)"""
 
-    /** The LM rows' tokens `toks(doc_id, ws)` ([[wordsSql]] as `ws`). */
+  /** The LM rows' tokens `toks(doc_id, ws)` ([[wordsSql]] as `ws`). */
   private[battery] val lmToksCte: String =
     """toks AS (
            SELECT doc_id,
@@ -47,7 +48,7 @@ object OracleSql {
                + count(*) * 100) // (count(*) * 200) AS DOUBLE) / 1e4
              AS bits"""
 
-    /** `sh(doc_id, shingle)`: every 2- and 3-word shingle of `toks`, the
+  /** `sh(doc_id, shingle)`: every 2- and 3-word shingle of `toks`, the
     * positional phrase occurrences the q136 phrase counting joins on.
     */
   private[battery] val phraseShinglesCte: String =
@@ -73,6 +74,7 @@ object OracleSql {
     .map { case (l, ws) =>
       s"len(regexp_extract_all(lower(text), '\\b($ws)\\b')) AS s_$l" }
 
+  /** [[langHits]] as one select list. */
   private[battery] val langHitsSql: String = langHits.mkString(",\n             ")
 
   /** The q33 decision over the hit features: the most hits wins, ties go
@@ -130,12 +132,13 @@ object OracleSql {
 
   /** The df-capped [2,100] shingle postings of `${p}dd` and their pair
     * intersections, ending in `${p}inter(id_a, id_b, size_a, size_b, inter)`
-        * ([[graft.operators.Dedup.ngramJaccardPairs]]'s candidate chain). A
+    * ([[graft.operators.Dedup.ngramJaccardPairs]]'s candidate chain). A
     * `tight` postings CTE keeps its SELECT on the opening line, as the
     * clean-chain replays spell it.
     */
   private[battery] def shingleInterCtes(p: String, tight: Boolean = false): String =
-    s"""${p}posting AS ${if (tight) "(" else "(\n           "}SELECT doc_id, len(sh) AS sh_size, unnest(sh) AS shingle FROM ${p}dd),
+    s"""${p}posting AS ${if (tight) "(" else "(\n           "}SELECT doc_id,
+             len(sh) AS sh_size, unnest(sh) AS shingle FROM ${p}dd),
          ${p}kept AS (
            SELECT p.doc_id, p.sh_size, p.shingle FROM ${p}posting p
            JOIN (SELECT shingle, count(*) AS df FROM ${p}posting GROUP BY 1) d

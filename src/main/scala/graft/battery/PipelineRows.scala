@@ -9,6 +9,10 @@ import graft.operators.{Dedup, TextAnalysis}
 import Fixtures._
 import OracleSql._
 
+/** Training-data pipeline rows: the composed clean chain and its drop
+  * lineage, splits, sampling, mixing, DSIR, packing, FIM, SFT and
+  * preference data, and the export artifacts.
+  */
 object PipelineRows {
   /** The reward-scored candidate frame shared by q177 and q204 (the
     * shared-helper discipline — the two preference surfaces must rank
@@ -67,7 +71,7 @@ object PipelineRows {
          LEFT JOIN __vocab v ON v.tok = x.t)"""
   }
 
-    /** [[graft.pipelines.TrainingData.clean]]-with-defaults gate chain, shared
+  /** [[graft.pipelines.TrainingData.clean]]-with-defaults gate chain, shared
     * VERBATIM by the q45, q90, q168 and q199 oracles (the shared-helper
     * discipline: the gate chain cannot drift between the replays).
     * Normalize-dedup min-id `uniq`, language-ID scores and the exact

@@ -11,6 +11,10 @@ import graft.streaming.Topologies
 import Fixtures._
 import OracleSql._
 
+/** Engine-surface rows: scans, projections, joins, aggregates, windows,
+  * set operations, the SQL-text surface, PageRank, and the batch twins of
+  * the reference's Kafka Streams topologies and serving reads.
+  */
 object RelationalRows {
   private def q14JoinMultiway(s: SparkSession, dir: String): DataFrame = {
     val customer = t(s, dir, "customer")

@@ -8,6 +8,10 @@ import graft.operators.{Postings, TextAnalysis}
 import Fixtures._
 import OracleSql._
 
+/** Lexical retrieval rows: BM25 (one-shot and from a persisted
+  * LexicalIndex), tf-idf keywords, phrase, proximity and passage search,
+  * facets, significant terms, more-like-this, and the ranking metrics.
+  */
 object RetrievalRows {
   /** The q155/q156 boolean query batch (shared so the one-shot and
     * indexed rows rank the identical queries).
@@ -419,7 +423,7 @@ object RetrievalRows {
     * distinct-term-overlap grades (share n of the query's distinct
     * terms -> grade n), composable after [[bm25RankedCtes]].
     */
-    private def overlapJudgmentCtes: String =
+  private def overlapJudgmentCtes: String =
     s"""topk AS (SELECT query_id, doc_id, rank FROM ranked WHERE rank <= 10),
        ${gradeCtes("q")}"""
 
@@ -788,9 +792,6 @@ object RetrievalRows {
     },
       phraseTopKOracle),
 
-    // keyword analytics FROM the persisted index (no tokenize pass):
-    // the posting table is the tf bag, N folds from the stats deltas,
-    // the scoring tail is q139's — oracle identical since the math is
     // proximity ("terms near each other") top-k retrieval (one-shot):
     // min word-window span covering every distinct query term, kept if
     // <= slop 8, ranked tightest-first with the ascending-doc-id
@@ -1118,6 +1119,9 @@ object RetrievalRows {
     },
       bm25FuzzyOracle),
 
+    // keyword analytics FROM the persisted index (no tokenize pass):
+    // the posting table is the tf bag, N folds from the stats deltas,
+    // the scoring tail is q139's — oracle identical since the math is
     // single-homed; the build/append/scan path is what this row pins
     Row("q141_tfidf_indexed", (s, d) => {
       val (_, dir) = splitIndex(s, d)

@@ -9,6 +9,10 @@ import graft.operators.TextAnalysis
 import Fixtures._
 import OracleSql._
 
+/** Text analysis rows: language ID, quality, tokenizers (BPE,
+  * WordPiece, unigram), n-gram LMs, sentences, HTML/WARC extraction,
+  * encoding repair, C4 lines, Gopher rules, URLs and robots.txt.
+  */
 object TextRows {
   /** Deterministically PUNCTUATED `text` for the sentence rows
     * (q171/q180): the raw fixture is punctuation-free word soup, so
@@ -305,7 +309,7 @@ object TextRows {
                (CASE WHEN qf = '' THEN '' ELSE '?' || qf END) END AS canon_url
            FROM cq)"""
 
-    /** [[syntheticUrl]] as a DuckDB expression, character for character. */
+  /** [[syntheticUrl]] as a DuckDB expression, character for character. */
   private val syntheticUrlSql: String =
     """(CASE WHEN doc_id % 3 = 0 THEN 'http://' ELSE 'https://' END)
            || (CASE WHEN doc_id % 7 = 0 THEN 'crawler:pw@' ELSE '' END)
@@ -405,7 +409,7 @@ object TextRows {
         .orderBy(col("doc_id")),
       s"""WITH RECURSIVE $bpeOracleCtes
          SELECT d.doc_id AS doc_id,
-           CAST(len(list_filter(string_split_regex(d.text, '\\s+'), x -> x <> '')) AS BIGINT) AS ws_tokens,
+           CAST(len(${wsTokensSql("d.text")}) AS BIGINT) AS ws_tokens,
            CAST(coalesce(c.bpe_tokens, 0) AS BIGINT) AS bpe_tokens
          FROM documents d LEFT JOIN __bpe_doc_counts c ON d.doc_id = c.doc_id
          ORDER BY doc_id"""),

@@ -9,7 +9,10 @@ import graft.operators.Similarity
 import Fixtures._
 import OracleSql._
 
-object VectorsRows {
+/** Dense retrieval rows: exact and LSH/PQ vector search, quantization,
+  * hard negatives, MMR, the ANN recall audit and bitext margin mining.
+  */
+object VectorRows {
   /** Deterministic synthetic PQ codebook for q121 — m=4 subspaces x
     * ksub=8 centroids x dsub=16 dims over the 64-dim embeddings; every
     * centroid is integer arithmetic / 8 (a dyadic rational, exact in
@@ -56,7 +59,7 @@ object VectorsRows {
           FROM bucketed)"""
   }
 
-    /** [[lshPostedCte]] plus the q95 candidate pairs `<name>(query_id,
+  /** [[lshPostedCte]] plus the q95 candidate pairs `<name>(query_id,
     * vec_id, sim)`: every `vec_id % 50 = 0` probe against each vector
     * sharing one of its buckets, max cosine over the colliding tables.
     */
@@ -71,7 +74,7 @@ object VectorsRows {
           WHERE p.vec_id <> q.query_id
           GROUP BY 1, 2)"""
 
-    /** The q95 ranking tail over `pairs(query_id, vec_id, sim)`: the top 5
+  /** The q95 ranking tail over `pairs(query_id, vec_id, sim)`: the top 5
     * per query by sim desc with the ascending vec_id tiebreak.
     */
   private val pairsRankTail: String =

@@ -33,14 +33,14 @@ object Graphs {
     * about). Returns (node, rank) after `iterations` steps.
     *
     * The deduplicated edge table feeds every iteration plus the node and
-    * out-degree derivations, so `cacheEdges` (default on) materializes it
-    * once to a session-temp parquet ([[graft.io.Spill]], the
-    * TrainingData pattern — a spill releases on JVM exit where a persist
-    * of a lazily-returned plan leaks for the session); without it a
-    * K-iteration run re-derives the edges ~2K+2 times from source.
+    * out-degree derivations, so it is materialized once to a
+    * session-temp parquet ([[graft.io.Spill]], the TrainingData pattern —
+    * a spill releases on JVM exit where a persist of a lazily-returned
+    * plan leaks for the session); left lazy, a K-iteration run would
+    * re-derive the edges ~2K+2 times from source.
     */
   def pageRank(edges: DataFrame, iterations: Int,
-      damping: Double = 0.85, cacheEdges: Boolean = true): DataFrame = {
+      damping: Double = 0.85): DataFrame = {
     require(iterations >= 0, "iterations must be >= 0")
     require(damping > 0 && damping < 1, "damping must be in (0,1)")
     val ePlan = edges.select(col("src").cast("long").as("src"),
@@ -56,8 +56,7 @@ object Graphs {
     // spill was measured as a second fixed-cost job at bench scale).
     val eWide = ePlan.join(
       ePlan.groupBy(col("src")).agg(count(lit(1)).as("outdeg")), "src")
-    val e = if (cacheEdges) graft.io.Spill(eWide, "graft-pr-edges-")
-      else eWide
+    val e = graft.io.Spill(eWide, "graft-pr-edges-")
     // the (node, initial rank, teleport base) frame stays LAZY: its
     // identical distinct+count subtrees across iterations collapse under
     // exchange reuse in the final plan, and an eager spill of it paid a

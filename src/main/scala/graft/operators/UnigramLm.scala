@@ -296,31 +296,6 @@ object UnigramLm {
       seedSize: Int = 4000): (Seq[(String, Long)], Seq[Double]) =
     emFitCore(wordCounts, vocabSize, iters, maxPieceLen, seedSize)
 
-  /** Marginal corpus log-likelihood under a (piece → logp) model. */
-  def corpusLL(wordCounts: Iterable[(String, Long)],
-      logp: Map[String, Double], maxPieceLen: Int): Double = {
-    def lse(a: Double, b: Double): Double =
-      if (a == Double.NegativeInfinity) b
-      else if (b == Double.NegativeInfinity) a
-      else { val m = math.max(a, b); m + math.log(math.exp(a - m) + math.exp(b - m)) }
-    wordCounts.iterator.map { case (w, c) =>
-      val n = w.length
-      val alpha = Array.fill(n + 1)(Double.NegativeInfinity)
-      alpha(0) = 0.0
-      var i = 1
-      while (i <= n) {
-        var j = math.max(0, i - maxPieceLen)
-        while (j < i) {
-          logp.get(w.substring(j, i)).foreach(lp =>
-            alpha(i) = lse(alpha(i), alpha(j) + lp))
-          j += 1
-        }
-        i += 1
-      }
-      alpha(n) * c
-    }.sum
-  }
-
   /** Train from a corpus: ONE histogram aggregate (corpus-proportional,
     * [[BpeTraining.wordHistogram]]) then driver-side [[emFit]].
     */

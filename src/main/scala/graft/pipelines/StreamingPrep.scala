@@ -72,79 +72,15 @@ object StreamingPrep {
       c4MinLineWords: Option[Int] = None,
       bloomDedup: Boolean = false,
       lineage: Option[TrainingData.LineageRecorder] = None): DataFrame = {
-    // 0-enc. optional Unicode/mojibake repair — the same map-only
-    // [[graft.operators.Encoding]] chain as the batch pipeline's 0-enc,
-    // at the same point: per-doc deterministic (epoch ≡ union holds),
-    // and repaired text is what enters the fingerprint table, so a
-    // mojibake twin of an accepted doc deduplicates instead of
-    // re-entering
-    val encFixed = if (!fixEncoding) batch else {
-      val pre = batch.withColumn("__enc0",
-          graft.operators.Encoding.normalizeConfusables(
-            graft.operators.Encoding.repairMojibake(col(textCol))))
-        .withColumn("__enc1",
-          graft.operators.Encoding.stripControls(col("__enc0")))
-      val keep = length(col("__enc0")) === 0 ||
-        (length(col("__enc0")) - length(col("__enc1"))).cast("double") <=
-          lit(maxControlFrac) * length(col("__enc0")).cast("double")
-      lineage.foreach(_.where("encoding", pre, keep,
-        lit(s"control_frac>$maxControlFrac")))
-      pre.where(keep).withColumn(textCol, col("__enc1"))
-        .drop("__enc0", "__enc1")
-    }
-    // 0-lines. optional C4 line-level cleaning — the same map-only
-    // [[graft.operators.Lines]] rewrite + doc gate at the batch
-    // pipeline's 0-lines point; per-doc deterministic, so epoch ≡
-    // union holds and the REWRITTEN text is what fingerprints
-    val c4Gated = c4MinLineWords.fold(encFixed) { mw =>
-      val flagged = encFixed
-        .withColumn("__c4_brace", col(textCol).contains("{"))
-        .withColumn("__c4_lorem",
-          lower(col(textCol)).contains("lorem ipsum"))
-      val keep = !col("__c4_brace") && !col("__c4_lorem")
-      lineage.foreach(_.where("c4_doc", flagged, keep,
-        when(col("__c4_brace"), "contains_brace")
-          .otherwise("contains_lorem_ipsum")))
-      flagged.where(keep)
-        .withColumn(textCol, array_join(
-          filter(split(col(textCol), "\n"),
-            l => graft.operators.Lines.c4LineKeep(l, mw)), "\n"))
-        .drop("__c4_brace", "__c4_lorem")
-    }
-    // 0. optional literal-phrase blocklist — the same map-only
-    // [[graft.operators.TextAnalysis.blocklistGate]] the batch pipeline
-    // runs first, at the same point: per-doc deterministic, so it
-    // commutes with the dedup fold (identical text gates identically)
-    // and blocked docs never enter the fingerprint table
-    val listed0 = if (blocklistPhrases.isEmpty) c4Gated
-      else graft.operators.TextAnalysis.blocklistGate(
-        c4Gated, idCol, textCol, blocklistPhrases, blocklistMaxHits)
-    if (blocklistPhrases.nonEmpty) lineage.foreach(
-      _.diff("blocklist", s"phrase_hits>$blocklistMaxHits", c4Gated,
-        listed0))
-    // 0a2. optional Gopher rule gate — same map-only
-    // [[graft.operators.TextAnalysis.gopherPass]] filter at the same
-    // point as the batch pipeline's stage 0a2; per-doc deterministic,
-    // so epoch ≡ union holds unchanged and rule-failing docs never
-    // enter the fingerprint table
-    val listed1 = if (!gopherGate) listed0
-      else listed0.where(
-        graft.operators.TextAnalysis.gopherPass(col(textCol)))
-    if (gopherGate) lineage.foreach(
-      _.diff("gopher", "gopher_rules_fail", listed0, listed1))
-    // 0a3. optional compression-ratio gate — same map-only deflate
-    // predicate at the same point as the batch pipeline's stage 0a3;
-    // per-doc deterministic, so epoch ≡ union holds unchanged and
-    // over/under-compressible docs never enter the fingerprint table
-    // single-eval [[graft.functions.DeflateRatioGate]] predicate — one
-    // deflate per row, same rationale as the batch pipeline's stage 0a3
-    val listed = compressionRatioBounds.fold(listed1) { case (lo, hi) =>
-      val gated = listed1.where(graft.functions.GraftFunctions
-        .deflate_ratio_in(col(textCol), lo, hi))
-      lineage.foreach(_.diff("compression",
-        s"ratio_outside_[$lo,$hi]", listed1, gated))
-      gated
-    }
+    // 0-enc .. 0a3. the batch pipeline's map-only per-document gates,
+    // at the same point and in the same order: each is per-doc
+    // deterministic, so epoch ≡ union holds, and the repaired and
+    // rewritten text is what enters the fingerprint table — a mojibake
+    // twin of an accepted doc deduplicates instead of re-entering, and
+    // gated docs never enter it at all
+    val listed = TrainingData.docGates(batch, idCol, textCol, fixEncoding,
+      maxControlFrac, c4MinLineWords, blocklistPhrases, blocklistMaxHits,
+      gopherGate, compressionRatioBounds, lineage)
     // 1. cross-run exact dedup: in-batch min-id collapse + anti-join
     // against every earlier epoch's fingerprints; `bloomDedup` routes
     // through the persisted-filter fast path (bit-identical survivors

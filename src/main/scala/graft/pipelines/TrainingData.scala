@@ -211,95 +211,11 @@ object TrainingData {
         .withColumn(textCol, col(s"${h}_text"))
         .drop(s"${h}_text", "n_blocks", "n_kept", h)
     }
-    // 0-enc. optional Unicode/mojibake repair ([[graft.operators.Encoding]],
-    // the ftfy posture): map-only repair → confusables → control strip
-    // BEFORE language-id and quality scoring, so mojibake ("CafÃ©")
-    // doesn't poison the n-gram markers or fragment token statistics.
-    // Per-doc deterministic like the blocklist, so the streaming
-    // pipeline's epoch ≡ union argument holds unchanged. Docs whose
-    // text was mostly control/binary junk (the strip removed more than
-    // `maxControlFrac` of the repaired chars) drop here with reason
-    // "control_frac" — binary garbage should never reach dedup
-    val encFixed = if (!fixEncoding) docs else {
-      val pre = docs.withColumn("__enc0",
-          graft.operators.Encoding.normalizeConfusables(
-            graft.operators.Encoding.repairMojibake(col(textCol))))
-        .withColumn("__enc1",
-          graft.operators.Encoding.stripControls(col("__enc0")))
-      val keep = length(col("__enc0")) === 0 ||
-        (length(col("__enc0")) - length(col("__enc1"))).cast("double") <=
-          lit(maxControlFrac) * length(col("__enc0")).cast("double")
-      lineage.foreach(_.where("encoding", pre, keep,
-        lit(s"control_frac>$maxControlFrac")))
-      pre.where(keep).withColumn(textCol, col("__enc1"))
-        .drop("__enc0", "__enc1")
-    }
-    // 0-lines. optional C4 line-level cleaning ([[graft.operators.Lines]]):
-    // REWRITES each doc to its rule-passing lines and drops the C4
-    // doc-level offenders (code braces, lorem ipsum) with attribution —
-    // map-only like the encoding stage, per-doc deterministic (the
-    // streaming pipeline applies it at the same point), and docs whose
-    // every line fails fall out at the stage-2 tokenize gate
-    val c4Gated = c4MinLineWords.fold(encFixed) { mw =>
-      val flagged = encFixed
-        .withColumn("__c4_brace", col(textCol).contains("{"))
-        .withColumn("__c4_lorem",
-          lower(col(textCol)).contains("lorem ipsum"))
-      val keep = !col("__c4_brace") && !col("__c4_lorem")
-      lineage.foreach(_.where("c4_doc", flagged, keep,
-        when(col("__c4_brace"), "contains_brace")
-          .otherwise("contains_lorem_ipsum")))
-      flagged.where(keep)
-        .withColumn(textCol, array_join(
-          filter(split(col(textCol), "\n"),
-            l => graft.operators.Lines.c4LineKeep(l, mw)), "\n"))
-        .drop("__c4_brace", "__c4_lorem")
-    }
-    // 0a. optional literal-phrase blocklist (the LDNOOBW gate) — map-only
-    // ([[graft.operators.TextAnalysis.blocklistGate]]), so it runs before
-    // EVERYTHING: a blocked doc consumes no domain-cap budget and never
-    // pays dedup or scoring. Per-doc deterministic, so the streaming
-    // pipeline applies the same gate at the same point (epoch ≡ union
-    // holds — identical text gates identically, so exact-dup groups
-    // drop or survive together)
-    val docs0 = if (blocklistPhrases.isEmpty) c4Gated
-      else graft.operators.TextAnalysis.blocklistGate(
-        c4Gated, idCol, textCol, blocklistPhrases, blocklistMaxHits)
-    if (blocklistPhrases.nonEmpty) lineage.foreach(
-      _.diff("blocklist", s"phrase_hits>$blocklistMaxHits", c4Gated,
-        docs0))
-    // 0a2. optional Gopher rule gate ([[TextAnalysis.gopherPass]], the
-    // q178 battery's NAMED bounds as one map-only filter) — per-doc
-    // deterministic like the blocklist, so it runs this early (a
-    // rule-failing doc consumes no domain-cap budget and never pays
-    // dedup or scoring) and the streaming pipeline's epoch ≡ union
-    // argument holds unchanged
-    val ruleGated0 = if (!gopherGate) docs0
-      else docs0.where(
-        graft.operators.TextAnalysis.gopherPass(col(textCol)))
-    if (gopherGate) lineage.foreach(
-      _.diff("gopher", "gopher_rules_fail", docs0, ruleGated0))
-    // 0a3. optional compression-ratio gate ([[TextAnalysis]]'s deflate
-    // signal inlined as one map-only predicate): keep docs whose
-    // deflate/raw byte ratio lies in [min, max] — below-min is
-    // template/boilerplate repetition the n-gram gates can miss
-    // (structure wider than any gram window), above-max is non-text
-    // junk. Same per-doc deterministic class as the Gopher gate, so
-    // the streaming epoch ≡ union argument holds unchanged. Empty
-    // texts pass (no bytes to judge — the stage-2 tokenize gate owns
-    // them). Heuristic thresholds: place them in the distribution's
-    // bulk, never knife-edge (the signal is JVM-zlib dependent). The
-    // predicate is the single-eval [[graft.functions.DeflateRatioGate]]
-    // so each row deflates exactly once — a struct-field predicate would
-    // replicate the CodegenFallback deflate per reference (up to 3x/row)
-    val ruleGated = compressionRatioBounds.fold(ruleGated0) {
-      case (lo, hi) =>
-        val gated = ruleGated0.where(graft.functions.GraftFunctions
-          .deflate_ratio_in(col(textCol), lo, hi))
-        lineage.foreach(_.diff("compression",
-          s"ratio_outside_[$lo,$hi]", ruleGated0, gated))
-        gated
-    }
+    // 0-enc .. 0a3: the map-only per-document gates, in the order and
+    // with the lineage labels the streaming pipeline shares
+    val ruleGated = docGates(docs, idCol, textCol, fixEncoding,
+      maxControlFrac, c4MinLineWords, blocklistPhrases, blocklistMaxHits,
+      gopherGate, compressionRatioBounds, lineage)
     // 0-rb. optional robots.txt gate ([[graft.operators.Robots]], the
     // q192 battery's RFC 9309 subset) — the EARLIEST URL decision:
     // a disallowed fetch should consume no domain-cap budget and never
@@ -472,6 +388,99 @@ object TrainingData {
     dsirGated.select(col(idCol), col("lang_pred"), col("n_words"), col("quality"),
       TextFunctions.wsTokenCount(col(textCol)).as("ws_tokens"),
       TextFunctions.bpeTokenCount(col(textCol)).as("bpe_tokens"))
+  }
+
+  /** The map-only per-document gates both pipelines run before exact
+    * dedup, in this order: encoding repair (`fixEncoding`), the C4 line
+    * rewrite and doc gate (`c4MinLineWords`), the literal-phrase
+    * blocklist, the Gopher rules and the compression-ratio band. Each is
+    * off at its default and records its drops under its own lineage
+    * stage. Every gate is per-doc deterministic, so a doc drops or
+    * survives the same way whichever batch it arrives in: exact-dup
+    * groups drop or survive together, and [[StreamingPrep.processBatch]]'s
+    * epoch ≡ union argument holds through all of them. Running them
+    * first means a gated doc consumes no domain-cap budget and never pays
+    * dedup or scoring.
+    */
+  private[pipelines] def docGates(docs: DataFrame, idCol: String,
+      textCol: String, fixEncoding: Boolean, maxControlFrac: Double,
+      c4MinLineWords: Option[Int], blocklistPhrases: Seq[String],
+      blocklistMaxHits: Long, gopherGate: Boolean,
+      compressionRatioBounds: Option[(Double, Double)],
+      lineage: Option[LineageRecorder]): DataFrame = {
+    // 0-enc. Unicode/mojibake repair ([[graft.operators.Encoding]], the
+    // ftfy posture): repair → confusables → control strip BEFORE
+    // language-id and quality scoring, so mojibake ("CafÃ©") doesn't
+    // poison the n-gram markers or fragment token statistics. Docs whose
+    // text was mostly control/binary junk (the strip removed more than
+    // `maxControlFrac` of the repaired chars) drop with reason
+    // "control_frac" — binary garbage should never reach dedup
+    val encFixed = if (!fixEncoding) docs else {
+      val pre = docs.withColumn("__enc0",
+          graft.operators.Encoding.normalizeConfusables(
+            graft.operators.Encoding.repairMojibake(col(textCol))))
+        .withColumn("__enc1",
+          graft.operators.Encoding.stripControls(col("__enc0")))
+      val keep = length(col("__enc0")) === 0 ||
+        (length(col("__enc0")) - length(col("__enc1"))).cast("double") <=
+          lit(maxControlFrac) * length(col("__enc0")).cast("double")
+      lineage.foreach(_.where("encoding", pre, keep,
+        lit(s"control_frac>$maxControlFrac")))
+      pre.where(keep).withColumn(textCol, col("__enc1"))
+        .drop("__enc0", "__enc1")
+    }
+    // 0-lines. C4 line-level cleaning ([[graft.operators.Lines]]):
+    // REWRITES each doc to its rule-passing lines and drops the C4
+    // doc-level offenders (code braces, lorem ipsum) with attribution;
+    // docs whose every line fails fall out at the stage-2 tokenize gate
+    val c4Gated = c4MinLineWords.fold(encFixed) { mw =>
+      val flagged = encFixed
+        .withColumn("__c4_brace", col(textCol).contains("{"))
+        .withColumn("__c4_lorem",
+          lower(col(textCol)).contains("lorem ipsum"))
+      val keep = !col("__c4_brace") && !col("__c4_lorem")
+      lineage.foreach(_.where("c4_doc", flagged, keep,
+        when(col("__c4_brace"), "contains_brace")
+          .otherwise("contains_lorem_ipsum")))
+      flagged.where(keep)
+        .withColumn(textCol, array_join(
+          filter(split(col(textCol), "\n"),
+            l => graft.operators.Lines.c4LineKeep(l, mw)), "\n"))
+        .drop("__c4_brace", "__c4_lorem")
+    }
+    // 0a. literal-phrase blocklist (the LDNOOBW gate,
+    // [[graft.operators.TextAnalysis.blocklistGate]])
+    val listed = if (blocklistPhrases.isEmpty) c4Gated
+      else graft.operators.TextAnalysis.blocklistGate(
+        c4Gated, idCol, textCol, blocklistPhrases, blocklistMaxHits)
+    if (blocklistPhrases.nonEmpty) lineage.foreach(
+      _.diff("blocklist", s"phrase_hits>$blocklistMaxHits", c4Gated,
+        listed))
+    // 0a2. Gopher rule gate ([[TextAnalysis.gopherPass]], the q178
+    // battery's NAMED bounds as one filter)
+    val ruled = if (!gopherGate) listed
+      else listed.where(
+        graft.operators.TextAnalysis.gopherPass(col(textCol)))
+    if (gopherGate) lineage.foreach(
+      _.diff("gopher", "gopher_rules_fail", listed, ruled))
+    // 0a3. compression-ratio gate ([[TextAnalysis]]'s deflate signal
+    // inlined as one predicate): keep docs whose deflate/raw byte ratio
+    // lies in [min, max] — below-min is template/boilerplate repetition
+    // the n-gram gates can miss (structure wider than any gram window),
+    // above-max is non-text junk. Empty texts pass (no bytes to judge —
+    // the stage-2 tokenize gate owns them). Heuristic thresholds: place
+    // them in the distribution's bulk, never knife-edge (the signal is
+    // JVM-zlib dependent). The predicate is the single-eval
+    // [[graft.functions.DeflateRatioGate]] so each row deflates exactly
+    // once — a struct-field predicate would replicate the
+    // CodegenFallback deflate per reference (up to 3x/row)
+    compressionRatioBounds.fold(ruled) { case (lo, hi) =>
+      val gated = ruled.where(graft.functions.GraftFunctions
+        .deflate_ratio_in(col(textCol), lo, hi))
+      lineage.foreach(_.diff("compression",
+        s"ratio_outside_[$lo,$hi]", ruled, gated))
+      gated
+    }
   }
 
   /** Stages 2+3 (+2b, +2a') as ONE definition shared by [[clean]] and

@@ -495,4 +495,40 @@ class StreamingPrepSpec extends AnyFunSuite with Matchers with SparkSpec {
       .select("doc_id").collect().map(_.getLong(0)).toSet shouldBe
       (s1 ++ s2)
   }
+
+  test("the C4 line stage slots into the streaming pipeline at the " +
+      "batch pipeline's 0-lines point; brace/lorem docs drop with " +
+      "lineage and the rewritten text is what fingerprints") {
+    import spark.implicits._
+    val work = Files.createTempDirectory("graft-sprep-c4").toString
+    val good = goodDoc("with joins and windows over rows and groups here.")
+    // doc 81's junk lines go, leaving exactly `good`: epoch 2's doc 91
+    // (`good` alone) must fall to exact dedup against the REWRITTEN text
+    val e1 = Seq(
+      81L -> Seq("menu", good, "enable javascript please.").mkString("\n"),
+      82L -> (goodDoc("where filters and sorts and limits shape results.") +
+        "\nlorem ipsum dolor sit amet."),
+      83L -> (goodDoc("when groups and ranges and rollups cover the frame.") +
+        "\nif (x) { return; }"))
+    val e2 = Seq(91L -> good,
+      92L -> goodDoc("plus aggregates and buckets and ranges in the plan."))
+    def ep(docs: Seq[(Long, String)], id: String, dir: String) = {
+      val rec = graft.pipelines.TrainingData.lineageRecorder("doc_id")
+      val surv = StreamingPrep.processBatch(docs.toDF("doc_id", "text"),
+          "doc_id", "text", s"$work/$dir", batchId = id,
+          c4MinLineWords = Some(3), lineage = Some(rec))
+        .select("doc_id").collect().map(_.getLong(0)).toSet
+      (surv, rec.frame(spark).collect()
+        .map(r => r.getLong(0) -> (r.getString(1), r.getString(2))).toMap)
+    }
+    val (s1, lin1) = ep(e1, "e1", "tables")
+    s1 shouldBe Set(81L)
+    lin1(82L) shouldBe ("c4_doc", "contains_lorem_ipsum")
+    lin1(83L) shouldBe ("c4_doc", "contains_brace")
+    val (s2, lin2) = ep(e2, "e2", "tables")
+    s2 shouldBe Set(92L)
+    lin2(91L)._1 shouldBe "exact_dedup"
+    // epoch ≡ union with the stage on (per-doc deterministic)
+    ep(e1 ++ e2, "all", "twin")._1 shouldBe (s1 ++ s2)
+  }
 }

@@ -3,8 +3,9 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 import graft.battery._
+import graft.battery.RelationalRows.q14JoinMultiway
 
-/** Driver contract: the t2 query battery, assembled from the per-family
+/** The t2 query battery, assembled from the per-family
   * [[graft.battery.Row]] lists. Every query name maps SURVEY §2's operator
   * inventory and carries its DuckDB oracle in the same row, so
   * [[queries]] and [[oracleSql]] have one key set by construction.
@@ -33,5 +34,5 @@ object SparkEntry {
     * TPC-H Q3-shaped multiway join (SURVEY §2.6 joins).
     */
   def entry(spark: SparkSession): DataFrame =
-    queries("q14_join_multiway")(spark, "/root/testdata/sf0.001")
+    q14JoinMultiway(spark, "/root/testdata/sf0.001")
 }

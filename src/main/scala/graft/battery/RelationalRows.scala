@@ -16,7 +16,8 @@ import OracleSql._
   * the reference's Kafka Streams topologies and serving reads.
   */
 object RelationalRows {
-  private def q14JoinMultiway(s: SparkSession, dir: String): DataFrame = {
+  /** The flagship row (q14), also [[graft.SparkEntry.entry]]. */
+  private[graft] def q14JoinMultiway(s: SparkSession, dir: String): DataFrame = {
     val customer = t(s, dir, "customer")
     val orders = t(s, dir, "orders")
     val lineitem = t(s, dir, "lineitem")

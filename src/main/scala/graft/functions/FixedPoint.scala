@@ -42,12 +42,4 @@ object FixedPoint {
     val m = micros(abs(num), den)
     fromMicros(when(num < 0, -m).otherwise(m))
   }
-
-  /** The DuckDB twin of [[micros]] as SQL text (dev/oracle use). */
-  def microsSql(num: String, den: String): String =
-    s"(($num) * 2000000 + ($den)) // (2 * ($den))"
-
-  /** The DuckDB twin of [[ratio6]] as SQL text. */
-  def ratio6Sql(num: String, den: String): String =
-    s"CAST(${microsSql(num, den)} AS DOUBLE) / 1e6"
 }

@@ -291,8 +291,6 @@ object GraftFunctions {
           s"mmr_select(candidates, k literal, lamMicros literal); got ${other.size} args")
     },
     "int8_quantize" -> (exprs => Int8Quantize(asDoubleArray(exprs.head))),
-    "int8_pack" -> (exprs => Int8Pack(exprs.head)),
-    "cosine_int8" -> (exprs => CosineInt8(exprs(0), exprs(1))),
     "hyperplane_buckets" -> {
       case Seq(child, Literal(nTables: Int, _), Literal(nPlanes: Int, _),
           Literal(dim: Int, _), Literal(seed: Long, _)) =>
@@ -376,13 +374,6 @@ object GraftFunctions {
 
   /** One-pass int8 quantization: struct<scale: double, q: array<int>>. */
   def int8_quantize(emb: Column): Column = call_function("int8_quantize", emb)
-
-  /** Pack int8 codes (array<int> in [-128,127]) into binary, 1 byte/dim. */
-  def int8_pack(q: Column): Column = call_function("int8_pack", q)
-
-  /** Cosine over two int8-packed vectors (exact integer dot and norms). */
-  def cosine_int8(a: Column, b: Column): Column =
-    call_function("cosine_int8", a, b)
 
   /** PQ codes of an embedding column: binary, one byte per subspace. */
   def pq_encode(emb: Column, codebook: Seq[Seq[Seq[Double]]]): Column =

@@ -1,24 +1,9 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
-
-/** int8 embedding storage for ANN at scale: a float32 embedding column is
-  * 4 bytes/dim; symmetric per-vector int8 quantization stores 1 byte/dim,
-  * so a 100 TB embedding table's candidate scan reads a quarter of the
-  * bytes (and a broadcast of the quantized query is 4x smaller). Cosine is
-  * scale-invariant — per-vector scalar factors cancel — so ranking by
-  * cosine over the int8 codes needs NO dequantization and no scale column
-  * in the search path; the scale matters only when reconstructing values.
-  *
-  * [[Int8Pack]] packs the integer codes (array<int> from
-  * [[graft.operators.Quantization.quantize]]) into a BinaryType value, one
-  * signed byte per component; [[CosineInt8]] is the codegen'd cosine over
-  * two packed vectors (integer dot and norms in long arithmetic — exact,
-  * no float drift until the final division).
-  */
 
 /** One-pass int8 quantization: array<double> -> struct<scale: double,
   * q: array<int>>. Semantics are EXACTLY the higher-order composition in
@@ -91,110 +76,4 @@ case class Int8Quantize(child: Expression) extends UnaryExpression {
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
-}
-
-/** array<int> (each in [-128, 127]) -> binary, one signed byte each.
-  * Out-of-range values THROW: a silent clamp would hide an upstream
-  * scale bug as a quietly-wrong neighbor ranking.
-  */
-case class Int8Pack(child: Expression) extends UnaryExpression {
-
-  override def dataType: DataType = BinaryType
-  override def prettyName: String = "int8_pack"
-
-  override def nullSafeEval(input: Any): Any = {
-    val a = input.asInstanceOf[ArrayData]
-    val n = a.numElements()
-    val out = new Array[Byte](n)
-    var i = 0
-    while (i < n) {
-      val v = a.getInt(i)
-      if (v < Byte.MinValue || v > Byte.MaxValue)
-        throw new IllegalArgumentException(
-          s"int8_pack: value $v at index $i outside [-128, 127]")
-      out(i) = v.toByte
-      i += 1
-    }
-    out
-  }
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, a => {
-      val n = ctx.freshName("n")
-      val out = ctx.freshName("out")
-      val i = ctx.freshName("i")
-      val v = ctx.freshName("v")
-      s"""
-         |int $n = $a.numElements();
-         |byte[] $out = new byte[$n];
-         |for (int $i = 0; $i < $n; $i++) {
-         |  int $v = $a.getInt($i);
-         |  if ($v < -128 || $v > 127) {
-         |    throw new IllegalArgumentException(
-         |      "int8_pack: value " + $v + " at index " + $i + " outside [-128, 127]");
-         |  }
-         |  $out[$i] = (byte) $v;
-         |}
-         |${ev.value} = $out;
-       """.stripMargin
-    })
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-/** Cosine similarity over two [[Int8Pack]]-packed vectors: integer dot and
-  * norms accumulated in long (exact for any dimension < 2^47), one double
-  * division at the end. Length mismatch THROWS (contract shared with
-  * [[CosineSimilarity]]); zero-norm input yields 0.0.
-  */
-case class CosineInt8(left: Expression, right: Expression)
-    extends BinaryExpression {
-
-  override def dataType: DataType = DoubleType
-  override def prettyName: String = "cosine_int8"
-
-  override def nullSafeEval(l: Any, r: Any): Any = {
-    val a = l.asInstanceOf[Array[Byte]]
-    val b = r.asInstanceOf[Array[Byte]]
-    if (a.length != b.length)
-      throw new IllegalArgumentException(
-        s"cosine_int8: dimension mismatch ${a.length} vs ${b.length}")
-    var dot = 0L; var na = 0L; var nb = 0L; var i = 0
-    while (i < a.length) {
-      val x = a(i).toLong; val y = b(i).toLong
-      dot += x * y; na += x * x; nb += y * y
-      i += 1
-    }
-    if (na == 0L || nb == 0L) 0.0
-    else dot / (math.sqrt(na.toDouble) * math.sqrt(nb.toDouble))
-  }
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val dot = ctx.freshName("dot")
-      val na = ctx.freshName("na")
-      val nb = ctx.freshName("nb")
-      val i = ctx.freshName("i")
-      val x = ctx.freshName("x")
-      val y = ctx.freshName("y")
-      s"""
-         |if ($a.length != $b.length) {
-         |  throw new IllegalArgumentException(
-         |    "cosine_int8: dimension mismatch " + $a.length + " vs " + $b.length);
-         |}
-         |long $dot = 0L; long $na = 0L; long $nb = 0L;
-         |for (int $i = 0; $i < $a.length; $i++) {
-         |  long $x = $a[$i];
-         |  long $y = $b[$i];
-         |  $dot += $x * $y; $na += $x * $x; $nb += $y * $y;
-         |}
-         |${ev.value} = ($na == 0L || $nb == 0L)
-         |  ? 0.0 : $dot / (Math.sqrt((double) $na) * Math.sqrt((double) $nb));
-       """.stripMargin
-    })
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): Expression =
-    copy(left = newLeft, right = newRight)
 }

@@ -1103,61 +1103,16 @@ object Dedup {
     */
   def incrementalSemanticDedup(embs: DataFrame, idCol: String, embCol: String,
       blockCol: String, threshold: Double, histTablePath: String,
-      batchId: String = null): DataFrame =
-    incrementalSemantic(embs, idCol, embCol, blockCol, threshold,
-      histTablePath, batchId, col(embCol).cast("array<double>"),
-      "emb ARRAY<DOUBLE>", GraftFunctions.cosine_sim)
-
-  /** [[incrementalSemanticDedup]] with an int8-QUANTIZED history: the
-    * cross-run table stores 1-byte-per-dim packed codes
-    * ([[graft.functions.Int8Pack]]) instead of `array<double>` — ~8x
-    * smaller history scans and block-join exchanges — and cross-batch
-    * candidate scoring runs the integer-dot
-    * [[graft.functions.CosineInt8]] kernel (cosine is invariant under
-    * the per-vector quantization scale, so the table needs no scale
-    * column and the scoring no dequantization; the same posture as the
-    * int8 posting codec of the quantized ANN indexes, `Similarity.int8Codes`).
-    *
-    * In-batch pairs stay FLOAT-exact (the batch's own embeddings are in
-    * hand), so against an empty history this is exactly [[semanticDedup]]
-    * like the float-history form. Cross-batch similarities are quantized
-    * approximations: near-threshold pairs can flip either way, so the
-    * survivor set is spec-gated against the float-history path with a
-    * symmetric-difference bound (`IncrementalDedupSpec`); an exact or
-    * same-direction duplicate still scores int8 cosine 1.0 and is always
-    * caught. The float form stays the oracle default (q117) — choose
-    * this one when history-table size dominates pipeline cost. The two
-    * forms' history schemas differ: never point them at one table path.
-    * [[compactEmbeddings]] folds the accumulating dirs (distinct by
-    * doc_id — the fold never reads vector payloads).
-    */
-  def incrementalSemanticDedupInt8(embs: DataFrame, idCol: String,
-      embCol: String, blockCol: String, threshold: Double,
-      histTablePath: String, batchId: String = null): DataFrame = {
-    incrementalSemantic(embs, idCol, embCol, blockCol, threshold,
-      histTablePath, batchId, Similarity.int8Codes(col(embCol)), "qb BINARY",
-      GraftFunctions.cosine_int8)
-  }
-
-  /** The one body of the incremental semantic pair: the history table
-    * holds (doc_id, block, <payload>) with `payload` stored under the
-    * `payloadDdl` column, and `score` rates a history payload against a
-    * batch payload for the cross-batch pairs. In-batch pairs are always
-    * the float-exact [[embeddingNearDupPairs]].
-    */
-  private def incrementalSemantic(embs: DataFrame, idCol: String,
-      embCol: String, blockCol: String, threshold: Double,
-      histTablePath: String, batchId: String, payload: Column,
-      payloadDdl: String, score: (Column, Column) => Column): DataFrame = {
+      batchId: String = null): DataFrame = {
     val bid = BatchTable.batchId(batchId)
-    val p = payloadDdl.takeWhile(_ != ' ')
     // materialize once: the batch feeds the self-join (x2), the cross
     // join, the final anti-join, and the history append
     val batch = graft.io.Spill(embs, "graft-semb-")
     val bproj = batch.select(col(idCol).cast("long").as("doc_id"),
-      col(blockCol).cast("string").as("block"), payload.as(p))
+      col(blockCol).cast("string").as("block"),
+      col(embCol).cast("array<double>").as("emb"))
     val hist = BatchTable.history(embs.sparkSession, histTablePath,
-      s"doc_id BIGINT, block STRING, $payloadDdl", bid)
+      "doc_id BIGINT, block STRING, emb ARRAY<DOUBLE>", bid)
     val inBatch = embeddingNearDupPairs(batch, idCol, embCol, blockCol, threshold)
       .select(col("id_a").cast("long").as("id_a"),
         col("id_b").cast("long").as("id_b"))
@@ -1165,7 +1120,8 @@ object Dedup {
       .join(bproj.as("n"),
         col("h.block") === col("n.block") &&
           col("h.doc_id") =!= col("n.doc_id"))
-      .where(round(score(col(s"h.$p"), col(s"n.$p")), 4) >= threshold)
+      .where(round(GraftFunctions.cosine_sim(col("h.emb"), col("n.emb")), 4)
+        >= threshold)
       .select(least(col("h.doc_id"), col("n.doc_id")).as("id_a"),
         greatest(col("h.doc_id"), col("n.doc_id")).as("id_b"))
     val labels = connectedComponents(inBatch.unionByName(cross).distinct())

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Persisted inverted (lexical) index — the BM25 member of the persisted
-  * index family ([[Similarity]]'s LSH/IVF/IVF-PQ for embeddings): build a
+  * index family ([[Similarity]]'s LSH/IVF for embeddings): build a
   * term-bucket-partitioned posting table once, append new document
   * batches as they arrive, and serve retrieval against it without
   * re-tokenizing the corpus. Retrieval is ONE ranker set over two

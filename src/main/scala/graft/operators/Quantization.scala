@@ -3,24 +3,18 @@ package graft.operators
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.functions.GraftFunctions.{cosine_int8, int8_pack, int8_quantize}
+import graft.functions.GraftFunctions.int8_quantize
 
-/** Symmetric per-vector int8 quantization of an embedding column — the
-  * storage-compression path for similarity search at scale (4 bytes/dim
-  * float32 -> 1 byte/dim, so a 100 TB embedding table scans a quarter of
-  * the bytes; see [[graft.functions.Int8Pack]]).
+/** Embedding quantization: symmetric per-vector int8 code assignment
+  * (q87) and flat product quantization with ADC ranking (q121).
   *
-  * The code assignment is `q_i = floor(x_i * scale + 0.5)` with
+  * The int8 code assignment is `q_i = floor(x_i * scale + 0.5)` with
   * `scale = 127 / max_i |x_i|` — explicit half-up rounding written as
   * floor so every step (float->double widening, one double division, one
   * multiply-add, floor) is IEEE-exact and an external engine replays the
   * identical integers; the DuckDB oracle recomputes the codes
   * bit-for-bit. A zero (or empty) vector gets scale 0 and all-zero codes
   * rather than a divide-by-zero.
-  *
-  * Cosine is invariant under per-vector scaling, so ranking by cosine
-  * over the codes needs no dequantization and no scale column — the
-  * search path reads ONLY the packed bytes.
   */
 object Quantization {
 
@@ -59,15 +53,6 @@ object Quantization {
           when(isnan(y), lit(0)).otherwise(floor(y).cast("int"))
         }))
   }
-
-  /** [[quantize]] + pack the codes to 1-byte-per-dim binary storage in
-    * `outCol`, dropping the intermediate code array.
-    */
-  def quantizePacked(df: DataFrame, embCol: String,
-      outCol: String = "qb"): DataFrame =
-    quantize(df, embCol)
-      .withColumn(outCol, int8_pack(col("q")))
-      .drop("q")
 
   /** Train a product-quantization codebook (Jégou et al., TPAMI 2011):
     * the `dim`-dimensional space splits into `m` contiguous subspaces of
@@ -152,22 +137,6 @@ object Quantization {
         round(graft.functions.GraftFunctions.pq_adc(col(pqCol), dt), 4)
           .as("dist"))
       .orderBy(col("dist"), col(idCol))
-      .limit(k)
-  }
-
-  /** Exact cosine top-k over int8-packed vectors: same shape as
-    * [[Similarity.bruteForceTopK]] (broadcast one-row query +
-    * TakeOrderedAndProject), but the scan reads 1-byte codes and the
-    * per-row kernel is the integer-dot [[graft.functions.CosineInt8]].
-    */
-  def quantizedTopK(packed: DataFrame, idCol: String, qbCol: String,
-      queryId: Long, k: Int): DataFrame = {
-    val q = packed.where(col(idCol) === queryId).select(col(qbCol).as("qv"))
-    packed.join(broadcast(q))
-      .where(col(idCol) =!= queryId)
-      .select(col(idCol),
-        round(cosine_int8(col(qbCol), col("qv")), 4).as("sim"))
-      .orderBy(col("sim").desc, col(idCol))
       .limit(k)
   }
 }

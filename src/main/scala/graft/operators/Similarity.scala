@@ -3,28 +3,19 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.functions.GraftFunctions.{cosine_int8, cosine_sim, int8_pack,
-  int8_quantize, pq_adc, pq_encode}
+import graft.functions.GraftFunctions.cosine_sim
 
 /** Nearest-neighbor search over an embedding column (SURVEY §2.6
   * north-star): exact scans against a broadcast query or probe batch, and
-  * ANN indexes. Every persisted index is one posting LAYOUT x one posting
-  * CODEC, and its write, probe, per-id ranking tail, append and drift
-  * maintenance are each written once over them.
-  *
-  * Layouts: LSH (`path/table=/bucket=`, probed with [[queryBuckets]]) and
-  * IVF (`path/postings/cell=` beside `centroids` and the drift `anchor`,
-  * probed with [[ivfProbeCells]]). Codecs: float (the vector in `embCol`,
-  * cosine), int8 (packed codes in `qb`, integer-dot cosine) and PQ
-  * (residual codes in `pq` plus a `pqcodebook`, ascending cell-relative
-  * ADC distance). The map:
-  *   - LSH: float [[writeLshIndex]]/[[lshTopKIndexed]], int8
-  *     [[writeLshIndexQuantized]]/[[lshTopKIndexedQuantized]];
-  *   - IVF: float [[writeIvfIndex]]/[[ivfTopKIndexed]], int8
-  *     [[writeIvfIndexQuantized]]/[[ivfTopKIndexedQuantized]], PQ
-  *     [[writeIvfPqIndex]]/[[ivfPqTopKIndexed]]; float and PQ also append
-  *     and maintain ([[appendIvfIndex]], [[maintainIvfIndex]],
-  *     [[appendIvfPqIndex]], [[maintainIvfPqIndex]]).
+  * ANN indexes. Every persisted index keeps float postings (the vector in
+  * `embCol`, ranked by exact cosine) in one of two LAYOUTS, and its read,
+  * write, probe and per-id ranking tail are each written once over them:
+  *   - LSH (`path/table=/bucket=`): [[writeLshIndex]], probed by
+  *     [[lshTopKIndexed]] with [[queryBuckets]];
+  *   - IVF (`path/postings/cell=` beside `centroids` and the drift
+  *     `anchor`): [[writeIvfIndex]], probed by [[ivfTopKIndexed]] with
+  *     [[ivfProbeCells]], grown by [[appendIvfIndex]] and kept fitted by
+  *     [[maintainIvfIndex]].
   * [[lshTopK]]/[[ivfTopK]] bucket or fit per call; the batched LSH
   * searches share one (table, bucket) pair join, [[lshPairs]].
   */
@@ -390,7 +381,7 @@ object Similarity {
       .select(col(embCol).as("qv"), col("table").as("qt"), col("bucket").as("qb"))
     rankById(posted.join(broadcast(q),
         col("table") === col("qt") && col("bucket") === col("qb")),
-      idCol, queryId, cosine_sim(col(embCol), col("qv")), similarity = true, k)
+      idCol, queryId, cosine_sim(col(embCol), col("qv")), k)
   }
 
   /** The (id, emb, table, bucket) posting projection, nTables rows per
@@ -423,34 +414,7 @@ object Similarity {
     }
   }
 
-  /** Driver-side twin of [[Quantization.quantize]] for the query vector:
-    * the identical IEEE steps (maxabs, 127/maxabs, floor(x*scale+0.5)),
-    * so query codes and index codes live on the same scale-invariant
-    * cosine geometry.
-    */
-  def quantizeQuery(qv: Array[Double]): Array[Byte] = {
-    // a NaN query is caller error — fail loud here rather than let it
-    // silently quantize differently from the index side's Int8Quantize
-    require(!qv.exists(_.isNaN), "quantizeQuery: query vector contains NaN")
-    var maxabs = 0.0
-    qv.foreach(x => maxabs = math.max(maxabs, math.abs(x)))
-    val scale = if (maxabs == 0.0) 0.0 else 127.0 / maxabs
-    qv.map { x =>
-      val q = math.floor(x * scale + 0.5)
-      // same contract as Int8Pack: out of range throws, never clamps
-      require(q >= Byte.MinValue && q <= Byte.MaxValue,
-        s"quantizeQuery: code $q outside [-128, 127]")
-      q.toByte
-    }
-  }
-
-  /** The int8 payload of an embedding column, 1 byte/dim; cosine is
-    * scale-invariant, so no scale is stored and none is needed to score.
-    */
-  private[operators] def int8Codes(emb: Column): Column =
-    int8_pack(int8_quantize(emb).getField("q"))
-
-  // ---- the dense retrieval core: index layout x posting codec ----------
+  // ---- the dense retrieval core: float postings in an LSH or IVF layout --
 
   /** Where an index keeps its postings, and the keys they partition on. */
   private sealed abstract class Layout(val keys: Seq[String], sub: String) {
@@ -458,56 +422,6 @@ object Similarity {
   }
   private case object LshLayout extends Layout(Seq("table", "bucket"), "")
   private case object IvfLayout extends Layout(Seq("cell"), "/postings")
-
-  /** What a posting stores of its vector — `encode` turns float postings
-    * (idCol, vecCol, keys) into it — and how a query scores it, given the IVF
-    * cells its probe chose; a `similarity` ranks highest first.
-    */
-  private sealed abstract class Codec(val similarity: Boolean) {
-    def encode(postings: DataFrame, idCol: String, vecCol: String): DataFrame =
-      postings
-    def score(qv: Array[Double], cells: Seq[Int]): Column
-  }
-
-  private final case class FloatCodec(embCol: String) extends Codec(true) {
-    def score(qv: Array[Double], cells: Seq[Int]): Column =
-      cosine_sim(col(embCol), typedlit(qv.toSeq))
-  }
-
-  private case object Int8Codec extends Codec(true) {
-    override def encode(postings: DataFrame, idCol: String,
-        vecCol: String): DataFrame =
-      postings.withColumn("qb", int8Codes(col(vecCol))).drop(vecCol)
-    def score(qv: Array[Double], cells: Seq[Int]): Column =
-      cosine_int8(col("qb"), lit(quantizeQuery(qv)))
-  }
-
-  /** Residual PQ codes as pure column expressions, so the build, the append
-    * and a streaming sink encode alike; each probed cell scores against its
-    * OWN ADC table, from the query's residual to THAT cell's centroid.
-    */
-  private final case class PqCodec(centroids: Array[Array[Double]],
-      codebook: Seq[Seq[Seq[Double]]]) extends Codec(false) {
-    override def encode(postings: DataFrame, idCol: String,
-        vecCol: String): DataFrame =
-      postings.select(col(idCol), col("cell"),
-        pq_encode(residual(col(vecCol), centroids), codebook).as("pq"))
-    def score(qv: Array[Double], cells: Seq[Int]): Column = {
-      val adc = cells.map { c =>
-        (col("cell") === c, pq_adc(col("pq"), Quantization.pqDistanceTable(
-          codebook, Array.tabulate(qv.length)(i => qv(i) - centroids(c)(i)))))
-      }
-      adc.tail.foldLeft(when(adc.head._1, adc.head._2)) {
-        case (acc, (inCell, d)) => acc.when(inCell, d)
-      }
-    }
-  }
-
-  /** An embedding column minus its row's `cell` centroid. */
-  private def residual(emb: Column, centroids: Array[Array[Double]]): Column =
-    zip_with(emb,
-      element_at(typedlit(centroids.map(_.toSeq).toSeq), col("cell") + 1),
-      (a, b) => a - b)
 
   /** Batch-read a layout's postings, whoever wrote them: a streaming sink's
     * `_spark_metadata` log at the root would hide every batch-written file
@@ -543,56 +457,30 @@ object Similarity {
       .parquet(layout.root(path))
 
   /** The per-id ranking tail of the single-query LSH/IVF searchers: drop the
-    * query id, round `score` to 4 places (`sim`, or `dist` for a distance),
-    * keep ONE row per id — a candidate colliding in several LSH tables, or
-    * replayed by a retried mode-append, must not displace a real one — then
-    * order by score and ascending id and take k. [[bruteForceTopK]] and
+    * query id, round `score` to 4 places as `sim`, keep ONE row per id — a
+    * candidate colliding in several LSH tables, or replayed by a retried
+    * mode-append, must not displace a real one — then order by descending
+    * sim and ascending id and take k. [[bruteForceTopK]] and
     * [[filteredTopK]] see each vector once and take no such aggregate.
     */
   private def rankById(cands: DataFrame, idCol: String, queryId: Long,
-      score: Column, similarity: Boolean, k: Int): DataFrame = {
-    val name = if (similarity) "sim" else "dist"
+      score: Column, k: Int): DataFrame =
     cands.where(col(idCol) =!= queryId)
-      .select(col(idCol), round(score, 4).as(name))
+      .select(col(idCol), round(score, 4).as("sim"))
       .groupBy(col(idCol))
-      .agg((if (similarity) max(col(name)) else min(col(name))).as(name))
-      .orderBy(if (similarity) col(name).desc else col(name).asc, col(idCol))
+      .agg(max(col("sim")).as("sim"))
+      .orderBy(col("sim").desc, col(idCol))
       .limit(k)
-  }
-
-  /** LSH probe: a (table, bucket) partition filter, so an index scan reads
-    * at most `nTables` directories (~nTables/2^nPlanes of the corpus).
-    */
-  private def lshSearch(postings: DataFrame, idCol: String, codec: Codec,
-      qv: Array[Double], queryId: Long, k: Int, nPlanes: Int, nTables: Int,
-      seed: Long): DataFrame = {
-    val probe = queryBuckets(qv, nPlanes, nTables, seed).zipWithIndex
-      .map { case (b, tbl) => col("table") === tbl && col("bucket") === b }
-      .reduce(_ || _)
-    rankById(postings.where(probe), idCol, queryId, codec.score(qv, Nil),
-      codec.similarity, k)
-  }
 
   /** IVF probe: a `cell IN (probes)` partition filter, so an index scan
     * reads at most `nProbe` directories and fits nothing.
     */
   private def ivfSearch(postings: DataFrame, centroids: Array[Array[Double]],
-      idCol: String, codec: Codec, qv: Array[Double], queryId: Long, k: Int,
+      idCol: String, embCol: String, qv: Array[Double], queryId: Long, k: Int,
       nProbe: Int): DataFrame = {
     val cells = ivfProbeCells(centroids, qv, nProbe).toSeq
     rankById(postings.where(col("cell").isin(cells: _*)), idCol, queryId,
-      codec.score(qv, cells), codec.similarity, k)
-  }
-
-  /** The one LSH index writer: [[lshPostings]] in `codec`'s payload. */
-  private def writeLsh(embs: DataFrame, idCol: String, embCol: String,
-      path: String, nPlanes: Int, nTables: Int, dim: Int, seed: Long,
-      codec: Codec): Unit = {
-    val d = if (dim > 0) dim else inferDim(embs, embCol)
-    writePostings(codec.encode(
-        lshPostings(embs, idCol, embCol, nPlanes, nTables, d, seed),
-        idCol, embCol),
-      LshLayout, path)
+      cosine_sim(col(embCol), typedlit(qv.toSeq)), k)
   }
 
   /** Persist the sign-LSH posting index PARTITIONED BY (table, bucket) —
@@ -602,39 +490,26 @@ object Similarity {
     */
   def writeLshIndex(embs: DataFrame, idCol: String, embCol: String,
       path: String, nPlanes: Int = 4, nTables: Int = 12, dim: Int = -1,
-      seed: Long = 11L): Unit =
-    writeLsh(embs, idCol, embCol, path, nPlanes, nTables, dim, seed,
-      FloatCodec(embCol))
+      seed: Long = 11L): Unit = {
+    val d = if (dim > 0) dim else inferDim(embs, embCol)
+    writePostings(lshPostings(embs, idCol, embCol, nPlanes, nTables, d, seed),
+      LshLayout, path)
+  }
 
   /** ANN top-k against a [[writeLshIndex]] table, ranked by exact cosine:
-    * identical to [[lshTopK]] over the indexed corpus.
+    * identical to [[lshTopK]] over the indexed corpus. The probe is a
+    * (table, bucket) partition filter, so the scan reads at most `nTables`
+    * directories (~nTables/2^nPlanes of the corpus).
     */
   def lshTopKIndexed(spark: SparkSession, indexPath: String,
       idCol: String, embCol: String, qv: Array[Double], queryId: Long, k: Int,
-      nPlanes: Int = 4, nTables: Int = 12, seed: Long = 11L): DataFrame =
-    lshSearch(readPostings(spark, LshLayout, indexPath), idCol,
-      FloatCodec(embCol), qv, queryId, k, nPlanes, nTables, seed)
-
-  /** [[writeLshIndex]] with int8 postings (1 byte/dim against 8): at
-    * 100 TB the index is ~8x smaller and a probe reads an eighth of the
-    * bytes; the recall cost is gated in `QuantizationSpec` (cosine error
-    * < 0.01).
-    */
-  def writeLshIndexQuantized(embs: DataFrame, idCol: String, embCol: String,
-      path: String, nPlanes: Int = 4, nTables: Int = 12, dim: Int = -1,
-      seed: Long = 11L): Unit =
-    writeLsh(embs, idCol, embCol, path, nPlanes, nTables, dim, seed,
-      Int8Codec)
-
-  /** ANN top-k against a [[writeLshIndexQuantized]] table, ranked by the
-    * exact integer-dot cosine over the packed codes.
-    */
-  def lshTopKIndexedQuantized(spark: SparkSession,
-      indexPath: String, idCol: String, qv: Array[Double], queryId: Long,
-      k: Int, nPlanes: Int = 4, nTables: Int = 12,
-      seed: Long = 11L): DataFrame =
-    lshSearch(readPostings(spark, LshLayout, indexPath), idCol, Int8Codec,
-      qv, queryId, k, nPlanes, nTables, seed)
+      nPlanes: Int = 4, nTables: Int = 12, seed: Long = 11L): DataFrame = {
+    val probe = queryBuckets(qv, nPlanes, nTables, seed).zipWithIndex
+      .map { case (b, tbl) => col("table") === tbl && col("bucket") === b }
+      .reduce(_ || _)
+    rankById(readPostings(spark, LshLayout, indexPath).where(probe), idCol,
+      queryId, cosine_sim(col(embCol), typedlit(qv.toSeq)), k)
+  }
 
   /** KMeans cell assignment of the eager IVF path and the index build:
     * L2-normalize first (on the unit sphere the Euclidean and cosine orders
@@ -686,46 +561,25 @@ object Similarity {
     val (assigned, centroids) = ivfAssign(embs, idCol, embCol, nList, seed)
     val q = assigned.where(col(idCol) === queryId)
       .select(col(embCol)).head().getSeq[Double](0).toArray
-    ivfSearch(assigned, centroids, idCol, FloatCodec(embCol), q, queryId, k,
-      nProbe)
-  }
-
-  /** The one IVF index writer: `fit` picks the codec from the assigned
-    * (id, emb, cell) rows and the centroids and returns the rows to encode;
-    * then the postings by cell, the `centroids`, the `pqcodebook` of a PQ
-    * codec, and the drift `anchor`.
-    */
-  private def writeIvf(embs: DataFrame, idCol: String, embCol: String,
-      path: String, nList: Int, seed: Long)(
-      fit: (DataFrame, Array[Array[Double]]) => (DataFrame, Codec)): Unit = {
-    val spark = embs.sparkSession
-    import spark.implicits._
-    val (assigned, centroids) = ivfAssign(embs, idCol, embCol, nList, seed)
-    val (rows, codec) = fit(assigned, centroids)
-    writePostings(codec.encode(rows, idCol, embCol), IvfLayout, path)
-    centroids.zipWithIndex.toSeq
-      .map { case (c, i) => (i, c.toSeq) }.toDF("cell", "centroid")
-      .coalesce(1).write.mode("overwrite").parquet(s"$path/centroids")
-    codec match {
-      case PqCodec(_, codebook) =>
-        codebook.zipWithIndex
-          .flatMap { case (cents, sub) =>
-            cents.zipWithIndex.map { case (c, cid) => (sub, cid, c) } }
-          .toDF("sub", "cid", "centroid")
-          .coalesce(1).write.mode("overwrite").parquet(s"$path/pqcodebook")
-      case _ =>
-    }
-    writeAnchor(embs, embCol, path)
+    ivfSearch(assigned, centroids, idCol, embCol, q, queryId, k, nProbe)
   }
 
   /** Persist the IVF index, postings PARTITIONED BY cell: the KMeans fit
     * runs once here instead of once per query, and a probe reads nProbe/nList
-    * of the corpus. Pair with [[ivfTopKIndexed]].
+    * of the corpus. Beside the postings go the `centroids` and the drift
+    * `anchor`. Pair with [[ivfTopKIndexed]].
     */
   def writeIvfIndex(embs: DataFrame, idCol: String, embCol: String,
-      path: String, nList: Int = 16, seed: Long = 42L): Unit =
-    writeIvf(embs, idCol, embCol, path, nList, seed)((rows, _) =>
-      (rows, FloatCodec(embCol)))
+      path: String, nList: Int = 16, seed: Long = 42L): Unit = {
+    val spark = embs.sparkSession
+    import spark.implicits._
+    val (assigned, centroids) = ivfAssign(embs, idCol, embCol, nList, seed)
+    writePostings(assigned, IvfLayout, path)
+    centroids.zipWithIndex.toSeq
+      .map { case (c, i) => (i, c.toSeq) }.toDF("cell", "centroid")
+      .coalesce(1).write.mode("overwrite").parquet(s"$path/centroids")
+    writeAnchor(embs, embCol, path)
+  }
 
   /** The centroid table of an IVF index — nList rows, read to the driver
     * by design (the IVF analog of the LSH plane family).
@@ -744,65 +598,8 @@ object Similarity {
       idCol: String, embCol: String, qv: Array[Double], queryId: Long, k: Int,
       nProbe: Int = 4): DataFrame =
     ivfSearch(readPostings(spark, IvfLayout, indexPath),
-      readIvfCentroids(spark, indexPath), idCol, FloatCodec(embCol), qv,
-      queryId, k, nProbe)
-
-  /** [[writeIvfIndex]] with int8 postings (1 byte/dim against 8), so a
-    * probe reads ~an eighth of the bytes; the centroids stay float.
-    */
-  def writeIvfIndexQuantized(embs: DataFrame, idCol: String, embCol: String,
-      path: String, nList: Int = 16, seed: Long = 42L): Unit =
-    writeIvf(embs, idCol, embCol, path, nList, seed)((rows, _) =>
-      (rows, Int8Codec))
-
-  /** ANN top-k against a [[writeIvfIndexQuantized]] table, ranked by the
-    * integer-dot cosine over the packed codes.
-    */
-  def ivfTopKIndexedQuantized(spark: SparkSession,
-      indexPath: String, idCol: String, qv: Array[Double], queryId: Long,
-      k: Int, nProbe: Int = 4): DataFrame =
-    ivfSearch(readPostings(spark, IvfLayout, indexPath),
-      readIvfCentroids(spark, indexPath), idCol, Int8Codec, qv, queryId, k,
+      readIvfCentroids(spark, indexPath), idCol, embCol, qv, queryId, k,
       nProbe)
-
-  /** The IVF-PQ composition (the FAISS `IVFPQ` shape; Jégou et al., TPAMI
-    * 2011): each posting stores only the m-byte PQ code of its RESIDUAL to
-    * its cell centroid — at dim 64 / m 8, 64x fewer posting bytes than the
-    * float index. Residuals concentrate near the origin, so the same codebook
-    * bits resolve finer. The cell assignment spills once: the m codebook fits
-    * and the encode pass scan it instead of re-running it.
-    */
-  def writeIvfPqIndex(embs: DataFrame, idCol: String, embCol: String,
-      path: String, nList: Int = 16, m: Int = 8, ksub: Int = 64,
-      seed: Long = 42L): Unit =
-    writeIvf(embs, idCol, embCol, path, nList, seed) { (assigned, centroids) =>
-      val rows = graft.io.Spill(assigned, "graft-ivfpq-")
-      (rows, PqCodec(centroids, Quantization.pqTrain(
-        rows.select(residual(col(embCol), centroids).as("__res")), "__res",
-        m, ksub, seed)))
-    }
-
-  /** The PQ codebook of a [[writeIvfPqIndex]] index — m*ksub rows, read
-    * to the driver by design (kilobytes, like the centroid table).
-    */
-  def readPqCodebook(spark: SparkSession,
-      indexPath: String): Seq[Seq[Seq[Double]]] =
-    spark.read.parquet(s"$indexPath/pqcodebook")
-      .orderBy("sub", "cid").collect()
-      .groupBy(_.getInt(0)).toSeq.sortBy(_._1)
-      .map(_._2.sortBy(_.getInt(1)).map(_.getSeq[Double](2)).toSeq)
-
-  /** ANN top-k against a [[writeIvfPqIndex]] table: one map-only pruned
-    * scan scored by m table lookups per posting. Ascending approximate
-    * squared-L2; returns (idCol, dist).
-    */
-  def ivfPqTopKIndexed(spark: SparkSession,
-      indexPath: String, idCol: String, qv: Array[Double], queryId: Long,
-      k: Int, nProbe: Int = 4): DataFrame = {
-    val centroids = readIvfCentroids(spark, indexPath)
-    ivfSearch(readPostings(spark, IvfLayout, indexPath), centroids, idCol,
-      pqCodec(spark, indexPath)(centroids), qv, queryId, k, nProbe)
-  }
 
   /** Cell id of an embedding against FIXED centroids as pure column
     * expressions (so it runs on streaming DataFrames), replicating the KMeans
@@ -828,32 +625,14 @@ object Similarity {
     embs.select(col(idCol), col(embCol).cast("array<double>").as(embCol),
       ivfCell(col(embCol), centroids).as("cell"))
 
-  /** The (id, cell, pq) postings of an IVF-PQ index against FIXED
-    * centroids and codebook — the [[appendIvfPqIndex]] rows, and on a
-    * streaming frame the sink's, like [[ivfPostings]].
-    */
-  def ivfPqPostings(embs: DataFrame, idCol: String, embCol: String,
-      centroids: Array[Array[Double]],
-      codebook: Seq[Seq[Seq[Double]]]): DataFrame =
-    PqCodec(centroids, codebook)
-      .encode(ivfPostings(embs, idCol, embCol, centroids), idCol, embCol)
-
-  private def pqCodec(spark: SparkSession, indexPath: String)(
-      centroids: Array[Array[Double]]): Codec =
-    PqCodec(centroids, readPqCodebook(spark, indexPath))
-
   /** The one append body (the caller holds the lease): `embs` under the
-    * index's FIXED centroids, in the codec `codecOf` gives for them.
+    * index's FIXED centroids.
     */
   private def appendIvf(spark: SparkSession, indexPath: String,
-      embs: DataFrame, idCol: String, embCol: String)(
-      codecOf: Array[Array[Double]] => Codec): Unit = {
-    val centroids = readIvfCentroids(spark, indexPath)
-    codecOf(centroids)
-      .encode(ivfPostings(embs, idCol, embCol, centroids), idCol, embCol)
+      embs: DataFrame, idCol: String, embCol: String): Unit =
+    ivfPostings(embs, idCol, embCol, readIvfCentroids(spark, indexPath))
       .write.mode("append").partitionBy(IvfLayout.keys: _*)
       .parquet(IvfLayout.root(indexPath))
-  }
 
   /** Batch-append new vectors into a [[writeIvfIndex]] index WITHOUT
     * refitting; rebuild on a rebalance cadence, as the quantizer drifts. The
@@ -864,17 +643,7 @@ object Similarity {
   def appendIvfIndex(spark: SparkSession, indexPath: String,
       embs: DataFrame, idCol: String, embCol: String): Unit =
     graft.io.Maintenance.withLease(spark, indexPath, "ivf-append") {
-      appendIvf(spark, indexPath, embs, idCol, embCol)(_ => FloatCodec(embCol))
-    }
-
-  /** [[appendIvfIndex]] for a [[writeIvfPqIndex]] index: neither
-    * quantizer is refitted.
-    */
-  def appendIvfPqIndex(spark: SparkSession,
-      indexPath: String, embs: DataFrame, idCol: String,
-      embCol: String): Unit =
-    graft.io.Maintenance.withLease(spark, indexPath, "ivfpq-append") {
-      appendIvf(spark, indexPath, embs, idCol, embCol)(pqCodec(spark, indexPath))
+      appendIvf(spark, indexPath, embs, idCol, embCol)
     }
 
   // ---- drift-triggered index maintenance -------------------------------
@@ -902,7 +671,7 @@ object Similarity {
           if e.getCondition == "PATH_NOT_FOUND" =>
         throw new IllegalStateException(
           s"$indexPath has no fit-time anchor - rebuild the index with " +
-            "writeIvfIndex/writeIvfPqIndex to enable drift maintenance", e)
+            "writeIvfIndex to enable drift maintenance", e)
       }
     Drift.embeddingCentroidCos(
         Seq(Tuple1(av.toSeq)).toDF(embCol),
@@ -910,42 +679,27 @@ object Similarity {
       .head().getAs[Double]("centroid_cos")
   }
 
-  /** The one maintenance body, under `lease` (which spans the drift
-    * DECISION too): a batch whose centroid cosine against the anchor stays
-    * at/above `minCentroidCos` appends in `codecOf`'s codec, else `refit`
-    * rebuilds the index. Returns true when a refit ran.
-    */
-  private def maintainIvf(spark: SparkSession, indexPath: String,
-      newEmbs: DataFrame, idCol: String, embCol: String,
-      minCentroidCos: Double, lease: String,
-      codecOf: Array[Array[Double]] => Codec)(
-      refit: DataFrame => Unit): Boolean = {
-    require(minCentroidCos >= -1.0 && minCentroidCos <= 1.0,
-      "minCentroidCos is a cosine")
-    graft.io.Maintenance.withLease(spark, indexPath, lease) {
-      val batch = newEmbs.select(col(idCol),
-        col(embCol).cast("array<double>").as(embCol))
-      val append = indexDrift(spark, indexPath, batch, embCol) >= minCentroidCos
-      if (append) appendIvf(spark, indexPath, batch, idCol, embCol)(codecOf)
-      else refit(batch)
-      !append
-    }
-  }
-
   /** Drift-triggered maintenance of a [[writeIvfIndex]] index (the
-    * q103-monitors-the-index loop closed): a batch that has not drifted
-    * APPENDS under the existing centroids; a drifted one REFITS the index
-    * over its postings ∪ the batch — the float postings keep raw vectors, so
-    * the rebuild is self-contained and folds every prior append. The union
-    * spills before the overwrite (a lazy self-read would race it).
+    * q103-monitors-the-index loop closed), under one lease that spans the
+    * drift DECISION too: a batch whose centroid cosine against the anchor
+    * stays at/above `minCentroidCos` APPENDS under the existing centroids; a
+    * drifted one REFITS the index over its postings ∪ the batch — the
+    * postings keep raw vectors, so the rebuild is self-contained and folds
+    * every prior append. The union spills before the overwrite (a lazy
+    * self-read would race it). Returns true when a refit ran.
     */
   def maintainIvfIndex(spark: SparkSession,
       indexPath: String, newEmbs: DataFrame, idCol: String, embCol: String,
       minCentroidCos: Double = 0.95, nList: Int = 16,
-      seed: Long = 42L): Boolean =
-    maintainIvf(spark, indexPath, newEmbs, idCol, embCol, minCentroidCos,
-        "ivf-maintain", _ => FloatCodec(embCol)) { batch =>
-      writeIvfIndex(graft.io.Spill(
+      seed: Long = 42L): Boolean = {
+    require(minCentroidCos >= -1.0 && minCentroidCos <= 1.0,
+      "minCentroidCos is a cosine")
+    graft.io.Maintenance.withLease(spark, indexPath, "ivf-maintain") {
+      val batch = newEmbs.select(col(idCol),
+        col(embCol).cast("array<double>").as(embCol))
+      val append = indexDrift(spark, indexPath, batch, embCol) >= minCentroidCos
+      if (append) appendIvf(spark, indexPath, batch, idCol, embCol)
+      else writeIvfIndex(graft.io.Spill(
           readPostings(spark, IvfLayout, indexPath)
             .select(col(idCol), col(embCol)).unionByName(batch)
             // exact duplicate rows (a retried append replayed into the
@@ -954,20 +708,7 @@ object Similarity {
             .distinct(),
           "graft-ivfref-"),
         idCol, embCol, indexPath, nList, seed)
+      !append
     }
-
-  /** [[maintainIvfIndex]] for a [[writeIvfPqIndex]] index. PQ postings
-    * hold lossy codes, so the refit rebuilds from `refitSource`: the raw
-    * corpus INCLUDING the new batch, which the caller owns.
-    */
-  def maintainIvfPqIndex(spark: SparkSession,
-      indexPath: String, newEmbs: DataFrame, refitSource: => DataFrame,
-      idCol: String, embCol: String, minCentroidCos: Double = 0.95,
-      nList: Int = 16, m: Int = 8, ksub: Int = 64,
-      seed: Long = 42L): Boolean =
-    maintainIvf(spark, indexPath, newEmbs, idCol, embCol, minCentroidCos,
-        "ivfpq-maintain", pqCodec(spark, indexPath)) { _ =>
-      writeIvfPqIndex(refitSource, idCol, embCol, indexPath, nList, m, ksub,
-        seed)
-    }
+  }
 }

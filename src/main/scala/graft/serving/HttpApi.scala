@@ -104,8 +104,8 @@ final class HttpApi(serving: Serving, port: Int = 0) {
 
   /** Path parameter after `prefix`, percent-decoded (the reference's
     * Javalin layer decodes path params the same way).
-    */
-  /** One percent-decode with PATH semantics: work from the RAW path
+    *
+    * One percent-decode with PATH semantics: work from the RAW path
     * (`getPath` already percent-decodes, so decoding it again would
     * double-decode "%252B"-style inputs) and shield literal `+` from
     * URLDecoder's form-encoding space rule — in a path, `+` means
@@ -568,8 +568,8 @@ object HttpApi {
     * whose index is unconfigured answers 400) and the ANN index's id /
     * embedding column names. `k` is the default result count
     * (`?k=` overrides per request).
-    */
-  /** `docsPath` points the serving edge at the corpus parquet (id +
+    *
+    * `docsPath` points the serving edge at the corpus parquet (id +
     * text + facet columns): `/search/passage` then attaches snippet
     * TEXT (the retrieve-then-quote payload a RAG caller wants) and
     * `/search/facets` serves the panel — both slice the corpus with a

@@ -191,26 +191,6 @@ class ExpressionPropertiesSpec extends AnyFunSuite with Matchers with SparkSpec 
     imp.getSeq[Int](1) shouldBe hof.getSeq[Int](1)
   }
 
-  test("cosine_int8 over packed codes == reference integer-dot cosine") {
-    import spark.implicits._
-    val codesGen = Gen.choose(1, 16).flatMap(n =>
-      Gen.listOfN(n, Gen.chooseNum(-127, 127)))
-    check(Prop.forAll(codesGen, codesGen) { (a0, b0) =>
-      val n = math.min(a0.length, b0.length)
-      val (a, b) = (a0.take(n), b0.take(n))
-      val df = Seq((a, b)).toDF("a", "b")
-      val got = df.select(GraftFunctions.cosine_int8(
-        GraftFunctions.int8_pack(col("a")),
-        GraftFunctions.int8_pack(col("b")))).head().getDouble(0)
-      val dot = a.zip(b).map { case (x, y) => x.toLong * y }.sum
-      val na = a.map(x => x.toLong * x).sum
-      val nb = b.map(x => x.toLong * x).sum
-      val want = if (na == 0L || nb == 0L) 0.0
-        else dot / (math.sqrt(na.toDouble) * math.sqrt(nb.toDouble))
-      got == want
-    })
-  }
-
   test("md5Long matches MessageDigest reference bytes") {
     import org.apache.spark.unsafe.types.UTF8String
     check(Prop.forAll(wordGen) { s =>

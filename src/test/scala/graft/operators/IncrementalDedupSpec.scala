@@ -390,66 +390,6 @@ class IncrementalDedupSpec extends AnyFunSuite with Matchers with SparkSpec {
     replay shouldBe out2
   }
 
-  test("int8-history semantic dedup: empty history reproduces semanticDedup; " +
-      "exact cross-batch dups always drop; float-path disagreement is bounded") {
-    import spark.implicits._
-    import org.apache.spark.sql.functions._
-    val base = java.nio.file.Files.createTempDirectory("graft-semq").toString
-    val tableQ = base + "/embQ"; val tableF = base + "/embF"
-    val embs = graft.core.Tables.load(spark, "/root/testdata/sf0.001", "embeddings")
-
-    // batch 1 vs empty history: in-batch pairs are float-exact in BOTH
-    // forms, so both equal the eager operator row for row
-    val q1 = Dedup.incrementalSemanticDedupInt8(embs, "vec_id", "embedding",
-        "label", 0.4, tableQ, batchId = "b1")
-      .select("vec_id").collect().map(_.getLong(0)).toSet
-    val eager = Dedup.semanticDedup(embs, "vec_id", "embedding", "label", 0.4)
-      .select("vec_id").collect().map(_.getLong(0)).toSet
-    q1 shouldBe eager
-
-    // batch 2: a same-direction copy of a history survivor scores int8
-    // cosine exactly 1.0 (scale invariance) — always caught, smaller id
-    // or not; an unseen block sees no cross pairs
-    val src = embs.where(col("vec_id") === lit(q1.min))
-      .select(col("label"), col("embedding")).head()
-    val batch2 = Seq(
-      (-5L, src.getAs[Number](0).intValue(), src.getSeq[Float](1).map(_ * 2.0f)),
-      (-6L, 999999, src.getSeq[Float](1)))
-      .toDF("vec_id", "label", "embedding")
-    val out2 = Dedup.incrementalSemanticDedupInt8(batch2, "vec_id", "embedding",
-        "label", 0.4, tableQ, batchId = "b2")
-      .select("vec_id").collect().map(_.getLong(0)).toSet
-    out2 shouldBe Set(-6L)
-
-    // replay must not pair against its own first attempt
-    Dedup.incrementalSemanticDedupInt8(batch2, "vec_id", "embedding",
-        "label", 0.4, tableQ, batchId = "b2")
-      .select("vec_id").collect().map(_.getLong(0)).toSet shouldBe out2
-
-    // agreement gate vs the float-history path: same history (batch 1),
-    // same noisy batch (deterministic per-element perturbation, re-keyed
-    // ids) — near-threshold cross pairs may flip under quantization, so
-    // the survivor sets may differ, but only within a small bound
-    Dedup.incrementalSemanticDedup(embs, "vec_id", "embedding",
-      "label", 0.4, tableF, batchId = "b1").count()
-    val noisy = embs.select(
-      (col("vec_id") + 100000L).as("vec_id"), col("label"),
-      transform(col("embedding"), (x, i) =>
-        (x * lit(0.9f) + lit(0.02f) * (i % 7 - 3).cast("float"))
-          .cast("float")).as("embedding"))
-    val qSurv = Dedup.incrementalSemanticDedupInt8(noisy, "vec_id",
-        "embedding", "label", 0.4, tableQ, batchId = "b3")
-      .select("vec_id").collect().map(_.getLong(0)).toSet
-    val fSurv = Dedup.incrementalSemanticDedup(noisy, "vec_id",
-        "embedding", "label", 0.4, tableF, batchId = "b3")
-      .select("vec_id").collect().map(_.getLong(0)).toSet
-    val n = noisy.count()
-    val disagree = (qSurv diff fSurv).size + (fSurv diff qSurv).size
-    withClue(s"symmetric difference $disagree of $n: ") {
-      disagree.toDouble / n should be <= 0.05
-    }
-  }
-
   test("compactAll folds every incremental table in one call, " +
       "sparing the in-flight batch") {
     import spark.implicits._

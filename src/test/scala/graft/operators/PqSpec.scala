@@ -86,55 +86,6 @@ class PqSpec extends AnyFunSuite with Matchers with SparkSpec {
     withClue(s"recall@10-in-30 $recall: ") { recall should be >= 0.6 }
   }
 
-  test("IVF-PQ index: pruned probes, cell-relative ADC, bounded recall") {
-    val embs = graft.core.Tables.load(spark, "/root/testdata/sf0.001",
-      "embeddings")
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft-ivfpq-").toString
-    val (nList, nProbe) = (8, 4)
-    Similarity.writeIvfPqIndex(embs, "vec_id", "embedding", dir,
-      nList = nList, m = 8, ksub = 32)
-
-    val rows = embs.select(col("vec_id"),
-        col("embedding").cast("array<double>"))
-      .collect().map(r => r.getLong(0) -> r.getSeq[Double](1).toArray).toMap
-    val qv = rows(0L)
-    val top = Similarity.ivfPqTopKIndexed(spark, dir, "vec_id", qv,
-      queryId = 0L, k = 30, nProbe = nProbe)
-
-    // the probe must touch at most nProbe of the cell=N partition dirs
-    val totalCells = new java.io.File(s"$dir/postings").listFiles()
-      .count(_.getName.startsWith("cell="))
-    def scans(p: org.apache.spark.sql.execution.SparkPlan)
-        : Seq[org.apache.spark.sql.execution.FileSourceScanExec] = p match {
-      case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
-        scans(a.executedPlan)
-      case f: org.apache.spark.sql.execution.FileSourceScanExec => Seq(f)
-      case other => other.children.flatMap(scans)
-    }
-    val selected = scans(top.queryExecution.executedPlan)
-      .map(_.selectedPartitions.partitionCount).sum
-    withClue(s"selected $selected of $totalCells cell partitions: ") {
-      selected should be <= nProbe
-      selected should be < totalCells
-    }
-
-    // recall against the exact L2 ranking: nProbe cells + m-byte
-    // residual codes must still surface most true neighbors
-    def l2(a: Array[Double], b: Array[Double]): Double =
-      a.indices.map(i => (a(i) - b(i)) * (a(i) - b(i))).sum
-    val exactTop = rows.toSeq.filter(_._1 != 0L)
-      .sortBy { case (id, v) => (l2(qv, v), id) }.take(10).map(_._1).toSet
-    val got = top.collect().map(_.getLong(0)).toSet
-    val recall = (exactTop intersect got).size / 10.0
-    withClue(s"recall@10-in-30 $recall: ") { recall should be >= 0.5 }
-
-    // codebook round-trips through its parquet persistence exactly
-    val reread = Similarity.readPqCodebook(spark, dir)
-    reread.size shouldBe 8
-    reread.foreach(_.size shouldBe 32)
-  }
-
   test("training is deterministic under a fixed seed") {
     val embs = graft.core.Tables.load(spark, "/root/testdata/sf0.001",
       "embeddings").limit(200)

@@ -126,6 +126,58 @@ class ShardedServingSpec extends AnyFunSuite with Matchers with SparkSpec {
     } finally api.stop()
   }
 
+  test("scatter-gather answers from local state within the fan-out " +
+      "timeout when a peer accepts connections but never answers, and " +
+      "point lookups keep being served meanwhile") {
+    import spark.implicits._
+    // peer 1 accepts every connection and holds it without a byte back
+    val hung = new java.net.ServerSocket(0, 50,
+      java.net.InetAddress.getLoopbackAddress)
+    val held = new java.util.concurrent.ConcurrentLinkedQueue[java.net.Socket]
+    val acceptor = new Thread(() =>
+      try while (true) held.add(hung.accept())
+      catch { case _: java.io.IOException => }) // closed at test end
+    acceptor.setDaemon(true)
+    acceptor.start()
+
+    val word = (0 until 100).map(i => s"w$i")
+      .find(HttpApi.ownerOf(_, 2) == 0).get
+    val serving = new Serving
+    serving.register(new ServingTable("wordcount", "word"))
+    serving.register(new ServingTable("purchases", "k"))
+    serving.table("wordcount").get.upsert(Seq(word -> 3L).toDF("word", "count"))
+    serving.table("purchases").get.upsert(Seq(("7-100", 2L, 5.0)).toDF("k", "count", "total"))
+    val api = new HttpApi(serving).start()
+    api.shard(0, IndexedSeq(api.address, s"127.0.0.1:${hung.getLocalPort}"))
+    try {
+      val t0 = System.nanoTime()
+      val scan = client.sendAsync(
+        HttpRequest.newBuilder(URI.create(s"http://${api.address}/purchases/7"))
+          .GET().build(),
+        HttpResponse.BodyHandlers.ofString())
+      // the fan-out has reached the hung peer
+      while (held.isEmpty && System.nanoTime() - t0 < 5e9) Thread.sleep(10)
+      held should not be empty
+
+      val lookup = get(client, api.address, s"/wordcount/$word")
+      lookup.statusCode() shouldBe 200
+      lookup.body() shouldBe s"""{"$word":3}"""
+      scan.isDone shouldBe false // answered while the fan-out waits
+
+      val res = scan.get(30, java.util.concurrent.TimeUnit.SECONDS)
+      val elapsed = (System.nanoTime() - t0) / 1e9
+      res.statusCode() shouldBe 200
+      res.body() shouldBe """{"7-100":{"count":2,"total":5}}"""
+      withClue(s"fan-out answered after $elapsed s: ") {
+        elapsed should be < 5.0 + 3.0
+      }
+    } finally {
+      api.stop()
+      hung.close()
+      held.forEach(_.close())
+    }
+  }
+
   test("ServingJson round-trips generated flat and nested bodies") {
     import org.scalacheck.{Gen, Prop, Test => SCTest}
     // keys carry the characters a naive split or re-escape gets wrong

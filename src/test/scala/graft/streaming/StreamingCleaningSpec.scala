@@ -56,15 +56,15 @@ class StreamingCleaningSpec extends AnyFunSuite with Matchers with SparkSpec {
     import spark.implicits._
 
     val input = MemoryStream[(Long, Seq[Double])]
-    val quantized = Quantization.quantizePacked(
+    val quantized = Quantization.quantize(
       input.toDF().toDF("vec_id", "embedding"), "embedding")
 
-    var rows = Vector.empty[(Long, Double, Array[Byte])]
+    var rows = Vector.empty[(Long, Double, Seq[Int])]
     val query = quantized.writeStream.outputMode("append")
       .option("checkpointLocation", checkpoint())
       .foreachBatch { (b: DataFrame, _: Long) =>
         rows ++= b.collect().map(r => (r.getAs[Long]("vec_id"),
-          r.getAs[Double]("scale"), r.getAs[Array[Byte]]("qb")))
+          r.getAs[Double]("scale"), r.getAs[Seq[Int]]("q")))
       }.start()
 
     try {
@@ -74,9 +74,9 @@ class StreamingCleaningSpec extends AnyFunSuite with Matchers with SparkSpec {
 
     val byId = rows.map(r => r._1 -> r).toMap
     byId(0L)._2 shouldBe 127.0
-    byId(0L)._3.toSeq shouldBe Seq[Byte](127, -63)
+    byId(0L)._3 shouldBe Seq(127, -63)
     byId(1L)._2 shouldBe 0.0
-    byId(1L)._3.toSeq shouldBe Seq[Byte](0, 0)
+    byId(1L)._3 shouldBe Seq(0, 0)
   }
 
   test("sequence packing per micro-batch via foreachBatch") {

@@ -1,13 +1,14 @@
 #!/usr/bin/env python3
-"""List the public defs that nothing in src/main names.
+"""List the public defs that nothing in src/main or perfbench names.
 
 For every non-private, non-override member `def` under src/main/scala/graft
 (files under graft/battery/ are searched but not listed), print it when its
-name appears in no src/main code other than its own definitions, with the
-number of times src/test code names it. Comments and string literals are
-ignored on both sides, so a Scaladoc link is not a caller. Local defs inside
-a method body are not members and are skipped, and so is `apply`, which a
-call names by its owner alone.
+name appears in no src/main or perfbench/src code other than its own
+definitions, with the number of times src/test code names it. Comments and
+string literals are ignored on both sides, so a Scaladoc link is not a
+caller. Local defs inside a method body are not members and are skipped, and
+so are `apply`, which a call names by its owner alone, and `main`, which the
+JVM calls.
 
 This is a name-based heuristic: an unreached def whose name another def
 shares is missed, and a def reached only through reflection or a Spark SQL
@@ -143,16 +144,18 @@ def main():
         os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     main_root = os.path.join(repo, "src", "main", "scala")
     test_root = os.path.join(repo, "src", "test", "scala")
+    bench_root = os.path.join(repo, "perfbench", "src")
     battery = os.path.join(main_root, "graft", "battery") + os.sep
 
     main_names, def_sites, defs = Counter(), Counter(), []
-    for path in scala_files(main_root):
+    for path in [*scala_files(main_root), *scala_files(bench_root)]:
         with open(path, encoding="utf-8") as f:
             code = strip(f.read())
         main_names.update(IDENT.findall(code))
         # every def site of a name, member or local, is not a use of it
         def_sites.update(m.group(1) for m in DEF.finditer(code))
-        if not path.startswith(battery):
+        if path.startswith(main_root + os.sep) and \
+                not path.startswith(battery):
             defs += [(os.path.relpath(path, repo), line, owner, name)
                      for line, owner, name in member_defs(code)]
     test_names = Counter()
@@ -161,7 +164,8 @@ def main():
             test_names.update(IDENT.findall(strip(f.read())))
 
     hits = [d for d in defs
-            if d[3] != "apply" and main_names[d[3]] <= def_sites[d[3]]]
+            if d[3] not in ("apply", "main")
+            and main_names[d[3]] <= def_sites[d[3]]]
     for rel, line, owner, name in sorted(hits):
         print(f"{rel}:{line} {owner}.{name} tests={test_names[name]}")
     print(f"{len(hits)} unreached defs")

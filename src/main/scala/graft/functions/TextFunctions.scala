@@ -153,10 +153,6 @@ object TextFunctions {
   def fingerprint(text: Column): Column =
     md5(regexp_replace(lower(text), "\\s+", " "))
 
-  /** Normalized text used as the exact-dedup key. */
-  def normalized(text: Column): Column =
-    regexp_replace(lower(text), "\\s+", " ")
-
   /** Stopword-marker regexes per language for the n-gram language ID
     * heuristic. Word-boundary anchored; both Java regex and RE2 (DuckDB)
     * support `\b`.

@@ -340,17 +340,16 @@ object LexicalIndex {
     * per checkpoint, so a SECOND stream (new checkpoint) maintaining the
     * same index must not overwrite the first stream's epoch directories.
     *
-    * AUTO-COMPACTION (the [[graft.serving.ServingTable]] LSM discipline):
-    * a long-lived stream accrues one `batch=epoch-*` generation per
-    * micro-batch, and every query reads all of them — unbounded read
-    * amplification. With `compactAfterGenerations > 1`, each epoch whose
-    * append leaves the index at/over that many generations triggers one
-    * [[compact]] inside the same foreachBatch, folding them back to the
-    * single `batch=compacted` generation. Safe under replay: the folded
-    * manifest makes a replayed epoch a no-op even though compaction
-    * consumed its directory, and the no-op replay cannot re-trigger a
-    * fold (the generation count is already back at 1). 0 (the default)
-    * keeps compaction caller-driven.
+    * AUTO-COMPACTION: a long-lived stream accrues one `batch=epoch-*`
+    * generation per micro-batch, and every query reads all of them —
+    * unbounded read amplification. With `compactAfterGenerations > 1`,
+    * each epoch whose append leaves the index at/over that many
+    * generations triggers one [[compact]] inside the same foreachBatch,
+    * folding them back to the single `batch=compacted` generation. Safe
+    * under replay: the folded manifest makes a replayed epoch a no-op
+    * even though compaction consumed its directory, and the no-op replay
+    * cannot re-trigger a fold (the generation count is already back at
+    * 1). 0 (the default) keeps compaction caller-driven.
     */
   def maintain(spark: SparkSession, path: String, streamingDocs: DataFrame,
       idCol: String, textCol: String, checkpoint: String,

@@ -78,7 +78,7 @@ final class HttpApi(serving: Serving, port: Int = 0) {
     * [[graft.operators.Similarity.writeIvfIndex]]) — the reference's
     * interactive-query posture (`services/PurchasesService.java:58-94`:
     * query continuously maintained state out-of-band) extended from the
-    * point/range serving tables to the retrieval family. Each request
+    * point/prefix serving tables to the retrieval family. Each request
     * runs the library's own indexed query plan (partition-pruned scans),
     * so an index mid-[[graft.operators.LexicalIndex.maintain]] serves
     * its committed epochs.
@@ -86,13 +86,6 @@ final class HttpApi(serving: Serving, port: Int = 0) {
   def retrieval(conf: HttpApi.Retrieval): this.type = {
     retrievalConf = Some(conf); this
   }
-
-  // ---- JSON emission (flat values: numbers, strings, maps thereof) ----
-
-  // shared with the spill tier's round-trip codec so a spilled entry is
-  // byte-identical on the wire to a resident one
-  private def jsonStr(s: String): String = ServingJson.str(s)
-  private def jsonVal(v: Any): String = ServingJson.value(v)
 
   private def respond(ex: HttpExchange, status: Int, body: String): Unit = {
     val bytes = body.getBytes(UTF_8)
@@ -141,7 +134,7 @@ final class HttpApi(serving: Serving, port: Int = 0) {
               row <- t.get(key)
             } yield Map(key -> row.getOrElse("count", null))
             out match {
-              case Some(m) => respond(ex, 200, jsonVal(m))
+              case Some(m) => respond(ex, 200, ServingJson.value(m))
               case None => respond(ex, 404, "{}")
             }
         }
@@ -172,7 +165,7 @@ final class HttpApi(serving: Serving, port: Int = 0) {
           case _ => local
         }
         if (merged.isEmpty) respond(ex, 404, "{}")
-        else respond(ex, 200, jsonVal(merged))
+        else respond(ex, 200, ServingJson.value(merged))
       case None => respond(ex, 404, "{}")
     }
   })
@@ -214,9 +207,9 @@ final class HttpApi(serving: Serving, port: Int = 0) {
       case Some(store) =>
         val names = serving.storeNames.filter(_ == store)
         if (names.isEmpty) respond(ex, 404, "{}")
-        else respond(ex, 200, jsonVal(hosts.map(_ -> names).toMap))
+        else respond(ex, 200, ServingJson.value(hosts.map(_ -> names).toMap))
       case None =>
-        respond(ex, 200, jsonVal(hosts.map(_ -> serving.storeNames).toMap))
+        respond(ex, 200, ServingJson.value(hosts.map(_ -> serving.storeNames).toMap))
     }
   })
 
@@ -265,7 +258,7 @@ final class HttpApi(serving: Serving, port: Int = 0) {
         catch {
           case e @ (_: IllegalArgumentException | _: IllegalStateException |
               _: NumberFormatException) =>
-            respond(ex, 400, "{\"error\":" + jsonStr(
+            respond(ex, 400, "{\"error\":" + ServingJson.str(
               Option(e.getMessage).getOrElse(e.getClass.getSimpleName)) + "}")
         } finally sc.setLocalProperty("spark.scheduler.pool", null)
     }
@@ -296,9 +289,9 @@ final class HttpApi(serving: Serving, port: Int = 0) {
     */
   private def rowJson(r: Row): String =
     r.schema.fieldNames.zipWithIndex.map { case (n, i) =>
-      jsonStr(n) + ":" + (r.get(i) match {
+      ServingJson.str(n) + ":" + (r.get(i) match {
         case null => "null"
-        case s: String => jsonStr(s)
+        case s: String => ServingJson.str(s)
         case v => v.toString
       })
     }.mkString("{", ",", "}")
@@ -408,9 +401,9 @@ final class HttpApi(serving: Serving, port: Int = 0) {
       val i = LexicalIndex.describe(conf.spark, indexPath(conf))
       s"""{"n_buckets":${i.nBuckets},"positional":${i.positional},""" +
         s""""posting_generations":${i.postingGenerations
-          .map(jsonStr).mkString("[", ",", "]")},""" +
+          .map(ServingJson.str).mkString("[", ",", "]")},""" +
         s""""stats_generations":${i.statsGenerations
-          .map(jsonStr).mkString("[", ",", "]")},""" +
+          .map(ServingJson.str).mkString("[", ",", "]")},""" +
         s""""folded_batches":${i.foldedBatches},"n_docs":${i.nDocs},""" +
         s""""total_len":${i.totalLen},"parquet_files":${i.parquetFiles}}"""
     }

@@ -13,6 +13,12 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * metadata role; the continuous maintenance loop is a Structured Streaming
   * query in update mode whose `foreachBatch` upserts each micro-batch's
   * changed keys into the table.
+  *
+  * Serving state lives in two places only: the maintenance query's
+  * checkpointed state store (durable, partitioned across the cluster) and
+  * one in-memory [[ServingTable]] per store (the read view). A table fails
+  * loud at its `maxEntries` bound; a keyspace past one driver shards the
+  * tier across [[HttpApi]] instances, each maintaining its own key slice.
   */
 final class Serving {
 
@@ -39,10 +45,8 @@ final class Serving {
     * guarantee, SURVEY §3.1 step 4).
     */
   def maintain(aggregated: DataFrame, name: String, keyCol: String,
-      checkpointDir: String,
-      maxEntries: Int = ServingTable.DefaultMaxEntries,
-      spillDir: Option[String] = None): StreamingQuery = {
-    val t = register(new ServingTable(name, keyCol, maxEntries, spillDir))
+      checkpointDir: String): StreamingQuery = {
+    val t = register(new ServingTable(name, keyCol))
     aggregated.writeStream
       .outputMode("update")
       .option("checkpointLocation", checkpointDir)

@@ -1,15 +1,14 @@
 package graft.serving
 
 /** The serving tier's JSON codec. The EMITTER is the reference-shape
-  * serializer [[HttpApi]] always used (flat maps of numbers/strings,
-  * keys sorted, whole doubles printed as integers); the PARSER serves
-  * the parquet spill tier ([[ServingTable]] with `spillDir`), which
-  * round-trips values through (key, json) rows, and the `/purchases`
-  * fan-out, which decodes a peer's body. Scalar fidelity through
-  * the round trip: integral numbers come back as Long, decimals as
-  * Double, everything else as the string the emitter printed — exactly
-  * what the HTTP layer would have emitted either way, so spilled and
-  * resident entries are indistinguishable on the wire.
+  * serializer every [[HttpApi]] route answers with (flat maps of
+  * numbers/strings, keys sorted, whole doubles printed as integers). The
+  * PARSER has one caller, the `/purchases` scatter-gather fan-out
+  * (`HttpApi.fetchEntries`), which decodes a peer's body and re-emits the
+  * merged entries through the emitter. Scalar fidelity through that round
+  * trip: integral numbers come back as Long, decimals as Double,
+  * everything else as the string the emitter printed — so a peer's entry
+  * re-emits exactly as the peer emitted it.
   */
 private[serving] object ServingJson {
 

@@ -4,8 +4,7 @@ import java.util.concurrent.ConcurrentSkipListMap
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.DataFrame
 
 /** A continuously-maintained, driver-resident serving view — the engine's
   * analog of the reference's queryable RocksDB state store (reference:
@@ -14,292 +13,65 @@ import org.apache.spark.sql.functions.col
   *
   * Rows arrive from a streaming query's `foreachBatch` upsert (update-mode
   * semantics: latest value per key wins) and are served to the HTTP layer
-  * with the reference's three access patterns: point `get`, sorted
-  * prefix/range scan, and full scan (scatter-gather merge is implicit — the
-  * driver sees all partitions' state, SURVEY §2.4 Q4).
+  * with the reference's three access patterns: point `get`, sorted prefix
+  * scan, and full scan (scatter-gather merge is implicit — the driver sees
+  * all partitions' state, SURVEY §2.4 Q4).
   *
   * Scale posture: the serving view is the *edge* of the engine — the one
   * place `collect()` is legitimate (SURVEY §7.4). It holds only the
   * aggregated/keyed result (bounded by key cardinality, not input size);
-  * the 100 TB of raw data never lands here. A multi-node serving tier would
-  * shard this map by key range — the API below is already range-based so
-  * that split would be mechanical.
-  *
-  * `maxEntries` bounds the DRIVER-HEAP tier. Past it there are two
-  * behaviors:
-  *
-  *   - default (`spillDir = None`): fail loud
-  *     ([[ServingTable.CapacityExceeded]]) instead of slow-OOMing the
-  *     driver on a high-cardinality key stream;
-  *   - `spillDir = Some(dir)`: LSM-lite overflow — the hot map is flushed
-  *     to a SORTED parquet generation (`gen=<n>`, one file, key-ordered so
-  *     point/prefix reads prune on row-group stats) and cleared, and
-  *     serving reads merge hot map + generations newest-first (latest
-  *     value per key wins, exactly the upsert semantics). Past
-  *     `compactAfterGenerations` the generations fold newest-wins into
-  *     ONE sorted generation (see [[compactSpill]]), so read
-  *     amplification stays bounded on a long-running high-cardinality
-  *     stream instead of growing a generation per flush. The disk tier is
-  *     the same trade the reference's RocksDB store makes: capacity for
-  *     read latency; resident keys still answer at map speed.
-  *
-  * Spilled values round-trip through [[ServingJson]] (the HTTP layer's own
-  * emitter), so a spilled entry is byte-identical on the wire to a
-  * resident one; in-process readers see integral numbers as Long and
-  * decimals as Double after a round trip.
+  * the durable copy of that state is the maintenance query's checkpointed
+  * state store, which rebuilds this view on restart. Past `maxEntries` the
+  * table fails loud ([[ServingTable.CapacityExceeded]]) instead of
+  * slow-OOMing the driver on a high-cardinality key stream; a keyspace
+  * larger than one driver shards the serving tier by key
+  * ([[HttpApi.shard]]), one table per instance.
   */
 final class ServingTable(val name: String, val keyCol: String,
-    val maxEntries: Int = ServingTable.DefaultMaxEntries,
-    val spillDir: Option[String] = None,
-    val compactAfterGenerations: Int = ServingTable.DefaultCompactAfter) {
+    val maxEntries: Int = ServingTable.DefaultMaxEntries) {
 
   require(maxEntries > 0, "maxEntries must be positive")
-  require(compactAfterGenerations > 1, "compactAfterGenerations must be > 1")
 
   private val state = new ConcurrentSkipListMap[String, Map[String, Any]]()
 
-  // spill generations, newest first; immutable vector swapped under
-  // writeLock so concurrent readers always see a consistent list
-  @volatile private var gens: Vector[String] = Vector.empty
-  @volatile private var session: Option[SparkSession] = None
-  private var nextGen = 0
-  private val writeLock = new Object
-
-  private val SpillSchema = "key STRING, json STRING"
-
-  /** Provide the session used to read (and on restart, discover) spill
-    * generations. Called implicitly by [[upsert]]; call explicitly when a
-    * restarted process must serve an existing `spillDir` before the first
-    * upsert arrives.
-    */
-  def attach(spark: SparkSession): this.type = writeLock.synchronized {
-    if (session.isEmpty) {
-      session = Some(spark)
-      spillDir.foreach { dir =>
-        val root = new org.apache.hadoop.fs.Path(dir)
-        val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        if (fs.exists(root)) {
-          val found = fs.listStatus(root).filter(_.isDirectory).map(_.getPath)
-            .filter(_.getName.startsWith("gen="))
-            .filter(p => fs.exists(new org.apache.hadoop.fs.Path(p, "_SUCCESS")))
-            .map(p => (p.getName.stripPrefix("gen=").toInt, p.toString))
-            .sortBy(-_._1)
-          gens = found.map(_._2).toVector
-          nextGen = found.headOption.map(_._1 + 1).getOrElse(0)
-        }
-      }
-    }
-    this
-  }
-
-  /** Flush the whole hot map to one sorted parquet generation and clear
-    * it. Readers between the generation publish and the clear see some
-    * keys in both tiers with identical values — the hot tier wins, so the
-    * answer is unchanged.
-    */
-  private def flushToSpill(spark: SparkSession): Unit = {
-    val dir = spillDir.get
-    val rows = state.asScala.toSeq.map { case (k, v) => (k, ServingJson.value(v)) }
-    if (rows.isEmpty) return
-    import spark.implicits._
-    spark.createDataset(rows).toDF("key", "json")
-      .coalesce(1).sortWithinPartitions("key")
-      .write.mode("overwrite").parquet(s"$dir/gen=$nextGen")
-    gens = s"$dir/gen=$nextGen" +: gens
-    nextGen += 1
-    state.clear()
-    // LSM discipline: unbounded generation accretion turns every
-    // range/prefix/all into an every-generation scan — fold past the bound
-    if (gens.size >= compactAfterGenerations) compactLocked(spark)
-  }
-
-  /** Merge ALL spilled generations, newest-wins, into ONE sorted
-    * generation (the LSM major compaction). Must hold `writeLock`.
-    *
-    * Same publish-then-delete discipline as `Layout.compact`'s
-    * temp-sibling swap: the merged fold lands in a NEW `gen=<n>` dir
-    * (never a lazy read-and-overwrite of a dir it is reading), the
-    * generation list swaps to it atomically (volatile vector), and only
-    * then are the old dirs deleted. A reader that captured the pre-swap
-    * vector mid-scan can hit a deleted dir — the read paths retry
-    * against the POST-swap vector, whose merged generation answers
-    * identically (see `withGenRetry`). A crash between publish and
-    * delete is harmless: on restart [[attach]] sees the merged
-    * generation as NEWEST, so the stale survivors under it answer
-    * identically and the next compaction folds them away.
-    */
-  private def compactLocked(spark: SparkSession): Unit = {
-    if (gens.size <= 1) return
-    val dir = spillDir.get
-    // precedence = position in `gens` (newest first): smaller age wins
-    val merged = gens.zipWithIndex.map { case (g, age) =>
-        spark.read.schema(SpillSchema).parquet(g)
-          .withColumn("__age", org.apache.spark.sql.functions.lit(age))
-      }.reduce(_ unionByName _)
-      .groupBy(col("key"))
-      .agg(org.apache.spark.sql.functions
-        .min_by(col("json"), col("__age")).as("json"))
-    merged.coalesce(1).sortWithinPartitions("key")
-      .write.mode("overwrite").parquet(s"$dir/gen=$nextGen")
-    val old = gens
-    gens = Vector(s"$dir/gen=$nextGen")
-    nextGen += 1
-    val fs = new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    old.foreach(g => fs.delete(new org.apache.hadoop.fs.Path(g), true))
-  }
-
-  // a generation scan raced a compaction's delete: the retry re-reads
-  // the CURRENT (post-swap) `gens`, whose merged generation holds every
-  // key the deleted ones did. One retry is enough when at most one
-  // compaction completes per attempt window, but under sustained
-  // flush+compact churn each attempt can race a FRESH swap — so loop,
-  // bounded: every retry observes a strictly newer `gens` vector (swaps
-  // are monotonic under writeLock), and eight consecutive same-reader
-  // losses means compaction churn is pathological — surface it.
-  private def withGenRetry[T](f: => T): T = {
-    var attempts = 0
-    while (true) {
-      try return f catch {
-        case e: Throwable if isMissingFile(e) =>
-          attempts += 1
-          if (attempts >= 8) throw e
-      }
-    }
-    throw new IllegalStateException("unreachable")
-  }
-
-  // a deleted-generation read fails at PLAN time (AnalysisException
-  // PATH_NOT_FOUND), at TASK time (SparkException
-  // FAILED_READ_FILE.FILE_NOT_EXIST — possibly nested under the job
-  // failure), or as a raw FileNotFoundException in a cause chain
-  private def isMissingFile(e: Throwable): Boolean =
-    e != null && (e.isInstanceOf[java.io.FileNotFoundException] ||
-      (e match {
-        case st: org.apache.spark.SparkThrowable =>
-          Option(st.getCondition).exists(c =>
-            c == "PATH_NOT_FOUND" || c.startsWith("FAILED_READ_FILE"))
-        case _ => false
-      }) ||
-      isMissingFile(e.getCause))
-
-  /** On-demand LSM compaction of the spill tier; returns the resulting
-    * generation count (1 if anything was spilled, 0 if nothing ever was).
-    * Serving answers are identical before and after — only read
-    * amplification changes. No-op without a session or `spillDir`.
-    */
-  def compactSpill(): Int = writeLock.synchronized {
-    session.foreach(compactLocked)
-    gens.size
-  }
-
   /** Upsert one micro-batch (or a batch DataFrame) of keyed rows. When the
-    * hot map is at `maxEntries` and a NEW key arrives: with `spillDir` the
-    * map spills to a parquet generation and serving continues; without it
-    * this throws [[ServingTable.CapacityExceeded]] (rows already applied
-    * stay applied — the maintenance query then fails its batch and
-    * surfaces the error, rather than retrying into the same wall).
+    * map is at `maxEntries` and a NEW key arrives this throws
+    * [[ServingTable.CapacityExceeded]] (rows already applied stay applied —
+    * the maintenance query then fails its batch and surfaces the error,
+    * rather than retrying into the same wall).
     */
   def upsert(batch: DataFrame): Unit = {
-    attach(batch.sparkSession)
     val cols = batch.columns.filter(_ != keyCol)
     batch.collect().foreach { row =>
       val k = Option(row.getAs[Any](keyCol)).map(_.toString).getOrElse("null")
-      if (state.size() >= maxEntries && !state.containsKey(k)) {
-        if (spillDir.isDefined)
-          writeLock.synchronized {
-            if (state.size() >= maxEntries && !state.containsKey(k))
-              flushToSpill(batch.sparkSession)
-          }
-        else throw new ServingTable.CapacityExceeded(name, maxEntries)
-      }
+      if (state.size() >= maxEntries && !state.containsKey(k))
+        throw new ServingTable.CapacityExceeded(name, maxEntries)
       state.put(k, cols.map(c => c -> row.getAs[Any](c)).toMap)
     }
   }
 
-  private def parseRow(json: String): Map[String, Any] =
-    ServingJson.parse(json) match {
-      case m: Map[_, _] => m.asInstanceOf[Map[String, Any]]
-      case other => Map("value" -> other)
-    }
-
-  /** Newest-first point probe of the spill tier: each generation is one
-    * sorted file, so the `key = k` filter prunes to at most one row group
-    * per generation.
-    */
-  private def spillGet(key: String): Option[Map[String, Any]] =
-    withGenRetry(session.flatMap { spark =>
-      gens.iterator.flatMap { g =>
-        spark.read.schema(SpillSchema).parquet(g)
-          .where(col("key") === key).limit(1)
-          .collect().headOption.map(r => parseRow(r.getString(1)))
-      }.nextOption()
-    })
-
-  /** Merge a spill-tier scan (oldest generation first) with the hot map
-    * (last, so it wins), sorted by key — the same latest-value-per-key
-    * semantics the map alone gives.
-    */
-  private def mergedScan(filterGen: DataFrame => DataFrame,
-      hot: Seq[(String, Map[String, Any])]): Seq[(String, Map[String, Any])] =
-    withGenRetry {
-      val acc = new java.util.TreeMap[String, Map[String, Any]]()
-      session.foreach { spark =>
-        gens.reverseIterator.foreach { g =>
-          filterGen(spark.read.schema(SpillSchema).parquet(g))
-            .collect().foreach(r => acc.put(r.getString(0), parseRow(r.getString(1))))
-        }
-      }
-      hot.foreach { case (k, v) => acc.put(k, v) }
-      acc.asScala.toSeq
-    }
-
   /** Point lookup (reference: `ReadOnlyKeyValueStore.get`,
-    * `WordCountService.java:101`). Hot map first; spilled generations
-    * newest-first on miss.
+    * `WordCountService.java:101`).
     */
-  def get(key: String): Option[Map[String, Any]] =
-    Option(state.get(key)).orElse(if (gens.isEmpty) None else spillGet(key))
+  def get(key: String): Option[Map[String, Any]] = Option(state.get(key))
 
-  /** Sorted range scan, both bounds inclusive (reference:
-    * `PurchasesService.java:113` `store.range(from, to)`).
+  /** All entries of a key prefix, in key order — the reference encodes
+    * this as `range(key + "-00000", key + "-99999")`; a real lexicographic
+    * prefix scan is strictly more general.
     */
-  def range(from: String, to: String): Seq[(String, Map[String, Any])] = {
-    val hot = state.subMap(from, true, to, true).asScala.toSeq
-    if (gens.isEmpty) hot
-    else mergedScan(_.where(col("key") >= from && col("key") <= to), hot)
-  }
-
-  /** All entries of a key prefix — the reference encodes this as
-    * `range(key + "-00000", key + "-99999")`; a real lexicographic prefix
-    * scan is strictly more general and stays sargable (the spill tier
-    * pushes StringStartsWith down to the sorted parquet).
-    */
-  def prefix(p: String): Seq[(String, Map[String, Any])] = {
+  def prefix(p: String): Seq[(String, Map[String, Any])] =
     // tailMap positions at the prefix in O(log n); a dropWhile from the
     // first key would make every prefix scan O(total keys)
-    val hot = state.tailMap(p, true).asScala.iterator
+    state.tailMap(p, true).asScala.iterator
       .takeWhile(_._1.startsWith(p)).toSeq
-    if (gens.isEmpty) hot
-    else mergedScan(_.where(col("key").startsWith(p)), hot)
-  }
 
   /** Full scan (scatter-gather analog, reference:
     * `PurchasesService.java:58-94` — the merge loop disappears because the
     * driver holds every partition's state).
     */
-  def all: Seq[(String, Map[String, Any])] = {
-    val hot = state.asScala.toSeq
-    if (gens.isEmpty) hot else mergedScan(identity, hot)
-  }
+  def all: Seq[(String, Map[String, Any])] = state.asScala.toSeq
 
-  /** HOT-tier entry count (spilled generations excluded — counting them
-    * would scan the disk tier; see [[spilledGenerations]]).
-    */
   def size: Int = state.size()
-
-  /** Number of spilled parquet generations currently serving. */
-  def spilledGenerations: Int = gens.size
 }
 
 object ServingTable {
@@ -311,17 +83,9 @@ object ServingTable {
     */
   val DefaultMaxEntries: Int = 1 << 20
 
-  /** Generation-count bound that triggers the automatic LSM fold: past
-    * it, every spill flush is followed by a merge of all generations
-    * into one. 8 keeps worst-case read amplification single-digit while
-    * amortizing the fold over 8 hot-map flushes of rewrite work.
-    */
-  val DefaultCompactAfter: Int = 8
-
   final class CapacityExceeded(table: String, max: Int)
       extends IllegalStateException(
         s"serving table '$table' is full ($max entries): the key stream's " +
           "cardinality exceeds the configured bound; raise maxEntries, " +
-          "aggregate to a coarser key, spill with spillDir, or shard the " +
-          "serving tier")
+          "aggregate to a coarser key, or shard the serving tier")
 }

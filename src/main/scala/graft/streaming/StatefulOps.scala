@@ -19,13 +19,11 @@ object StatefulOps {
 
   /** Streaming first-seen dedup: emit each key's first record, drop every
     * later one — `dropDuplicates` semantics but with explicit, inspectable
-    * state and a TTL knob. With `ttlMs > 0` a key's "seen" marker expires
-    * after that processing-time idle period, bounding state for unbounded
-    * key spaces (the 100 TB posture: state size tracks *live* keys only).
+    * state.
     *
     * Works in batch too (state is trivially empty): dedups within the
     * batch, which is exactly the batch twin's meaning. State here never
-    * expires — use [[firstSeenWithTtl]] for unbounded key spaces.
+    * expires: one marker per key ever seen.
     */
   def firstSeen[K, V](ds: Dataset[V])(key: V => K)(
       implicit ke: Encoder[K], ve: Encoder[V]): Dataset[V] = {
@@ -158,26 +156,5 @@ object StatefulOps {
     ds.groupByKey(_.key)
       .transformWithState(new ConversationProcessor(tokenBudget),
         TimeMode.None(), OutputMode.Update())
-  }
-
-  /** First-seen dedup with a state TTL (processing-time): after `ttlMs`
-    * without new records for a key, its marker is dropped and the next
-    * record passes again — `dropDuplicatesWithinWatermark`'s state-bounding
-    * idea on the explicit-state API.
-    */
-  def firstSeenWithTtl[K, V](ds: Dataset[V], ttlMs: Long)(key: V => K)(
-      implicit ke: Encoder[K], ve: Encoder[V]): Dataset[V] = {
-    implicit val stateEnc: Encoder[Long] = Encoders.scalaLong
-    ds.groupByKey(key).flatMapGroupsWithState(
-        OutputMode.Append(), GroupStateTimeout.ProcessingTimeTimeout()) {
-      (_: K, values: Iterator[V], state: GroupState[Long]) =>
-        if (state.hasTimedOut) { state.remove(); Iterator.empty }
-        else if (state.exists) { state.setTimeoutDuration(ttlMs); Iterator.empty }
-        else {
-          state.update(1L)
-          state.setTimeoutDuration(ttlMs)
-          Iterator.single(values.next())
-        }
-    }
   }
 }

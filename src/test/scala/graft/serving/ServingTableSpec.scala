@@ -41,150 +41,26 @@ class ServingTableSpec extends AnyFunSuite with Matchers with SparkSpec {
     t.upsert((1 to 100).map(i => (s"k$i", i.toLong)).toDF("k", "n"))
     t.size shouldBe 100
     t.prefix("k1").size shouldBe 12 // k1, k10..k19, k100
+    // prefix answers in key order, not upsert order
+    t.prefix("k1").map(_._1) shouldBe
+      (Seq("k1", "k10", "k100") ++ (11 to 19).map(i => s"k$i"))
+
+    // update-mode semantics: a re-upserted key's LATEST value wins on
+    // every read path, and the key is still held once
+    t.upsert(Seq(("k10", 1000L), ("k10", 1001L)).toDF("k", "n"))
+    t.get("k10").get("n") shouldBe 1001L
+    t.prefix("k10").map { case (k, v) => (k, v("n")) } shouldBe
+      Seq(("k10", 1001L), ("k100", 100L))
+    t.all.collect { case ("k10", v) => v("n") } shouldBe Seq(1001L)
+    t.all.map(_._1) shouldBe (1 to 100).map(i => s"k$i").sorted
+
+    // a miss is None on point reads and empty on scans
+    t.get("nope") shouldBe None
+    t.prefix("nope") shouldBe empty
   }
 
   test("maxEntries must be positive") {
     an[IllegalArgumentException] should be thrownBy
       new ServingTable("bad", "k", maxEntries = 0)
-  }
-
-  test("spillDir: over-limit keys spill to sorted parquet and keep serving") {
-    import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-serve-").toString
-    val t = new ServingTable("spilled", "k", maxEntries = 3,
-      spillDir = Some(dir))
-
-    // 10 keys through a 3-entry hot map: spills happen, nothing fails
-    t.upsert((1 to 10).map(i => (f"k$i%02d", i.toLong)).toDF("k", "n"))
-    t.spilledGenerations should be >= 1
-    t.size should be <= 3
-
-    // point: resident and spilled keys both answer, values intact
-    (1 to 10).foreach { i =>
-      t.get(f"k$i%02d").get("n") shouldBe i.toLong
-    }
-    t.get("nope") shouldBe None
-
-    // prefix and range merge the tiers in key order
-    t.prefix("k0").map(_._1) shouldBe (1 to 9).map(i => f"k$i%02d")
-    t.range("k03", "k05").map { case (k, v) => (k, v("n")) } shouldBe
-      Seq(("k03", 3L), ("k04", 4L), ("k05", 5L))
-    t.all.size shouldBe 10
-
-    // update-mode semantics survive spilling: a re-upserted key's LATEST
-    // value wins over its spilled older value
-    t.upsert(Seq(("k01", 100L)).toDF("k", "n"))
-    t.get("k01").get("n") shouldBe 100L
-    t.all.count(_._1 == "k01") shouldBe 1
-
-    // a restarted process rehydrates the generations from disk
-    val t2 = new ServingTable("spilled", "k", maxEntries = 3,
-      spillDir = Some(dir)).attach(spark)
-    t2.spilledGenerations shouldBe t.spilledGenerations
-    t2.get("k07").get("n") shouldBe 7L
-    t2.prefix("k0").size shouldBe 9
-  }
-
-  test("compactSpill folds generations to one with identical answers") {
-    import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-serve-").toString
-    // compactAfterGenerations high so the fold is OURS to trigger
-    val t = new ServingTable("lsm", "k", maxEntries = 3,
-      spillDir = Some(dir), compactAfterGenerations = 100)
-    t.upsert((1 to 12).map(i => (f"k$i%02d", i.toLong)).toDF("k", "n"))
-    t.upsert(Seq(("k02", 200L), ("k05", 500L)).toDF("k", "n")) // re-upserts
-    // filler keys force the re-upserted values into a DURABLE generation
-    // (hot-map contents are lost on restart, compacted or not)
-    t.upsert((13 to 18).map(i => (f"k$i%02d", i.toLong)).toDF("k", "n"))
-    t.spilledGenerations should be >= 2
-
-    val before = (t.all, t.get("k02"), t.get("k05"), t.get("nope"),
-      t.prefix("k0"), t.range("k03", "k09"))
-    t.compactSpill() shouldBe 1
-    t.spilledGenerations shouldBe 1
-    (t.all, t.get("k02"), t.get("k05"), t.get("nope"),
-      t.prefix("k0"), t.range("k03", "k09")) shouldBe before
-    // newest-wins survived the fold
-    t.get("k02").get("n") shouldBe 200L
-    t.get("k05").get("n") shouldBe 500L
-
-    // restart rehydration sees exactly the one folded generation
-    val t2 = new ServingTable("lsm", "k", maxEntries = 3,
-      spillDir = Some(dir)).attach(spark)
-    t2.spilledGenerations shouldBe 1
-    t2.get("k02").get("n") shouldBe 200L
-    // disk tier serves every key that was ever flushed (hot-only keys
-    // k17/k18 are gone — restart semantics, unchanged by compaction)
-    t2.all.map(_._1) shouldBe (1 to 16).map(i => f"k$i%02d")
-  }
-
-  test("generation count stays bounded by the automatic fold") {
-    import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-serve-").toString
-    val t = new ServingTable("auto", "k", maxEntries = 2,
-      spillDir = Some(dir), compactAfterGenerations = 3)
-    // 40 distinct keys through a 2-entry hot map: ~20 flushes, but the
-    // fold at every 3rd generation keeps the tier at < 3 generations
-    (1 to 40).grouped(4).foreach { g =>
-      t.upsert(g.map(i => (f"k$i%02d", i.toLong)).toDF("k", "n"))
-    }
-    t.spilledGenerations should be < 3
-    (1 to 38).foreach { i => t.get(f"k$i%02d").get("n") shouldBe i.toLong }
-    t.all.size shouldBe 40
-  }
-
-  test("reads race spills and compactions without errors or wrong answers") {
-    import scala.jdk.CollectionConverters._
-    import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-serve-").toString
-    // aggressive settings: a 2-entry hot map folding at every 2nd
-    // generation => upserts continuously spill AND compact while the
-    // reader threads scan — exercising the delete-vs-scan race the
-    // withGenRetry path exists for
-    val t = new ServingTable("race", "k", maxEntries = 2,
-      spillDir = Some(dir), compactAfterGenerations = 2)
-    t.upsert(Seq(("k01", 1L), ("k02", 2L)).toDF("k", "n"))
-    val stop = new java.util.concurrent.atomic.AtomicBoolean(false)
-    val errors = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
-    val readers = (1 to 2).map(_ => new Thread(() => {
-      while (!stop.get()) {
-        try {
-          t.get("k01")
-          t.prefix("k0")
-          t.all: Unit
-        } catch {
-          case e: Throwable => errors.add(e); stop.set(true)
-        }
-      }
-    }))
-    readers.foreach(_.start())
-    try {
-      (3 to 24).foreach { i =>
-        t.upsert(Seq((f"k$i%02d", i.toLong)).toDF("k", "n"))
-      }
-    } finally {
-      stop.set(true)
-      readers.foreach(_.join(30000))
-    }
-    withClue(errors.asScala.map(_.toString).mkString("\n")) {
-      errors.asScala shouldBe empty
-    }
-    (1 to 24).foreach { i => t.get(f"k$i%02d").get("n") shouldBe i.toLong }
-    t.all.size shouldBe 24
-  }
-
-  test("spilled entries are byte-identical on the wire to resident ones") {
-    import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-serve-").toString
-    val spilly = new ServingTable("w", "k", maxEntries = 2, spillDir = Some(dir))
-    val resident = new ServingTable("w", "k")
-    val rows = Seq(("a", 1L, "x\"y"), ("b", 2L, "plain"), ("c", 3L, "z"),
-      ("d", 4L, "w"))
-    spilly.upsert(rows.toDF("k", "n", "s"))
-    resident.upsert(rows.toDF("k", "n", "s"))
-    rows.map(_._1).foreach { k =>
-      ServingJson.value(spilly.get(k).get) shouldBe
-        ServingJson.value(resident.get(k).get)
-    }
   }
 }

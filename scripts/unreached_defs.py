@@ -10,12 +10,17 @@ caller. Local defs inside a method body are not members and are skipped, and
 so are `apply`, which a call names by its owner alone, and `main`, which the
 JVM calls.
 
+A listed def whose Scaladoc contains `Public entry point` is kept on
+purpose (a reference twin a spec compares against, or an API with no caller
+yet); it prints `entry` in place of its test count.
+
 This is a name-based heuristic: an unreached def whose name another def
 shares is missed, and a def reached only through reflection or a Spark SQL
 function name is listed.
 
 Usage: scripts/unreached_defs.py [repo root, default: the script's parent]
-Output: one `path:line Owner.name tests=N` line per def, then a count.
+Output: one `path:line Owner.name tests=N` (or `entry`) line per def, then
+the count of each kind.
 """
 import os
 import re
@@ -26,6 +31,7 @@ IDENT = re.compile(r"[A-Za-z_][A-Za-z0-9_]*")
 DEF = re.compile(r"\bdef\s+([A-Za-z_][A-Za-z0-9_]*)")
 TEMPLATE = re.compile(r"\b(?:object|class|trait)\s+([A-Za-z_][A-Za-z0-9_]*)")
 HIDDEN = re.compile(r"\b(?:private|protected|override)\b")
+ENTRY = "Public entry point"
 
 
 def strip(src):
@@ -132,6 +138,22 @@ def member_defs(code):
     return found
 
 
+def scaladoc(src, line):
+    """The Scaladoc block (`/** ... */`) directly above 1-based `line` of
+    raw source `src`, annotation lines skipped, with its `*` gutters and
+    line breaks folded to single spaces; "" when there is none."""
+    lines = src.split("\n")[:line - 1]
+    while lines and lines[-1].strip().startswith("@"):
+        lines.pop()
+    above = "\n".join(lines).rstrip()
+    start = above.rfind("/**")
+    # a plain `/* */` comment right above must not borrow an earlier doc
+    if not above.endswith("*/") or start < 0 or "*/" in above[start:-2]:
+        return ""
+    return " ".join(" ".join(re.sub(r"^\s*\*(?!/)", "", l)
+                             for l in above[start:].split("\n")).split())
+
+
 def scala_files(root):
     for d, _, fs in os.walk(root):
         for f in sorted(fs):
@@ -150,13 +172,15 @@ def main():
     main_names, def_sites, defs = Counter(), Counter(), []
     for path in [*scala_files(main_root), *scala_files(bench_root)]:
         with open(path, encoding="utf-8") as f:
-            code = strip(f.read())
+            src = f.read()
+        code = strip(src)
         main_names.update(IDENT.findall(code))
         # every def site of a name, member or local, is not a use of it
         def_sites.update(m.group(1) for m in DEF.finditer(code))
         if path.startswith(main_root + os.sep) and \
                 not path.startswith(battery):
-            defs += [(os.path.relpath(path, repo), line, owner, name)
+            defs += [(os.path.relpath(path, repo), line, owner, name,
+                      ENTRY in scaladoc(src, line))
                      for line, owner, name in member_defs(code)]
     test_names = Counter()
     for path in scala_files(test_root):
@@ -166,9 +190,12 @@ def main():
     hits = [d for d in defs
             if d[3] not in ("apply", "main")
             and main_names[d[3]] <= def_sites[d[3]]]
-    for rel, line, owner, name in sorted(hits):
-        print(f"{rel}:{line} {owner}.{name} tests={test_names[name]}")
-    print(f"{len(hits)} unreached defs")
+    for rel, line, owner, name, entry in sorted(hits):
+        mark = "entry" if entry else f"tests={test_names[name]}"
+        print(f"{rel}:{line} {owner}.{name} {mark}")
+    entries = sum(d[4] for d in hits)
+    print(f"{len(hits)} unreached defs: {entries} entry, "
+          f"{len(hits) - entries} unmarked")
 
 
 if __name__ == "__main__":

@@ -141,7 +141,10 @@ object Bpe {
     out.toArray
   }
 
-  /** Greedy BPE of one pre-token under an arbitrary (validated) table. */
+  /** Greedy BPE of one pre-token under an arbitrary (validated) table.
+    * Public entry point: encodes under a trained merge table
+    * (`BpeTrainingSpec`).
+    */
   def encodeWordWith(word: String,
       rank: Map[(String, String), Int],
       merges: IndexedSeq[(String, String)]): Array[String] =

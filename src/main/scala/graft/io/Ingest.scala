@@ -25,6 +25,8 @@ object Ingest {
     * fields parses permissively (absent fields null) — the same tolerance
     * as the reference's Gson serde. A binary value column (e.g. the Kafka
     * source's raw `value`) is cast to string before parsing.
+    * Public entry point: the reference's poison-pill dead-lettering, pending
+    * the runnable service (ROADMAP item 10).
     */
   def jsonDeadLetterSplit(records: DataFrame, valueCol: String,
       schemaDDL: String): (DataFrame, DataFrame) = {

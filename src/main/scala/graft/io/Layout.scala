@@ -1,20 +1,10 @@
 package graft.io
 
-import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.DataFrame
 
-/** Data-layout writers — the storage-side half of scan performance. A scan
-  * can only skip what the writer clustered: parquet keeps min/max stats
-  * per file and per row group, so a table RANGE-PARTITIONED and sorted on
-  * its query column yields files with DISJOINT value ranges, and a range
-  * predicate then prunes whole files before any I/O (and row groups
-  * within the touched files). Unsorted ingest order scatters every value
-  * range across every file — stats exist but never exclude anything.
-  *
-  * At 100 TB this is the difference between a date-range query reading a
-  * day's files and reading the corpus; it composes with
-  * [[Bucketing]] (join locality) and the LSH index's partition pruning
-  * (point lookups) as the third layout tool.
+/** Physical-layout helpers for parquet datasets: spread a single-split
+  * scan across the session's cores, compact a directory's small files, and
+  * write and verify a release manifest (per-file bytes, rows and md5).
   */
 object Layout {
 
@@ -52,67 +42,6 @@ object Layout {
     }
     if (!scanShaped || df.rdd.getNumPartitions >= p) df
     else df.repartition(p)
-  }
-
-  /** Write `df` clustered for range predicates on `sortCols`:
-    * `repartitionByRange` puts each value range in one output partition
-    * (global order across files), `sortWithinPartitions` orders rows
-    * inside each file (row-group stats monotone within a file).
-    */
-  def writeRangeSorted(df: DataFrame, path: String, numFiles: Int,
-      sortCols: Column*): Unit =
-    df.repartitionByRange(numFiles, sortCols: _*)
-      .sortWithinPartitions(sortCols: _*)
-      .write.mode("overwrite").parquet(path)
-
-  /** Bit-interleave (Morton / Z-curve) of two bucket-id columns, each in
-    * [0, 2^bits). Low bits of both inputs land in low bits of the output,
-    * so nearby (a, b) cells are nearby on the curve.
-    */
-  def interleaveBits(a: Column, b: Column, bits: Int): Column =
-    (0 until bits).foldLeft(lit(0L)) { (acc, i) =>
-      acc
-        .bitwiseOR(shiftleft(shiftright(a, i).bitwiseAND(lit(1L)), 2 * i))
-        .bitwiseOR(shiftleft(shiftright(b, i).bitwiseAND(lit(1L)), 2 * i + 1))
-    }
-
-  /** Write `df` Z-ORDERED on two numeric columns: each column is linearly
-    * bucketed into 2^bits cells between its observed min/max
-    * (`width_bucket`), the cell ids are bit-interleaved into a Z-value,
-    * and files are range-partitioned + sorted on it. Unlike
-    * [[writeRangeSorted]] — which clusters ONE axis perfectly and leaves
-    * the other scattered — the Z-curve shrinks per-file min/max ranges on
-    * BOTH columns simultaneously (each by ~1/sqrt(numFiles) instead of one
-    * by 1/numFiles), so predicates on EITHER column skip files.
-    *
-    * Linear bucketing keeps the write one extra aggregate (global min/max)
-    * over a plain write; heavily skewed axes get uneven cells — pre-scale
-    * such a column (log, rank) before calling, the curve only needs a
-    * monotone cell id. Null cells sort first (one cluster), matching
-    * range-partitioner null handling.
-    */
-  def writeZOrdered(df: DataFrame, path: String, numFiles: Int,
-      colA: String, colB: String, bits: Int = 10): Unit = {
-    require(bits >= 1 && bits <= 16, "bits must be in [1,16]")
-    val row = df.agg(
-      min(col(colA)).cast("double"), max(col(colA)).cast("double"),
-      min(col(colB)).cast("double"), max(col(colB)).cast("double")).first()
-    val n = 1 << bits
-    // null-in => null-out (least() would otherwise promote nulls to the TOP
-    // cell); null z-values then range-partition first as one cluster.
-    // An all-null or empty axis degenerates to constant cell 0.
-    def cell(c: String, i: Int): Column =
-      if (row.isNullAt(i) || row.getDouble(i) == row.getDouble(i + 1))
-        when(col(c).isNotNull, lit(0L))
-      else when(col(c).isNotNull, least(lit(n.toLong - 1),
-        width_bucket(col(c).cast("double"),
-          lit(row.getDouble(i)), lit(row.getDouble(i + 1)), lit(n)) - 1))
-    val z = interleaveBits(cell(colA, 0), cell(colB, 2), bits)
-    df.withColumn("__z", z)
-      .repartitionByRange(numFiles, col("__z"))
-      .sortWithinPartitions(col("__z"))
-      .drop("__z")
-      .write.mode("overwrite").parquet(path)
   }
 
   /** Compact a parquet directory to ~`targetFileBytes` files (the
@@ -177,6 +106,8 @@ object Layout {
     * release is intact). Extra files not in the manifest also report —
     * a partial overwrite is corruption, not an append — and so does a
     * file that cannot be read.
+    * Public entry point: the consumer half of the manifest pair; writers call
+    * [[writeManifest]].
     */
   def verifyManifest(spark: org.apache.spark.sql.SparkSession,
       path: String): Seq[String] = {

@@ -82,6 +82,7 @@ object Merge {
     * it rewrites identical rows rather than duplicating or double-counting
     * (the spec drives a kill/restart to pin this). The table stays one row
     * per key, queryable by any reader between batches.
+    * Public entry point: streaming maintenance of a merged parquet table.
     */
   def maintainParquet(aggregated: DataFrame, path: String,
       keyCols: Seq[String], checkpointDir: String)

@@ -16,7 +16,10 @@ import org.apache.spark.sql.streaming.StreamingQuery
   */
 object Sinks {
 
-  /** Frame a DataFrame as (key, value<json of all non-key columns>). */
+  /** Frame a DataFrame as (key, value<json of all non-key columns>).
+    * Public entry point: the reference's JSON sink framing, pending the
+    * runnable service (ROADMAP item 10).
+    */
   def jsonRecords(df: DataFrame, keyCol: String): DataFrame = {
     val payload = df.columns.filter(_ != keyCol).map(col)
     df.select(col(keyCol).cast("string").as("key"),

@@ -34,13 +34,4 @@ object CorpusDiff {
           .when(col("__oh") =!= col("__nh"), "changed")
           .otherwise("unchanged").as("status"))
   }
-
-  /** The release report: one row per status with document count —
-    * the number a corpus-release dashboard tracks between crawls.
-    */
-  def summary(old: DataFrame, neu: DataFrame, idCol: String,
-      textCol: String): DataFrame =
-    diff(old, neu, idCol, textCol)
-      .groupBy(col("status")).agg(count(lit(1)).as("n_docs"))
-      .orderBy(col("status"))
 }

@@ -69,17 +69,6 @@ object Dedup {
             - col(idCol)).as("keep_id"),
         count(lit(1)).as("dup_cnt"))
 
-  /** [[exactDedup]] under the [[exactGroupsBy]] keep policy: one surviving
-    * row per normalized text, survivor = highest-priority (then min-id)
-    * member of its duplicate group.
-    */
-  def exactDedupBy(docs: DataFrame, idCol: String, textCol: String,
-      priority: Column): DataFrame =
-    docs.join(
-      exactGroupsBy(docs, idCol, textCol, priority)
-        .select(col("keep_id").as(idCol)),
-      Seq(idCol), "left_semi")
-
   /** [[exactDedup]] in ONE pass: row_number over the fingerprint, keep
     * rank 1 — one scan and one (sort-based) shuffle, where the semi-join
     * form scans the input twice and shuffles twice. Same surviving IDS
@@ -91,6 +80,8 @@ object Dedup {
     * on a corpus with a few enormous duplicate groups the hash aggregate's
     * map-side partial collapse can still win, which is why both forms
     * exist.
+    * Public entry point: reference twin that `IncrementalDedupSpec` compares
+    * with [[exactDedup]].
     */
   def exactDedupOnePass(docs: DataFrame, idCol: String, textCol: String): DataFrame = {
     val w = org.apache.spark.sql.expressions.Window
@@ -574,6 +565,8 @@ object Dedup {
   /** SimHash near-dup pairs: 64-bit fingerprints, blocked on 16-bit bands
     * (any pair within Hamming distance <= 3 shares at least one of 4 exact
     * bands — pigeonhole), verified with an exact popcount filter.
+    * Public entry point: reference twin that `IncrementalDedupSpec` compares
+    * against.
     */
   def simhashPairs(docs: DataFrame, idCol: String, textCol: String,
       maxHamming: Int = 3): DataFrame =
@@ -695,6 +688,8 @@ object Dedup {
     * which table uses which fold. Returns table path -> post-compaction
     * parquet data-file count (the monitoring number: it should step DOWN
     * toward bytes/targetFileBytes after each call).
+    * Public entry point: index maintenance; the one main caller of the five
+    * `compact*` folds.
     */
   def compactAll(spark: org.apache.spark.sql.SparkSession,
       fingerprints: Seq[String] = Nil,
@@ -710,26 +705,6 @@ object Dedup {
     (fold(fingerprints, compactFingerprints) ++ fold(signatures, compactSignatures) ++
       fold(spanCounts, compactSpanCounts) ++ fold(simhash, compactSimhash) ++
       fold(embeddings, compactEmbeddings)).toMap
-  }
-
-  /** Embedding near-dup pairs blocked on random-hyperplane LSH buckets, for
-    * data with no natural blocking column; the [[Similarity.lshPairs]] join
-    * over [[Similarity.lshPostings]]. OR-amplified: a pair is a candidate
-    * when it shares a bucket in ANY of `nTables` plane families (one table
-    * recalls ~p^nPlanes of true pairs, ~0.2 on the fixture; the union
-    * 1-(1-p^nPlanes)^nTables). Candidates are verified by exact cosine, so
-    * precision is 1.0 and `nTables` is the recall dial.
-    */
-  def embeddingNearDupPairsLsh(embs: DataFrame, idCol: String, embCol: String,
-      threshold: Double, nPlanes: Int = 4, nTables: Int = 8,
-      dim: Int = -1): DataFrame = {
-    val d = if (dim > 0) dim else Similarity.inferDim(embs, embCol)
-    val posted = Similarity.lshPostings(embs, idCol, embCol, nPlanes, nTables, d)
-    def side(id: String, v: String) =
-      posted.select(col(idCol).as(id), col(embCol).as(v), col("table"), col("bucket"))
-    Similarity.lshPairs(side("id_a", "__va"), side("id_b", "__vb"), "id_a", "id_b",
-      "sim", round(GraftFunctions.cosine_sim(col("__va"), col("__vb")), 4),
-      col("id_a") < col("id_b") && col("sim") >= threshold)
   }
 
   /** Connected components over near-dup candidate pairs: every document is

@@ -102,6 +102,8 @@ object Dsir {
     * deployment/streaming posture (a selection model is fitted once,
     * then applied; refitting per micro-batch would make per-doc
     * decisions depend on arrival batching).
+    * Public entry point: streaming selection: fit once, score later batches
+    * with [[scoreAgainstRatio]].
     */
   def fitRatio(rawReference: DataFrame, target: DataFrame, idCol: String,
       textCol: String, buckets: Int, salt: String = "dsir"): DataFrame =

@@ -100,12 +100,6 @@ object Html {
     trim(regexp_replace(
       decodeEntities(regexp_replace(c, "<[^>]+>", " ")), "\\s+", " "))
 
-  /** One-shot whole-page strip (no density filtering): comments /
-    * scripts / chrome removed, then everything flattened to one line.
-    * The cheap path when block structure doesn't matter.
-    */
-  def toText(c: Column): Column = stripTags(removeNonContent(c))
-
   /** Main-text extraction with the block text-density heuristic.
     *
     * Adds to each row: `<htmlCol>_text` (kept blocks' stripped text,

@@ -13,13 +13,6 @@ final case class MediaRecord(media_id: Long, kind: String, payload: Array[Byte])
 final case class MediaMeta(media_id: Long, kind: String, n_bytes: Long,
     width: Int, height: Int, duration_ms: Int)
 
-/** One sampled frame of a media payload (frame-sample stub output). */
-final case class MediaFrame(media_id: Long, frame_idx: Int, ts_ms: Int,
-    width: Int, height: Int)
-
-/** Fixed-width feature vector extracted from a payload (stub embedding). */
-final case class MediaFeatures(media_id: Long, features: Array[Float])
-
 object Multimodal {
 
   /** Ingest any column as an opaque binary payload with a kind tag.
@@ -112,39 +105,6 @@ object Multimodal {
     // Long math: length * 40 would wrap as Int past ~53.6 MB payloads
     val d = 1000 + math.floorMod(payload.length.toLong * 40, 600000L).toInt
     (w, h, d)
-  }
-
-  /** Frame sampling: one output row per sampled timestamp — a generator
-    * (1 → N rows), so the plan is a per-partition flatMap, exactly the
-    * shape a real video decoder needs (seek once per payload, emit frames).
-    * STUB frame contents; REAL row-explosion plumbing: output cardinality
-    * = ceil(duration / everyMs), capped to protect against adversarial
-    * metadata claiming hours of video.
-    */
-  def frameSample(media: Dataset[MediaRecord], everyMs: Int,
-      maxFrames: Int = 64): Dataset[MediaFrame] = {
-    import media.sparkSession.implicits._
-    require(everyMs > 0, "everyMs must be positive")
-    media.mapPartitions { records =>
-      records.flatMap { r =>
-        val (w, h, d) = parseHeader(r.kind, r.payload).getOrElse(fakeDecode(r.payload))
-        val n = math.min(((d + everyMs - 1) / everyMs), maxFrames)
-        (0 until n).iterator.map(i => MediaFrame(r.media_id, i, i * everyMs, w, h))
-      }
-    }
-  }
-
-  /** Resize: metadata-only transform in the stub (a real implementation
-    * rewrites payload bytes per partition with an open codec); aspect-fit
-    * into the given bounding box, never upscaling.
-    */
-  def resizeMeta(meta: Dataset[MediaMeta], maxW: Int, maxH: Int): Dataset[MediaMeta] = {
-    import meta.sparkSession.implicits._
-    meta.map { m =>
-      val scale = math.min(1.0, math.min(maxW.toDouble / m.width, maxH.toDouble / m.height))
-      m.copy(width = math.max(1, (m.width * scale).toInt),
-        height = math.max(1, (m.height * scale).toInt))
-    }
   }
 
   /** PAYLOAD-level resize — REAL for uncompressed 24-bit bottom-up BMP
@@ -546,6 +506,8 @@ object Multimodal {
     * still dedup exactly on identical bytes while never near-matching
     * by accident). Map-only; video bytes never cross an exchange — at
     * 100 TB only (id, frame-slot, 8-byte fingerprint) rows shuffle.
+    * Public entry point: the per-frame fingerprint column for callers that pair
+    * videos themselves.
     */
   def videoFrameHashes(media: Dataset[MediaRecord]): DataFrame =
     frameHashRows(media).drop("nf")
@@ -718,30 +680,6 @@ object Multimodal {
           syntheticAviKeyed(seed, w, h, nf, perturb = id % 2 == 1))
       })
     videoHashPairs(media, maxHamming, minMatchedFrames)
-  }
-
-  /** Feature extraction: fixed-width float vector per payload — the
-    * embedding-model stage of a multimodal pipeline. STUB features (byte
-    * histogram folded to `dim`, L2-normalized — deterministic); REAL
-    * shape: `array<float>` column ready for the similarity operators
-    * ([[Similarity.bruteForceTopK]] / [[Similarity.lshTopK]]).
-    */
-  def featureExtract(media: Dataset[MediaRecord], dim: Int = 16): Dataset[MediaFeatures] = {
-    import media.sparkSession.implicits._
-    media.mapPartitions { records =>
-      records.map { r =>
-        val acc = new Array[Float](dim)
-        var i = 0
-        while (i < r.payload.length) {
-          acc(java.lang.Math.floorMod(r.payload(i), dim)) += 1f
-          i += 1
-        }
-        var norm = 0.0
-        acc.foreach(v => norm += v * v)
-        val inv = if (norm == 0) 0f else (1.0 / math.sqrt(norm)).toFloat
-        MediaFeatures(r.media_id, acc.map(_ * inv))
-      }
-    }
   }
 
   /** Canonical 44-byte PCM WAV header + zeroed data — a to-spec synthetic

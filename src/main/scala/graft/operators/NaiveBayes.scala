@@ -138,6 +138,7 @@ object NaiveBayes {
     * never double-counts its own first attempt); the batch counts spill
     * before the write. The accumulating dirs fold with [[compactCounts]]
     * (summed — the additive fold).
+    * Public entry point: streaming-model maintenance (count table per batch).
     */
   def trainIncremental(docs: DataFrame, labelCol: String, tokensCol: String,
       countsTablePath: String, batchId: String = null,
@@ -173,6 +174,7 @@ object NaiveBayes {
 
   /** Fold the [[trainIncremental]] count table's batch dirs (summed per
     * (kind, label, token) — [[graft.io.BatchTable.compactSumFold]]).
+    * Public entry point: streaming-model maintenance (folds the count table).
     */
   def compactCounts(spark: org.apache.spark.sql.SparkSession,
       countsTablePath: String, excludeBatch: String = null,

@@ -147,6 +147,8 @@ object NgramLm {
     * (all bounded by distinct-n-gram counts, never the corpus), and the
     * one-row vocab spills so a lazy count-distinct plan doesn't re-scan
     * its corpus per scoring call.
+    * Public entry point: streaming scoring: build the tiers once, score every
+    * micro-batch against them.
     */
   def trigramTiers(model: DataFrame, vocab: DataFrame): TrigramTiers = {
     val m = graft.io.Spill(model, "graft-lm3-")
@@ -209,16 +211,6 @@ object NgramLm {
     scoreBitsTiers(docs, idCol, textCol,
       TrigramTiers(m, ctx2, big, ctx1, uni, vocab))
   }
-
-  /** Self-scoring convenience: train on `docs`, score `docs`. NOTE the
-    * backoff tiers never fire here (every scored trigram is in the
-    * model); reference-corpus scoring ([[scoreBitsTrigram]] with a
-    * separate train set) is where backoff earns its keep.
-    */
-  def selfScoreBitsTrigram(docs: DataFrame, idCol: String,
-      textCol: String): DataFrame =
-    scoreBitsTrigram(docs, idCol, textCol, trainTrigram(docs, textCol),
-      vocabSize(docs, textCol))
 
   /** Distinct-token count of the corpus — the V of add-one smoothing. */
   def vocabSize(docs: DataFrame, textCol: String): DataFrame =

@@ -160,17 +160,4 @@ object Packing {
       }
       .toDF().withColumnRenamed("id", idCol)
   }
-
-  /** Per-sequence roll-up of a [[packGreedy]] assignment joined back to
-    * token counts: how many documents and tokens each sequence carries.
-    * The fill ratio (`tokens / budget`) is the packing-efficiency metric
-    * a pipeline dashboards.
-    */
-  def sequenceStats(assignment: DataFrame, docs: DataFrame, idCol: String,
-      tokensCol: String): DataFrame =
-    assignment
-      .join(docs.select(col(idCol), col(tokensCol).cast("long")), idCol)
-      .groupBy(col("shard"), col("seq_id"))
-      .agg(count(lit(1)).as("n_docs"),
-        sum(col(tokensCol)).as("seq_tokens"))
 }

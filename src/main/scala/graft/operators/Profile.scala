@@ -14,9 +14,8 @@ import org.apache.spark.sql.functions._
   * plan through Spark's Expand (a data duplication per distinct column) —
   * the right default for profile-sized column lists and the only form an
   * external engine can replay exactly; pass `approxDistinct = true` at
-  * 100 TB to swap in `approx_count_distinct` (HLL, no Expand), the same
-  * trade [[Sketches]] documents, spec-gated for tolerance rather than
-  * oracle-gated.
+  * 100 TB to swap in `approx_count_distinct` (HLL, no Expand),
+  * spec-gated for tolerance rather than oracle-gated.
   */
 object Profile {
 

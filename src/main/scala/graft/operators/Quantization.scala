@@ -35,6 +35,8 @@ object Quantization {
     * (transform/array_max/transform) spelling out the identical IEEE
     * steps. Kept as the parity reference for the imperative expression
     * and as the literal shape the DuckDB oracle transcribes.
+    * Public entry point: reference twin of the `int8_quantize` expression that
+    * specs compare against.
     */
   def quantizeHof(df: DataFrame, embCol: String): DataFrame = {
     val embD = transform(col(embCol), _.cast("double"))
@@ -65,6 +67,8 @@ object Quantization {
     * m sequential MLlib fits over column slices — the expensive,
     * driver-coordinated step; run once per corpus epoch and persist the
     * returned structure with the index, never per query.
+    * Public entry point: trains the codebook [[pqEncode]] consumes; q121 uses a
+    * synthetic one the oracle can re-derive.
     */
   def pqTrain(embs: DataFrame, embCol: String, m: Int, ksub: Int = 16,
       seed: Long = 42L): Seq[Seq[Seq[Double]]] = {

@@ -25,7 +25,9 @@ object Sampling {
     conv(substring(md5(concat(id.cast("string"), lit(salt))), 1, 8), 16, 10)
       .cast("double") / lit(4294967296.0)
 
-  /** Keep ~`fraction` of rows, deterministically by id. */
+  /** Keep ~`fraction` of rows, deterministically by id.
+    * Public entry point: the uniform case of the deterministic id-hash sampler.
+    */
   def hashSample(df: DataFrame, idCol: String, fraction: Double,
       salt: String = ""): DataFrame = {
     require(fraction >= 0 && fraction <= 1, "fraction must be in [0,1]")

@@ -279,7 +279,10 @@ object Similarity {
   def hyperplanes(nPlanes: Int, dim: Int, seed: Long = 11L): Array[Array[Double]] =
     graft.functions.HashFamilies.hyperplanes(nPlanes, dim, seed)
 
-  /** Sign-pattern LSH bucket id for an embedding column. */
+  /** Sign-pattern LSH bucket id for an embedding column.
+    * Public entry point: reference twin of `hyperplane_buckets`
+    * (`ExpressionPropertiesSpec`).
+    */
   def lshBucket(emb: Column, planes: Array[Array[Double]]): Column =
     planes.zipWithIndex.map { case (p, j) =>
       when(cosine_sim(emb, lit(p)) > 0, lit(1 << j)).otherwise(lit(0))
@@ -500,6 +503,7 @@ object Similarity {
     * identical to [[lshTopK]] over the indexed corpus. The probe is a
     * (table, bucket) partition filter, so the scan reads at most `nTables`
     * directories (~nTables/2^nPlanes of the corpus).
+    * Public entry point: streaming-index search over a persisted LSH index.
     */
   def lshTopKIndexed(spark: SparkSession, indexPath: String,
       idCol: String, embCol: String, qv: Array[Double], queryId: Long, k: Int,
@@ -554,6 +558,7 @@ object Similarity {
     * corpus into `nList` cells and a query ranks only the `nProbe` cells
     * closest to it, exactly. Returns (idCol, sim) like [[lshTopK]]. It refits
     * per call — for repeated queries serve [[ivfTopKIndexed]].
+    * Public entry point: the one-shot IVF search, refitting per call.
     */
   def ivfTopK(embs: DataFrame, idCol: String, embCol: String,
       queryId: Long, k: Int, nList: Int = 16, nProbe: Int = 4,
@@ -639,6 +644,7 @@ object Similarity {
     * mode-append write is NOT batch-keyed, so a retried append lands its rows
     * twice: the query tail dedups ids, and the next refit folds the
     * duplicates away (a streaming file sink is exactly-once by its log).
+    * Public entry point: streaming-index append.
     */
   def appendIvfIndex(spark: SparkSession, indexPath: String,
       embs: DataFrame, idCol: String, embCol: String): Unit =
@@ -687,6 +693,7 @@ object Similarity {
     * postings keep raw vectors, so the rebuild is self-contained and folds
     * every prior append. The union spills before the overwrite (a lazy
     * self-read would race it). Returns true when a refit ran.
+    * Public entry point: streaming-index maintenance (drift refit).
     */
   def maintainIvfIndex(spark: SparkSession,
       indexPath: String, newEmbs: DataFrame, idCol: String, embCol: String,

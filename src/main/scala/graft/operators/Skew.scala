@@ -36,7 +36,10 @@ object Skew {
         sum(col("__sum")).cast("double").as("total"))
   }
 
-  /** Direct (unsalted) twin for equivalence checks and small keyspaces. */
+  /** Direct (unsalted) twin for equivalence checks and small keyspaces.
+    * Public entry point: reference twin that `SkewMultimodalSpec` compares
+    * [[saltedAgg]] with.
+    */
   def directAgg(df: DataFrame, keyCol: String, valueCol: String): DataFrame =
     df.groupBy(col(keyCol))
       .agg(count(lit(1)).as("count"),

@@ -231,6 +231,8 @@ object TextAnalysis {
     * [[termStats]]; the only doubles are the final scoring arithmetic,
     * so keep exact comparisons to the integer stats and treat scores as
     * ranking keys.
+    * Public entry point: reference scorer that `Bm25Spec` checks the BM25
+    * arithmetic on.
     */
   def bm25(docs: DataFrame, idCol: String, textCol: String,
       terms: Seq[String], k1: Double = 1.2, b: Double = 0.75): DataFrame = {
@@ -512,6 +514,8 @@ object TextAnalysis {
     * build dependent), so this family is spec-pinned, not
     * oracle-replayed; gate thresholds should sit in the bulk of the
     * distribution, never knife-edge.
+    * Public entry point: spec-pinned signal; zlib byte counts depend on the JVM
+    * build, so no oracle-replayed row runs it.
     */
   def compressionSignal(docs: DataFrame, idCol: String, textCol: String,
       level: Int = 6): DataFrame =
@@ -611,6 +615,7 @@ object TextAnalysis {
     * specification the imperative [[graft.functions.WinnowFingerprints]]
     * expression is property-pinned against (`WinnowingSpec`). Interpreted
     * lambda evaluation makes it the SLOW form; never put it in a hot path.
+    * Public entry point: reference twin that `WinnowingSpec` compares against.
     */
   def winnowFingerprintsHof(docs: DataFrame, idCol: String, textCol: String,
       k: Int = 3, win: Int = 4): DataFrame = {

@@ -290,6 +290,8 @@ object UnigramLm {
     * single fit rather than re-fitting per round (which would be
     * O(iters²) and would score a pruned-and-renormalized model, a
     * different objective).
+    * Public entry point: exposes the per-round log-likelihood `UnigramLmSpec`
+    * checks for EM monotonicity.
     */
   def emFitWithLL(wordCounts: Iterable[(String, Long)], vocabSize: Int,
       iters: Int = 4, maxPieceLen: Int = DefaultMaxPieceLen,

@@ -43,6 +43,8 @@ object Urls {
     * multi-part second-level (`co`, `com`, ...) AND the TLD is two
     * letters — so `a.b.example.com` -> `example.com`, `news.bbc.co.uk`
     * -> `bbc.co.uk`. NULL host -> NULL domain. Map-only label slicing.
+    * Public entry point: declarative reference twin that `UrlsSpec` compares
+    * with the PSL path.
     */
   def registeredDomainOf(host: Column): Column = {
     val labels = split(host, "\\.")
@@ -103,6 +105,7 @@ object Urls {
     * ([[graft.functions.UrlCanonicalize]] runs the same java.util.regex
     * pattern strings). Kept as the cross-engine reference; production
     * paths use [[canonicalUrl]].
+    * Public entry point: reference twin that `UrlsSpec` compares against.
     */
   def canonicalUrlDeclarative(url: Column): Column = {
     val f = regexp_replace(trim(url), "#.*", "")

@@ -266,45 +266,6 @@ object TrainingExport {
         col("seq_pos"), col("oversize"))
   }
 
-  /** Write the SFT corpus as the release artifact — the twin of
-    * [[writePretrainCorpus]] for the conversation side: ONE ROW PER
-    * CONVERSATION carrying its sequence assignment, the loss-mask spans
-    * NESTED as a turn_no-ordered array (a per-turn layout would copy the
-    * transcript once per turn), and the rendered transcript itself —
-    * re-derived through [[Conversations.assemble]], the SAME budget walk
-    * that produced the span offsets, so text and mask cannot drift (the
-    * guarantee `TrainingExportSpec` pins: every span's token range lies
-    * inside its transcript's width, and the transcript re-tokenizes to
-    * exactly `tokens`). Parquet partitioned by shard + per-shard
-    * [[graft.io.Layout.writeManifest]]; returns the manifested file
-    * count.
-    *
-    * Scale posture: the assignment frame spills once (two consumers:
-    * the nest rollup and the final join); assemble adds the one key
-    * exchange its own audit records; the join is id-equi on the
-    * conversation key. Nothing driver-side beyond the shard listing.
-    */
-  def writeSftCorpus(spark: SparkSession, events: DataFrame,
-      keyCol: String, tsCol: String, seqCol: String, roleCol: String,
-      contentCol: String, tokenBudget: Long, trainRoles: Seq[String],
-      groupExpr: Column, outDir: String, budget: Long,
-      nShards: Int): Int = {
-    val assign = spill(sftAssignments(events, keyCol, tsCol,
-      seqCol, roleCol, contentCol, tokenBudget, trainRoles, groupExpr,
-      budget, nShards))
-    val nested = assign
-      .groupBy(col(keyCol), col("tokens"), col("group"), col("shard"),
-        col("seq_id"), col("seq_pos"), col("oversize"))
-      .agg(array_sort(collect_list(struct(col("turn_no"), col("role"),
-        col("token_start"), col("token_end"), col("train"))))
-        .as("spans"))
-    val text = Conversations.assemble(events, keyCol, tsCol, seqCol,
-      roleCol, contentCol, tokenBudget)
-    nested.join(text.select(col(keyCol), col("transcript")), Seq(keyCol))
-      .write.mode("overwrite").partitionBy("shard").parquet(outDir)
-    manifestShards(spark, outDir)
-  }
-
   /** One [[graft.io.Layout.writeManifest]] per shard directory, run as
     * CONCURRENT Spark jobs (the q162 ranker discipline, optimization
     * guide §2.6): each manifest is an independent file-list hash job

@@ -82,6 +82,7 @@ final class HttpApi(serving: Serving, port: Int = 0) {
     * runs the library's own indexed query plan (partition-pruned scans),
     * so an index mid-[[graft.operators.LexicalIndex.maintain]] serves
     * its committed epochs.
+    * Public entry point: enables the `/search` routes, pending ROADMAP item 3.
     */
   def retrieval(conf: HttpApi.Retrieval): this.type = {
     retrievalConf = Some(conf); this

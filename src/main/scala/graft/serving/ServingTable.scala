@@ -21,11 +21,14 @@ import org.apache.spark.sql.DataFrame
   * place `collect()` is legitimate (SURVEY §7.4). It holds only the
   * aggregated/keyed result (bounded by key cardinality, not input size);
   * the durable copy of that state is the maintenance query's checkpointed
-  * state store, which rebuilds this view on restart. Past `maxEntries` the
-  * table fails loud ([[ServingTable.CapacityExceeded]]) instead of
-  * slow-OOMing the driver on a high-cardinality key stream; a keyspace
-  * larger than one driver shards the serving tier by key
-  * ([[HttpApi.shard]]), one table per instance.
+  * state store. Nothing rebuilds this view from that store yet: a
+  * restarted [[Serving.maintain]] starts with an empty table and serves
+  * only the keys that later micro-batches touch (ROADMAP item 7 tracks
+  * the rebuild). Past `maxEntries` the table fails loud
+  * ([[ServingTable.CapacityExceeded]]) instead of slow-OOMing the driver
+  * on a high-cardinality key stream; a keyspace larger than one driver
+  * shards the serving tier by key ([[HttpApi.shard]]), one table per
+  * instance.
   */
 final class ServingTable(val name: String, val keyCol: String,
     val maxEntries: Int = ServingTable.DefaultMaxEntries) {
@@ -34,20 +37,23 @@ final class ServingTable(val name: String, val keyCol: String,
 
   private val state = new ConcurrentSkipListMap[String, Map[String, Any]]()
 
-  /** Upsert one micro-batch (or a batch DataFrame) of keyed rows. When the
-    * map is at `maxEntries` and a NEW key arrives this throws
-    * [[ServingTable.CapacityExceeded]] (rows already applied stay applied —
-    * the maintenance query then fails its batch and surfaces the error,
-    * rather than retrying into the same wall).
+  /** Upsert one micro-batch (or a batch DataFrame) of keyed rows. A batch
+    * whose distinct NEW keys would take the map past `maxEntries` throws
+    * [[ServingTable.CapacityExceeded]] before any of its rows is applied,
+    * so a rejected batch leaves the table as it was — the maintenance
+    * query then fails its batch and surfaces the error, rather than
+    * retrying into the same wall.
     */
   def upsert(batch: DataFrame): Unit = {
     val cols = batch.columns.filter(_ != keyCol)
-    batch.collect().foreach { row =>
-      val k = Option(row.getAs[Any](keyCol)).map(_.toString).getOrElse("null")
-      if (state.size() >= maxEntries && !state.containsKey(k))
-        throw new ServingTable.CapacityExceeded(name, maxEntries)
-      state.put(k, cols.map(c => c -> row.getAs[Any](c)).toMap)
+    val rows = batch.collect().map { row =>
+      Option(row.getAs[Any](keyCol)).map(_.toString).getOrElse("null") ->
+        cols.map(c => c -> row.getAs[Any](c)).toMap
     }
+    val newKeys = rows.iterator.map(_._1).filterNot(state.containsKey).toSet
+    if (state.size() + newKeys.size > maxEntries)
+      throw new ServingTable.CapacityExceeded(name, maxEntries)
+    rows.foreach { case (k, v) => state.put(k, v) }
   }
 
   /** Point lookup (reference: `ReadOnlyKeyValueStore.get`,

@@ -37,6 +37,10 @@ final class AuditListener(appId: String) extends StreamingQueryListener {
     out.result()
   }
 
+  /** Register this listener on `spark`'s streaming query manager.
+    * Public entry point: offset audit, pending the runnable service (ROADMAP
+    * item 10).
+    */
   def attach(spark: SparkSession): this.type = {
     spark.streams.addListener(this); this
   }
@@ -54,6 +58,8 @@ final class AuditListener(appId: String) extends StreamingQueryListener {
     * marker, line 2 stream metadata, one offset line per source after
     * that). Returns the replayed rows (empty on a fresh checkpoint —
     * nothing committed, nothing to replay).
+    * Public entry point: offset audit, pending the runnable service (ROADMAP
+    * item 10).
     */
   def replayCommitted(spark: SparkSession, checkpoint: String): Seq[AuditOffset] = {
     val commits = new org.apache.hadoop.fs.Path(s"$checkpoint/commits")

@@ -1,86 +1,12 @@
 package graft.io
 
-import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.matchers.should.Matchers
 
 import graft.SparkSpec
 
-/** [[Layout.writeRangeSorted]] must produce files whose value ranges are
-  * DISJOINT — the property parquet min/max skipping needs to prune whole
-  * files for a range predicate. Asserted by reading each output file
-  * separately and checking its [min, max] interval against every other's.
-  */
+/** [[Layout]]'s small-file compaction and its release manifest pair. */
 class LayoutSpec extends AnyFunSuite with Matchers with SparkSpec {
-
-  test("range-sorted layout yields disjoint per-file date ranges") {
-    val orders = graft.core.Tables.load(spark, "/root/testdata/sf0.001", "orders")
-    val dir = java.nio.file.Files.createTempDirectory("graft-layout-").toString + "/orders"
-    Layout.writeRangeSorted(orders, dir, numFiles = 4, col("o_orderdate"))
-
-    val files = new java.io.File(dir).listFiles()
-      .filter(_.getName.endsWith(".parquet")).map(_.getPath)
-    files.length should be >= 3 // repartitionByRange(4) may merge tiny tails
-
-    val ranges = files.map { f =>
-      // NTZ timestamps surface as LocalDateTime; compare as epoch seconds
-      val r = spark.read.parquet(f)
-        .agg(min(unix_timestamp(col("o_orderdate").cast("timestamp"))),
-          max(unix_timestamp(col("o_orderdate").cast("timestamp")))).head()
-      (r.getLong(0), r.getLong(1))
-    }.sortBy(_._1)
-    // every file's range ends before the next file's begins
-    ranges.sliding(2).foreach {
-      case Array((_, hiA), (loB, _)) => hiA should be <= loB
-      case _ =>
-    }
-
-    // and the full table round-trips
-    spark.read.parquet(dir).count() shouldBe orders.count()
-  }
-
-  test("interleaveBits matches a reference Morton encoding") {
-    import spark.implicits._
-    def morton(a: Long, b: Long, bits: Int): Long =
-      (0 until bits).foldLeft(0L) { (acc, i) =>
-        acc | (((a >> i) & 1L) << (2 * i)) | (((b >> i) & 1L) << (2 * i + 1))
-      }
-    val cases = Seq((0L, 0L), (1L, 0L), (0L, 1L), (3L, 5L), (255L, 1L), (1023L, 1023L))
-    val out = cases.toDF("a", "b")
-      .select(Layout.interleaveBits(col("a"), col("b"), 10).as("z"))
-      .as[Long].collect()
-    out.toSeq shouldBe cases.map { case (a, b) => morton(a, b, 10) }
-  }
-
-  test("z-order shrinks per-file ranges on BOTH axes; single-axis sort does not") {
-    // Two independent uniform axes: a perfect single-axis sort leaves the
-    // other axis's per-file range at ~the global range, while the Z-curve
-    // shares the shrinkage between axes (~1/sqrt(numFiles) each).
-    val rnd = new scala.util.Random(7)
-    import spark.implicits._
-    val df = (1 to 20000)
-      .map(_ => (rnd.nextInt(100000).toLong, rnd.nextInt(100000).toLong))
-      .toDF("x", "y")
-    val base = java.nio.file.Files.createTempDirectory("graft-zorder-").toString
-    Layout.writeZOrdered(df, s"$base/z", numFiles = 16, "x", "y", bits = 10)
-    Layout.writeRangeSorted(df, s"$base/linear", 16, col("x"))
-
-    def meanRange(dir: String, c: String): Double = {
-      val perFile = spark.read.parquet(dir)
-        .groupBy(input_file_name())
-        .agg((max(col(c)) - min(col(c))).as("r"))
-        .agg(avg(col("r"))).head().getDouble(0)
-      perFile / 100000.0 // fraction of the global range
-    }
-    // z-order: both axes clustered (16 files ~ 4x4 grid => ~1/4 each,
-    // loose gate at 0.55); linear sort: x tight but y unclustered (~1.0)
-    meanRange(s"$base/z", "x") should be < 0.55
-    meanRange(s"$base/z", "y") should be < 0.55
-    meanRange(s"$base/linear", "x") should be < 0.15
-    meanRange(s"$base/linear", "y") should be > 0.8
-
-    spark.read.parquet(s"$base/z").count() shouldBe 20000L
-  }
 
   test("compact collapses a many-small-files table and round-trips contents") {
     import spark.implicits._
@@ -99,18 +25,6 @@ class LayoutSpec extends AnyFunSuite with Matchers with SparkSpec {
     // no leftover temp/backup dirs
     new java.io.File(dir).getParentFile.listFiles()
       .map(_.getName).count(_.contains("compact-")) shouldBe 0
-  }
-
-  test("z-order keeps null axis values in the first files, not the top cell") {
-    import spark.implicits._
-    val df = (1 to 1000).map(i => (if (i % 100 == 0) None else Some(i.toLong), i.toLong))
-      .toDF("x", "y")
-    val dir = java.nio.file.Files.createTempDirectory("graft-znull-").toString + "/t"
-    Layout.writeZOrdered(df, dir, numFiles = 4, "x", "y", bits = 8)
-    val back = spark.read.parquet(dir)
-    back.where(col("x").isNull).count() shouldBe 10L
-    // nulls cluster: all null-x rows land in a single file
-    back.where(col("x").isNull).select(input_file_name()).distinct().count() shouldBe 1L
   }
 
   test("release manifest: write, verify intact, detect tamper / " +

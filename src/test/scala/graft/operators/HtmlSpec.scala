@@ -69,12 +69,14 @@ class HtmlSpec extends AnyFunSuite with Matchers with SparkSpec {
     out.length shouldBe 2
   }
 
-  test("toText strips a whole page in one shot; plain text is identity") {
-    val page = "<body><nav>chrome</nav><p>alpha</p><p>beta</p></body>"
-    df(page).select(Html.toText(col("html")).as("t"))
-      .collect()(0).getString(0) shouldBe "alpha beta"
-    df(article).select(Html.toText(col("html")).as("t"))
-      .collect()(0).getString(0) shouldBe article
+  test("removeNonContent then stripTags flattens a whole page in one " +
+      "shot; plain text is identity") {
+    def strip(html: String) =
+      df(html).select(Html.stripTags(Html.removeNonContent(col("html"))))
+        .collect()(0).getString(0)
+    strip("<body><nav>chrome</nav><p>alpha</p><p>beta</p></body>") shouldBe
+      "alpha beta"
+    strip(article) shouldBe article
   }
 
   test("inline tags stay in their block; attributes with > inside quotes " +

@@ -536,9 +536,6 @@ class IncrementalDedupSpec extends AnyFunSuite with Matchers with SparkSpec {
       .select("keep_id", "dup_cnt").collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
     groups shouldBe Set((6L, 3L), (8L, 2L), (20L, 3L))
-    Dedup.exactDedupBy(docs, "doc_id", "text", col("prio"))
-      .select("doc_id").collect().map(_.getLong(0)).toSet shouldBe
-      Set(6L, 8L, 20L)
   }
 
   test("an all-NULL-priority group still keeps its min-id member") {

@@ -109,13 +109,4 @@ class MultimodalDecodeSpec extends AnyFunSuite with Matchers with SparkSpec {
       .head().payload
     new String(plain) shouldBe "just text"
   }
-
-  test("frameSample cardinality follows parsed WAV duration") {
-    import spark.implicits._
-    val frames = Multimodal.frameSample(
-      Seq(MediaRecord(7L, "audio", wav(8000, 1, 8, 4000))).toDS(), everyMs = 100)
-      .collect()
-    frames.length shouldBe 5 // ceil(500 / 100)
-    frames.map(_.ts_ms).toSeq shouldBe Seq(0, 100, 200, 300, 400)
-  }
 }

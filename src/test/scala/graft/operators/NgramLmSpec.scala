@@ -70,9 +70,12 @@ class NgramLmSpec extends AnyFunSuite with Matchers with SparkSpec {
     val docs = Seq((1L, "a b c z b c a"), (2L, "a b c a b c"),
       (3L, "z q"))
       .toDF("doc_id", "text")
-    def run(parts: Int) =
-      NgramLm.selfScoreBitsTrigram(docs.repartition(parts), "doc_id", "text")
+    def run(parts: Int) = {
+      val d = docs.repartition(parts)
+      NgramLm.scoreBitsTrigram(d, "doc_id", "text",
+          NgramLm.trainTrigram(d, "text"), NgramLm.vocabSize(d, "text"))
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
+    }
     val ref = run(1)
     (2 to 4).foreach(p => run(p) shouldBe ref)
     ref.map(_._1) shouldBe Set(1L, 2L) // <3 tokens: no trigrams, no row

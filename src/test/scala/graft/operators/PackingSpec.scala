@@ -150,14 +150,4 @@ class PackingSpec extends AnyFunSuite with Matchers with SparkSpec {
     Packing.packRelated(big, "id", "tokens", "domain", 100L, 2)
       .where(col("oversize")).count() shouldBe 1L
   }
-
-  test("sequenceStats reports docs and token fill per sequence") {
-    val rows = Seq((0L, 40L, 0L), (1L, 40L, 0L), (2L, 40L, 0L))
-    val base = docs(rows)
-    val assignment = Packing.packGreedy(base, "id", "tokens", "shard", 100)
-    val stats = Packing.sequenceStats(assignment, base, "id", "tokens")
-      .orderBy(col("shard"), col("seq_id")).collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
-    stats shouldBe Array((0L, 0L, 2L, 80L), (0L, 1L, 1L, 40L))
-  }
 }

@@ -86,24 +86,6 @@ class SimilaritySpec extends AnyFunSuite with Matchers with SparkSpec {
     b4 should be < b2 // each extra plane halves the expected bucket
   }
 
-  test("LSH-blocked near-dup pairs: perfect precision, measured recall vs exact") {
-    import org.apache.spark.sql.functions.lit
-    // exact ground truth: all-pairs cosine >= threshold (125k pairs at sf0.001 — fine)
-    val threshold = 0.4
-    val exact = Dedup.embeddingNearDupPairs(
-        embs.withColumn("__all", lit(1)), "vec_id", "embedding", "__all", threshold)
-      .select("id_a", "id_b").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val blocked = Dedup.embeddingNearDupPairsLsh(embs, "vec_id", "embedding", threshold)
-      .select("id_a", "id_b").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-
-    blocked.subsetOf(exact) shouldBe true // every reported pair is a true pair
-    exact should not be empty
-    val recall = blocked.size.toDouble / exact.size
-    withClue(s"recall $recall (${blocked.size}/${exact.size}): ") {
-      recall should be >= 0.6 // 8-table OR-amplification; nTables is the dial
-    }
-  }
-
   test("ivfTopK: full probe equals brute force; recall rises with probes") {
     val k = 10
     val exact = Similarity.bruteForceTopK(embs, "vec_id", "embedding", 0L, k)

@@ -1,12 +1,11 @@
 package graft.operators
 
-import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.matchers.should.Matchers
 
 import graft.SparkSpec
 
-/** Skew salting equivalence + the multimodal stub-op plumbing. */
+/** Skew salting equivalence: salted aggregate and join == the plain forms. */
 class SkewMultimodalSpec extends AnyFunSuite with Matchers with SparkSpec {
 
   test("saltedAgg == directAgg on a skewed key distribution") {
@@ -36,56 +35,5 @@ class SkewMultimodalSpec extends AnyFunSuite with Matchers with SparkSpec {
     val saltedJoin = p.join(b, cond)
       .select(p("k"), p("v"), b("w")).collect().map(r => (r.getString(0), r.getInt(1), r.getInt(2))).toSet
     saltedJoin shouldBe plain
-  }
-
-  test("frameSample explodes one row per sampled frame, capped") {
-    import spark.implicits._
-    val media = Seq(
-      MediaRecord(1L, "video", Array.fill(100)(7.toByte)),
-      MediaRecord(2L, "video", Array.fill(5000)(1.toByte))).toDS()
-
-    val frames = Multimodal.frameSample(media, everyMs = 1000, maxFrames = 8).collect()
-    val byId = frames.groupBy(_.media_id)
-    // cardinality = min(ceil(duration/everyMs), cap), deterministic per payload
-    val metas = Multimodal.decode(media).collect().map(m => m.media_id -> m).toMap
-    for ((id, fs) <- byId) {
-      val expect = math.min((metas(id).duration_ms + 999) / 1000, 8)
-      fs.length shouldBe expect
-      fs.map(_.frame_idx).sorted shouldBe (0 until expect).toArray
-      all(fs.map(_.width)) shouldBe metas(id).width
-    }
-    // deterministic across runs
-    Multimodal.frameSample(media, 1000, 8).collect().toSet shouldBe frames.toSet
-  }
-
-  test("resizeMeta aspect-fits without upscaling") {
-    import spark.implicits._
-    val meta = Seq(
-      MediaMeta(1L, "image", 10L, 1600, 900, 0),
-      MediaMeta(2L, "image", 10L, 100, 50, 0)).toDS()
-    val resized = Multimodal.resizeMeta(meta, 640, 360).collect().map(m => m.media_id -> m).toMap
-    resized(1L).width shouldBe 640
-    resized(1L).height shouldBe 360
-    resized(2L).width shouldBe 100 // never upscaled
-    resized(2L).height shouldBe 50
-  }
-
-  test("featureExtract yields L2-normalized fixed-width vectors usable by similarity ops") {
-    import spark.implicits._
-    val media = Seq(
-      MediaRecord(1L, "image", "some payload bytes".getBytes),
-      MediaRecord(2L, "image", "other payload".getBytes),
-      MediaRecord(3L, "image", "some payload bytes".getBytes)).toDS()
-    val feats = Multimodal.featureExtract(media, dim = 8).toDF()
-
-    feats.select(org.apache.spark.sql.functions.size(col("features"))).collect()
-      .map(_.getInt(0)).toSet shouldBe Set(8)
-    // identical payloads → identical features; cosine via the engine's expression
-    val sim = feats.as("a").join(feats.as("b"), col("a.media_id") < col("b.media_id"))
-      .select(col("a.media_id"), col("b.media_id"),
-        graft.functions.GraftFunctions.cosine_sim(col("a.features"), col("b.features")).as("s"))
-      .collect().map(r => ((r.getLong(0), r.getLong(1)), r.getDouble(2))).toMap
-    sim((1L, 3L)) shouldBe 1.0 +- 1e-6 // identical payloads → identical vectors
-    sim((1L, 2L)) should be < 1.0
   }
 }

@@ -191,56 +191,6 @@ class TrainingExportSpec extends AnyFunSuite with Matchers with SparkSpec {
         (col("doc_id") % 7).cast("string"), Seq.empty)
   }
 
-  test("writeSftCorpus: one row per conversation, spans nested in " +
-      "turn order inside the transcript's width, transcript " +
-      "re-tokenizes to exactly `tokens`, manifests verify") {
-    import spark.implicits._
-    val events = (1 to 200).map { i =>
-      (i % 25, i, i, if (i % 2 == 0) "user" else "assistant",
-        s"turn $i says word$i and word${i + 1} about thing$i")
-    }.toDF("conv", "ts", "seq", "role", "text")
-    val dir = java.nio.file.Files.createTempDirectory("graft-export-")
-      .toString + "/sft"
-    val nFiles = TrainingExport.writeSftCorpus(spark, events, "conv",
-      "ts", "seq", "role", "text", tokenBudget = 40L, Seq("assistant"),
-      (col("conv") % 5).cast("string"), dir, budget = 100L, nShards = 3)
-    nFiles should be > 0
-    val back = spark.read.parquet(dir)
-    back.columns.toSet should contain allOf ("conv", "tokens", "group",
-      "shard", "seq_id", "seq_pos", "oversize", "spans", "transcript")
-    val rows = back.collect()
-    rows.map(_.getAs[Int]("conv")).distinct.length shouldBe rows.length
-    // the artifact must agree with the in-plan assignment surface
-    val assign = TrainingExport.sftAssignments(events, "conv", "ts",
-      "seq", "role", "text", 40L, Seq("assistant"),
-      (col("conv") % 5).cast("string"), 100L, 3).collect()
-    rows.map(_.getAs[Int]("conv")).toSet shouldBe
-      assign.map(_.getInt(0)).toSet
-    rows.foreach { r =>
-      val spans = r.getSeq[org.apache.spark.sql.Row](
-        r.fieldIndex("spans"))
-      val tokens = r.getAs[Long]("tokens")
-      // nested spans tile [0, tokens) gap-free in turn order
-      spans.map(_.getLong(2)).head shouldBe 0L
-      spans.sliding(2).foreach {
-        case Seq(a, b) => b.getLong(2) shouldBe a.getLong(3)
-        case _ =>
-      }
-      spans.last.getLong(3) shouldBe tokens
-      spans.foreach(sp =>
-        sp.getBoolean(4) shouldBe (sp.getString(1) == "assistant"))
-      // the transcript IS tokens wide under the same whitespace count
-      r.getAs[String]("transcript")
-        .split("\\s+").count(_.nonEmpty).toLong shouldBe tokens
-    }
-    val fs = new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.listStatus(new org.apache.hadoop.fs.Path(dir))
-      .filter(_.isDirectory).map(_.getPath.toString)
-      .foreach(sd =>
-        graft.io.Layout.verifyManifest(spark, sd) shouldBe empty)
-  }
-
   test("writePretrainCorpus lands a shard-partitioned corpus with a " +
       "verifiable manifest per shard") {
     val dir = java.nio.file.Files.createTempDirectory("graft-export-")

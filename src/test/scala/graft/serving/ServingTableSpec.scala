@@ -24,13 +24,15 @@ class ServingTableSpec extends AnyFunSuite with Matchers with SparkSpec {
     t.upsert(Seq(("a", 10L), ("c", 30L)).toDF("k", "n"))
     t.get("a").get("n") shouldBe 10L
 
+    val before = t.all
     val ex = intercept[ServingTable.CapacityExceeded] {
       t.upsert(Seq(("b", 20L), ("d", 4L)).toDF("k", "n"))
     }
     ex.getMessage should include("'bounded' is full (3 entries)")
-    // rows before the overflowing key stayed applied (fail-loud, not
-    // rollback — the maintenance query surfaces the error)
-    t.get("b").get("n") shouldBe 20L
+    // a rejected batch is rejected whole: the update of "b" that precedes
+    // the overflowing key is not applied either
+    t.all shouldBe before
+    t.get("b").get("n") shouldBe 2L
     t.get("d") shouldBe None
     t.size shouldBe 3
   }

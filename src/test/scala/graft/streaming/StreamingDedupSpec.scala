@@ -8,11 +8,10 @@ import org.scalatest.matchers.should.Matchers
 
 import graft.SparkSpec
 
-/** Streaming dedup — q37's streaming form (VERDICT r1 #7): both the
-  * built-in watermarked path (`dropDuplicatesWithinWatermark`) and the
-  * explicit-state path ([[StatefulOps.firstSeen]]) drop duplicates that
-  * arrive in LATER micro-batches, which a batch `dropDuplicates` per batch
-  * could never do.
+/** Streaming dedup — q37's streaming form (VERDICT r1 #7): the built-in
+  * watermarked path (`dropDuplicatesWithinWatermark`) drops duplicates
+  * that arrive in LATER micro-batches, which a batch `dropDuplicates` per
+  * batch could never do.
   */
 class StreamingDedupSpec extends AnyFunSuite with Matchers with SparkSpec {
 
@@ -42,36 +41,5 @@ class StreamingDedupSpec extends AnyFunSuite with Matchers with SparkSpec {
       query.processAllAvailable()
       emitted.sorted shouldBe Vector("e1", "e2", "e3")
     } finally query.stop()
-  }
-
-  test("StatefulOps.firstSeen emits each key once across batches") {
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    import spark.implicits._
-
-    val input = MemoryStream[(String, String)]
-    val deduped = StatefulOps.firstSeen(input.toDS())(_._1)
-
-    var emitted = Vector.empty[(String, String)]
-    val query = deduped.writeStream.outputMode("append")
-      .option("checkpointLocation", checkpoint())
-      .foreachBatch { (b: org.apache.spark.sql.Dataset[(String, String)], _: Long) =>
-        emitted ++= b.collect()
-      }.start()
-
-    try {
-      input.addData(("k1", "first"), ("k2", "first"))
-      query.processAllAvailable()
-      input.addData(("k1", "dup"), ("k3", "first"))
-      query.processAllAvailable()
-      emitted.sortBy(_._1) shouldBe Vector(
-        ("k1", "first"), ("k2", "first"), ("k3", "first"))
-    } finally query.stop()
-  }
-
-  test("firstSeen batch twin dedups within the batch") {
-    import spark.implicits._
-    val ds = Seq(("k1", "a"), ("k1", "b"), ("k2", "c")).toDS()
-    StatefulOps.firstSeen(ds)(_._1).collect().sortBy(_._1).map(_._1) shouldBe
-      Array("k1", "k2")
   }
 }

@@ -52,64 +52,4 @@ class TransformWithStateSpec extends AnyFunSuite with Matchers with SparkSpec {
       }
     }
   }
-
-  test("conversationTws: each micro-batch emits the updated budgeted " +
-      "transcript, and the final state matches the batch assemble on " +
-      "the union — late turns included") {
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    import spark.implicits._
-    import StatefulOps.{Turn, Transcript}
-
-    val prevProvider = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-
-    val b1 = Seq(Turn("c1", 10L, 1L, "user", "hello there"),
-      Turn("c1", 20L, 2L, "assistant", "general kenobi you are"))
-    // c1's batch-2 rows include a turn NEWER than state and a LATE one
-    // (ts 25, arriving after ts 40 was produced) the budget can reach
-    val b2 = Seq(Turn("c1", 40L, 4L, "assistant", "great news"),
-      Turn("c1", 25L, 3L, "user", "ok"),
-      Turn("c2", 5L, 1L, "u", "solo msg"))
-
-    val input = MemoryStream[Turn]
-    val out = StatefulOps.conversationTws(input.toDS(), tokenBudget = 5L)
-
-    var emitted = Vector.empty[Transcript]
-    val query = out.writeStream.outputMode("update")
-      .option("checkpointLocation", checkpoint())
-      .foreachBatch { (b: org.apache.spark.sql.Dataset[Transcript], _: Long) =>
-        emitted ++= b.collect()
-      }.start()
-
-    try {
-      input.addData(b1: _*)
-      query.processAllAvailable()
-      // after batch 1: 2+4 tokens exceed 5 -> only the newest turn kept
-      emitted.last shouldBe Transcript("c1", 2L, 1L, 4L,
-        "assistant: general kenobi you are")
-
-      input.addData(b2: _*)
-      query.processAllAvailable()
-      val last = emitted.groupBy(_.key).view.mapValues(_.last).toMap
-
-      // batch twin on the UNION of micro-batches, column for column
-      val union = (b1 ++ b2).map(t => (t.key, t.ts, t.seq, t.role,
-        t.content)).toDF("conv", "t", "seq", "role", "content")
-      val batch = graft.operators.Conversations.assemble(union, "conv",
-          "t", "seq", "role", "content", 5L)
-        .collect().map(r => r.getString(0) -> Transcript(r.getString(0),
-          r.getLong(1), r.getLong(2), r.getLong(3), r.getString(4)))
-        .toMap
-      last shouldBe batch
-      // the late 1-token turn re-entered ahead of the newest turn
-      last("c1").transcript shouldBe "user: ok\nassistant: great news"
-    } finally {
-      query.stop()
-      prevProvider match {
-        case Some(p) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-        case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-      }
-    }
-  }
 }
